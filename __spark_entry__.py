@@ -21,42 +21,20 @@ _REPO = os.path.dirname(os.path.abspath(__file__))
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
-# Importing these modules registers every query + oracle pair.
+# Importing these modules registers every query + oracle pair, in this
+# order (registration order is the queries() tie-break). Plain imports on
+# purpose: a module that fails to import fails the contract loudly
+# instead of silently dropping its queries.
 from ftp_blueprints_spark.plans import relational  # noqa: F401,E402
 from ftp_blueprints_spark.plans.registry import ORACLES, QUERIES  # noqa: E402
-
-try:  # optional surfaces — keep entry importable even mid-build
-    from ftp_blueprints_spark.plans import manifest_queries  # noqa: F401
-except ImportError:
-    pass
-try:
-    from ftp_blueprints_spark.operators import dedup  # noqa: F401
-except ImportError:
-    pass
-try:
-    from ftp_blueprints_spark.operators import similarity  # noqa: F401
-except ImportError:
-    pass
-try:
-    from ftp_blueprints_spark.plans import text_queries  # noqa: F401
-except ImportError:
-    pass
-try:
-    from ftp_blueprints_spark.operators import multimodal  # noqa: F401
-except ImportError:
-    pass
-try:
-    from ftp_blueprints_spark.streaming import events as _streaming_events  # noqa: F401
-except ImportError:
-    pass
-try:
-    from ftp_blueprints_spark.plans import udf_queries  # noqa: F401
-except ImportError:
-    pass
-try:
-    from ftp_blueprints_spark.operators import sketches  # noqa: F401
-except ImportError:
-    pass
+from ftp_blueprints_spark.plans import manifest_queries  # noqa: F401,E402
+from ftp_blueprints_spark.operators import dedup  # noqa: F401,E402
+from ftp_blueprints_spark.operators import similarity  # noqa: F401,E402
+from ftp_blueprints_spark.plans import text_queries  # noqa: F401,E402
+from ftp_blueprints_spark.operators import multimodal  # noqa: F401,E402
+from ftp_blueprints_spark.streaming import events as _streaming_events  # noqa: F401,E402
+from ftp_blueprints_spark.plans import udf_queries  # noqa: F401,E402
+from ftp_blueprints_spark.operators import sketches  # noqa: F401,E402
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -130,8 +130,9 @@ def _run(fn) -> int:
         return e.exit_code
     except Exception as e:
         # errors raised inside executor tasks (e.g. a failed FTP login in
-        # list_tree's mapPartitions) cross Py4J as untyped strings; map
-        # them back so bad credentials still exit 3, not 1
+        # a sink partition's spec.connect(), or in the ingest DataSource)
+        # cross Py4J as untyped strings; map them back so bad
+        # credentials still exit 3, not 1
         from ..errors import typed_from_message
 
         typed = typed_from_message(e)

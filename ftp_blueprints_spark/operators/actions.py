@@ -2,10 +2,11 @@
 D1-D3) as ``foreachPartition`` sinks over a destination-projected
 manifest (columns ``path`` and, where applicable, ``dest_path``).
 
-Execution model: the manifest is repartitioned to
+Execution model: the manifest is repartitioned to exactly
 ``spec.max_connections`` (FTP servers throttle sessions), each
-partition opens ONE client (connector.ClientSpec.connect) and streams
-its rows; bytes flow executor<->server and never touch the driver.
+non-empty partition opens ONE client (connector.ClientSpec.connect)
+and streams its rows; bytes flow executor<->server and never touch the
+driver.
 
 Reference error-semantic asymmetries preserved (behavioral parity):
 - download skips failed rows and keeps going, removing the partial
@@ -25,6 +26,7 @@ Reference error-semantic asymmetries preserved (behavioral parity):
 
 from __future__ import annotations
 
+import itertools
 import os
 import sys
 
@@ -42,21 +44,43 @@ def _progress(action: str, n_ok: int, n_other: int = 0, other: str = "") -> None
     print(f"[{action}] partition done: {n_ok} ok{extra}", file=sys.stderr)
 
 
-def _bounded(df: DataFrame, spec: ClientSpec) -> DataFrame:
-    """Bound sink fan-out by the connection budget."""
-    n = max(1, spec.max_connections)
-    return df.repartition(n) if df.rdd.getNumPartitions() > n else df
+def _run_sink(df: DataFrame, spec: ClientSpec, body) -> None:
+    """Run ``body(client, rows)`` once per partition of ``df``.
 
+    The input is always repartitioned to exactly ``spec.max_connections``:
+    more partitions would exceed the server's session budget, fewer
+    would leave allowed sessions idle (AQE coalesces a small numbered
+    manifest to one partition). Asking for the current partition count
+    first would run the upstream plan's AQE stages once for the count
+    and again for the sink; the unconditional round-robin costs one
+    shuffle of the (path, dest) rows instead. Each partition opens its
+    client on its first row, so an empty partition opens no session.
 
-def _rethrow_typed(err: Exception) -> None:
-    """Executor exceptions surface as Py4J strings; map back to the
-    typed error (and its exit code) at the driver boundary. Covers
-    IncorrectCredentials too: spec.connect() runs INSIDE partitions, so
-    a bad login fails executor-side and must still exit 3."""
-    typed = typed_from_message(err)
-    if typed is not None:
-        raise typed from err
-    raise err
+    Executor exceptions surface as Py4J strings; they are mapped back
+    to the typed error (and its exit code) at this driver boundary.
+    That covers IncorrectCredentials too: spec.connect() runs INSIDE
+    partitions, so a bad login fails executor-side and must still
+    exit 3."""
+    df = df.repartition(max(1, spec.max_connections))
+
+    def sink(rows) -> None:
+        rows = iter(rows)
+        first = next(rows, None)
+        if first is None:
+            return
+        client = spec.connect()
+        try:
+            body(client, itertools.chain([first], rows))
+        finally:
+            client.close()
+
+    try:
+        df.foreachPartition(sink)
+    except Exception as err:
+        typed = typed_from_message(err)
+        if typed is not None:
+            raise typed from err
+        raise
 
 
 def download(manifest: DataFrame, spec: ClientSpec, dest_root: str) -> dict:
@@ -64,40 +88,32 @@ def download(manifest: DataFrame, spec: ClientSpec, dest_root: str) -> dict:
 
     Per-row skip on failure; partial output is impossible (temp file +
     atomic rename replaces the reference's delete-on-error). Returns
-    {'ok': n, 'failed': n} from accumulators."""
+    {'ok': n, 'failed': n} from accumulators. Per-ROW failures are
+    skipped inside the sink (D1), but a connect()/login failure aborts
+    the partition and maps back to exit 3."""
     sc = manifest.sparkSession.sparkContext
     ok, failed = sc.accumulator(0), sc.accumulator(0)
 
-    def sink(rows) -> None:
-        client = spec.connect()
+    def body(client, rows) -> None:
         n_ok = n_failed = 0
-        try:
-            for row in rows:
-                dest = os.path.join(dest_root, row["dest_path"])
-                os.makedirs(os.path.dirname(dest) or ".", exist_ok=True)
-                tmp = f"{dest}.inprogress"
-                try:
-                    with open(tmp, "wb") as f:
-                        client.retrieve(row["path"], f)
-                    os.replace(tmp, dest)
-                    n_ok += 1
-                    ok.add(1)
-                except Exception:
-                    if os.path.exists(tmp):
-                        os.remove(tmp)
-                    n_failed += 1
-                    failed.add(1)  # D1: skip and continue
-            _progress("download", n_ok, n_failed, "failed")
-        finally:
-            client.close()
+        for row in rows:
+            dest = os.path.join(dest_root, row["dest_path"])
+            os.makedirs(os.path.dirname(dest) or ".", exist_ok=True)
+            tmp = f"{dest}.inprogress"
+            try:
+                with open(tmp, "wb") as f:
+                    client.retrieve(row["path"], f)
+                os.replace(tmp, dest)
+                n_ok += 1
+                ok.add(1)
+            except Exception:
+                if os.path.exists(tmp):
+                    os.remove(tmp)
+                n_failed += 1
+                failed.add(1)  # D1: skip and continue
+        _progress("download", n_ok, n_failed, "failed")
 
-    try:
-        # per-ROW failures are skipped inside the sink (D1), but a
-        # connect()/login failure aborts the partition and must map back
-        # to exit 3, not a raw Py4J traceback
-        _bounded(manifest.select("path", "dest_path"), spec).foreachPartition(sink)
-    except Exception as e:
-        _rethrow_typed(e)
+    _run_sink(manifest.select("path", "dest_path"), spec, body)
     return {"ok": ok.value, "failed": failed.value}
 
 
@@ -109,36 +125,29 @@ def upload(manifest: DataFrame, spec: ClientSpec, source_root: str = "") -> dict
     sc = manifest.sparkSession.sparkContext
     ok, skipped = sc.accumulator(0), sc.accumulator(0)
 
-    def sink(rows) -> None:
-        client = spec.connect()
+    def body(client, rows) -> None:
         made: set[str] = set()  # one mkdir -p per folder per partition,
         n_ok = n_skip = 0  # not per row (control-channel round-trips)
-        try:
-            for row in rows:
-                src = os.path.join(source_root, row["path"]) if source_root else row["path"]
-                if not os.path.isfile(src):
-                    n_skip += 1
-                    skipped.add(1)
-                    continue
-                folder = row["dest_path"].rsplit("/", 1)[0] if "/" in row["dest_path"] else ""
-                try:
-                    if folder and folder not in made:
-                        client.makedirs(folder)
-                        made.add(folder)
-                    with open(src, "rb") as f:
-                        client.store(f, row["dest_path"])
-                    n_ok += 1
-                    ok.add(1)
-                except Exception as e:
-                    raise UploadError(f"failed to upload {src}: {e}") from e
-            _progress("upload", n_ok, n_skip, "skipped")
-        finally:
-            client.close()
+        for row in rows:
+            src = os.path.join(source_root, row["path"]) if source_root else row["path"]
+            if not os.path.isfile(src):
+                n_skip += 1
+                skipped.add(1)
+                continue
+            folder = row["dest_path"].rsplit("/", 1)[0] if "/" in row["dest_path"] else ""
+            try:
+                if folder and folder not in made:
+                    client.makedirs(folder)
+                    made.add(folder)
+                with open(src, "rb") as f:
+                    client.store(f, row["dest_path"])
+                n_ok += 1
+                ok.add(1)
+            except Exception as e:
+                raise UploadError(f"failed to upload {src}: {e}") from e
+        _progress("upload", n_ok, n_skip, "skipped")
 
-    try:
-        _bounded(manifest.select("path", "dest_path"), spec).foreachPartition(sink)
-    except Exception as e:
-        _rethrow_typed(e)
+    _run_sink(manifest.select("path", "dest_path"), spec, body)
     return {"ok": ok.value, "skipped": skipped.value}
 
 
@@ -148,30 +157,23 @@ def move(manifest: DataFrame, spec: ClientSpec) -> dict:
     sc = manifest.sparkSession.sparkContext
     ok = sc.accumulator(0)
 
-    def sink(rows) -> None:
-        client = spec.connect()
+    def body(client, rows) -> None:
         made: set[str] = set()  # memoized like the upload sink
         n_ok = 0
-        try:
-            for row in rows:
-                folder = row["dest_path"].rsplit("/", 1)[0] if "/" in row["dest_path"] else ""
-                try:
-                    if folder and folder not in made:
-                        client.makedirs(folder)
-                        made.add(folder)
-                    client.rename(row["path"], row["dest_path"])
-                    n_ok += 1
-                    ok.add(1)
-                except Exception as e:
-                    raise MoveError(f"failed to move {row['path']}: {e}") from e
-            _progress("move", n_ok)
-        finally:
-            client.close()
+        for row in rows:
+            folder = row["dest_path"].rsplit("/", 1)[0] if "/" in row["dest_path"] else ""
+            try:
+                if folder and folder not in made:
+                    client.makedirs(folder)
+                    made.add(folder)
+                client.rename(row["path"], row["dest_path"])
+                n_ok += 1
+                ok.add(1)
+            except Exception as e:
+                raise MoveError(f"failed to move {row['path']}: {e}") from e
+        _progress("move", n_ok)
 
-    try:
-        _bounded(manifest.select("path", "dest_path"), spec).foreachPartition(sink)
-    except Exception as e:
-        _rethrow_typed(e)
+    _run_sink(manifest.select("path", "dest_path"), spec, body)
     return {"ok": ok.value}
 
 
@@ -181,23 +183,16 @@ def delete(manifest: DataFrame, spec: ClientSpec) -> dict:
     sc = manifest.sparkSession.sparkContext
     ok = sc.accumulator(0)
 
-    def sink(rows) -> None:
-        client = spec.connect()
+    def body(client, rows) -> None:
         n_ok = 0
-        try:
-            for row in rows:
-                try:
-                    client.delete(row["path"])
-                    n_ok += 1
-                    ok.add(1)
-                except Exception as e:
-                    raise InvalidFilePath(f"failed to delete {row['path']}: {e}") from e
-            _progress("delete", n_ok)
-        finally:
-            client.close()
+        for row in rows:
+            try:
+                client.delete(row["path"])
+                n_ok += 1
+                ok.add(1)
+            except Exception as e:
+                raise InvalidFilePath(f"failed to delete {row['path']}: {e}") from e
+        _progress("delete", n_ok)
 
-    try:
-        _bounded(manifest.select("path"), spec).foreachPartition(sink)
-    except Exception as e:
-        _rethrow_typed(e)
+    _run_sink(manifest.select("path"), spec, body)
     return {"ok": ok.value}

@@ -24,6 +24,7 @@ Match semantics preserved from the reference (behavioral parity only):
 
 from __future__ import annotations
 
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
@@ -137,9 +138,16 @@ def with_file_numbers(matches: DataFrame) -> DataFrame:
     for row in sorted(counts, key=lambda r: r["_pid"]):
         offsets[row["_pid"]] = acc
         acc += row["count"]
-    spark = matches.sparkSession
-    offsets_df = spark.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], "_pid int, _offset bigint"
+    # an Arrow-built frame plans as a LocalRelation: the broadcast side
+    # never round-trips through a Python worker
+    offsets_df = matches.sparkSession.createDataFrame(
+        pa.table(
+            {
+                "_pid": pa.array(list(offsets), pa.int32()),
+                "_offset": pa.array(list(offsets.values()), pa.int64()),
+            }
+        ),
+        "_pid int, _offset bigint",
     )
     w = Window.partitionBy("_pid").orderBy("path")
     return (

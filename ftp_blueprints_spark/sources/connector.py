@@ -19,10 +19,13 @@ therefore talks to remote trees through a small picklable interface:
   passive; delete_file.py:89-104 sets timeout=3600 + passive;
   upload/move set neither).
 
-Scale design: sinks call ``spec.connect()`` once per PARTITION (not per
-row), and action DataFrames are repartitioned to ``max_connections``
-before ``foreachPartition`` so a 1000-executor job cannot open more
-sessions than the server allows.
+Scale design: sinks call ``spec.connect()`` once per non-empty
+PARTITION (not per row), and action DataFrames are repartitioned to
+exactly ``max_connections`` before ``foreachPartition``: a 1000-executor
+job cannot open more sessions than the server allows, and a manifest
+AQE coalesced to one partition still uses every allowed session.
+``list_tree`` opens its clients on driver threads, under the same
+``max_connections`` bound.
 """
 
 from __future__ import annotations
@@ -170,14 +173,23 @@ class FTPClient(RemoteClient):
         self._ftp.delete(path)
 
     def makedirs(self, folder: str) -> None:
+        import ftplib
+
         original = self._ftp.pwd()
         for seg in folder.split("/"):
             if not seg:
                 continue
             try:
                 self._ftp.cwd(seg)
-            except Exception:
-                self._ftp.mkd(seg)
+            except ftplib.error_perm:
+                # a concurrent partition may create the segment between
+                # our CWD and MKD ('550 already exists'): ignore the MKD
+                # reply and let the CWD decide — a real permission
+                # failure still raises from it
+                try:
+                    self._ftp.mkd(seg)
+                except ftplib.error_perm:
+                    pass
                 self._ftp.cwd(seg)
         self._ftp.cwd(original)
 

@@ -6,18 +6,22 @@ DataFrame (SURVEY.md §2A S2-S5).
 The reference walks the tree sequentially — BFS queue in
 download_file.py:252-257 / delete_file.py:121-126, recursive DFS in
 move_file.py:63-78 — paying >=1 network round-trip per directory entry
-on one connection. Here each BFS *level* is expanded in parallel:
-the current frontier of folders is parallelized across partitions and
-each partition lists its folders with its own client
-(``mapPartitions`` + per-partition ``spec.connect()``). Wall-clock per
-level is max(folder listing) instead of sum, and the fan-out is
-bounded by ``spec.max_connections`` so a wide tree cannot exceed the
-server's session limit. Level results accumulate driver-side as plain
-rows ONLY while the tree is small: past ``driver_rows_threshold``
-entries the walk abandons driver accumulation and returns the
-``ftp_manifest`` DataSource DataFrame instead (datasource.py), whose
-per-top-level-entry partitions are walked executor-side — driver
-memory stays O(threshold) no matter how many files the tree holds.
+on one connection. Here each BFS *level* is expanded in parallel on
+driver threads: the frontier of folders is cut into at most
+``spec.max_connections`` contiguous chunks and each chunk is listed by
+its own client. Wall-clock per level is max(chunk listing) instead of
+sum, the session count stays bounded by the server's limit, and no
+Spark job runs — listing is pure FTP round trips.
+
+While the tree is small the rows accumulate on the driver and the
+manifest is handed to Spark as one Arrow table, which plans as a JVM
+``LocalRelation``: later jobs (match guards, numbering, sinks) read it
+without a Python worker re-serializing the rows. Past
+``driver_rows_threshold`` entries the walk abandons driver
+accumulation and returns the ``ftp_manifest`` DataSource DataFrame
+instead (datasource.py), whose per-top-level-entry partitions are
+walked executor-side — driver memory stays O(threshold) no matter how
+many files the tree holds.
 
 S5 (local recursive listing, upload_file.py:136-144) additionally maps
 onto Spark's native file source: ``binary_manifest`` uses
@@ -28,6 +32,10 @@ column when only metadata is selected.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
+
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -35,6 +43,10 @@ from ..functions import paths as P
 from .connector import ClientSpec, is_missing_folder_error
 
 MANIFEST_SCHEMA = "path string, folder string, name string, is_dir boolean, size bigint"
+_ARROW_SCHEMA = pa.schema(
+    [("path", pa.string()), ("folder", pa.string()), ("name", pa.string()),
+     ("is_dir", pa.bool_()), ("size", pa.int64())]
+)
 
 # Above this many manifest entries, list_tree stops accumulating rows on
 # the driver and delegates to the executor-partitioned DataSource walk.
@@ -174,7 +186,7 @@ def _datasource_tree(
 
 
 def _list_level(spec: ClientSpec, folders: list[str]) -> list[tuple]:
-    """List one frontier of folders with a single client (executor-side)."""
+    """List one chunk of a frontier with a single client (one session)."""
     client = spec.connect()
     try:
         rows = []
@@ -187,6 +199,17 @@ def _list_level(spec: ClientSpec, folders: list[str]) -> list[tuple]:
         client.close()
 
 
+def _manifest(spark: SparkSession, rows: list[tuple]) -> DataFrame:
+    """Driver-held manifest rows as a ``LocalRelation`` (via one Arrow
+    table): unlike ``createDataFrame(list)``, which plans a Python RDD,
+    no later job has to pull the rows back through a Python worker."""
+    columns = list(zip(*rows)) or [()] * len(_ARROW_SCHEMA)
+    table = pa.Table.from_pydict(
+        dict(zip(_ARROW_SCHEMA.names, columns)), schema=_ARROW_SCHEMA
+    )
+    return spark.createDataFrame(table, MANIFEST_SCHEMA)
+
+
 def list_tree(
     spark: SparkSession,
     spec: ClientSpec,
@@ -197,6 +220,12 @@ def list_tree(
     path_pattern: str | None = None,
 ) -> DataFrame:
     """BFS the tree under ``root`` into a manifest DataFrame (S2+S3).
+
+    Each level is listed on driver threads, at most
+    ``spec.max_connections`` clients at once, one per contiguous chunk
+    of the frontier; chunks are joined back in frontier order, so rows
+    come out in a deterministic BFS order. No Spark job runs, and the
+    manifest is a ``LocalRelation`` with the five-column schema.
 
     Dot-directories are skipped during traversal when requested —
     download's behavior (download_file.py:150-152); delete does NOT
@@ -217,12 +246,11 @@ def list_tree(
     executor-partitioned DataSource (the partial BFS work is discarded —
     crossing the threshold means the tree is big enough that a clean
     distributed walk beats finishing a driver-side one)."""
-    sc = spark.sparkContext
     seed = root
     if path_pattern:
         seed = seed_for(root, pattern_prefix(path_pattern))
         if seed is None:  # literals diverge: nothing under root matches
-            return spark.createDataFrame([], MANIFEST_SCHEMA)
+            return _manifest(spark, [])
     frontier = [seed]
     all_rows: list[tuple] = []
     if seed != root:
@@ -241,7 +269,7 @@ def list_tree(
             except Exception as e:
                 if not is_missing_folder_error(e):
                     raise
-                return spark.createDataFrame([], MANIFEST_SCHEMA)
+                return _manifest(spark, [])
         finally:
             client.close()
         frontier = []
@@ -252,25 +280,24 @@ def list_tree(
             all_rows.append((path, seed, name, is_dir, size))
             if is_dir:
                 frontier.append(path)
-    for _ in range(max_depth):
-        if not frontier:
-            break
-        if len(all_rows) > driver_rows_threshold:
-            return _datasource_tree(spark, spec, seed, skip_dot_dirs)
-        n_parts = max(1, min(len(frontier), spec.max_connections))
-        level = (
-            sc.parallelize(frontier, n_parts)
-            .mapPartitions(lambda it, s=spec: _list_level(s, list(it)))
-            .collect()
-        )
-        frontier = []
-        for path, folder, name, is_dir, size in level:
-            if skip_dot_dirs and set(name) == {"."}:
-                continue  # F4 (download_file.py:58-62)
-            all_rows.append((path, folder, name, is_dir, size))
-            if is_dir:
-                frontier.append(path)
-    return spark.createDataFrame(all_rows, MANIFEST_SCHEMA)
+    max_conns = max(1, spec.max_connections)
+    with ThreadPoolExecutor(max_workers=max_conns) as pool:
+        for _ in range(max_depth):
+            if not frontier:
+                break
+            if len(all_rows) > driver_rows_threshold:
+                return _datasource_tree(spark, spec, seed, skip_dot_dirs)
+            n, k = len(frontier), min(len(frontier), max_conns)
+            chunks = [frontier[i * n // k : (i + 1) * n // k] for i in range(k)]
+            frontier = []
+            for chunk_rows in pool.map(partial(_list_level, spec), chunks):
+                for path, folder, name, is_dir, size in chunk_rows:
+                    if skip_dot_dirs and set(name) == {"."}:
+                        continue  # F4 (download_file.py:58-62)
+                    all_rows.append((path, folder, name, is_dir, size))
+                    if is_dir:
+                        frontier.append(path)
+    return _manifest(spark, all_rows)
 
 
 def binary_manifest(

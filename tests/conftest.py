@@ -1,5 +1,7 @@
+import contextlib
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -55,3 +57,24 @@ def sf_small():
 @pytest.fixture(scope="session")
 def sf_oracle():
     return SF_ORACLE
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """``with spark_jobs() as ids:`` collects into ``ids`` the ids of the
+    Spark jobs started on this thread inside the block (one fresh job
+    group per use)."""
+
+    @contextlib.contextmanager
+    def track():
+        sc = spark.sparkContext
+        group = f"track-{uuid.uuid4().hex}"
+        ids: list[int] = []
+        sc.setJobGroup(group, group)
+        try:
+            yield ids
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            ids.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+    return track

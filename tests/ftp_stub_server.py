@@ -276,6 +276,8 @@ class FtpStubServer:
         # NLST calls served across all sessions (GIL-atomic increments
         # are plenty for test accounting)
         self.nlst_count = 0
+        # control connections accepted (one per client session)
+        self.sessions = 0
         self._listener: socket.socket | None = None
         self._accept_thread: threading.Thread | None = None
 
@@ -294,6 +296,7 @@ class FtpStubServer:
                 conn, _ = self._listener.accept()
             except OSError:
                 return  # listener closed
+            self.sessions += 1
             _Session(conn, self).start()
 
     def __exit__(self, *exc) -> None:

@@ -96,6 +96,58 @@ def test_list_tree_delegates_past_threshold(spark, tree):
         "PythonDataSource" in small._jdf.queryExecution().executedPlan().toString()
 
 
+def _bfs_reference(spec: ClientSpec, root: str) -> list[tuple]:
+    """Sequential BFS with one client: the frontier-order rows every
+    list_tree walk must reproduce (dot-dirs skipped, F4)."""
+    client = spec.connect()
+    rows, frontier = [], [root]
+    while frontier:
+        nxt = []
+        for folder in frontier:
+            for path, is_dir, size in client.listdir(folder):
+                name = path.rsplit("/", 1)[-1]
+                if set(name) == {"."}:
+                    continue
+                rows.append((path, folder, name, is_dir, size))
+                if is_dir:
+                    nxt.append(path)
+        frontier = nxt
+    client.close()
+    return rows
+
+
+def test_list_tree_runs_no_spark_job(spark, spark_jobs, tree):
+    """Levels are listed on driver threads and the manifest is a JVM
+    LocalRelation: building it starts no Spark job, and no later job
+    re-reads it through a Python worker (no LogicalRDD)."""
+    with spark_jobs() as ids:
+        mf = list_tree(spark, _spec(tree), "")
+        missing = list_tree(spark, _spec(tree), "", path_pattern=r"^no/such/.*")
+        disjoint = list_tree(spark, _spec(tree), "reports", path_pattern=r"^raw/.*")
+    assert ids == []
+    assert missing.count() == 0 and disjoint.count() == 0
+    for df in (mf, missing, disjoint):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan
+
+
+def test_list_tree_rows_in_bfs_order(spark, tmp_path):
+    """Several folders per level over 2 connections: the chunks are
+    contiguous and joined in frontier order, so schema and rows, in
+    order, equal a createDataFrame of the sequential BFS."""
+    from ftp_blueprints_spark.sources.listing import MANIFEST_SCHEMA
+
+    for rel in ("a/x/1.csv", "a/y/2.csv", "b/3.csv", "c/z/w/4.csv",
+                "d/5.csv", "d/v/6.csv", "e/.../7.csv", "f.txt"):
+        (tmp_path / rel).parent.mkdir(parents=True, exist_ok=True)
+        (tmp_path / rel).write_bytes(rel.encode())
+    spec = ClientSpec(kind="local", root=str(tmp_path), max_connections=2)
+    want = spark.createDataFrame(_bfs_reference(spec, ""), MANIFEST_SCHEMA)
+    got = list_tree(spark, spec, "")
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+
+
 def test_binary_manifest_matches_list_tree(spark, tree):
     """S5: the binaryFile source and the connector BFS agree on files."""
     bf = binary_manifest(spark, str(tree), glob="*.csv")

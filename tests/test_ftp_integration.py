@@ -92,6 +92,29 @@ def test_list_tree_over_ftp(spark, ftp_root):
     assert not any("hidden" in p for p in rows)
 
 
+def test_list_tree_over_ftp_runs_no_spark_job(spark, spark_jobs, ftp_root):
+    """The FTP walk runs on driver threads (one session per frontier
+    chunk, as many NLSTs as folders) and yields a LocalRelation in BFS
+    order: no Spark job, no LogicalRDD."""
+    from ftp_blueprints_spark.sources.listing import MANIFEST_SCHEMA
+
+    from .test_actions import _bfs_reference
+
+    srv = FtpStubServer(ftp_root, USERS)
+    with srv as (host, port):
+        spec = spec_for(host, port)
+        with spark_jobs() as ids:
+            mf = list_tree(spark, spec, "")
+        # root, data, data/sub; the dot-dir is pruned (F4)
+        assert (srv.nlst_count, srv.sessions) == (3, 3)
+        want = spark.createDataFrame(_bfs_reference(spec, ""), MANIFEST_SCHEMA)
+    assert ids == []
+    plan = mf._jdf.queryExecution().optimizedPlan().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan
+    assert mf.schema == want.schema
+    assert mf.collect() == want.collect()
+
+
 # --- DataSource over FTP ----------------------------------------------------
 
 def test_datasource_reads_content_over_ftp(spark, ftp_root):
@@ -200,6 +223,81 @@ def test_delete_removes_files_fail_fast_exit201(spark, ftp_root):
         with pytest.raises(InvalidFilePath) as ei:
             actions.delete(bad, spec_for(host, port))
         assert ei.value.exit_code == 201
+
+
+# --- S8: concurrent mkdir -p -------------------------------------------------
+
+def test_makedirs_tolerates_concurrent_mkd(ftp_root):
+    """Two sink partitions can both find a folder missing and both MKD
+    it; the loser's '550 already exists' must not fail its transfer.
+    The CWD probe is made to fail once on an existing folder (the race's
+    interleaving, made deterministic): makedirs returns and restores the
+    original cwd."""
+    import ftplib
+
+    with FtpStubServer(ftp_root, USERS) as (host, port):
+        client = spec_for(host, port).connect()
+        try:
+            ftp = client._ftp
+            real_cwd, raced = ftp.cwd, []
+
+            def cwd(path):
+                if path == "data" and not raced:
+                    raced.append(path)
+                    raise ftplib.error_perm("550 not a directory")
+                return real_cwd(path)
+
+            ftp.cwd = cwd
+            original = ftp.pwd()
+            client.makedirs("data/sub/new")
+            assert raced == ["data"]
+            assert ftp.pwd() == original
+        finally:
+            client.close()
+    assert os.path.isdir(os.path.join(ftp_root, "data/sub/new"))
+
+
+def test_makedirs_permission_failure_still_raises(ftp_root):
+    """Ignoring MKD's reply leaves the decision to the following CWD:
+    a folder that cannot be created still raises."""
+    import ftplib
+
+    with FtpStubServer(ftp_root, USERS, readonly=True) as (host, port):
+        client = spec_for(host, port).connect()
+        try:
+            with pytest.raises(ftplib.error_perm):
+                client.makedirs("data/forbidden")
+        finally:
+            client.close()
+    assert not os.path.exists(os.path.join(ftp_root, "data/forbidden"))
+
+
+# --- sink fan-out over the session budget -----------------------------------
+
+def test_sink_uses_every_allowed_session(spark, ftp_root, tmp_path):
+    """A 1-partition manifest (what AQE leaves of a small numbered one)
+    is spread over max_connections sessions; an empty partition opens
+    no session, so a 1-row manifest still opens exactly one."""
+    import dataclasses
+
+    rows = [("data/a.csv", "a.csv"), ("data/b.csv", "b.csv"),
+            ("data/sub/c.txt", "c.txt")]
+    srv = FtpStubServer(ftp_root, USERS)
+    with srv as (host, port):
+        spec = dataclasses.replace(spec_for(host, port), max_connections=2)
+        three = spark.createDataFrame(rows, "path string, dest_path string")
+        assert actions.download(three.coalesce(1), spec, str(tmp_path / "n3")) == {
+            "ok": 3, "failed": 0,
+        }
+        assert srv.sessions == 2
+        one = spark.createDataFrame(rows[:1], "path string, dest_path string")
+        assert actions.download(one.coalesce(1), spec, str(tmp_path / "n1")) == {
+            "ok": 1, "failed": 0,
+        }
+        assert srv.sessions == 3
+    assert sorted(p.name for p in (tmp_path / "n3").iterdir()) == [
+        "a.csv", "b.csv", "c.txt",
+    ]
 
 
 # --- raw client round-trip --------------------------------------------------
@@ -365,10 +463,10 @@ def test_cli_upload_over_ftp_lists_local_tree(spark, tmp_path):
 
 
 def test_cli_bad_credentials_exit3_from_executor(spark, ftp_root):
-    """Regression: a login failure happens INSIDE an executor task
-    (spec.connect() in the listing partition), surfaces as a raw Py4J
-    error, and must still map to the reference's exit code 3 — not an
-    unhandled traceback / exit 1."""
+    """Regression: a bad login must map to the reference's exit code 3
+    — not an unhandled traceback / exit 1. The listing logs in on a
+    driver thread, so IncorrectCredentials surfaces directly; sink
+    logins fail inside executor tasks and are mapped back from Py4J."""
     from ftp_blueprints_spark.cli.blueprints import download_main
 
     with FtpStubServer(ftp_root, USERS) as (host, port):
