@@ -215,29 +215,15 @@ def ingest_main(argv: list[str] | None = None) -> int:
     def go():
         from ..sources import ingest as ing
 
-        common = dict(
+        csv_opts = dict(header=args.header, sep=args.sep) if args.format == "csv" else {}
+        n = getattr(ing, f"ingest_{args.format}")(
+            _spark(), _spec(args), args.source_folder_name,
             schema=args.schema,
             dest=args.dest,
             pattern=args.source_file_name,
             partition_cols=[c for c in args.partition_by.split(",") if c] or None,
+            **csv_opts,
         )
-        if args.format == "csv":
-            n = ing.ingest_csv(
-                _spark(), _spec(args), args.source_folder_name,
-                header=args.header, sep=args.sep, **common,
-            )
-        elif args.format == "jsonl":
-            n = ing.ingest_jsonl(
-                _spark(), _spec(args), args.source_folder_name, **common
-            )
-        elif args.format == "orc":
-            n = ing.ingest_orc(
-                _spark(), _spec(args), args.source_folder_name, **common
-            )
-        else:
-            n = ing.ingest_parquet(
-                _spark(), _spec(args), args.source_folder_name, **common
-            )
         print(f"ingested {n} row(s) -> {args.dest}")
 
     return _run(go)

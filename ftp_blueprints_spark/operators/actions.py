@@ -21,7 +21,9 @@ Reference error-semantic asymmetries preserved (behavioral parity):
   per-file try/except dead code; we keep the observable fail-fast);
 - destination folders are created idempotently before any transfer
   (S8 upload_file.py:159-171 remote, S11 download_file.py:242-245
-  local true mkdir -p).
+  local true mkdir -p); the remote sinks call ``client.makedirs`` for
+  every row, and the client's per-session memo keeps that to one
+  mkdir -p per folder per partition.
 """
 
 from __future__ import annotations
@@ -33,7 +35,7 @@ import sys
 from pyspark.sql import DataFrame
 
 from ..errors import InvalidFilePath, MoveError, UploadError, typed_from_message
-from ..sources.connector import ClientSpec
+from ..sources.connector import ClientSpec, parent
 
 
 def _progress(action: str, n_ok: int, n_other: int = 0, other: str = "") -> None:
@@ -126,19 +128,15 @@ def upload(manifest: DataFrame, spec: ClientSpec, source_root: str = "") -> dict
     ok, skipped = sc.accumulator(0), sc.accumulator(0)
 
     def body(client, rows) -> None:
-        made: set[str] = set()  # one mkdir -p per folder per partition,
-        n_ok = n_skip = 0  # not per row (control-channel round-trips)
+        n_ok = n_skip = 0
         for row in rows:
             src = os.path.join(source_root, row["path"]) if source_root else row["path"]
             if not os.path.isfile(src):
                 n_skip += 1
                 skipped.add(1)
                 continue
-            folder = row["dest_path"].rsplit("/", 1)[0] if "/" in row["dest_path"] else ""
             try:
-                if folder and folder not in made:
-                    client.makedirs(folder)
-                    made.add(folder)
+                client.makedirs(parent(row["dest_path"]))
                 with open(src, "rb") as f:
                     client.store(f, row["dest_path"])
                 n_ok += 1
@@ -158,14 +156,10 @@ def move(manifest: DataFrame, spec: ClientSpec) -> dict:
     ok = sc.accumulator(0)
 
     def body(client, rows) -> None:
-        made: set[str] = set()  # memoized like the upload sink
         n_ok = 0
         for row in rows:
-            folder = row["dest_path"].rsplit("/", 1)[0] if "/" in row["dest_path"] else ""
             try:
-                if folder and folder not in made:
-                    client.makedirs(folder)
-                    made.add(folder)
+                client.makedirs(parent(row["dest_path"]))
                 client.rename(row["path"], row["dest_path"])
                 n_ok += 1
                 ok.add(1)

@@ -290,23 +290,15 @@ FROM read_blob('{_SF01}/*.parquet')
 )
 def mf_real_listing_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ftp_manifest Python DataSource (Spark 4 pyspark.sql.datasource
-    API) over a REAL tree: spark.read.format('ftp_manifest') with one
+    API) over a REAL tree, read through ``datasource.read_manifest``: one
     input partition per top-level entry, each walked executor-side with
     its own client."""
-    from ..sources.datasource import ManifestDataSource
+    from ..sources.connector import ClientSpec
+    from ..sources.datasource import read_manifest
 
     _require_pinned_sf(sf_dir)
-    try:
-        spark.dataSource.register(ManifestDataSource)
-    except Exception:
-        pass  # already registered in this session
-    df = (
-        spark.read.format("ftp_manifest")
-        .option("kind", "local")
-        .option("root", sf_dir)
-        .load()
-    )
-    return df.filter(~F.col("is_dir")).select("path", "name", "size")
+    mf = read_manifest(spark, ClientSpec(kind="local", root=sf_dir), "")
+    return mf.filter(~F.col("is_dir")).select("path", "name", "size")
 
 
 @query(

@@ -11,6 +11,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# directory holding the ftp_blueprints_spark package
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "ftp-blueprints-spark",
@@ -25,7 +28,15 @@ def get_spark(
     - UTC session timezone: deterministic date/time semantics that match
       the DuckDB oracle (naive timestamps).
     - Arrow enabled: vectorized pandas_udf / toPandas transfer.
+    - Python workers import this package from any cwd:
+      ``spark.executorEnv.PYTHONPATH`` is the package's parent
+      directory, joined with any ``PYTHONPATH`` already set. Executor
+      env is fixed when the SparkContext starts, so a pre-existing
+      active session keeps its own worker ``PYTHONPATH``.
     """
+    pythonpath = os.pathsep.join(
+        filter(None, [_PACKAGE_PARENT, os.environ.get("PYTHONPATH")])
+    )
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
         SparkSession.builder.appName(app_name)
@@ -42,6 +53,7 @@ def get_spark(
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", pythonpath)
     )
     active = SparkSession.getActiveSession()
     if active is not None:

@@ -1,4 +1,5 @@
-"""Remote-storage connector interface + implementations.
+"""Remote-storage connector interface + implementations, and the one
+per-folder listing step every tree walk shares.
 
 Spark has no native FTP source, and a single ``ftplib.FTP`` session is
 stateful (pwd/cwd) and unshareable across executors. The engine
@@ -9,7 +10,9 @@ therefore talks to remote trees through a small picklable interface:
   opens its own client (``spec.connect()``) and closes it when done.
 - :class:`RemoteClient` — the operation surface the sinks and listing
   source consume: ``listdir / retrieve / store / rename / delete /
-  makedirs``.
+  makedirs``. ``makedirs`` is an idempotent mkdir -p that memoizes per
+  session (per client): a sink calls it for every row's destination
+  folder and only the first call per folder costs round trips.
 - :class:`LocalFSClient` — local-filesystem implementation used for
   integration tests and for the reference's local-side operators (S5
   local listing, S11 local dest-folder create).
@@ -18,6 +21,15 @@ therefore talks to remote trees through a small picklable interface:
   ``get_client`` variants (download_file.py:210-227 sets timeout=300 +
   passive; delete_file.py:89-104 sets timeout=3600 + passive;
   upload/move set neither).
+
+Shared tree-walk steps (used by ``listing.list_tree``'s driver BFS and
+by the ``ftp_manifest`` DataSource's executor DFS alike):
+:func:`parent` is the one folder-of-path rule, :func:`child_rows` turns
+one ``listdir`` into manifest rows (name split + the all-dots F4 rule),
+:func:`seed_rows` lists a walk's seed folder (a missing *pruned* seed is
+an empty tree), and :func:`check_depth` bounds both walks at
+``MAX_DEPTH`` folder levels. They live here, not in ``listing.py``, so
+DataSource workers never import pyarrow.
 
 Scale design: sinks call ``spec.connect()`` once per non-empty
 PARTITION (not per row), and action DataFrames are repartitioned to
@@ -34,7 +46,11 @@ import os
 import shutil
 from dataclasses import dataclass, field
 
-from ..errors import IncorrectCredentials
+from ..errors import BlueprintError, IncorrectCredentials
+
+# Folder levels either tree walk may list (its seed is level 0); a tree
+# deeper than this fails the walk instead of returning a truncated manifest.
+MAX_DEPTH = 64
 
 
 class RemoteClient:
@@ -67,7 +83,9 @@ class RemoteClient:
     def makedirs(self, folder: str) -> None:
         """Idempotent mkdir -p, segment by segment (upload_file.py:159-171:
         try cwd, on failure mkd+cwd — safe under concurrent partitions
-        because the 'already exists' failure is swallowed)."""
+        because the 'already exists' failure is swallowed). Returns at
+        once for ``''`` and for a folder this session already made or
+        entered, so callers need no memo of their own."""
         raise NotImplementedError
 
     def close(self) -> None:
@@ -128,6 +146,7 @@ class FTPClient(RemoteClient):
     def __init__(self, host, port, username, password, timeout=300, passive=True):
         import ftplib
 
+        self._made: set[str] = set()  # folders made or entered this session
         try:
             self._ftp = ftplib.FTP(timeout=timeout)
             self._ftp.connect(host, int(port))
@@ -175,6 +194,8 @@ class FTPClient(RemoteClient):
     def makedirs(self, folder: str) -> None:
         import ftplib
 
+        if not folder or folder in self._made:
+            return
         original = self._ftp.pwd()
         for seg in folder.split("/"):
             if not seg:
@@ -192,6 +213,7 @@ class FTPClient(RemoteClient):
                     pass
                 self._ftp.cwd(seg)
         self._ftp.cwd(original)
+        self._made.add(folder)
 
     def close(self) -> None:
         try:
@@ -240,6 +262,54 @@ def is_missing_folder_error(exc: BaseException) -> bool:
         return False
     low = text.lower()
     return not any(m in low for m in _PERM_MARKERS)
+
+
+def parent(path: str) -> str:
+    """Folder of a '/'-path: '' for a root-level name."""
+    return path.rsplit("/", 1)[0] if "/" in path else ""
+
+
+def child_rows(client: RemoteClient, folder: str, skip_dot_dirs: bool) -> list[tuple]:
+    """Manifest rows ``(path, folder, name, is_dir, size)`` for the direct
+    children of ``folder``; all-dots names ('.', '..', '...') are dropped
+    when ``skip_dot_dirs`` (F4, download_file.py:58-62)."""
+    rows = []
+    for path, is_dir, size in client.listdir(folder):
+        name = path.rsplit("/", 1)[-1]
+        if not (skip_dot_dirs and set(name) == {"."}):
+            rows.append((path, folder, name, is_dir, size))
+    return rows
+
+
+def seed_rows(spec: ClientSpec, root: str, seed: str, skip_dot_dirs: bool) -> list[tuple]:
+    """:func:`child_rows` of a walk's seed folder, listed with one client.
+
+    A seed below ``root`` (a pruned walk, SURVEY §4.2) that does not
+    exist is a tree with no matches — the full walk would never visit
+    it and would report zero matches — so it yields no rows. Only
+    missing-folder errors soften (:func:`is_missing_folder_error`);
+    anything else, and any error at an unpruned root, raises."""
+    client = spec.connect()
+    try:
+        return child_rows(client, seed, skip_dot_dirs)
+    except Exception as e:
+        if seed == root or not is_missing_folder_error(e):
+            raise
+        return []
+    finally:
+        client.close()
+
+
+def check_depth(depth: int, folder: str) -> None:
+    """Fail a walk that must list ``folder``, ``depth`` levels below its
+    seed, when levels 0..MAX_DEPTH-1 are all it may list: a silently
+    truncated manifest would let a delete or move exit 0 having skipped
+    files."""
+    if depth >= MAX_DEPTH:
+        raise BlueprintError(
+            f"tree walk reached folder {folder!r} at depth {depth}: deeper "
+            f"than MAX_DEPTH={MAX_DEPTH}"
+        )
 
 
 @dataclass

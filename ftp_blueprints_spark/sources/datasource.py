@@ -2,32 +2,41 @@
 remote trees as DataFrames: the engine's answer to "Spark has no
 native FTP source" (SURVEY.md §1.3).
 
-    spark.dataSource.register(ManifestDataSource)
-    df = (spark.read.format("ftp_manifest")
-          .option("kind", "local").option("root", "/data")
-          .option("with_content", "true")
-          .load())
+    df = read_manifest(spark, ClientSpec(kind="local", root="/data"),
+                       "", with_content=True)
+
+:func:`read_manifest` is the program's only route into the
+``ftp_manifest`` format (it registers :class:`ManifestDataSource` and
+forwards every ClientSpec field as an option); ``list_tree``'s
+large-tree hand-off, ingest and the registered queries all go through
+it.
 
 Schema: the manifest columns (path/folder/name/is_dir/size), plus a
 ``content`` BINARY column when ``with_content`` is set.
 
-Partitioning: the driver lists ONLY the root level with one
-connection; every top-level entry becomes an InputPartition whose
-subtree is walked by an executor with its own client. Listing and
-byte-transfer both scale with the number of top-level entries
-(bounded by ``max_connections`` at the sink side; readers are capped
-by Spark's task parallelism), and file bytes stream executor-side —
-they never pass through the driver.
+Partitioning: the driver lists ONLY the seed level with one connection
+(``connector.seed_rows``: the root, or a ``path_pattern``'s static
+prefix folder); every entry becomes an InputPartition whose subtree is
+walked depth-first by an executor with its own client, one
+``connector.child_rows`` call per folder, bounded by
+``connector.MAX_DEPTH``. Listing and byte-transfer both scale with the
+number of top-level entries (bounded by ``max_connections`` at the
+sink side; readers are capped by Spark's task parallelism), and file
+bytes stream executor-side — they never pass through the driver.
 
-The reader consumes the same ClientSpec/RemoteClient interface as the
-sinks, so `kind=ftp` serves a real FTP server with the unified
-timeout/passive policy while tests exercise `kind=local`.
+The shared walk steps live in ``connector.py`` rather than
+``listing.py`` because Python workers unpickle this module: importing
+``listing`` here would pull pyarrow into every DataSource worker.
 """
 
 from __future__ import annotations
 
+import dataclasses
+import io
+import logging
 from collections.abc import Iterator
 
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -44,7 +53,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .connector import ClientSpec
+from .connector import ClientSpec, check_depth, child_rows, parent, seed_rows
 
 _BASE_FIELDS = [
     StructField("path", StringType()),
@@ -56,43 +65,30 @@ _BASE_FIELDS = [
 
 
 def _spec_from_options(options) -> ClientSpec:
-    return ClientSpec(
-        kind=options.get("kind", "local"),
-        root=options.get("root", "."),
-        host=options.get("host", ""),
-        port=int(options.get("port", 21)),
-        username=options.get("username", ""),
-        password=options.get("password", ""),
-        timeout=int(options.get("timeout", 300)),
-        # forward the FULL connection policy: dropping passive here made
-        # an active-mode spec silently flip to passive whenever work
-        # routed through the DataSource (options are the only channel
-        # into executor-side connect())
-        passive=options.get("passive", "true") == "true",
-        max_connections=int(options.get("max_connections", 16)),
-    )
+    """Every ClientSpec field present in ``options``, parsed back to the
+    field's type. Options are the only channel into executor-side
+    ``connect()``, so the field list comes from the dataclass itself:
+    a dropped field (e.g. ``passive``) would silently revert to its
+    default whenever work routes through the DataSource."""
+    kw = {}
+    for f in dataclasses.fields(ClientSpec):
+        v = options.get(f.name)
+        if v is not None:
+            kw[f.name] = v == "true" if isinstance(f.default, bool) else type(f.default)(v)
+    return ClientSpec(**kw)
 
 
 def _spec_options(spec: ClientSpec) -> dict[str, str]:
-    """The inverse: every ClientSpec field as DataSource options, so
-    reader construction sites cannot silently drop one."""
+    """The inverse: every ClientSpec field as a DataSource option."""
     return {
-        "kind": spec.kind,
-        "root": spec.root,
-        "host": spec.host,
-        "port": str(spec.port),
-        "username": spec.username,
-        "password": spec.password,
-        "timeout": str(spec.timeout),
-        "passive": "true" if spec.passive else "false",
-        "max_connections": str(spec.max_connections),
+        k: str(v).lower() if isinstance(v, bool) else str(v)
+        for k, v in dataclasses.asdict(spec).items()
     }
 
 
 class _TreePartition(InputPartition):
-    def __init__(self, entry: tuple, is_dir: bool):
-        self.entry = entry  # (path, folder, name, is_dir, size)
-        self.is_dir = is_dir
+    def __init__(self, entry: tuple | None):
+        self.entry = entry  # (path, folder, name, is_dir, size); None: no rows
 
 
 class ManifestReader(DataSourceReader):
@@ -104,85 +100,45 @@ class ManifestReader(DataSourceReader):
         # regex-prefix traversal pruning (SURVEY §4.2): a FULLPATH-scoped
         # ^-anchored pattern seeds the partition listing at its static
         # folder prefix, so the executor walk covers one subtree instead
-        # of the whole server. Never pass a basename-scoped pattern.
+        # of the whole server (None: divergent literals, nothing can
+        # match). Never pass a basename-scoped pattern.
+        self.seed = self.root
         pat = options.get("path_pattern", "") or ""
-        self._pruned = False
-        self._no_match = False
         if pat:
             from .listing import pattern_prefix, seed_for
 
-            seed = seed_for(self.root, pattern_prefix(pat))
-            if seed is None:  # divergent literals: nothing can match
-                self._no_match = True
-            elif seed != self.root:
-                self.root = seed
-                self._pruned = True
+            self.seed = seed_for(self.root, pattern_prefix(pat))
 
     def partitions(self):
-        """One cheap root-level listing on the driver; each entry's
-        subtree becomes an executor-side partition.  A missing root —
-        e.g. a pruned prefix folder that doesn't exist — is a tree with
-        no matches (the reference reports zero matches, not an error,
-        for an unmatched traversal), so it yields the empty partition."""
-        if self._no_match:
-            return [_TreePartition(None, False)]
-        from .connector import is_missing_folder_error
-
-        client = self.spec.connect()
-        try:
-            try:
-                entries = client.listdir(self.root)
-            except Exception as e:
-                if not self._pruned or not is_missing_folder_error(e):
-                    raise  # bad real root / permission-denied / transient
-                # a pruned prefix folder that doesn't exist is a tree
-                # with no matches (550 reply text inspected so
-                # permission-denied propagates, connector.py)
-                return [_TreePartition(None, False)]
-            parts = []
-            for path, is_dir, size in entries:
-                name = path.rsplit("/", 1)[-1]
-                if self.skip_dot_dirs and set(name) == {"."}:
-                    continue
-                parts.append(
-                    _TreePartition((path, self.root, name, is_dir, size), is_dir)
-                )
-            return parts or [_TreePartition(None, False)]
-        finally:
-            client.close()
+        """One cheap seed listing on the driver; each entry's subtree
+        becomes an executor-side partition. No rows (a missing pruned
+        seed, an empty tree) yields the one empty partition."""
+        rows = []
+        if self.seed is not None:
+            rows = seed_rows(self.spec, self.root, self.seed, self.skip_dot_dirs)
+        return [_TreePartition(row) for row in rows] or [_TreePartition(None)]
 
     def read(self, partition: _TreePartition) -> Iterator[tuple]:
         if partition.entry is None:
             return
         client = self.spec.connect()
         try:
-            stack = [partition.entry]
+            stack = [(partition.entry, 1)]
             while stack:
-                row = stack.pop()
-                path, folder, name, is_dir, size = row
+                row, depth = stack.pop()
+                path, _, _, is_dir, _ = row
+                content = None
                 if is_dir:
-                    yield self._emit(row, None)
-                    for cpath, c_is_dir, csize in client.listdir(path):
-                        cname = cpath.rsplit("/", 1)[-1]
-                        if self.skip_dot_dirs and set(cname) == {"."}:
-                            continue
-                        stack.append((cpath, path, cname, c_is_dir, csize))
-                else:
-                    content = None
-                    if self.with_content:
-                        import io
-
-                        buf = io.BytesIO()
-                        client.retrieve(path, buf)
-                        content = buf.getvalue()
-                    yield self._emit(row, content)
+                    check_depth(depth, path)
+                    children = child_rows(client, path, self.skip_dot_dirs)
+                    stack.extend((child, depth + 1) for child in children)
+                elif self.with_content:
+                    buf = io.BytesIO()
+                    client.retrieve(path, buf)
+                    content = buf.getvalue()
+                yield (*row, content) if self.with_content else row
         finally:
             client.close()
-
-    def _emit(self, row: tuple, content: bytes | None):
-        if self.with_content:
-            return (*row, content)
-        return row
 
 
 class ManifestDataSource(DataSource):
@@ -206,6 +162,28 @@ class ManifestDataSource(DataSource):
         return ManifestWriter(self.options)
 
 
+def read_manifest(
+    spark: SparkSession,
+    spec: ClientSpec,
+    folder: str,
+    skip_dot_dirs: bool = True,
+    with_content: bool = False,
+) -> DataFrame:
+    """The program's one route into the ``ftp_manifest`` format: the
+    manifest of the tree under ``folder`` (plus ``content`` when
+    ``with_content``), its top-level entries walked executor-side.
+    Registering the format again in the same session is a no-op."""
+    spark.dataSource.register(ManifestDataSource)
+    return (
+        spark.read.format("ftp_manifest")
+        .options(**_spec_options(spec))
+        .option("folder", folder)
+        .option("skip_dot_dirs", "true" if skip_dot_dirs else "false")
+        .option("with_content", "true" if with_content else "false")
+        .load()
+    )
+
+
 class _UploadCommit(WriterCommitMessage):
     def __init__(self, n_files: int):
         self.n_files = n_files
@@ -219,9 +197,10 @@ class ManifestWriter(DataSourceWriter):
 
     Same durability discipline as the download sink: bytes land under a
     temp name and are renamed into place, so a killed task never leaves
-    a half-written remote file; parent dirs are mkdir-p'd once per
-    partition (memoized). Commit messages carry per-task upload counts;
-    a failed task raises and Spark retries it wholesale. Retries are
+    a half-written remote file; each row's parent folder goes through
+    ``client.makedirs``, which memoizes per session, so a folder costs
+    round trips once per task. Commit messages carry per-task upload
+    counts; a failed task raises and Spark retries it wholesale. Retries are
     made genuinely idempotent by a best-effort delete of the
     destination before the rename — RFC 959 RNTO replies 550 on many
     servers when the target exists (only local os.rename is guaranteed
@@ -236,19 +215,13 @@ class ManifestWriter(DataSourceWriter):
         self.spec = _spec_from_options(options)
 
     def write(self, iterator) -> "_UploadCommit":
-        import io
-
         client = self.spec.connect()
-        made: set[str] = set()
         n = 0
         try:
             for row in iterator:
                 dest = row["dest_path"]
                 payload = bytes(row["content"])
-                folder = dest.rsplit("/", 1)[0] if "/" in dest else ""
-                if folder and folder not in made:
-                    client.makedirs(folder)
-                    made.add(folder)
+                client.makedirs(parent(dest))
                 tmp = f"{dest}.__uploading__"
                 try:
                     client.store(io.BytesIO(payload), tmp)
@@ -270,8 +243,6 @@ class ManifestWriter(DataSourceWriter):
 
     def commit(self, messages) -> None:
         total = sum(m.n_files for m in messages if m is not None)
-        import logging
-
         logging.getLogger(__name__).info(
             "ftp_manifest write committed: %d file(s)", total
         )

@@ -1,18 +1,25 @@
-"""Ingestion pipeline: remote CSV trees -> parquet, fully Spark-native.
+"""Ingestion pipeline: remote CSV/JSONL/parquet/ORC trees -> parquet,
+Spark-native.
 
 The reference's blueprints move files byte-for-byte; the natural next
-step for an ETL engine is to land them as COLUMNS. This composes the
-``ftp_manifest`` DataSource (file bytes fetched executor-side, one
-partition per subtree) with JVM-side parsing:
+step for an ETL engine is to land them as COLUMNS. Every ``ingest_*``
+function is the same landing step (:func:`_land`) with its own parser:
 
-    bytes -> decode -> split lines -> posexplode -> from_csv -> parquet
+    read_manifest(with_content) -> filter(~is_dir & rlike) -> parse
+        -> parquet (optionally partitionBy) -> count
 
-No Python touches row data: decode/split/explode/from_csv are all
-Catalyst expressions, so a 1000-executor ingest is bounded by FTP
-bandwidth, not the driver. Header handling is per-file (line 0 of each
-file is dropped when ``header=True``) and every output row keeps its
-provenance (source path + 1-based line number) — the lineage columns a
-training-data pipeline audits by.
+File bytes are fetched executor-side by the ``ftp_manifest`` DataSource
+(``datasource.read_manifest``, one partition per subtree). CSV and
+JSONL share one line step (:func:`_nonempty_lines`: decode -> split
+lines -> posexplode -> drop blank lines) and then parse with
+``from_csv``/``from_json`` — Catalyst expressions, so no Python touches
+row data and a 1000-executor ingest is bounded by FTP bandwidth, not
+the driver. Parquet and ORC share one Arrow container parser
+(:func:`_parse_container`), each passing in its own pyarrow reader.
+Header handling is per-file (the first non-empty line of each CSV is
+dropped when ``header=True``) and every output row keeps its
+provenance (source path + 1-based line or row number) — the lineage
+columns a training-data pipeline audits by.
 
 Cold-start note (profiled r10): the FIRST Python-DataSource use in a
 session pays ~2.8 s of one-time init BEFORE any execution — a plan-only
@@ -24,28 +31,47 @@ in the plan; long-lived sessions amortize it to zero.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from functools import partial
+
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 
 from .connector import ClientSpec
+from .datasource import read_manifest
 
 
-def _manifest_with_content(
-    spark: SparkSession, spec: ClientSpec, folder: str
-) -> DataFrame:
-    from .datasource import ManifestDataSource, _spec_options
+def _land(
+    spark: SparkSession,
+    spec: ClientSpec,
+    folder: str,
+    pattern: str,
+    parse: Callable[[DataFrame], DataFrame],
+    dest: str,
+    partition_cols: list[str] | None,
+) -> int:
+    """The one ingest body: every file under ``folder`` whose path
+    matches ``pattern`` -> ``parse`` -> a parquet dataset at ``dest``
+    (optionally partitioned, directory-pruned on read-back); returns the
+    row count written."""
+    mf = read_manifest(spark, spec, folder, with_content=True)
+    files = mf.filter((~F.col("is_dir")) & F.col("path").rlike(pattern))
+    writer = parse(files).write.mode("overwrite")
+    if partition_cols:
+        writer = writer.partitionBy(*partition_cols)
+    writer.parquet(dest)
+    return spark.read.parquet(dest).count()
 
-    try:
-        spark.dataSource.register(ManifestDataSource)
-    except Exception:
-        pass  # already registered in this session
-    return (
-        spark.read.format("ftp_manifest")
-        .options(**_spec_options(spec))
-        .option("folder", folder)
-        .option("with_content", "true")
-        .load()
-    )
+
+def _nonempty_lines(files: DataFrame) -> DataFrame:
+    """Binary ``content`` -> (src_path, idx, line) for every non-blank
+    line; ``idx`` is the physical 0-based line index in its file."""
+    return files.select(
+        F.col("path").alias("src_path"),
+        F.posexplode(
+            F.split(F.decode("content", "UTF-8"), "\r?\n")
+        ).alias("idx", "line"),
+    ).filter(F.length(F.trim("line")) > 0)
 
 
 def parse_csv_files(
@@ -59,15 +85,8 @@ def parse_csv_files(
     are dropped but physical indices are not renumbered). ``line_no``
     is the physical line offset from the header (1 = first line after
     it), matching the pre-existing lineage contract."""
-    lines = files.select(
-        F.col("path").alias("src_path"),
-        F.posexplode(
-            F.split(F.decode("content", "UTF-8"), "\r?\n")
-        ).alias("idx", "line"),
-    ).filter(F.length(F.trim("line")) > 0)
+    lines = _nonempty_lines(files)
     if header:
-        from pyspark.sql import Window
-
         w = Window.partitionBy("src_path")
         lines = lines.withColumn("_hidx", F.min("idx").over(w)).filter(
             F.col("idx") != F.col("_hidx")
@@ -98,16 +117,11 @@ def ingest_csv(
     partition_cols: list[str] | None = None,
 ) -> int:
     """Ingest every CSV under ``folder`` on the remote into a parquet
-    dataset at ``dest``; returns the row count written. Optionally
-    partitioned (directory-pruned on read-back)."""
-    mf = _manifest_with_content(spark, spec, folder)
-    files = mf.filter((~F.col("is_dir")) & F.col("path").rlike(pattern))
-    rows = parse_csv_files(with_decompressed(files), schema, header=header, sep=sep)
-    writer = rows.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(dest)
-    return spark.read.parquet(dest).count()
+    dataset at ``dest``; returns the row count written."""
+    def parse(files):
+        return parse_csv_files(with_decompressed(files), schema, header=header, sep=sep)
+
+    return _land(spark, spec, folder, pattern, parse, dest, partition_cols)
 
 
 def parse_jsonl_files(files: DataFrame, schema: str) -> DataFrame:
@@ -115,13 +129,7 @@ def parse_jsonl_files(files: DataFrame, schema: str) -> DataFrame:
     LLM-corpus interchange format): decode, split lines, from_json per
     line — all Catalyst expressions, same lineage columns as the CSV
     path. Unparseable lines keep their lineage with null fields."""
-    lines = files.select(
-        F.col("path").alias("src_path"),
-        F.posexplode(
-            F.split(F.decode("content", "UTF-8"), "\r?\n")
-        ).alias("idx", "line"),
-    ).filter(F.length(F.trim("line")) > 0)
-    parsed = lines.select(
+    parsed = _nonempty_lines(files).select(
         "src_path",
         (F.col("idx") + 1).cast("bigint").alias("line_no"),
         F.from_json("line", schema).alias("r"),
@@ -140,50 +148,49 @@ def ingest_jsonl(
 ) -> int:
     """Ingest every JSONL file under ``folder`` into parquet at
     ``dest``; returns the row count written."""
-    mf = _manifest_with_content(spark, spec, folder)
-    files = mf.filter((~F.col("is_dir")) & F.col("path").rlike(pattern))
-    rows = parse_jsonl_files(with_decompressed(files), schema)
-    writer = rows.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(dest)
-    return spark.read.parquet(dest).count()
+    def parse(files):
+        return parse_jsonl_files(with_decompressed(files), schema)
+
+    return _land(spark, spec, folder, pattern, parse, dest, partition_cols)
 
 
-def parse_parquet_files(files: DataFrame, schema: str) -> DataFrame:
-    """Binary ``content`` -> typed rows from parquet files fetched over
-    the connector. Parquet is a binary container, so unlike CSV/JSONL
-    there is no Catalyst expression that decodes it from a bytes
-    column; one Arrow-natural mapInPandas pass opens each payload with
-    pyarrow (zero-copy into the same Arrow batches Spark already
-    speaks) and re-emits rows with the standard lineage columns
-    (src_path, row_no within the source file).
+def _parse_container(files: DataFrame, schema: str, read) -> DataFrame:
+    """Binary ``content`` -> typed rows from a columnar container file
+    (parquet, ORC). There is no Catalyst expression that decodes one
+    from a bytes column, so one Arrow-natural mapInPandas pass opens
+    each payload with ``read(fileobj, columns)`` — a pyarrow reader,
+    zero-copy into the Arrow batches Spark already speaks — and
+    re-emits its rows with the standard lineage columns (src_path,
+    row_no within the source file).
 
     ``schema`` lists the columns to project (pushed into the pyarrow
     read so unneeded columns are never materialized). Executors parse
     only their own partition's files — at scale ingest stays bounded by
     transfer bandwidth, exactly like the CSV path."""
-    import pandas as pd
-    from pyspark.sql.types import StructType
-
     want = [f.split()[0] for f in schema.split(",")]
     out_schema = f"src_path string, row_no bigint, {schema}"
 
     def gen(batches):
         import io
 
-        import pyarrow.parquet as pq
-
         for pdf in batches:
             for path, buf in zip(pdf["path"], pdf["content"]):
-                tbl = pq.read_table(io.BytesIO(bytes(buf)), columns=want)
-                out = tbl.to_pandas()
+                out = read(io.BytesIO(bytes(buf)), want).to_pandas()
                 out.insert(0, "row_no", range(1, len(out) + 1))
                 out.insert(0, "src_path", path)
                 yield out
 
-    slim = files.select("path", "content")
-    return slim.mapInPandas(gen, out_schema)
+    return files.select("path", "content").mapInPandas(gen, out_schema)
+
+
+def parse_parquet_files(files: DataFrame, schema: str) -> DataFrame:
+    """Parquet payloads -> typed rows with lineage (:func:`_parse_container`)."""
+    def read(fileobj, columns):
+        import pyarrow.parquet as pq
+
+        return pq.read_table(fileobj, columns=columns)
+
+    return _parse_container(files, schema, read)
 
 
 def ingest_parquet(
@@ -198,14 +205,35 @@ def ingest_parquet(
     """Ingest every parquet file under ``folder`` on the remote into a
     parquet dataset at ``dest`` (re-landed with lineage columns);
     returns the row count written."""
-    mf = _manifest_with_content(spark, spec, folder)
-    files = mf.filter((~F.col("is_dir")) & F.col("path").rlike(pattern))
-    rows = parse_parquet_files(files, schema)
-    writer = rows.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(dest)
-    return spark.read.parquet(dest).count()
+    parse = partial(parse_parquet_files, schema=schema)
+    return _land(spark, spec, folder, pattern, parse, dest, partition_cols)
+
+
+def parse_orc_files(files: DataFrame, schema: str) -> DataFrame:
+    """ORC payloads (the other common columnar container in warehouse
+    exports) -> typed rows with lineage (:func:`_parse_container`)."""
+    def read(fileobj, columns):
+        import pyarrow.orc as po
+
+        return po.ORCFile(fileobj).read(columns=columns)
+
+    return _parse_container(files, schema, read)
+
+
+def ingest_orc(
+    spark: SparkSession,
+    spec: ClientSpec,
+    folder: str,
+    schema: str,
+    dest: str,
+    pattern: str = r".*\.orc$",
+    partition_cols: list[str] | None = None,
+) -> int:
+    """Ingest every ORC file under ``folder`` on the remote into a
+    parquet dataset at ``dest`` (re-landed with lineage columns);
+    returns the row count written."""
+    parse = partial(parse_orc_files, schema=schema)
+    return _land(spark, spec, folder, pattern, parse, dest, partition_cols)
 
 
 def with_decompressed(files: DataFrame) -> DataFrame:
@@ -231,51 +259,3 @@ def with_decompressed(files: DataFrame) -> DataFrame:
 
     schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in files.schema)
     return files.mapInPandas(gen, schema)
-
-
-def parse_orc_files(files: DataFrame, schema: str) -> DataFrame:
-    """Binary ``content`` -> typed rows from ORC files fetched over the
-    connector — same Arrow-natural mapInPandas shape as
-    parse_parquet_files (ORC is the other common columnar container in
-    warehouse exports); column projection is pushed into the pyarrow
-    reader so unneeded columns never materialize."""
-    want = [f.split()[0] for f in schema.split(",")]
-    out_schema = f"src_path string, row_no bigint, {schema}"
-
-    def gen(batches):
-        import io
-
-        import pyarrow.orc as po
-
-        for pdf in batches:
-            for path, buf in zip(pdf["path"], pdf["content"]):
-                tbl = po.ORCFile(io.BytesIO(bytes(buf))).read(columns=want)
-                out = tbl.to_pandas()
-                out.insert(0, "row_no", range(1, len(out) + 1))
-                out.insert(0, "src_path", path)
-                yield out
-
-    slim = files.select("path", "content")
-    return slim.mapInPandas(gen, out_schema)
-
-
-def ingest_orc(
-    spark: SparkSession,
-    spec: ClientSpec,
-    folder: str,
-    schema: str,
-    dest: str,
-    pattern: str = r".*\.orc$",
-    partition_cols: list[str] | None = None,
-) -> int:
-    """Ingest every ORC file under ``folder`` on the remote into a
-    parquet dataset at ``dest`` (re-landed with lineage columns);
-    returns the row count written."""
-    mf = _manifest_with_content(spark, spec, folder)
-    files = mf.filter((~F.col("is_dir")) & F.col("path").rlike(pattern))
-    rows = parse_orc_files(files, schema)
-    writer = rows.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(dest)
-    return spark.read.parquet(dest).count()

@@ -6,22 +6,29 @@ DataFrame (SURVEY.md §2A S2-S5).
 The reference walks the tree sequentially — BFS queue in
 download_file.py:252-257 / delete_file.py:121-126, recursive DFS in
 move_file.py:63-78 — paying >=1 network round-trip per directory entry
-on one connection. Here each BFS *level* is expanded in parallel on
-driver threads: the frontier of folders is cut into at most
+on one connection. Here :func:`list_tree` lists the seed folder with one
+client, then expands each deeper BFS *level* in parallel on driver
+threads: the frontier of folders is cut into at most
 ``spec.max_connections`` contiguous chunks and each chunk is listed by
 its own client. Wall-clock per level is max(chunk listing) instead of
 sum, the session count stays bounded by the server's limit, and no
 Spark job runs — listing is pure FTP round trips.
 
+The per-folder step (one ``listdir`` -> manifest rows, the F4 all-dots
+rule), the seed probe and the depth bound are shared with the
+``ftp_manifest`` DataSource and live in ``connector.py``
+(``child_rows``, ``seed_rows``, ``check_depth``/``MAX_DEPTH``); this
+module owns the BFS, the regex-prefix pruning (:func:`pattern_prefix`,
+:func:`seed_for`) and the manifest's Spark form.
+
 While the tree is small the rows accumulate on the driver and the
 manifest is handed to Spark as one Arrow table, which plans as a JVM
 ``LocalRelation``: later jobs (match guards, numbering, sinks) read it
 without a Python worker re-serializing the rows. Past
-``driver_rows_threshold`` entries the walk abandons driver
-accumulation and returns the ``ftp_manifest`` DataSource DataFrame
-instead (datasource.py), whose per-top-level-entry partitions are
-walked executor-side — driver memory stays O(threshold) no matter how
-many files the tree holds.
+``DRIVER_ROWS_THRESHOLD`` entries the walk abandons driver
+accumulation and returns ``datasource.read_manifest`` instead, whose
+per-top-level-entry partitions are walked executor-side — driver
+memory stays O(threshold) no matter how many files the tree holds.
 
 S5 (local recursive listing, upload_file.py:136-144) additionally maps
 onto Spark's native file source: ``binary_manifest`` uses
@@ -33,14 +40,14 @@ column when only metadata is selected.
 from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
-from functools import partial
 
 import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions import paths as P
-from .connector import ClientSpec, is_missing_folder_error
+from .connector import ClientSpec, check_depth, child_rows, seed_rows
+from .datasource import read_manifest
 
 MANIFEST_SCHEMA = "path string, folder string, name string, is_dir boolean, size bigint"
 _ARROW_SCHEMA = pa.schema(
@@ -163,42 +170,6 @@ def seed_for(root: str, prefix: str) -> str | None:
     return None
 
 
-def _datasource_tree(
-    spark: SparkSession, spec: ClientSpec, root: str, skip_dot_dirs: bool
-) -> DataFrame:
-    """The scale path: ``ftp_manifest`` DataSource (sources/datasource.py)
-    — one root-level listing on the driver, every top-level entry's
-    subtree walked executor-side with its own client. Nothing
-    proportional to file count ever lives in driver memory."""
-    from .datasource import ManifestDataSource, _spec_options
-
-    try:
-        spark.dataSource.register(ManifestDataSource)
-    except Exception:
-        pass  # already registered in this session
-    return (
-        spark.read.format("ftp_manifest")
-        .options(**_spec_options(spec))
-        .option("folder", root)
-        .option("skip_dot_dirs", "true" if skip_dot_dirs else "false")
-        .load()
-    )
-
-
-def _list_level(spec: ClientSpec, folders: list[str]) -> list[tuple]:
-    """List one chunk of a frontier with a single client (one session)."""
-    client = spec.connect()
-    try:
-        rows = []
-        for folder in folders:
-            for path, is_dir, size in client.listdir(folder):
-                name = path.rsplit("/", 1)[-1]
-                rows.append((path, folder, name, is_dir, size))
-        return rows
-    finally:
-        client.close()
-
-
 def _manifest(spark: SparkSession, rows: list[tuple]) -> DataFrame:
     """Driver-held manifest rows as a ``LocalRelation`` (via one Arrow
     table): unlike ``createDataFrame(list)``, which plans a Python RDD,
@@ -215,17 +186,17 @@ def list_tree(
     spec: ClientSpec,
     root: str = "",
     skip_dot_dirs: bool = True,
-    max_depth: int = 64,
-    driver_rows_threshold: int = DRIVER_ROWS_THRESHOLD,
     path_pattern: str | None = None,
 ) -> DataFrame:
     """BFS the tree under ``root`` into a manifest DataFrame (S2+S3).
 
-    Each level is listed on driver threads, at most
+    The seed folder is listed with one client (``connector.seed_rows``);
+    each deeper level is listed on driver threads, at most
     ``spec.max_connections`` clients at once, one per contiguous chunk
     of the frontier; chunks are joined back in frontier order, so rows
     come out in a deterministic BFS order. No Spark job runs, and the
-    manifest is a ``LocalRelation`` with the five-column schema.
+    manifest is a ``LocalRelation`` with the five-column schema. A tree
+    deeper than ``connector.MAX_DEPTH`` levels raises.
 
     Dot-directories are skipped during traversal when requested —
     download's behavior (download_file.py:150-152); delete does NOT
@@ -242,61 +213,36 @@ def list_tree(
     F7 exit-200).  Never pass a basename-scoped (F1) pattern.
 
     Driver memory is bounded: once the accumulated manifest crosses
-    ``driver_rows_threshold`` rows the walk hands off to the
+    ``DRIVER_ROWS_THRESHOLD`` rows the walk hands off to the
     executor-partitioned DataSource (the partial BFS work is discarded —
     crossing the threshold means the tree is big enough that a clean
     distributed walk beats finishing a driver-side one)."""
-    seed = root
-    if path_pattern:
-        seed = seed_for(root, pattern_prefix(path_pattern))
-        if seed is None:  # literals diverge: nothing under root matches
-            return _manifest(spark, [])
-    frontier = [seed]
-    all_rows: list[tuple] = []
-    if seed != root:
-        # pruned entry: one driver-side listing doubles as the seed
-        # probe — a prefix folder that doesn't exist is simply a tree
-        # with no matches, not an error (the full walk would never
-        # visit it and report zero matches). ONLY missing-folder
-        # errors soften (is_missing_folder_error inspects the 550
-        # reply text so permission-denied propagates); transient
-        # failures (timeouts, 421s) surface exactly as they would
-        # mid-walk.
+    seed = seed_for(root, pattern_prefix(path_pattern)) if path_pattern else root
+    if seed is None:  # literals diverge: nothing under root matches
+        return _manifest(spark, [])
+    all_rows = seed_rows(spec, root, seed, skip_dot_dirs)
+    frontier = [path for path, _, _, is_dir, _ in all_rows if is_dir]
+    max_conns = max(1, spec.max_connections)
+
+    def list_chunk(folders: list[str]) -> list[tuple]:
         client = spec.connect()
         try:
-            try:
-                level0 = client.listdir(seed)
-            except Exception as e:
-                if not is_missing_folder_error(e):
-                    raise
-                return _manifest(spark, [])
+            return [r for f in folders for r in child_rows(client, f, skip_dot_dirs)]
         finally:
             client.close()
-        frontier = []
-        for path, is_dir, size in level0:
-            name = path.rsplit("/", 1)[-1]
-            if skip_dot_dirs and set(name) == {"."}:
-                continue
-            all_rows.append((path, seed, name, is_dir, size))
-            if is_dir:
-                frontier.append(path)
-    max_conns = max(1, spec.max_connections)
+
     with ThreadPoolExecutor(max_workers=max_conns) as pool:
-        for _ in range(max_depth):
-            if not frontier:
-                break
-            if len(all_rows) > driver_rows_threshold:
-                return _datasource_tree(spark, spec, seed, skip_dot_dirs)
+        depth = 1
+        while frontier:
+            if len(all_rows) > DRIVER_ROWS_THRESHOLD:
+                return read_manifest(spark, spec, seed, skip_dot_dirs)
+            check_depth(depth, frontier[0])
             n, k = len(frontier), min(len(frontier), max_conns)
             chunks = [frontier[i * n // k : (i + 1) * n // k] for i in range(k)]
-            frontier = []
-            for chunk_rows in pool.map(partial(_list_level, spec), chunks):
-                for path, folder, name, is_dir, size in chunk_rows:
-                    if skip_dot_dirs and set(name) == {"."}:
-                        continue  # F4 (download_file.py:58-62)
-                    all_rows.append((path, folder, name, is_dir, size))
-                    if is_dir:
-                        frontier.append(path)
+            level = [r for rows in pool.map(list_chunk, chunks) for r in rows]
+            all_rows += level
+            frontier = [path for path, _, _, is_dir, _ in level if is_dir]
+            depth += 1
     return _manifest(spark, all_rows)
 
 

@@ -82,18 +82,37 @@ def test_list_tree_subfolder_root(spark, tree):
     }
 
 
-def test_list_tree_delegates_past_threshold(spark, tree):
-    """Scale guard: past driver_rows_threshold the walk must hand off
+def test_list_tree_delegates_past_threshold(spark, tree, monkeypatch):
+    """Scale guard: past DRIVER_ROWS_THRESHOLD the walk must hand off
     to the executor-partitioned DataSource and produce the identical
     manifest (driver memory stays O(threshold) for any tree size)."""
-    small = list_tree(spark, _spec(tree), "", driver_rows_threshold=2)
+    from ftp_blueprints_spark.sources import listing
+
     full = list_tree(spark, _spec(tree), "")
+    monkeypatch.setattr(listing, "DRIVER_ROWS_THRESHOLD", 2)
+    small = list_tree(spark, _spec(tree), "")
     as_set = lambda df: {tuple(r) for r in df.collect()}  # noqa: E731
     assert as_set(small) == as_set(full)
     # the delegated plan reads through the Python DataSource, not a
     # LocalTableScan of driver-collected rows
     assert "ftp_manifest" in small._jdf.queryExecution().toString() or \
         "PythonDataSource" in small._jdf.queryExecution().executedPlan().toString()
+
+
+def test_list_tree_deeper_than_max_depth_raises(spark, tmp_path, monkeypatch):
+    """A tree deeper than MAX_DEPTH fails the walk, naming the folder
+    and the bound, instead of returning a truncated manifest."""
+    from ftp_blueprints_spark.errors import BlueprintError
+    from ftp_blueprints_spark.sources import connector
+
+    (tmp_path / "a/b/c").mkdir(parents=True)
+    (tmp_path / "a/b/c/f.txt").write_bytes(b"f")
+    assert list_tree(spark, _spec(tmp_path), "").count() == 4
+    monkeypatch.setattr(connector, "MAX_DEPTH", 2)
+    with pytest.raises(BlueprintError, match=r"'a/b'.*MAX_DEPTH=2"):
+        list_tree(spark, _spec(tmp_path), "")
+    monkeypatch.setattr(connector, "MAX_DEPTH", 4)  # levels '', a, a/b, a/b/c
+    assert list_tree(spark, _spec(tmp_path), "").count() == 4
 
 
 def _bfs_reference(spec: ClientSpec, root: str) -> list[tuple]:

@@ -252,3 +252,70 @@ def test_manifest_writer_cleans_temp_on_failure():
     # the failed task deleted its own temp (the dest delete attempt
     # before rename is also visible, but the temp MUST be last)
     assert client.deleted[-1] == "out/a.txt.__uploading__"
+
+
+def test_reader_walk_deeper_than_max_depth_raises(tmp_path, monkeypatch):
+    """The executor-side DFS has the same bound as list_tree: driven
+    in-process, a tree deeper than MAX_DEPTH raises naming the folder."""
+    from ftp_blueprints_spark.errors import BlueprintError
+    from ftp_blueprints_spark.sources import connector
+    from ftp_blueprints_spark.sources.datasource import ManifestReader
+
+    (tmp_path / "a/b/c").mkdir(parents=True)
+    (tmp_path / "a/b/c/f.txt").write_bytes(b"f")
+    reader = ManifestReader(None, {"kind": "local", "root": str(tmp_path)})
+    (part,) = reader.partitions()
+    assert [r[0] for r in reader.read(part)] == ["a", "a/b", "a/b/c", "a/b/c/f.txt"]
+    monkeypatch.setattr(connector, "MAX_DEPTH", 2)
+    with pytest.raises(BlueprintError, match=r"'a/b'.*MAX_DEPTH=2"):
+        list(reader.read(part))
+
+
+def test_ftp_manifest_has_one_entry_point():
+    """datasource.read_manifest is the program's only route into the
+    format: no other package module registers or reads it directly."""
+    import pathlib
+    import re
+
+    import ftp_blueprints_spark
+
+    pkg = pathlib.Path(ftp_blueprints_spark.__file__).parent
+    direct = re.compile(r"""format\(\s*["']ftp_manifest["']\s*\)|dataSource\.register""")
+    offenders = [
+        str(p.relative_to(pkg))
+        for p in sorted(pkg.rglob("*.py"))
+        if p != pkg / "sources" / "datasource.py" and direct.search(p.read_text())
+    ]
+    assert offenders == []
+
+
+def test_workers_import_package_from_any_cwd(tmp_path):
+    """get_spark ships the package's location to Python workers: an
+    ingest run from another cwd, with PYTHONPATH unset, still reaches
+    the ftp_manifest DataSource worker and lands every row."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    srv = tmp_path / "srv"
+    srv.mkdir()
+    (srv / "one.csv").write_text("id,name\n1,a\n2,b\n")
+    (srv / "two.csv").write_text("id,name\n3,c\n")
+    script = f"""
+import sys
+sys.path.insert(0, {repo!r})
+from ftp_blueprints_spark.session import get_spark
+from ftp_blueprints_spark.sources.connector import ClientSpec
+from ftp_blueprints_spark.sources.ingest import ingest_csv
+spark = get_spark("cwd-check", master="local[1]")
+n = ingest_csv(spark, ClientSpec(kind="local", root={str(srv)!r}), "",
+               "id int, name string", {str(tmp_path / "out")!r})
+print("ROWS", n)
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert "ROWS 3" in out.stdout, out.stderr[-2000:]

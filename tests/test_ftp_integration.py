@@ -272,6 +272,62 @@ def test_makedirs_permission_failure_still_raises(ftp_root):
     assert not os.path.exists(os.path.join(ftp_root, "data/forbidden"))
 
 
+def test_makedirs_memoizes_per_session(ftp_root):
+    """The mkdir -p memo lives in the client: repeating a folder, or
+    passing '' (a root-level destination), sends no further commands."""
+    with FtpStubServer(ftp_root, USERS) as (host, port):
+        client = spec_for(host, port).connect()
+        try:
+            ftp, sent = client._ftp, []
+            for cmd in ("pwd", "cwd", "mkd"):
+                real = getattr(ftp, cmd)
+
+                def wrapped(*a, _cmd=cmd, _real=real):
+                    sent.append((_cmd, *a))
+                    return _real(*a)
+
+                setattr(ftp, cmd, wrapped)
+            client.makedirs("a/b")
+            once = list(sent)
+            client.makedirs("a/b")
+            client.makedirs("a/b")
+            client.makedirs("")
+        finally:
+            client.close()
+    assert once == [
+        ("pwd",), ("cwd", "a"), ("mkd", "a"), ("cwd", "a"),
+        ("cwd", "b"), ("mkd", "b"), ("cwd", "b"), ("cwd", "/"),
+    ]
+    assert sent == once
+    assert os.path.isdir(os.path.join(ftp_root, "a/b"))
+
+
+def test_cli_upload_into_new_folder_one_session(spark, tmp_path):
+    """Three files into one new remote folder over a single session:
+    the folder is made once and every file lands in it."""
+    from ftp_blueprints_spark.cli.blueprints import upload_main
+
+    local = tmp_path / "src"
+    local.mkdir()
+    for name in ("a.csv", "b.csv", "c.csv"):
+        (local / name).write_text(name)
+    srv = tmp_path / "srv"
+    srv.mkdir()
+    with FtpStubServer(str(srv), USERS) as (host, port):
+        rc = upload_main([
+            "--kind", "ftp", "--host", host, "--port", str(port),
+            "--username", "alice", "--password", "secret", "--timeout", "10",
+            "--max-connections", "1", "--root", str(local),
+            "--source-file-name", r".*\.csv",
+            "--source-file-name-match-type", "regex_match",
+            "--destination-folder-name", "new/dir",
+        ])
+    assert rc == 0
+    tree = sorted(str(p.relative_to(srv)) for p in srv.rglob("*"))
+    assert tree == ["new", "new/dir", "new/dir/a.csv", "new/dir/b.csv", "new/dir/c.csv"]
+    assert (srv / "new/dir/b.csv").read_text() == "b.csv"
+
+
 # --- sink fan-out over the session budget -----------------------------------
 
 def test_sink_uses_every_allowed_session(spark, ftp_root, tmp_path):
