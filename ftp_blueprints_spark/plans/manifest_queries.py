@@ -290,9 +290,9 @@ FROM read_blob('{_SF01}/*.parquet')
 )
 def mf_real_listing_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ftp_manifest Python DataSource (Spark 4 pyspark.sql.datasource
-    API) over a REAL tree, read through ``datasource.read_manifest``: one
-    input partition per top-level entry, each walked executor-side with
-    its own client."""
+    API) over a REAL tree, read through ``datasource.read_manifest``: the
+    top-level entries cut into at most ``max_connections`` input
+    partitions, each walked executor-side with its own client."""
     from ..sources.connector import ClientSpec
     from ..sources.datasource import read_manifest
 

@@ -27,17 +27,20 @@ by the ``ftp_manifest`` DataSource's executor DFS alike):
 :func:`parent` is the one folder-of-path rule, :func:`child_rows` turns
 one ``listdir`` into manifest rows (name split + the all-dots F4 rule),
 :func:`seed_rows` lists a walk's seed folder (a missing *pruned* seed is
-an empty tree), and :func:`check_depth` bounds both walks at
-``MAX_DEPTH`` folder levels. They live here, not in ``listing.py``, so
-DataSource workers never import pyarrow.
+an empty tree), :func:`check_depth` bounds both walks at
+``MAX_DEPTH`` folder levels, and :func:`chunks` is the one rule that
+splits a walk's work over ``max_connections`` clients. They live here,
+not in ``listing.py``, so DataSource workers never import pyarrow.
 
 Scale design: sinks call ``spec.connect()`` once per non-empty
 PARTITION (not per row), and action DataFrames are repartitioned to
 exactly ``max_connections`` before ``foreachPartition``: a 1000-executor
 job cannot open more sessions than the server allows, and a manifest
 AQE coalesced to one partition still uses every allowed session.
-``list_tree`` opens its clients on driver threads, under the same
-``max_connections`` bound.
+``list_tree`` (clients on driver threads) and the ``ftp_manifest``
+reader (one client per input partition) cut their work into at most
+``max_connections`` contiguous :func:`chunks`, so every walk is under
+the same bound as the sinks.
 """
 
 from __future__ import annotations
@@ -298,6 +301,15 @@ def seed_rows(spec: ClientSpec, root: str, seed: str, skip_dot_dirs: bool) -> li
         return []
     finally:
         client.close()
+
+
+def chunks(items: list, k: int) -> list[list]:
+    """``items`` cut into ``min(len(items), k)`` contiguous, order-keeping
+    slices whose sizes differ by at most one (none when ``items`` is
+    empty): one slice per client of a walk bounded at ``k`` sessions."""
+    n = len(items)
+    k = min(n, max(1, k))
+    return [items[i * n // k : (i + 1) * n // k] for i in range(k)]
 
 
 def check_depth(depth: int, folder: str) -> None:

@@ -16,13 +16,16 @@ Schema: the manifest columns (path/folder/name/is_dir/size), plus a
 
 Partitioning: the driver lists ONLY the seed level with one connection
 (``connector.seed_rows``: the root, or a ``path_pattern``'s static
-prefix folder); every entry becomes an InputPartition whose subtree is
-walked depth-first by an executor with its own client, one
+prefix folder) and cuts its entries into at most ``max_connections``
+contiguous chunks (``connector.chunks``). Each chunk is one
+InputPartition, read by an executor with ONE client that walks the
+chunk's subtrees depth-first in entry order, one
 ``connector.child_rows`` call per folder, bounded by
-``connector.MAX_DEPTH``. Listing and byte-transfer both scale with the
-number of top-level entries (bounded by ``max_connections`` at the
-sink side; readers are capped by Spark's task parallelism), and file
-bytes stream executor-side — they never pass through the driver.
+``connector.MAX_DEPTH``. A read therefore opens at most 1 +
+``max_connections`` sessions, the same bound as the sinks and
+``list_tree``; rows come out in seed-entry order whatever the chunking,
+and file bytes stream executor-side — they never pass through the
+driver. A seed with no entries is one empty partition.
 
 The shared walk steps live in ``connector.py`` rather than
 ``listing.py`` because Python workers unpickle this module: importing
@@ -53,7 +56,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .connector import ClientSpec, check_depth, child_rows, parent, seed_rows
+from .connector import ClientSpec, check_depth, child_rows, chunks, parent, seed_rows
 
 _BASE_FIELDS = [
     StructField("path", StringType()),
@@ -87,8 +90,8 @@ def _spec_options(spec: ClientSpec) -> dict[str, str]:
 
 
 class _TreePartition(InputPartition):
-    def __init__(self, entry: tuple | None):
-        self.entry = entry  # (path, folder, name, is_dir, size); None: no rows
+    def __init__(self, entries: list[tuple]):
+        self.entries = entries  # seed rows (path, folder, name, is_dir, size)
 
 
 class ManifestReader(DataSourceReader):
@@ -110,20 +113,23 @@ class ManifestReader(DataSourceReader):
             self.seed = seed_for(self.root, pattern_prefix(pat))
 
     def partitions(self):
-        """One cheap seed listing on the driver; each entry's subtree
-        becomes an executor-side partition. No rows (a missing pruned
-        seed, an empty tree) yields the one empty partition."""
+        """One cheap seed listing on the driver; its entries, cut into at
+        most ``max_connections`` contiguous chunks, become the
+        executor-side partitions. No rows (a missing pruned seed, an
+        empty tree) yields one empty partition."""
         rows = []
         if self.seed is not None:
             rows = seed_rows(self.spec, self.root, self.seed, self.skip_dot_dirs)
-        return [_TreePartition(row) for row in rows] or [_TreePartition(None)]
+        chunked = chunks(rows, self.spec.max_connections)
+        return [_TreePartition(c) for c in chunked] or [_TreePartition([])]
 
     def read(self, partition: _TreePartition) -> Iterator[tuple]:
-        if partition.entry is None:
+        if not partition.entries:
             return
         client = self.spec.connect()
         try:
-            stack = [(partition.entry, 1)]
+            # reversed onto the DFS stack: entry 0's subtree comes out first
+            stack = [(row, 1) for row in reversed(partition.entries)]
             while stack:
                 row, depth = stack.pop()
                 path, _, _, is_dir, _ = row
@@ -171,7 +177,8 @@ def read_manifest(
 ) -> DataFrame:
     """The program's one route into the ``ftp_manifest`` format: the
     manifest of the tree under ``folder`` (plus ``content`` when
-    ``with_content``), its top-level entries walked executor-side.
+    ``with_content``), its top-level entries walked executor-side in at
+    most ``spec.max_connections`` partitions.
     Registering the format again in the same session is a no-op."""
     spark.dataSource.register(ManifestDataSource)
     return (

@@ -9,24 +9,22 @@ function is the same landing step (:func:`_land`) with its own parser:
         -> parquet (optionally partitionBy) -> count
 
 File bytes are fetched executor-side by the ``ftp_manifest`` DataSource
-(``datasource.read_manifest``, one partition per subtree). CSV and
-JSONL share one line step (:func:`_nonempty_lines`: decode -> split
-lines -> posexplode -> drop blank lines) and then parse with
-``from_csv``/``from_json`` — Catalyst expressions, so no Python touches
-row data and a 1000-executor ingest is bounded by FTP bandwidth, not
-the driver. Parquet and ORC share one Arrow container parser
-(:func:`_parse_container`), each passing in its own pyarrow reader.
-Header handling is per-file (the first non-empty line of each CSV is
-dropped when ``header=True``) and every output row keeps its
-provenance (source path + 1-based line or row number) — the lineage
-columns a training-data pipeline audits by.
+(``datasource.read_manifest``: at most ``max_connections`` partitions,
+one FTP session each). CSV and JSONL share one line step
+(:func:`_nonempty_lines`: decode -> split lines -> posexplode -> drop
+blank lines) and then parse with ``from_csv``/``from_json`` — Catalyst
+expressions, so no Python touches row data and a 1000-executor ingest
+is bounded by FTP bandwidth, not the driver. Parquet and ORC share one
+Arrow container parser (:func:`_parse_container`), each passing in its
+own pyarrow reader. Every output row keeps its provenance (source path
++ 1-based line or row number) — the lineage columns a training-data
+pipeline audits by.
 
-Cold-start note (profiled r10): the FIRST Python-DataSource use in a
-session pays ~2.8 s of one-time init BEFORE any execution — a plan-only
-``load()`` spawns the driver-side Python plan runner and cold-imports
-pyspark in it. Subsequent loads reuse the warm path (full ingest runs
-settle 3.6 -> 1.3 s at sf0.1). Per-session, not per-job: nothing to fix
-in the plan; long-lived sessions amortize it to zero.
+Header handling is per-file: with ``header=True`` the first non-empty
+line of each CSV is dropped. Its index is computed once per file from
+the file's leading blank lines, BEFORE the explode, so no per-line
+window (and no shuffle) is needed: read -> gunzip -> parse -> parquet
+is one shuffle-free stage per manifest partition.
 """
 
 from __future__ import annotations
@@ -35,7 +33,8 @@ from collections.abc import Callable
 from functools import partial
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from .connector import ClientSpec
 from .datasource import read_manifest
@@ -63,11 +62,13 @@ def _land(
     return spark.read.parquet(dest).count()
 
 
-def _nonempty_lines(files: DataFrame) -> DataFrame:
-    """Binary ``content`` -> (src_path, idx, line) for every non-blank
-    line; ``idx`` is the physical 0-based line index in its file."""
+def _nonempty_lines(files: DataFrame, *carry: str) -> DataFrame:
+    """Binary ``content`` -> (src_path, *carry, idx, line) for every
+    non-blank line; ``idx`` is the physical 0-based line index in its
+    file and ``carry`` are per-file columns kept on each line."""
     return files.select(
         F.col("path").alias("src_path"),
+        *carry,
         F.posexplode(
             F.split(F.decode("content", "UTF-8"), "\r?\n")
         ).alias("idx", "line"),
@@ -84,18 +85,28 @@ def parse_csv_files(
     row whenever the file starts with a blank line, since blank lines
     are dropped but physical indices are not renumbered). ``line_no``
     is the physical line offset from the header (1 = first line after
-    it), matching the pre-existing lineage contract."""
-    lines = _nonempty_lines(files)
+    it), matching the pre-existing lineage contract.
+
+    The header's index ``_hidx`` is found once per file, before the
+    explode: it is the number of newlines in the file's leading run of
+    blank lines. A line is blank when ``trim`` (ASCII spaces only)
+    leaves nothing and ``split('\\r?\\n')`` consumes a CRLF pair's CR,
+    so that run is exactly ``^( *\\r?\\n)*``. No window, so no shuffle."""
     if header:
-        w = Window.partitionBy("src_path")
-        lines = lines.withColumn("_hidx", F.min("idx").over(w)).filter(
-            F.col("idx") != F.col("_hidx")
+        # its own projection BELOW the explode: in the posexplode select
+        # Catalyst would re-evaluate it (decode + regex scan of the whole
+        # file) once per exploded line
+        lead = F.regexp_extract(F.decode("content", "UTF-8"), r"^((?: *\r?\n)*)", 1)
+        files = files.withColumn(
+            "_hidx", F.length(lead) - F.length(F.regexp_replace(lead, r"\n", ""))
         )
+        lines = _nonempty_lines(files, "_hidx").filter(F.col("idx") != F.col("_hidx"))
         # offset from the header, not the physical idx: a file with a
         # leading blank line has its header at idx=1 and its first data
         # row at idx=2 — line_no must still be 1 there.
         line_no = F.col("idx") - F.col("_hidx")
     else:
+        lines = _nonempty_lines(files)
         line_no = F.col("idx") + 1
     parsed = lines.select(
         "src_path",
@@ -167,7 +178,7 @@ def _parse_container(files: DataFrame, schema: str, read) -> DataFrame:
     read so unneeded columns are never materialized). Executors parse
     only their own partition's files — at scale ingest stays bounded by
     transfer bandwidth, exactly like the CSV path."""
-    want = [f.split()[0] for f in schema.split(",")]
+    want = StructType.fromDDL(schema).names  # a type may hold commas: decimal(10,2)
     out_schema = f"src_path string, row_no bigint, {schema}"
 
     def gen(batches):

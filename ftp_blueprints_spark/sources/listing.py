@@ -27,8 +27,9 @@ manifest is handed to Spark as one Arrow table, which plans as a JVM
 without a Python worker re-serializing the rows. Past
 ``DRIVER_ROWS_THRESHOLD`` entries the walk abandons driver
 accumulation and returns ``datasource.read_manifest`` instead, whose
-per-top-level-entry partitions are walked executor-side — driver
-memory stays O(threshold) no matter how many files the tree holds.
+partitions (at most ``max_connections`` contiguous chunks of the
+top-level entries) are walked executor-side — driver memory stays
+O(threshold) no matter how many files the tree holds.
 
 S5 (local recursive listing, upload_file.py:136-144) additionally maps
 onto Spark's native file source: ``binary_manifest`` uses
@@ -46,7 +47,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions import paths as P
-from .connector import ClientSpec, check_depth, child_rows, seed_rows
+from .connector import ClientSpec, check_depth, child_rows, chunks, seed_rows
 from .datasource import read_manifest
 
 MANIFEST_SCHEMA = "path string, folder string, name string, is_dir boolean, size bigint"
@@ -237,9 +238,8 @@ def list_tree(
             if len(all_rows) > DRIVER_ROWS_THRESHOLD:
                 return read_manifest(spark, spec, seed, skip_dot_dirs)
             check_depth(depth, frontier[0])
-            n, k = len(frontier), min(len(frontier), max_conns)
-            chunks = [frontier[i * n // k : (i + 1) * n // k] for i in range(k)]
-            level = [r for rows in pool.map(list_chunk, chunks) for r in rows]
+            parts = chunks(frontier, max_conns)
+            level = [r for rows in pool.map(list_chunk, parts) for r in rows]
             all_rows += level
             frontier = [path for path, _, _, is_dir, _ in level if is_dir]
             depth += 1

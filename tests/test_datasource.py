@@ -81,7 +81,8 @@ def test_datasource_with_content(registered, tree):
 
 
 def test_datasource_partitions_per_top_entry(registered, tree):
-    """One input partition per root entry -> executor-parallel walk."""
+    """One input partition per root entry -> executor-parallel walk
+    (while the entries number at most max_connections, default 16)."""
     df = (
         registered.read.format("ftp_manifest")
         .option("kind", "local")
@@ -93,7 +94,7 @@ def test_datasource_partitions_per_top_entry(registered, tree):
 
 
 def test_datasource_empty_tree(registered, tmp_path):
-    """An empty root yields an empty frame (the sentinel partition
+    """An empty root yields an empty frame (its one empty partition
     emits no rows), not an error."""
     empty = tmp_path / "empty"
     empty.mkdir()

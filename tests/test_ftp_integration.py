@@ -356,6 +356,43 @@ def test_sink_uses_every_allowed_session(spark, ftp_root, tmp_path):
     ]
 
 
+def test_manifest_read_uses_at_most_max_connections_sessions(spark, tmp_path):
+    """The ftp_manifest reader cuts the seed entries into at most
+    max_connections contiguous partitions, one session each: 3 top-level
+    entries under a bound of 2 read as 2 partitions over 1 + 2 sessions,
+    and the rows come out in the one-partition-per-entry walk's order."""
+    import dataclasses
+
+    from ftp_blueprints_spark.sources.datasource import ManifestReader, read_manifest
+
+    root = tmp_path / "srv"
+    (root / "a" / "sub").mkdir(parents=True)
+    (root / "a" / "sub" / "x.csv").write_bytes(b"x")
+    (root / "b.csv").write_bytes(b"bb")
+    (root / "c.csv").write_bytes(b"ccc")
+    srv = FtpStubServer(str(root), USERS)
+    with srv as (host, port):
+        spec = dataclasses.replace(spec_for(host, port), max_connections=2)
+        per_entry = ManifestReader(
+            None, {"kind": "local", "root": str(root), "max_connections": "16"}
+        )
+        parts = per_entry.partitions()
+        assert len(parts) == 3  # a, b.csv, c.csv
+        want = [row for p in parts for row in per_entry.read(p)]
+
+        srv.sessions = 0
+        df = read_manifest(spark, spec, "")
+        assert df.rdd.getNumPartitions() == 2
+        assert [tuple(r) for r in df.collect()] == want
+        assert srv.sessions == 3  # the seed listing + one per partition
+
+    (tmp_path / "bare").mkdir()
+    with FtpStubServer(str(tmp_path / "bare"), USERS) as (host, port):
+        empty = read_manifest(spark, spec_for(host, port), "")
+        assert empty.rdd.getNumPartitions() == 1
+        assert empty.count() == 0
+
+
 # --- raw client round-trip --------------------------------------------------
 
 def test_client_store_retrieve_roundtrip(ftp_root):
@@ -540,27 +577,37 @@ def test_csv_header_drop_survives_leading_blank_line(spark):
     """Regression: blank lines are filtered before the header drop, so
     a file whose FIRST physical line is blank has its header at idx 1 —
     a fixed `idx > 0` filter leaked that header as a data row. The drop
-    now targets the first NON-EMPTY line per file."""
+    now targets the first NON-EMPTY line per file: blank means nothing
+    but ASCII spaces before the line break (a CRLF's CR included), so a
+    tab-only line is the header. The header is found per file before
+    the explode, so the plan has no window and no shuffle."""
     from ftp_blueprints_spark.sources.ingest import parse_csv_files
 
     files = spark.createDataFrame(
         [
             ("lead_blank.csv", b"\nid,name\n1,ant\n"),
             ("normal.csv", b"id,name\n2,bee\n"),
+            ("crlf_spaces.csv", b"  \r\n \r\nid,name\r\n3,cat\r\n"),
+            ("tab_line.csv", b"\t\nid,name\n4,dog\n"),
+            ("empty.csv", b""),
+            ("header_only.csv", b"id,name\n"),
         ],
         "path string, content binary",
     )
-    rows = parse_csv_files(files, "id int, name string", header=True).collect()
-    got = {(r["src_path"], r["id"], r["name"]) for r in rows}
-    assert got == {("lead_blank.csv", 1, "ant"), ("normal.csv", 2, "bee")}
-    assert not any(r["name"] == "name" for r in rows), "header leaked"
+    out = parse_csv_files(files, "id int, name string", header=True)
+    rows = out.collect()
     # line_no is the offset FROM THE HEADER (1 = first data line), not
     # the physical index — the leading-blank file's first data row sits
     # at physical idx 2 but must still report line_no 1.
-    assert {(r["src_path"], r["line_no"]) for r in rows} == {
-        ("lead_blank.csv", 1),
-        ("normal.csv", 1),
-    }
+    assert sorted((r["src_path"], r["line_no"], r["id"], r["name"]) for r in rows) == [
+        ("crlf_spaces.csv", 1, 3, "cat"),
+        ("lead_blank.csv", 1, 1, "ant"),
+        ("normal.csv", 1, 2, "bee"),
+        ("tab_line.csv", 1, None, "name"),
+        ("tab_line.csv", 2, 4, "dog"),
+    ]
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "Window" not in plan, plan
 
 
 def test_ingest_jsonl_over_ftp(spark, tmp_path):
@@ -699,6 +746,42 @@ def test_ingest_orc_over_ftp(spark, tmp_path):
     rows = {(r["src_path"], r["row_no"]): r for r in out.collect()}
     assert rows[("in/o1.orc", 3)]["text"] == "c"
     assert rows[("in/o2.orc", 1)]["id"] == 4
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "orc"])
+def test_ingest_container_type_with_commas(spark, tmp_path, fmt):
+    """The projected column names come from the parsed schema, not a
+    comma split of its DDL: a decimal(10,2) column lands its values
+    instead of asking pyarrow for a column named '2)'."""
+    from decimal import Decimal
+
+    import pyarrow as pa
+    import pyarrow.orc as po
+    import pyarrow.parquet as pq
+
+    from ftp_blueprints_spark.sources import ingest
+
+    root = tmp_path / "srv"
+    (root / "in").mkdir(parents=True)
+    table = pa.table({
+        "id": pa.array([1, 2], pa.int64()),
+        "price": pa.array([Decimal("1.50"), Decimal("12.25")], pa.decimal128(10, 2)),
+        "extra": ["x", "y"],
+    })
+    write = pq.write_table if fmt == "parquet" else po.write_table
+    write(table, str(root / "in" / f"t.{fmt}"))
+    dest = str(tmp_path / "out.parquet")
+    with FtpStubServer(str(root), USERS) as (host, port):
+        n = getattr(ingest, f"ingest_{fmt}")(
+            spark, spec_for(host, port), "in",
+            schema="id bigint, price decimal(10,2)", dest=dest,
+        )
+    assert n == 2
+    out = spark.read.parquet(dest)
+    assert sorted(out.columns) == ["id", "price", "row_no", "src_path"]
+    assert sorted((r["id"], r["price"]) for r in out.collect()) == [
+        (1, Decimal("1.50")), (2, Decimal("12.25")),
+    ]
 
 
 # --- regex-prefix traversal pruning (SURVEY §4.2) ----------------------------
