@@ -14,6 +14,15 @@ Semantics parity targets (reference file:line, behavior only):
 - P6 determine_destination_name       download_file.py:121-135
 - F4 is_dot_directory        download_file.py:58-62
 
+Size invariant: a builder references each input that carries a
+``F.aggregate`` fold once. Column expressions are trees, so a
+subexpression used twice is copied; nested builders that each copy
+their input multiply the folds, and analysis and optimization time
+grow with the tree. The one exception is P3's ``folder``, which the
+``when`` test and the ``concat`` both need: with a cleaned folder (one
+fold) the numbered destination expression holds three folds, a bound
+``tests/test_paths.py`` checks.
+
 Regex note: patterns use ``[.]`` instead of ``\\.`` so the exact same
 pattern text is valid in both Java regex (Spark) and RE2 (DuckDB
 oracles) with no string-escaping divergence.
@@ -44,15 +53,21 @@ def normalize_path(path: Column | str, resolve_parent: bool = True) -> Column:
     """os.path.normpath-equivalent for '/'-paths: collapse '//'+, drop
     '.' segments, resolve 'seg/..' pairs at ANY nesting depth, strip a
     trailing '/'. Implemented as a segment stack — split on '/', fold
-    with ``F.aggregate`` (pop on '..' unless the stack top is itself
-    '..'), re-join — so resolution is unbounded, unlike a fixed number
-    of regexp passes. All higher-order-function expressions stay JVM-
-    side. ``resolve_parent=False`` skips the '..' fold (the
-    oracle-checkable subset, mirrored in plans/manifest_queries._sql_norm).
-    A fully-resolved path yields '' (callers map '' -> '.'); a leading
-    '/' survives only when segments remain."""
-    p = _c(path)
-    segs = F.filter(F.split(p, "/"), lambda s: (s != "") & (s != "."))
+    with ``F.aggregate`` (pop on '..' unless the stack top is '..' or
+    the root marker), re-join — so resolution is unbounded, unlike a
+    fixed number of regexp passes. All higher-order-function
+    expressions stay JVM-side. ``resolve_parent=False`` skips the '..'
+    fold (the oracle-checkable subset, mirrored in
+    plans/manifest_queries._sql_norm).
+
+    A rooted path keeps its leading '' segment as the root marker, so
+    ``array_join`` re-emits the leading '/' exactly when other segments
+    remain: a fully-resolved path yields '' (callers map '' -> '.'),
+    and '..' never pops past the root ('/a/../..' -> '/..')."""
+    segs = F.filter(
+        F.split(_c(path), "/"),
+        lambda s, i: ((s != "") & (s != ".")) | ((i == 0) & (s == "")),
+    )
     if resolve_parent:
         segs = F.aggregate(
             segs,
@@ -60,14 +75,11 @@ def normalize_path(path: Column | str, resolve_parent: bool = True) -> Column:
             lambda acc, s: F.when(
                 (s == "..")
                 & (F.size(acc) > 0)
-                & (F.element_at(acc, -1) != ".."),
+                & ~F.element_at(acc, -1).isin("..", ""),
                 F.slice(acc, F.lit(1), F.size(acc) - 1),
             ).otherwise(F.concat(acc, F.array(s))),
         )
-    joined = F.array_join(segs, "/")
-    return F.when(
-        p.startswith("/") & (joined != ""), F.concat(F.lit("/"), joined)
-    ).otherwise(joined)
+    return F.array_join(segs, "/")
 
 
 def clean_folder_name(folder: Column | str) -> Column:
@@ -75,10 +87,8 @@ def clean_folder_name(folder: Column | str) -> Column:
     non-empty path becomes '.' (normpath('a/..') == '.')."""
     stripped = strip_slashes(folder)
     normed = normalize_path(stripped)
-    return (
-        F.when(stripped == "", F.lit(""))
-        .when(normed == "", F.lit("."))
-        .otherwise(normed)
+    return F.when(stripped == "", F.lit("")).otherwise(
+        F.regexp_replace(normed, "^$", ".")
     )
 
 

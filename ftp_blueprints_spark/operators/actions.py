@@ -2,11 +2,13 @@
 D1-D3) as ``foreachPartition`` sinks over a destination-projected
 manifest (columns ``path`` and, where applicable, ``dest_path``).
 
-Execution model: the manifest is repartitioned to exactly
-``spec.max_connections`` (FTP servers throttle sessions), each
-non-empty partition opens ONE client (connector.ClientSpec.connect)
-and streams its rows; bytes flow executor<->server and never touch the
-driver.
+Execution model: each call acts over at most ``spec.max_connections``
+partitions (FTP servers throttle sessions). A driver-held manifest
+(``list_tree``'s ``LocalRelation``) is collected without a job and
+sliced with ``sc.parallelize``, so the call runs one Spark job; a
+DataSource manifest is repartitioned instead. Each non-empty partition
+opens ONE client (connector.ClientSpec.connect) and streams its rows;
+bytes flow executor<->server and never touch the driver.
 
 Reference error-semantic asymmetries preserved (behavioral parity):
 - download skips failed rows and keeps going, removing the partial
@@ -36,6 +38,7 @@ from pyspark.sql import DataFrame
 
 from ..errors import InvalidFilePath, MoveError, UploadError, typed_from_message
 from ..sources.connector import ClientSpec, parent
+from .manifest import driver_rows
 
 
 def _progress(action: str, n_ok: int, n_other: int = 0, other: str = "") -> None:
@@ -47,23 +50,37 @@ def _progress(action: str, n_ok: int, n_other: int = 0, other: str = "") -> None
 
 
 def _run_sink(df: DataFrame, spec: ClientSpec, body) -> None:
-    """Run ``body(client, rows)`` once per partition of ``df``.
+    """Run ``body(client, rows)`` once per partition of ``df``, with at
+    most ``spec.max_connections`` partitions: more would exceed the
+    server's session budget, fewer would leave allowed sessions idle.
+    Two regimes (``manifest.driver_rows`` decides):
 
-    The input is always repartitioned to exactly ``spec.max_connections``:
-    more partitions would exceed the server's session budget, fewer
-    would leave allowed sessions idle (AQE coalesces a small numbered
-    manifest to one partition). Asking for the current partition count
-    first would run the upstream plan's AQE stages once for the count
-    and again for the sink; the unconditional round-robin costs one
-    shuffle of the (path, dest) rows instead. Each partition opens its
-    client on its first row, so an empty partition opens no session.
+    - driver-held rows (the optimized plan is a ``LocalRelation``) are
+      collected with no job and shipped with ``sc.parallelize`` into
+      ``min(rows, max_connections)`` slices: one job, no shuffle;
+    - otherwise (a DataSource manifest) the frame is repartitioned to
+      exactly ``max_connections`` (AQE would coalesce a small numbered
+      manifest to one partition). Asking for the current partition
+      count first would run the upstream plan's AQE stages once for the
+      count and again for the sink; the unconditional round-robin costs
+      one shuffle of the (path, dest) rows instead.
+
+    Either way the bytes flow executor<->server, never through the
+    driver. Each partition opens its client on its first row, so an
+    empty partition opens no session.
 
     Executor exceptions surface as Py4J strings; they are mapped back
     to the typed error (and its exit code) at this driver boundary.
     That covers IncorrectCredentials too: spec.connect() runs INSIDE
     partitions, so a bad login fails executor-side and must still
     exit 3."""
-    df = df.repartition(max(1, spec.max_connections))
+    conns = max(1, spec.max_connections)
+    held = driver_rows(df)
+    if held is None:
+        target = df.repartition(conns)
+    else:
+        sc = df.sparkSession.sparkContext
+        target = sc.parallelize(held, max(1, min(len(held), conns)))
 
     def sink(rows) -> None:
         rows = iter(rows)
@@ -77,7 +94,7 @@ def _run_sink(df: DataFrame, spec: ClientSpec, body) -> None:
             client.close()
 
     try:
-        df.foreachPartition(sink)
+        target.foreachPartition(sink)
     except Exception as err:
         typed = typed_from_message(err)
         if typed is not None:

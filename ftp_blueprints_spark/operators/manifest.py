@@ -27,6 +27,8 @@ from __future__ import annotations
 import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..errors import NoMatchesFound  # noqa: F401  (re-export: F7 guard, exit 200)
 from ..functions import paths as P
@@ -107,27 +109,41 @@ def match_files(
     return df.filter(target.rlike(pattern))
 
 
-def with_file_numbers(matches: DataFrame) -> DataFrame:
-    """Deterministic 1-indexed fan-out numbering with ORDER BY path
-    semantics, computed scale-safely in two passes:
+def driver_rows(df: DataFrame) -> list | None:
+    """The rows of ``df`` when they are held on the driver, else None.
 
-    1. range-partition by path (each partition holds a contiguous path
-       range), number rows *within* each partition (partitioned
-       window — parallel);
-    2. count rows per partition (tiny: one row per partition), turn
-       the counts into cumulative offsets driver-side, and add each
-       partition's offset via a broadcast join.
+    Rows are driver-held when the OPTIMIZED plan is a ``LocalRelation``:
+    ``list_tree``'s Arrow-built manifest, with filters and projections
+    over it folded in by the optimizer. ``collect`` then runs no Spark
+    job. ``DataFrame.isLocal()`` is not the test: it reads the analyzed
+    plan, so it turns False as soon as ``match_files`` filters the
+    manifest. A DataSource manifest (past ``DRIVER_ROWS_THRESHOLD``)
+    returns None and keeps the distributed path, so the regime follows
+    the plan, not a row count."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() != "LocalRelation":
+        return None
+    return df.collect()
 
-    Equivalent to ``row_number() OVER (ORDER BY path)`` but no stage
-    ever funnels all matches through a single task — a pattern that
-    matches millions of files at 100x scale still numbers in parallel.
 
-    The ranged partitioning MUST be materialized (localCheckpoint)
-    before the counts job: repartitionByRange samples its boundaries
-    with an RDD-id-derived seed, so re-executing the plan for the
-    numbering job could place boundary rows in different partitions
-    than the counts saw — duplicate and skipped file_numbers, i.e.
-    silently colliding destination paths."""
+def _numbered(matches: DataFrame) -> tuple[DataFrame, int]:
+    """``matches`` plus ``file_number`` (1-indexed, ORDER BY path), and
+    the number of matches; see :func:`with_file_numbers`."""
+    rows = driver_rows(matches)
+    if rows is not None:
+        # Python orders str by code point, which equals UTF-8 byte
+        # order, Spark's binary string order
+        rows.sort(key=lambda r: r["path"])
+        schema = StructType(
+            [*matches.schema.fields, StructField("file_number", IntegerType())]
+        )
+        columns = [*zip(*rows)] or [()] * len(matches.columns)
+        table = pa.Table.from_pydict(
+            dict(zip(schema.names, [*columns, range(1, len(rows) + 1)])),
+            schema=to_arrow_schema(schema),
+        )
+        return matches.sparkSession.createDataFrame(table, schema), len(rows)
+
     ranged = (
         matches.repartitionByRange("path")
         .withColumn("_pid", F.spark_partition_id())
@@ -150,7 +166,7 @@ def with_file_numbers(matches: DataFrame) -> DataFrame:
         "_pid int, _offset bigint",
     )
     w = Window.partitionBy("_pid").orderBy("path")
-    return (
+    numbered = (
         ranged.withColumn("_local_rn", F.row_number().over(w))
         .join(F.broadcast(offsets_df), "_pid")
         .withColumn(
@@ -158,6 +174,37 @@ def with_file_numbers(matches: DataFrame) -> DataFrame:
         )
         .drop("_pid", "_local_rn", "_offset")
     )
+    return numbered, acc
+
+
+def with_file_numbers(matches: DataFrame) -> DataFrame:
+    """Deterministic 1-indexed fan-out numbering with ORDER BY path
+    semantics, in one of two regimes (:func:`driver_rows` decides):
+
+    - driver-held matches are collected (no job), sorted by path and
+      numbered on the driver, and come back as one Arrow-built
+      ``LocalRelation``;
+    - otherwise numbering is computed scale-safely in two passes:
+
+      1. range-partition by path (each partition holds a contiguous
+         path range), number rows *within* each partition
+         (partitioned window — parallel);
+      2. count rows per partition (tiny: one row per partition), turn
+         the counts into cumulative offsets driver-side, and add each
+         partition's offset via a broadcast join.
+
+      Equivalent to ``row_number() OVER (ORDER BY path)`` but no stage
+      ever funnels all matches through a single task — a pattern that
+      matches millions of files at 100x scale still numbers in
+      parallel.
+
+      The ranged partitioning MUST be materialized (localCheckpoint)
+      before the counts job: repartitionByRange samples its boundaries
+      with an RDD-id-derived seed, so re-executing the plan for the
+      numbering job could place boundary rows in different partitions
+      than the counts saw — duplicate and skipped file_numbers, i.e.
+      silently colliding destination paths."""
+    return _numbered(matches)[0]
 
 
 def with_destination(
@@ -170,46 +217,35 @@ def with_destination(
 
     When a destination_file_name fans out over several matches each row
     gets '_{n}' inserted before its first dot (P4). ``suppress_single``
-    gives move_file's behavior (no numbering when exactly one match).
+    gives move_file's behavior (no numbering when exactly one match);
+    the match count comes from the numbering step, so it costs no job.
 
     Without a destination_file_name every row keeps its source basename
-    and the enumeration is provably unused, so the numbering pass (a
-    range shuffle + counts job) and the match-count cross-join are
-    skipped entirely — the common download/move-keeping-names case pays
-    zero extra jobs. file_number is still emitted (as NULL) so the
-    output schema does not depend on the parameter."""
+    and the enumeration is provably unused, so the numbering step is
+    skipped entirely. file_number is still emitted (as NULL) so the
+    output schema does not depend on the parameter. Over driver-held
+    matches the result is again a ``LocalRelation``: the optimizer
+    evaluates ``dest_path`` into it."""
+    folder = P.clean_folder_name(F.lit(destination_folder_name))
     if destination_file_name is None:
-        dest = P.determine_destination_name(
-            P.clean_folder_name(F.lit(destination_folder_name)),
-            None,
-            F.col("path"),
-            None,
-        )
+        dest = P.determine_destination_name(folder, None, F.col("path"), None)
         return matches.withColumn(
             "file_number", F.lit(None).cast("int")
         ).withColumn("dest_path", dest)
-    numbered = with_file_numbers(matches)
-    # total match count via agg + broadcast cross-join (1 row), not a
-    # global window — no single-task stage at any scale
-    n_df = numbered.agg(F.count("*").alias("n_matches"))
-    numbered = numbered.crossJoin(F.broadcast(n_df))
-    if suppress_single:
-        file_number = F.when(
-            F.col("n_matches") > 1, F.col("file_number")
-        ).otherwise(F.lit(None))
-    else:
-        file_number = F.col("file_number")
-    dest = P.determine_destination_name(
-        P.clean_folder_name(F.lit(destination_folder_name)),
-        F.lit(destination_file_name) if destination_file_name is not None else None,
-        F.col("path"),
-        file_number,
+    numbered, n_matches = _numbered(matches)
+    file_number = (
+        None if suppress_single and n_matches == 1 else F.col("file_number")
     )
-    return numbered.withColumn("dest_path", dest).drop("n_matches")
+    dest = P.determine_destination_name(
+        folder, F.lit(destination_file_name), F.col("path"), file_number
+    )
+    return numbered.withColumn("dest_path", dest)
 
 
 def require_matches(matches: DataFrame) -> DataFrame:
-    """F7 guard: raise NoMatchesFound (exit 200) when nothing matched."""
-    if matches.limit(1).count() == 0:
+    """F7 guard: raise NoMatchesFound (exit 200) when nothing matched.
+    ``isEmpty`` runs no job on driver-held matches and one on a
+    DataSource manifest."""
+    if matches.isEmpty():
         raise NoMatchesFound("no files matched the provided pattern")
     return matches

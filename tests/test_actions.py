@@ -363,6 +363,84 @@ def test_cli_exact_match_move(spark, tree):
     assert (tree / "moved/summary.csv").exists()
 
 
+# ---------------------------------------------------------------- jobs per call
+
+
+def _cli(name: str, root, *argv: str) -> int:
+    from ftp_blueprints_spark.cli import blueprints
+
+    main = getattr(blueprints, f"{name}_main")
+    return main(["--kind", "local", "--root", str(root), "--max-connections", "2",
+                 "--source-file-name-match-type", "regex_match", *argv])
+
+
+def test_blueprint_call_runs_one_spark_job(spark, spark_jobs, tree, tmp_path):
+    """A driver-held manifest is guarded, numbered and projected with no
+    Spark job; the sink is the call's only job (sc.parallelize, no
+    shuffle)."""
+    calls = [
+        ("download", "--source-folder-name", "reports", "--source-file-name", "[.]csv$",
+         "--destination-file-name", "all.csv", "--destination-root", str(tmp_path / "out")),
+        ("move", "--source-folder-name", "reports", "--source-file-name", "2024/.*[.]csv$",
+         "--destination-folder-name", "archive"),
+        ("delete", "--source-folder-name", "archive", "--source-file-name", "[.]csv$"),
+    ]
+    for name, *argv in calls:
+        with spark_jobs() as ids:
+            assert _cli(name, tree, *argv) == 0
+        assert len(ids) == 1, (name, ids)
+    assert sorted(os.listdir(tmp_path / "out")) == ["all_1.csv", "all_2.csv", "all_3.csv"]
+    assert os.listdir(tree / "archive") == []
+
+
+def _destinations(spark, root) -> list[tuple]:
+    m = match_files(list_tree(spark, _spec(root), "reports"), pattern="[.]csv$")
+    out = with_destination(m, "dl", "all.csv").select("path", "file_number", "dest_path")
+    return sorted(tuple(r) for r in out.collect())
+
+
+def test_numbering_agrees_in_datasource_regime(spark, tree, monkeypatch):
+    """Past DRIVER_ROWS_THRESHOLD the manifest is a DataSource read:
+    numbering takes the distributed range/offset path and must yield
+    the driver regime's rows."""
+    from ftp_blueprints_spark.operators.manifest import driver_rows
+    from ftp_blueprints_spark.sources import listing
+
+    mf = list_tree(spark, _spec(tree), "reports")
+    assert driver_rows(match_files(mf, pattern="[.]csv$")) is not None
+    driver = _destinations(spark, tree)
+    monkeypatch.setattr(listing, "DRIVER_ROWS_THRESHOLD", 0)
+    assert driver_rows(list_tree(spark, _spec(tree), "reports")) is None
+    assert _destinations(spark, tree) == driver == [
+        ("reports/2024/feb.csv", 1, "dl/all_1.csv"),
+        ("reports/2024/jan.csv", 2, "dl/all_2.csv"),
+        ("reports/summary.csv", 3, "dl/all_3.csv"),
+    ]
+
+
+def test_file_numbering_non_ascii_agrees_across_regimes(spark, tmp_path, monkeypatch):
+    """Driver numbering sorts Python str (code-point order), the
+    distributed path sorts Spark strings (UTF-8 byte order): the two
+    orders, and Python's sorted, must agree on non-ASCII names."""
+    from ftp_blueprints_spark.operators.manifest import with_file_numbers
+    from ftp_blueprints_spark.sources import listing
+
+    names = ["Z.csv", "a.csv", "a b.csv", "ß.csv", "é.csv", "中.csv"]
+    (tmp_path / "d").mkdir()
+    for name in names:
+        (tmp_path / "d" / name).write_bytes(b"x")
+
+    def numbers() -> dict:
+        m = match_files(list_tree(spark, _spec(tmp_path), ""), pattern="[.]csv$")
+        return {r["path"]: r["file_number"] for r in with_file_numbers(m).collect()}
+
+    driver = numbers()
+    monkeypatch.setattr(listing, "DRIVER_ROWS_THRESHOLD", 0)
+    assert numbers() == driver == {
+        f"d/{name}": i for i, name in enumerate(sorted(names), start=1)
+    }
+
+
 def test_local_client_roundtrip(tmp_path):
     """Connector unit check without Spark: store/retrieve/rename/delete."""
     import io

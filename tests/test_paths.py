@@ -161,6 +161,44 @@ def test_determine_destination_name(spark):
     ]
 
 
+# (input, resolve_parent=True, resolve_parent=False): rooted inputs,
+# which clean_folder_name never passes on (it strips the leading '/')
+ROOTED = [
+    ("/", "", ""),
+    ("//", "", ""),
+    ("/.", "", ""),
+    ("/./", "", ""),
+    ("/..", "/..", "/.."),
+    ("/../a", "/../a", "/../a"),
+    ("/a/..", "", "/a/.."),
+    ("/a/../..", "/..", "/a/../.."),
+    ("//a//b/", "/a/b", "/a/b"),
+    ("/a/./b/", "/a/b", "/a/b"),
+    (None, None, None),
+]
+
+
+def test_normalize_path_rooted(spark):
+    rows = [r[0] for r in ROOTED]
+    df = spark.createDataFrame([(r,) for r in rows], "s string")
+    got = df.select(
+        P.normalize_path(F.col("s")), P.normalize_path(F.col("s"), resolve_parent=False)
+    ).collect()
+    assert [(s, *r) for s, r in zip(rows, got)] == ROOTED
+
+
+def test_destination_expression_size(spark):
+    """Each builder references a fold-carrying input once, so the
+    numbered destination expression stays linear in size; builders that
+    copy their input multiply the folds in the analyzed tree."""
+    dest = P.determine_destination_name(
+        P.clean_folder_name(F.lit("out")), F.lit("r.csv"), F.col("path"), F.col("n")
+    )
+    df = spark.createDataFrame([], "path string, n int").select(dest.alias("dest"))
+    analyzed = df._jdf.queryExecution().analyzed().toString()
+    assert analyzed.count("aggregate(") <= 3
+
+
 def test_manifest_guard_and_suppression(spark, sf_oracle):
     from ftp_blueprints_spark.operators.manifest import (
         NoMatchesFound,
@@ -175,12 +213,10 @@ def test_manifest_guard_and_suppression(spark, sf_oracle):
         require_matches(match_files(man, pattern="no_such_file_zzz"))
 
     one = match_files(man, exact_path="data/ECONOMY/red_widget_1.csv.gz")
-    if one.count() == 1:
-        # move_file semantics: numbering suppressed for a single match
-        row = with_destination(
-            one, "out", "final.csv", suppress_single=True
-        ).collect()[0]
-        assert row.dest_path == "out/final.csv"
-        # download semantics: always numbered
-        row = with_destination(one, "out", "final.csv").collect()[0]
-        assert row.dest_path == "out/final_1.csv"
+    assert one.count() == 1
+    # move_file semantics: numbering suppressed for a single match
+    row = with_destination(one, "out", "final.csv", suppress_single=True).collect()[0]
+    assert row.dest_path == "out/final.csv"
+    # download semantics: always numbered
+    row = with_destination(one, "out", "final.csv").collect()[0]
+    assert row.dest_path == "out/final_1.csv"
