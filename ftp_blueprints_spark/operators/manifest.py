@@ -34,8 +34,6 @@ from ..errors import NoMatchesFound  # noqa: F401  (re-export: F7 guard, exit 20
 from ..functions import paths as P
 from ..session import load_table, local_checkpoint
 
-MANIFEST_COLUMNS = ("path", "folder", "name", "is_dir", "size")
-
 
 def build_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic synthetic file tree derived from `part`: messy raw

@@ -39,7 +39,14 @@ condition and a projection evaluates twice per row.
 
 from __future__ import annotations
 
+import contextlib
+import functools
+import json
 import os
+import shutil
+import uuid
+from collections.abc import Callable
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -272,17 +279,10 @@ def neardup_skipped_buckets(spark: SparkSession) -> int:
     This is a SIGNAL, not an exact count: the accumulator increments
     once per UDF execution, so plan re-execution (multiple actions on
     the returned DataFrame, AQE re-runs, task retries/speculation)
-    inflates it by whole multiples of the per-pass skip count."""
+    inflates it by whole multiples of the per-pass skip count; only
+    zero-vs-nonzero is invariant."""
     acc = _NEARDUP_SKIPPED_ACC.get(spark.sparkContext.applicationId)
     return int(acc.value) if acc is not None else 0
-
-
-def neardup_any_skipped(spark: SparkSession) -> bool:
-    """Boolean form of :func:`neardup_skipped_buckets` — the only
-    magnitude-safe reading of the accumulator (re-execution inflates
-    the count by whole multiples; zero-vs-nonzero is invariant). New
-    callers should branch on this, not on the count."""
-    return neardup_skipped_buckets(spark) > 0
 
 
 def neardup_pairs_sql() -> str:
@@ -1096,8 +1096,6 @@ def index_ready(out: str, kind: str) -> bool:
     isdir() check would trust any pre-existing directory at the
     predictable temp path (foreign content, or a stale layout from an
     older code version) wholesale."""
-    import json
-
     marker = os.path.join(out, _INDEX_MARKER)
     if not os.path.isfile(marker):
         return False
@@ -1128,10 +1126,6 @@ def _publish_index(out: str, kind: str, write_fn) -> str:
     'default-path build rebuilt a base-only index' hazard the retrain
     preamble refuses in the crash case, refused here in the idempotent
     build-call case (r13 review)."""
-    import json
-    import shutil
-    import uuid
-
     if index_ready(out, kind):
         return out
     out_abs = os.path.abspath(out)
@@ -1143,16 +1137,10 @@ def _publish_index(out: str, kind: str, write_fn) -> str:
         # the crash hit between rename-aside and _bump_epoch; second
         # r13 review pass). Any of these means appended rows exist
         # that a rebuild would silently destroy.
-        maint_dirs = [
-            d
-            for d in os.listdir(out)
-            if d.startswith(("appends", "code_appends"))
-            and os.path.isdir(os.path.join(out, d))
-        ]
         has_bids = any(
-            x.startswith("bid=")
-            for d in maint_dirs
-            for x in os.listdir(os.path.join(out, d))
+            _bids(os.path.join(out, d))
+            for d in os.listdir(out)
+            if d.startswith(tuple(f.appends for f in _FAMILIES))
         )
         if os.path.isfile(os.path.join(out, _EPOCH_FILE)) or has_bids:
             raise CompactionFenceError(
@@ -1237,26 +1225,32 @@ def ivf_build(spark: SparkSession, sf_dir: str, index_dir: str | None = None) ->
     cents = portable_centroids(emb).transform(local_checkpoint, eager=False)
     assigned = ivf_assign(emb, cents, round_digits=6)
 
-    def write(tmp: str) -> None:
-        cents.write.mode("overwrite").parquet(os.path.join(tmp, "centroids"))
-        assigned.write.mode("overwrite").partitionBy("cid").parquet(
-            os.path.join(tmp, "lists")
-        )
-        # per-cid training stats (member count + integer cos sum): the
-        # fixed yardstick ivf_append's drift metric diffs against.
-        # Computed from the lists JUST WRITTEN, not from `assigned` —
-        # re-executing that frame would re-run the full corpus
-        # scan+argmax a second time (the portable_centroids double-pass
-        # class), and read-back is ivf_append's durable-truth
-        # discipline anyway.
-        landed = spark.read.parquet(os.path.join(tmp, "lists")).select(
-            "vec_id", "embedding", F.col("cid").cast("bigint").alias("cid")
-        )
-        _assign_cos_stats(landed, cents).write.mode("overwrite").parquet(
-            os.path.join(tmp, "stats")
-        )
+    return _publish_index(
+        out, "ivf", lambda tmp: _ivf_write_artifacts(spark, tmp, cents, assigned)
+    )
 
-    return _publish_index(out, "ivf", write)
+
+def _ivf_write_artifacts(
+    spark: SparkSession, tmp: str, cents: DataFrame, assigned: DataFrame
+) -> None:
+    """Materialize an IVF index's artifacts under ``tmp`` — shared by
+    ivf_build and ivf_retrain, so the retrain's byte-equivalence with a
+    fresh build is this sharing plus the kernel's determinism."""
+    cents.write.mode("overwrite").parquet(os.path.join(tmp, "centroids"))
+    assigned.write.mode("overwrite").partitionBy(IVF.part).parquet(
+        os.path.join(tmp, IVF.data)
+    )
+    # per-cid training stats (member count + integer cos sum): the
+    # fixed yardstick ivf_append's drift metric diffs against.
+    # Computed from the lists JUST WRITTEN, not from `assigned` —
+    # re-executing that frame would re-run the full corpus
+    # scan+argmax a second time (the portable_centroids double-pass
+    # class), and read-back is _append's durable-truth discipline
+    # anyway.
+    landed = _project(spark.read.parquet(os.path.join(tmp, IVF.data)), IVF, IVF.stored)
+    _assign_cos_stats(landed, cents).write.mode("overwrite").parquet(
+        os.path.join(tmp, "stats")
+    )
 
 
 @query("sim_ivf_query", _ivf_oracle())
@@ -1657,6 +1651,89 @@ _CADENCE_BASELINE = "cadence_baseline"
 _FOLDED_HWM = "folded.hwm"
 
 
+@dataclass(frozen=True)
+class _IndexFamily:
+    """The on-disk layout of one maintained ANN index family — every
+    fact the shared lifecycle (_append, _with_appends, _compact_index,
+    _retrain_swap, _open_append_stream) needs, and nothing else. The
+    family's math (encode, stats, artifact writer) stays in its own
+    entry points and is passed in as functions."""
+
+    kind: str  # _index_shape / marker key
+    ops: str  # public name prefix, for the heal-with messages
+    data: str  # base table dir
+    appends: str  # appended-bids dir
+    key: tuple  # dedup identity in compact
+    part: str  # partition column (both dirs), and its read-back type
+    part_type: str
+    stored: tuple  # columns compact keeps and _append reads back
+    served: tuple  # columns *_with_appends serves
+    checkpoint: str  # default stream checkpoint, inside the index dir
+    empty_stats: str  # DDL of an empty stats frame (empty-batch report)
+    drift: Callable  # (base_stats, new_stats) -> drift report
+    records_baseline: bool  # appends record the cadence baseline
+
+
+_APPENDS = "appends"
+
+IVF = _IndexFamily(
+    kind="ivf",
+    ops="ivf",
+    data="lists",
+    appends=_APPENDS,
+    key=("vec_id",),
+    part="cid",
+    part_type="bigint",
+    stored=("vec_id", "embedding", "cid"),
+    served=("vec_id", "embedding", "cid"),
+    checkpoint="_append_ckpt",
+    empty_stats="cid bigint, n bigint, cos_sum_mu bigint",
+    drift=_drift_report,
+    records_baseline=True,
+)
+IVFPQ = _IndexFamily(
+    kind="ivfpq",
+    ops="ivfpq",
+    data="codes",
+    appends="code_appends",
+    key=("cand_id",),
+    part="cid",
+    part_type="bigint",
+    stored=("cand_id", "cid", "codes", "qerr"),
+    served=("cand_id", "cid", "codes"),  # serving needs only the codes
+    checkpoint="_code_append_ckpt",
+    empty_stats="cid bigint, n bigint, qerr_sum_mu bigint",
+    drift=lambda base, new: _drift_report(base, new, val="qerr_sum_mu"),
+    records_baseline=True,
+)
+# (vec_id, band): a vector owns one row per band. No cadence baseline:
+# the planes are data-independent, so there is no train-vs-holdout gap.
+ANNLSH = _IndexFamily(
+    kind="annlsh",
+    ops="ann_lsh",
+    data="sigs",
+    appends=_APPENDS,
+    key=("vec_id", "band"),
+    part="band",
+    part_type="int",
+    stored=("vec_id", "band", "sig"),
+    served=("vec_id", "band", "sig"),
+    checkpoint="_sig_append_ckpt",
+    empty_stats="band bigint, n bigint, pair_sum bigint",
+    drift=lambda base, new: _lsh_drift_report(base, new),
+    records_baseline=False,
+)
+_FAMILIES = (IVF, IVFPQ, ANNLSH)
+
+
+def _project(df: DataFrame, fam: _IndexFamily, cols: tuple) -> DataFrame:
+    """``cols`` of a read-back index frame, the partition column cast
+    back to its canonical type (parquet partition discovery infers int)."""
+    return df.select(
+        *(F.col(c).cast(fam.part_type).alias(c) if c == fam.part else c for c in cols)
+    )
+
+
 def _folded_hwm(index_dir: str) -> int:
     """Highest batch_id any RETRAIN of this index has folded (-1 for a
     never-retrained index; stamped into the snapshot by _retrain_swap).
@@ -1715,8 +1792,6 @@ def _maybe_record_cadence_baseline(
     joins the atomic swap by construction, no cross-dir bookkeeping.
     ``baseline_bid`` records provenance for operators and the schedule
     property; the triggers' aggregate ignores it."""
-    import uuid
-
     dest = os.path.join(index_dir, _CADENCE_BASELINE)
     if os.path.isdir(dest):
         return False
@@ -1743,8 +1818,6 @@ def _maybe_record_cadence_baseline(
                 raise
             return False
     finally:
-        import shutil
-
         shutil.rmtree(tmp, ignore_errors=True)
     return True
 
@@ -1793,10 +1866,7 @@ def _bump_epoch(index_dir: str) -> int:
     open streams refuse loudly, which is the point."""
     nxt = compaction_epoch(index_dir) + 1
     tmp = os.path.join(index_dir, f".{_EPOCH_FILE}.tmp.{os.getpid()}")
-    with open(tmp, "w") as fh:
-        fh.write(str(nxt))
-        fh.flush()
-        os.fsync(fh.fileno())  # a power-cut empty marker would fail-closed
+    _write_synced(tmp, str(nxt))  # a power-cut empty marker would fail-closed
     os.rename(tmp, os.path.join(index_dir, _EPOCH_FILE))
     return nxt
 
@@ -1839,14 +1909,90 @@ def _post_write_fence(
         return
     now = compaction_epoch(index_dir)
     if now != expect_epoch:
-        import shutil
-
         shutil.rmtree(bid_dir, ignore_errors=True)
         raise CompactionFenceError(
             f"compaction epoch advanced {expect_epoch} -> {now} under "
             f"{index_dir} DURING an append: the landed bid was removed; "
             "stop and reopen the stream (quiesce contract)"
         )
+
+
+def _append(
+    spark: SparkSession,
+    fam: _IndexFamily,
+    index_dir: str,
+    new_emb: DataFrame,
+    batch_id: int,
+    encode,
+    stats,
+    expect_epoch: int | None,
+) -> DataFrame:
+    """The one append path of the maintained index families:
+    ``encode(new_emb)`` (the family's frozen-state math) lands under
+    ``<index>/<fam.appends>`` partitioned by (bid, fam.part), and the
+    per-partition drift report of ``stats(read-back rows)`` against
+    the build-time ``stats`` is returned. Steps, in order:
+
+    * epoch check: ``expect_epoch`` (streams pass the
+      compaction_epoch snapshotted at open) raises
+      CompactionFenceError if a compact or retrain started folding
+      since, instead of landing rows that may double-serve on replay;
+    * empty batch: short-circuits to a lazy n_new=0 report — a dynamic
+      overwrite of an empty frame creates no bid partition, so the
+      read-back would raise PATH_NOT_FOUND (file sources never deliver
+      empty batches, but kafka/rate/no-data triggers can);
+    * the write is a batch_id-keyed DYNAMIC partition overwrite
+      (run_incremental_exact_stream's playbook, dedup.py), so an
+      at-least-once replay rewrites exactly its own bid partitions
+      instead of duplicating rows. That assumes no compact runs
+      BETWEEN a batch's append and its checkpoint commit (quiesce
+      contract): a replay of an already-folded bid re-creates its rows
+      next to the folded copies until the next compaction's key dedup
+      heals it;
+    * the post-write fence re-reads the epoch and withdraws the bid if
+      a fold started during the write;
+    * the drift stats come from the READ-BACK bid partition (the
+      durable truth a replay would serve), not the in-flight frame;
+    * the first post-build append of a centroid family records the
+      report as the index-owned cadence baseline.
+
+    Serving reads base ∪ appends (_with_appends); the partition column
+    is shared by both, so probe-side file pruning holds for appended
+    rows too. New data costs encode + append; the standing index is
+    never rescanned."""
+    _check_epoch(index_dir, expect_epoch)
+    base_stats = spark.read.parquet(os.path.join(index_dir, "stats"))
+    if new_emb.isEmpty():
+        return fam.drift(base_stats, spark.createDataFrame([], fam.empty_stats))
+    out = os.path.join(index_dir, fam.appends)
+    # per-writer option, NOT the session conf: the conf spelling
+    # silently fell back to static overwrite here (each batch wiped
+    # every earlier batch's partitions — caught by the multi-bid
+    # streaming twin test; the single-batch replay test couldn't see
+    # it because rewriting the whole dir with the same bid's content
+    # is indistinguishable from rewriting one partition). The option
+    # form is the one run_incremental_exact_stream has proven.
+    (
+        encode(new_emb)
+        .withColumn("bid", F.lit(int(batch_id)).cast("bigint"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bid", fam.part)
+        .parquet(out)
+    )
+    bid_dir = os.path.join(out, f"bid={int(batch_id)}")
+    _post_write_fence(index_dir, expect_epoch, bid_dir)
+    # read back ONLY this bid's subtree: listing the whole appends
+    # tree would pay O(all (bid, part) partitions ever written) file
+    # discovery per micro-batch on a long-lived stream, just to prune
+    # back down to one bid (the partition column is still discovered
+    # under the bid directory)
+    landed = _project(spark.read.parquet(bid_dir), fam, fam.stored)
+    rep = fam.drift(base_stats, stats(landed))
+    if fam.records_baseline:
+        # one eager K-row job, once per index lifetime
+        _maybe_record_cadence_baseline(index_dir, rep, batch_id)
+    return rep
 
 
 def ivf_append(
@@ -1896,47 +2042,16 @@ def ivf_append(
     overwrite of an empty frame creates no bid partition, so the
     read-back below would raise PATH_NOT_FOUND (file sources never
     deliver empty batches, but kafka/rate/no-data triggers can)."""
-    _check_epoch(index_dir, expect_epoch)
-    base_stats = spark.read.parquet(os.path.join(index_dir, "stats"))
-    if new_emb.isEmpty():
-        empty = spark.createDataFrame([], "cid bigint, n bigint, cos_sum_mu bigint")
-        return _drift_report(base_stats, empty)
-    if cents is None:
-        cents = spark.read.parquet(
-            os.path.join(index_dir, "centroids")
-        ).transform(local_checkpoint)
-    assigned = ivf_assign(new_emb, cents, round_digits=6).withColumn(
-        "bid", F.lit(int(batch_id)).cast("bigint")
+    def encode(df: DataFrame) -> DataFrame:
+        nonlocal cents
+        if cents is None:
+            cents = _frozen_cents(spark, index_dir)
+        return ivf_assign(df, cents, round_digits=6)
+
+    return _append(
+        spark, IVF, index_dir, new_emb, batch_id, encode,
+        lambda landed: _assign_cos_stats(landed, cents), expect_epoch,
     )
-    out = os.path.join(index_dir, "appends")
-    # per-writer option, NOT the session conf: the conf spelling
-    # silently fell back to static overwrite here (each batch wiped
-    # every earlier batch's partitions — caught by the multi-bid
-    # streaming twin test; the single-batch replay test couldn't see
-    # it because rewriting the whole dir with the same bid's content
-    # is indistinguishable from rewriting one partition). The option
-    # form is the one run_incremental_exact_stream has proven.
-    (
-        assigned.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bid", "cid")
-        .parquet(out)
-    )
-    _post_write_fence(index_dir, expect_epoch, os.path.join(out, f"bid={int(batch_id)}"))
-    # read back ONLY this bid's subtree: listing the whole appends
-    # tree would pay O(all (bid, cid) partitions ever written) file
-    # discovery per micro-batch on a long-lived stream, just to prune
-    # back down to one bid (cid is still discovered as a partition
-    # column under the bid directory)
-    landed = (
-        spark.read.parquet(os.path.join(out, f"bid={int(batch_id)}"))
-        .select("vec_id", "embedding", F.col("cid").cast("bigint").alias("cid"))
-    )
-    rep = _drift_report(base_stats, _assign_cos_stats(landed, cents))
-    # first post-build append: persist the report as the index-owned
-    # cadence baseline (one eager K-row job, once per index lifetime)
-    _maybe_record_cadence_baseline(index_dir, rep, batch_id)
-    return rep
 
 
 def ivf_compact(spark: SparkSession, index_dir: str) -> bool:
@@ -1988,16 +2103,7 @@ def ivf_compact(spark: SparkSession, index_dir: str) -> bool:
       are in place, and all stale tmp/backup dirs are swept on the
       success path, so no committed row is ever lost and no stale
       backup can shadow a newer one."""
-    return _compact_index(
-        spark,
-        index_dir,
-        data="lists",
-        appends="appends",
-        key="vec_id",
-        project=lambda df: df.select(
-            "vec_id", "embedding", F.col("cid").cast("bigint").alias("cid")
-        ),
-    )
+    return _compact_index(spark, IVF, index_dir)
 
 
 def _next_tag(index_dir: str) -> str:
@@ -2016,65 +2122,43 @@ def _next_tag(index_dir: str) -> str:
     return f"{floor:020d}"
 
 
-def _compact_index(
-    spark: SparkSession,
-    index_dir: str,
-    data: str,
-    appends: str,
-    key: str | list[str],
-    project,
-    part_col: str = "cid",
-) -> bool:
+def _compact_index(spark: SparkSession, fam: _IndexFamily, index_dir: str) -> bool:
     """Shared fold-appends-into-base core of ivf_compact /
     ivfpq_compact / ann_lsh_compact: rename-aside-first crash
     discipline, epoch fence bump, append-only contract assertion,
-    key-dedup healing, monotonic two-rename publish. ``project``
-    normalizes a read-back frame to the canonical column set (the
-    ``part_col`` partition column comes back int32); ``key`` is the
-    dedup identity (a composite for the LSH sig table, where a vector
-    legitimately owns one row per band). See ivf_compact's docstring
-    for the full crash ladder."""
-    import shutil
-
-    keys = [key] if isinstance(key, str) else list(key)
-
+    dedup on ``fam.key`` (a composite for the LSH sig table, where a
+    vector legitimately owns one row per band), monotonic two-rename
+    publish. See ivf_compact's docstring for the full crash ladder."""
+    data, appends, keys = fam.data, fam.appends, list(fam.key)
     data_dir = os.path.join(index_dir, data)
 
-    def _entries(prefix: str) -> list[str]:
-        return sorted(d for d in os.listdir(index_dir) if d.startswith(prefix))
-
     # crash recovery: a previous compaction died between its renames —
-    # restore the newest backup (zero-padded monotonic tags, so
-    # lexicographic max IS the newest)
+    # restore the newest backup
     if not os.path.isdir(data_dir):
-        backups = _entries(f"{data}.old.")
+        backups = _entries(index_dir, f"{data}.old.")
         if not backups:
             raise FileNotFoundError(f"no {data} under {index_dir}")
         os.rename(os.path.join(index_dir, backups[-1]), data_dir)
     # stale tmp dirs/files from dead compactions are garbage: never
     # published (includes epoch tmps a crash at the publish rename left)
-    for d in _entries(f"{data}.compacting."):
-        shutil.rmtree(os.path.join(index_dir, d), ignore_errors=True)
-    for d in _entries(f".{_EPOCH_FILE}.tmp."):
-        try:
+    _sweep(index_dir, f"{data}.compacting.")
+    for d in _entries(index_dir, f".{_EPOCH_FILE}.tmp."):
+        with contextlib.suppress(OSError):
             os.remove(os.path.join(index_dir, d))
-        except OSError:
-            pass
 
     ap = os.path.join(index_dir, appends)
-    fold_srcs = [d for d in _entries(f"{appends}.folding.")]
+    fold_srcs = _entries(index_dir, f"{appends}.folding.")
     if os.path.isdir(ap):
         fold_srcs.append(appends)
     if not fold_srcs:
         return False
 
     def _merged(sources: list[str]):
-        out = project(spark.read.parquet(data_dir))
-        for d in sources:
-            out = out.unionByName(
-                project(spark.read.parquet(os.path.join(index_dir, d)))
-            )
-        return out
+        dirs = [data_dir, *(os.path.join(index_dir, d) for d in sources)]
+        return functools.reduce(
+            DataFrame.unionByName,
+            (_project(spark.read.parquet(d), fam, fam.stored) for d in dirs),
+        )
 
     # append-only contract, checked BEFORE anything is renamed aside:
     # duplicate keys may only be bit-identical replay residue. A
@@ -2103,22 +2187,50 @@ def _compact_index(
     tag = _next_tag(index_dir)
     if os.path.isdir(ap):
         os.rename(ap, os.path.join(index_dir, f"{appends}.folding.{tag}"))
-    folding = _entries(f"{appends}.folding.")
+    folding = _entries(index_dir, f"{appends}.folding.")
     # the fence: from here on, appends from streams opened earlier
     # must refuse (their checkpoint may not have committed past rows
     # this fold is about to serve from the base layout)
     _bump_epoch(index_dir)
     merged = _merged(folding).dropDuplicates(keys)
     tmp = os.path.join(index_dir, f"{data}.compacting.{tag}")
-    merged.write.mode("overwrite").partitionBy(part_col).parquet(tmp)
+    merged.write.mode("overwrite").partitionBy(fam.part).parquet(tmp)
     old = os.path.join(index_dir, f"{data}.old.{tag}")
     os.rename(data_dir, old)
     os.rename(tmp, data_dir)
     for d in folding:
         shutil.rmtree(os.path.join(index_dir, d), ignore_errors=True)
-    for d in _entries(f"{data}.old."):
-        shutil.rmtree(os.path.join(index_dir, d), ignore_errors=True)
+    _sweep(index_dir, f"{data}.old.")
     return True
+
+
+def _entries(d: str, prefix: str) -> list[str]:
+    """Names under ``d`` starting with ``prefix``, sorted: tags are
+    zero-padded and monotonic (_next_tag), so the last IS the newest."""
+    return sorted(x for x in os.listdir(d) if x.startswith(prefix))
+
+
+def _sweep(d: str, prefix: str) -> None:
+    for x in _entries(d, prefix):
+        shutil.rmtree(os.path.join(d, x), ignore_errors=True)
+
+
+def _bids(ap: str) -> list[int]:
+    """The committed batch ids under an appends dir (none if absent)."""
+    if not os.path.isdir(ap):
+        return []
+    return sorted(
+        int(d.split("=", 1)[1]) for d in os.listdir(ap) if d.startswith("bid=")
+    )
+
+
+def _write_synced(path: str, text: str) -> None:
+    """Write ``text`` to ``path`` and fsync it: a power cut must not
+    leave an empty marker behind a later rename."""
+    with open(path, "w") as fh:
+        fh.write(text)
+        fh.flush()
+        os.fsync(fh.fileno())
 
 
 def run_incremental_ivf_stream(
@@ -2179,57 +2291,106 @@ def run_incremental_ivf_stream(
     mid-stream): omit checkpoint_dir and a ``<index>.append_ckpt``
     SIBLING is used; an explicit checkpoint_dir under the index
     refuses loudly."""
+    on_report = None
     if auto_retrain:
-        ckpt = checkpoint_dir or f"{index_dir.rstrip('/')}.append_ckpt"
+        checkpoint_dir = checkpoint_dir or f"{index_dir.rstrip('/')}.append_ckpt"
         # realpath, not abspath (symlinked aliases must not slip the
-        # guard), and dir-equality too — ckpt == index_dir is exactly
-        # as destroyed by the swap as a subdir (r15 review)
+        # guard), and dir-equality too — a checkpoint AT the index dir
+        # is exactly as destroyed by the swap as one inside it
         idx_real = os.path.realpath(index_dir)
-        ckpt_real = os.path.realpath(ckpt)
+        ckpt_real = os.path.realpath(checkpoint_dir)
         if ckpt_real == idx_real or ckpt_real.startswith(idx_real + os.sep):
             raise ValueError(
-                f"auto_retrain checkpoint {ckpt} lives inside the index "
+                f"auto_retrain checkpoint {checkpoint_dir} lives inside the index "
                 "dir: a due verdict's retrain swaps that dir away mid-"
                 "stream, destroying the live checkpoint. Pass a "
                 "checkpoint_dir outside the index (or omit it for the "
                 "sibling default)."
             )
-    else:
-        ckpt = checkpoint_dir or os.path.join(index_dir, "_append_ckpt")
-    _refuse_fresh_checkpoint(index_dir, "appends", ckpt)
-    snap = {
-        "cents": spark.read.parquet(
-            os.path.join(index_dir, "centroids")
-        ).transform(local_checkpoint),
-        "epoch": compaction_epoch(index_dir),
         # the persisted baseline's rel_drift, cached: it is write-once
         # until a retrain, so re-aggregating it per micro-batch would
-        # pay a pointless extra job on the hot path (r15 review)
-        "base_rel": None,
-    }
+        # pay a pointless extra job on the hot path
+        base_rel = None
 
-    def append(batch_df: DataFrame, batch_id: int) -> None:
-        rep = ivf_append(
-            spark, index_dir, batch_df, batch_id, cents=snap["cents"],
-            expect_epoch=snap["epoch"],
-        )
-        if not auto_retrain:
-            return
-        if snap["base_rel"] is None:
-            bl = load_cadence_baseline(spark, index_dir)
-            if bl is not None:
-                snap["base_rel"] = _centroid_retrain_due(
-                    bl, "cos_sum_mu", -1
-                )["rel_drift"]
-        if ivf_retrain_due(rep, baseline_rel=snap["base_rel"])["due"]:
-            ivf_retrain(spark, index_dir)
-            snap["cents"] = spark.read.parquet(
-                os.path.join(index_dir, "centroids")
-            ).transform(local_checkpoint)
-            snap["epoch"] = compaction_epoch(index_dir)
-            snap["base_rel"] = None  # refreshed by the next append
+        def on_report(rep: DataFrame, reopen) -> None:
+            nonlocal base_rel
+            if base_rel is None:
+                bl = load_cadence_baseline(spark, index_dir)
+                if bl is not None:
+                    base_rel = _centroid_retrain_due(bl, "cos_sum_mu", -1)[
+                        "rel_drift"
+                    ]
+            if ivf_retrain_due(rep, baseline_rel=base_rel)["due"]:
+                ivf_retrain(spark, index_dir)
+                reopen()  # append against the refreshed centroids + epoch
+                base_rel = None  # refreshed by the next append
 
-    return _run_append_stream(source, append, ckpt, timeout_s)
+    return _open_append_stream(
+        spark, IVF, index_dir, source, timeout_s, checkpoint_dir, ivf_append,
+        lambda: {"cents": _frozen_cents(spark, index_dir)}, on_report,
+    )
+
+
+def _frozen_cents(spark: SparkSession, index_dir: str) -> DataFrame:
+    """The persisted centroids, materialized once for a caller that
+    assigns many batches against them."""
+    return spark.read.parquet(os.path.join(index_dir, "centroids")).transform(
+        local_checkpoint
+    )
+
+
+def _open_append_stream(
+    spark: SparkSession,
+    fam: _IndexFamily,
+    index_dir: str,
+    source: DataFrame,
+    timeout_s: int,
+    checkpoint_dir: str | None,
+    append,
+    frozen=dict,
+    on_report=None,
+):
+    """The one streaming twin of the maintained index families:
+    arriving embedding snapshots stream through a foreachBatch
+    ``append(spark, index_dir, batch, batch_id, **frozen state,
+    expect_epoch=...)``, so each micro-batch encodes against the
+    FROZEN persisted state and lands under (bid=batch_id, fam.part)
+    dynamic partition overwrites (_append) — replay-idempotent, and a
+    checkpoint restart resumes from the committed batch (both proven
+    in tests/test_streaming.py). Serving through the family's
+    *_with_appends sees every batch appended so far.
+
+    The checkpoint defaults to ``<index>/<fam.checkpoint>``; a fresh
+    checkpoint against live append bids refuses
+    (_refuse_fresh_checkpoint). ``frozen()`` loads the family's frozen
+    state (centroids, codebooks) ONCE per stream and the compaction
+    epoch is snapshotted with it: every micro-batch passes that epoch
+    to its append, so a compact or retrain started meanwhile fails the
+    stream loudly (CompactionFenceError) instead of silently
+    double-serving replayed rows — the quiesce contract,
+    machine-enforced. Stop the stream (availableNow drains terminate)
+    before compacting.
+
+    The per-batch drift report is lazy and unused unless
+    ``on_report(report, reopen)`` is given; ``reopen()`` re-snapshots
+    the frozen state and epoch after the caller changed the index (the
+    IVF auto-retrain loop). No job runs per batch beyond the append
+    itself and the one-time cadence-baseline recording."""
+    ckpt = checkpoint_dir or os.path.join(index_dir, fam.checkpoint)
+    _refuse_fresh_checkpoint(index_dir, fam.appends, ckpt)
+    snap: dict = {}
+
+    def reopen() -> None:
+        snap.update(frozen(), expect_epoch=compaction_epoch(index_dir))
+
+    reopen()
+
+    def batch(batch_df: DataFrame, batch_id: int) -> None:
+        rep = append(spark, index_dir, batch_df, batch_id, **snap)
+        if on_report is not None:
+            on_report(rep, reopen)
+
+    return _run_append_stream(source, batch, ckpt, timeout_s)
 
 
 def _checkpoint_resumed(checkpoint: str) -> bool:
@@ -2277,7 +2438,7 @@ def _refuse_fresh_checkpoint(index_dir: str, appends: str, checkpoint: str) -> N
     if _checkpoint_resumed(checkpoint):
         return
     ap = os.path.join(index_dir, appends)
-    if os.path.isdir(ap) and any(d.startswith("bid=") for d in os.listdir(ap)):
+    if _bids(ap):
         raise CompactionFenceError(
             f"fresh checkpoint {checkpoint} against index {index_dir} "
             f"with live append bids under {appends}/: the stream would "
@@ -2289,11 +2450,11 @@ def _refuse_fresh_checkpoint(index_dir: str, appends: str, checkpoint: str) -> N
 
 
 def _run_append_stream(source: DataFrame, append_fn, checkpoint: str, timeout_s: int):
-    """Shared foreachBatch runner of the two maintained-index stream
-    twins (one scaffold in the repo — checkpoint wiring, availableNow
-    drain, timeout/stop/raise; r11 review): the per-stream snapshots
-    (frozen centroids/codebooks, compaction epoch) stay in the callers,
-    the lifecycle lives here."""
+    """Shared foreachBatch runner of _open_append_stream and the CMS
+    registry's stream (one scaffold in the repo — checkpoint wiring,
+    availableNow drain, timeout/stop/raise): the per-stream snapshots
+    (frozen state, compaction epoch) stay in the callers, the query
+    lifecycle lives here."""
     q = (
         source.writeStream.foreachBatch(append_fn)
         .outputMode("append")
@@ -2314,16 +2475,19 @@ def ivf_lists_with_appends(spark: SparkSession, index_dir: str) -> DataFrame:
     index: the build-time lists plus every appended snapshot. Both
     sides are cid-partitioned on disk, so the serve-phase probe join
     still prunes to nprobe/K of the files."""
-    lists = spark.read.parquet(os.path.join(index_dir, "lists")).select(
-        "vec_id", "embedding", F.col("cid").cast("bigint").alias("cid")
+    return _with_appends(spark, IVF, index_dir)
+
+
+def _with_appends(spark: SparkSession, fam: _IndexFamily, index_dir: str) -> DataFrame:
+    """The servable rows of a maintained index: base ∪ every appended
+    bid, both projected to ``fam.served``."""
+    base = _project(
+        spark.read.parquet(os.path.join(index_dir, fam.data)), fam, fam.served
     )
-    ap = os.path.join(index_dir, "appends")
+    ap = os.path.join(index_dir, fam.appends)
     if not os.path.isdir(ap):
-        return lists
-    appends = spark.read.parquet(ap).select(
-        "vec_id", "embedding", F.col("cid").cast("bigint").alias("cid")
-    )
-    return lists.unionByName(appends)
+        return base
+    return base.unionByName(_project(spark.read.parquet(ap), fam, fam.served))
 
 
 _RETRAIN_READY = "_retrain_ready"
@@ -2331,13 +2495,10 @@ _RETRAIN_READY = "_retrain_ready"
 
 def _retrain_swap(
     spark: SparkSession,
+    fam: _IndexFamily,
     index_dir: str,
-    appends_name: str,
-    kind: str,
     write_snapshot,
     force: bool,
-    op_name: str,
-    compact_name: str,
     shape_fn=None,
 ) -> bool:
     """The whole-dir snapshot-swap retrain engine shared by
@@ -2364,23 +2525,17 @@ def _retrain_swap(
 
     See ivf_retrain's docstring for the rationale of each step — the
     engine is its imperative part verbatim, parametrized on the
-    appends dirname, the shape kind, and the family's artifact
-    writer. ``shape_fn`` (optional, called AFTER write_snapshot so it
-    can reflect choices the writer made, e.g. an adaptive hash width)
-    overrides the marker's shape; default is the kind's constants."""
-    import json
-    import shutil
-
+    family spec and the family's artifact writer. ``shape_fn``
+    (optional, called AFTER write_snapshot so it can reflect choices
+    the writer made, e.g. an adaptive hash width) overrides the
+    marker's shape; default is the kind's constants."""
     parent = os.path.dirname(os.path.abspath(index_dir))
     name = os.path.basename(os.path.abspath(index_dir))
-
-    def _entries(prefix: str) -> list[str]:
-        return sorted(d for d in os.listdir(parent) if d.startswith(prefix))
 
     # 1. recovery preamble
     ready = [
         d
-        for d in _entries(f"{name}.retraining.")
+        for d in _entries(parent, f"{name}.retraining.")
         if os.path.isfile(os.path.join(parent, d, _RETRAIN_READY))
     ]
     if not os.path.isdir(index_dir):
@@ -2388,12 +2543,10 @@ def _retrain_swap(
             os.rename(os.path.join(parent, ready[-1]), index_dir)
             # published now: the live dir must never look like a
             # roll-forward candidate (same as the normal publish path)
-            try:
+            with contextlib.suppress(OSError):
                 os.remove(os.path.join(index_dir, _RETRAIN_READY))
-            except OSError:
-                pass
         else:
-            backups = _entries(f"{name}.old.")
+            backups = _entries(parent, f"{name}.old.")
             if not backups:
                 raise FileNotFoundError(f"no index at {index_dir}")
             os.rename(os.path.join(parent, backups[-1]), index_dir)
@@ -2418,41 +2571,25 @@ def _retrain_swap(
                     "resolve manually (publish the snapshot or remove "
                     "it explicitly) before retraining."
                 )
-    for d in _entries(f"{name}.retraining."):
-        shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
-    for d in _entries(f"{name}.old."):
-        shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
+    _sweep(parent, f"{name}.retraining.")
+    _sweep(parent, f"{name}.old.")
 
     # A crashed COMPACT's fold leftovers hold committed appended rows
     # renamed aside; the served union reads only base ∪ appends, so
     # retraining over them would fold a snapshot that silently omits
     # those rows and then sweep them with the old dir. Refuse: the
     # compact owns that recovery (r12 review).
-    folding = [
-        d
-        for d in os.listdir(index_dir)
-        if d.startswith(f"{appends_name}.folding.")
-    ]
+    folding = _entries(index_dir, f"{fam.appends}.folding.")
     if folding:
         raise CompactionFenceError(
             f"index {index_dir} carries crashed-compact fold leftovers "
-            f"({folding}); run {compact_name} to heal them before "
+            f"({folding}); run {fam.ops}_compact to heal them before "
             "retraining — a retrain from this state would silently "
             "drop the renamed-aside appended rows."
         )
 
-    ap = os.path.join(index_dir, appends_name)
-
-    def _bids() -> list[int]:
-        if not os.path.isdir(ap):
-            return []
-        return sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(ap)
-            if d.startswith("bid=")
-        )
-
-    fold_bids = _bids()
+    ap = os.path.join(index_dir, fam.appends)
+    fold_bids = _bids(ap)
     if not fold_bids and not force:
         return False
 
@@ -2468,26 +2605,15 @@ def _retrain_swap(
     tag = _next_tag(parent)
     tmp = os.path.join(parent, f"{name}.retraining.{tag}")
     write_snapshot(tmp, fold_bids, epoch)
-    with open(os.path.join(tmp, _EPOCH_FILE), "w") as fh:
-        fh.write(str(epoch))
-        fh.flush()
-        os.fsync(fh.fileno())
+    _write_synced(os.path.join(tmp, _EPOCH_FILE), str(epoch))
     # folded high-water mark: the cadence-baseline recorder's replay
     # fence (see _folded_hwm). Carried forward across force-retrains
     # with nothing to fold; absent only on a never-retrained index.
     hwm = max([_folded_hwm(index_dir), *fold_bids])
     if hwm >= 0:
-        with open(os.path.join(tmp, _FOLDED_HWM), "w") as fh:
-            fh.write(str(hwm))
-            fh.flush()
-            os.fsync(fh.fileno())
-    shape = list(shape_fn()) if shape_fn is not None else list(
-        _index_shape(kind)
-    )
-    with open(os.path.join(tmp, _INDEX_MARKER), "w") as fh:
-        json.dump({"shape": shape}, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
+        _write_synced(os.path.join(tmp, _FOLDED_HWM), str(hwm))
+    shape = list(shape_fn() if shape_fn is not None else _index_shape(fam.kind))
+    _write_synced(os.path.join(tmp, _INDEX_MARKER), json.dumps({"shape": shape}))
 
     # Bid-set check BEFORE the ready stamp, in BOTH directions. A bid
     # ADDED since the fold listing (a fenced stream (re)opened AFTER
@@ -2502,7 +2628,7 @@ def _retrain_swap(
     # roll-forward candidate ever embeds a stale fold. Residual
     # check-then-act window: a change landing between this re-list and
     # rename1 below still needs the drain/single-writer contract.
-    now_bids = set(_bids())
+    now_bids = set(_bids(ap))
     late = sorted(now_bids - set(fold_bids))
     gone = sorted(set(fold_bids) - now_bids)
     if late or gone:
@@ -2514,13 +2640,10 @@ def _retrain_swap(
             "fenced append withdraws its bid on observing the bump. "
             "Publishing this snapshot would silently discard added "
             "rows or serve stats trained on withdrawn ones. Drain "
-            f"writers and re-run {op_name}."
+            f"writers and re-run {fam.ops}_retrain."
         )
 
-    with open(os.path.join(tmp, _RETRAIN_READY), "w") as fh:
-        fh.write(tag)
-        fh.flush()
-        os.fsync(fh.fileno())
+    _write_synced(os.path.join(tmp, _RETRAIN_READY), tag)
 
     # 4. the two-rename publish
     os.rename(index_dir, os.path.join(parent, f"{name}.old.{tag}"))
@@ -2528,15 +2651,40 @@ def _retrain_swap(
     # the published snapshot is no longer "retraining": drop the ready
     # marker so a later crash's preamble can never mistake the LIVE dir
     # for a roll-forward candidate
-    try:
+    with contextlib.suppress(OSError):
         os.remove(os.path.join(index_dir, _RETRAIN_READY))
-    except OSError:
-        pass
 
     # 5. sweep
-    for d in _entries(f"{name}.old."):
-        shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
+    _sweep(parent, f"{name}.old.")
     return True
+
+
+def _pinned_served(
+    spark: SparkSession,
+    fam: _IndexFamily,
+    index_dir: str,
+    fold_bids: list[int],
+    cols: list,
+    where=None,
+) -> DataFrame:
+    """``cols`` of base ∪ the appended bids a retrain's fold pinned
+    (``where`` filters both sides). Pinning by partition value (bid
+    isin -> partition pruning) keeps the snapshot writer's separate
+    lazy jobs on one corpus WITHOUT materializing it the way a
+    localCheckpoint would — the 100-TB-safe choice; bid partitions are
+    immutable once committed (replays rewrite bit-identical content),
+    so a pinned read is a consistent snapshot."""
+    base = spark.read.parquet(os.path.join(index_dir, fam.data))
+    if where is not None:
+        base = base.filter(where)
+    base = base.select(*cols)
+    if not fold_bids:
+        return base
+    pin = F.col("bid").isin([int(b) for b in fold_bids])
+    if where is not None:
+        pin = pin & where
+    pinned = spark.read.parquet(os.path.join(index_dir, fam.appends)).filter(pin)
+    return base.unionByName(pinned.select(*cols))
 
 
 def _retrain_corpus_check(
@@ -2729,24 +2877,10 @@ def ivf_retrain(
         # re-read the served union, and without the pin a bid landing
         # between them would train centroids on a different corpus
         # than the published lists — breaking the byte-equivalence
-        # contract (r12 advice). Pinning by partition value (bid isin
-        # -> partition pruning) keeps the two reads consistent WITHOUT
-        # materializing the corpus the way a localCheckpoint would —
-        # the 100-TB-safe choice; bid partitions are immutable-once-
-        # committed (replays rewrite bit-identical content), so a
-        # pinned read is a consistent snapshot.
-        lists = spark.read.parquet(os.path.join(index_dir, "lists")).select(
-            "vec_id", "embedding"
+        # contract.
+        served = _pinned_served(
+            spark, IVF, index_dir, fold_bids, ["vec_id", "embedding"]
         )
-        if fold_bids:
-            pinned = (
-                spark.read.parquet(os.path.join(index_dir, "appends"))
-                .filter(F.col("bid").isin([int(b) for b in fold_bids]))
-                .select("vec_id", "embedding")
-            )
-            served = lists.unionByName(pinned)
-        else:
-            served = lists
         # Compact's healing discipline carried into the fold: a
         # replayed already-folded bid leaves bit-identical residue
         # rows beside their folded copies (the documented
@@ -2773,28 +2907,11 @@ def ivf_retrain(
                 "same invariant) before retraining."
             )
         cents2 = portable_centroids(served).transform(local_checkpoint)
-        assigned = ivf_assign(served, cents2, round_digits=6)
-        cents2.write.mode("overwrite").parquet(os.path.join(tmp, "centroids"))
-        assigned.write.mode("overwrite").partitionBy("cid").parquet(
-            os.path.join(tmp, "lists")
-        )
-        landed = spark.read.parquet(os.path.join(tmp, "lists")).select(
-            "vec_id", "embedding", F.col("cid").cast("bigint").alias("cid")
-        )
-        _assign_cos_stats(landed, cents2).write.mode("overwrite").parquet(
-            os.path.join(tmp, "stats")
+        _ivf_write_artifacts(
+            spark, tmp, cents2, ivf_assign(served, cents2, round_digits=6)
         )
 
-    return _retrain_swap(
-        spark,
-        index_dir,
-        appends_name="appends",
-        kind="ivf",
-        write_snapshot=write_snapshot,
-        force=force,
-        op_name="ivf_retrain",
-        compact_name="ivf_compact",
-    )
+    return _retrain_swap(spark, IVF, index_dir, write_snapshot, force)
 
 
 ANN_BANDS = 32
@@ -2935,18 +3052,24 @@ def ann_lsh_build(spark: SparkSession, sf_dir: str, index_dir: str | None = None
         return out
     sigs = band_signatures(
         load_table(spark, sf_dir, "embeddings"), ANN_BANDS, ANN_ROWS, quantize=True
-    ).select("vec_id", "band", "sig")
+    ).select(*ANNLSH.stored)
 
-    def write(tmp: str) -> None:
-        sigs.write.mode("overwrite").partitionBy("band").parquet(
-            os.path.join(tmp, "sigs")
-        )
-        landed = spark.read.parquet(os.path.join(tmp, "sigs"))
-        _band_pair_stats(landed).write.mode("overwrite").parquet(
-            os.path.join(tmp, "stats")
-        )
+    return _publish_index(
+        out, "annlsh", lambda tmp: _lsh_write_artifacts(spark, tmp, sigs)
+    )
 
-    return _publish_index(out, "annlsh", write)
+
+def _lsh_write_artifacts(spark: SparkSession, tmp: str, sigs: DataFrame) -> None:
+    """Materialize an LSH index's band-partitioned sigs and their
+    per-band stats (from the landed read-back) under ``tmp`` — shared
+    by ann_lsh_build and ann_lsh_retrain."""
+    sigs.write.mode("overwrite").partitionBy(ANNLSH.part).parquet(
+        os.path.join(tmp, ANNLSH.data)
+    )
+    landed = spark.read.parquet(os.path.join(tmp, ANNLSH.data))
+    _band_pair_stats(landed).write.mode("overwrite").parquet(
+        os.path.join(tmp, "stats")
+    )
 
 
 @query("sim_ann_lsh_query", _ann_lsh_oracle())
@@ -3566,8 +3689,6 @@ def _lsh_index_width(index_dir: str) -> tuple[int, int]:
     widened index would land sigs no serve-time bucket join could ever
     match). Fails loudly on a missing/foreign marker — hashing at a
     guessed width would corrupt the index silently."""
-    import json
-
     with open(os.path.join(index_dir, _INDEX_MARKER)) as fh:
         shape = json.load(fh)["shape"]
     return int(shape[0]), int(shape[1])
@@ -3602,30 +3723,20 @@ def ann_lsh_append(
     (serve-time exact scoring joins the base table), so an append
     moves ~10 bytes per (vector, band). At 100 TB: new data costs one
     projection + append; yesterday's hashes are never recomputed."""
-    _check_epoch(index_dir, expect_epoch)
-    base_stats = spark.read.parquet(os.path.join(index_dir, "stats"))
-    if new_emb.isEmpty():
-        empty = spark.createDataFrame([], "band bigint, n bigint, pair_sum bigint")
-        return _lsh_drift_report(base_stats, empty)
-    # hash at the INDEX's published width, not the build constants —
-    # after a width-adaptive ann_lsh_retrain the two differ, and a
-    # constants-width sig could never match a widened bucket
-    bands, rows = _lsh_index_width(index_dir)
-    sigs = (
-        band_signatures(new_emb, bands, rows, quantize=True)
-        .select("vec_id", "band", "sig")
-        .withColumn("bid", F.lit(int(batch_id)).cast("bigint"))
+
+    def encode(df: DataFrame) -> DataFrame:
+        # hash at the INDEX's published width, not the build constants —
+        # after a width-adaptive ann_lsh_retrain the two differ, and a
+        # constants-width sig could never match a widened bucket
+        bands, rows = _lsh_index_width(index_dir)
+        return band_signatures(df, bands, rows, quantize=True).select(
+            *ANNLSH.stored
+        )
+
+    return _append(
+        spark, ANNLSH, index_dir, new_emb, batch_id, encode, _band_pair_stats,
+        expect_epoch,
     )
-    out = os.path.join(index_dir, "appends")
-    (
-        sigs.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bid", "band")
-        .parquet(out)
-    )
-    _post_write_fence(index_dir, expect_epoch, os.path.join(out, f"bid={int(batch_id)}"))
-    landed = spark.read.parquet(os.path.join(out, f"bid={int(batch_id)}"))
-    return _lsh_drift_report(base_stats, _band_pair_stats(landed))
 
 
 def ann_lsh_sigs_with_appends(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -3634,16 +3745,7 @@ def ann_lsh_sigs_with_appends(spark: SparkSession, index_dir: str) -> DataFrame:
     hashes, normalized to the (vec_id, band, sig) serve surface. Feed
     the result straight into _ann_lsh_serve (with a vector store that
     covers the appended ids)."""
-    sigs = spark.read.parquet(os.path.join(index_dir, "sigs")).select(
-        "vec_id", F.col("band").cast("int").alias("band"), "sig"
-    )
-    ap = os.path.join(index_dir, "appends")
-    if not os.path.isdir(ap):
-        return sigs
-    appends = spark.read.parquet(ap).select(
-        "vec_id", F.col("band").cast("int").alias("band"), "sig"
-    )
-    return sigs.unionByName(appends)
+    return _with_appends(spark, ANNLSH, index_dir)
 
 
 def ann_lsh_compact(spark: SparkSession, index_dir: str) -> bool:
@@ -3658,17 +3760,7 @@ def ann_lsh_compact(spark: SparkSession, index_dir: str) -> bool:
     untouched: they are the frozen collision-density yardstick.
     Returns False when nothing to fold. Operations runbook:
     MAINTENANCE.md."""
-    return _compact_index(
-        spark,
-        index_dir,
-        data="sigs",
-        appends="appends",
-        key=["vec_id", "band"],
-        project=lambda df: df.select(
-            "vec_id", F.col("band").cast("int").alias("band"), "sig"
-        ),
-        part_col="band",
-    )
+    return _compact_index(spark, ANNLSH, index_dir)
 
 
 def ann_lsh_retrain(
@@ -3729,23 +3821,9 @@ def ann_lsh_retrain(
     chosen: dict[str, int] = {}
 
     def write_snapshot(tmp: str, fold_bids: list[int], epoch: int) -> None:
-        base_ids = (
-            spark.read.parquet(os.path.join(index_dir, "sigs"))
-            .filter(F.col("band") == 0)
-            .select("vec_id")
+        served_ids = _pinned_served(
+            spark, ANNLSH, index_dir, fold_bids, ["vec_id"], F.col("band") == 0
         )
-        if fold_bids:
-            ap_ids = (
-                spark.read.parquet(os.path.join(index_dir, "appends"))
-                .filter(
-                    F.col("bid").isin([int(b) for b in fold_bids])
-                    & (F.col("band") == 0)
-                )
-                .select("vec_id")
-            )
-            served_ids = base_ids.unionByName(ap_ids)
-        else:
-            served_ids = base_ids
         n = _retrain_corpus_check(
             corpus.select("vec_id", "embedding"),
             served_ids,
@@ -3759,26 +3837,15 @@ def ann_lsh_retrain(
         # vectors
         width = int(rows) if rows is not None else lsh_rows_for(n)
         chosen["rows"] = width
-        sigs = band_signatures(
-            corpus, ANN_BANDS, width, quantize=True
-        ).select("vec_id", "band", "sig")
-        sigs.write.mode("overwrite").partitionBy("band").parquet(
-            os.path.join(tmp, "sigs")
-        )
-        landed = spark.read.parquet(os.path.join(tmp, "sigs"))
-        _band_pair_stats(landed).write.mode("overwrite").parquet(
-            os.path.join(tmp, "stats")
-        )
+        sigs = band_signatures(corpus, ANN_BANDS, width, quantize=True)
+        _lsh_write_artifacts(spark, tmp, sigs.select(*ANNLSH.stored))
 
     return _retrain_swap(
         spark,
+        ANNLSH,
         index_dir,
-        appends_name="appends",
-        kind="annlsh",
-        write_snapshot=write_snapshot,
-        force=force,
-        op_name="ann_lsh_retrain",
-        compact_name="ann_lsh_compact",
+        write_snapshot,
+        force,
         # derive from the single shape source, overriding only the
         # rows slot — a hand-copied tuple would silently diverge when
         # _index_shape's annlsh entry changes (r13 review)
@@ -3954,16 +4021,9 @@ def run_incremental_lsh_stream(
     compact racing the stream fails the next append loudly
     (CompactionFenceError) instead of silently double-serving replayed
     rows."""
-    ckpt = checkpoint_dir or os.path.join(index_dir, "_sig_append_ckpt")
-    _refuse_fresh_checkpoint(index_dir, "appends", ckpt)
-    epoch0 = compaction_epoch(index_dir)
-
-    def append(batch_df: DataFrame, batch_id: int) -> None:
-        ann_lsh_append(
-            spark, index_dir, batch_df, batch_id, expect_epoch=epoch0
-        )
-
-    return _run_append_stream(source, append, ckpt, timeout_s)
+    return _open_append_stream(
+        spark, ANNLSH, index_dir, source, timeout_s, checkpoint_dir, ann_lsh_append
+    )
 
 
 # --- product quantization (PQ) ANN -----------------------------------------
@@ -4542,16 +4602,16 @@ def _ivfpq_write_artifacts(
     # nprobe/K of the code FILES (the lists layout's discipline),
     # and ivfpq_compact folds cid-partitioned appends into the
     # same shape
-    coded.write.mode("overwrite").partitionBy("cid").parquet(
-        os.path.join(tmp, "codes")
+    coded.write.mode("overwrite").partitionBy(IVFPQ.part).parquet(
+        os.path.join(tmp, IVFPQ.data)
     )
     # per-cid training quantization-error stats: the frozen
     # yardstick ivfpq_append diffs code-space drift against.
     # Computed from the codes JUST WRITTEN (read-back = the
     # durable truth; re-executing `coded` would re-run the full
     # encode pass — the ivf_build discipline).
-    landed = spark.read.parquet(os.path.join(tmp, "codes")).select(
-        "cand_id", F.col("cid").cast("bigint").alias("cid"), "codes", "qerr"
+    landed = _project(
+        spark.read.parquet(os.path.join(tmp, IVFPQ.data)), IVFPQ, IVFPQ.stored
     )
     _qerr_stats(landed).write.mode("overwrite").parquet(
         os.path.join(tmp, "stats")
@@ -4791,38 +4851,21 @@ def ivfpq_append(
     partition column in both, so probe-side file pruning holds for
     appended codes too. At 100 TB: yesterday's 4-byte codes are never
     re-encoded — new data costs assign + encode + append only."""
-    _check_epoch(index_dir, expect_epoch)
-    base_stats = spark.read.parquet(os.path.join(index_dir, "stats"))
-    if new_emb.isEmpty():
-        empty = spark.createDataFrame([], "cid bigint, n bigint, qerr_sum_mu bigint")
-        return _drift_report(base_stats, empty, val="qerr_sum_mu")
-    if cents is None:
-        cents = spark.read.parquet(
-            os.path.join(index_dir, "centroids")
-        ).transform(local_checkpoint)
-    if books_q is None:
-        books_q = _load_books_q(spark, index_dir)
-    coded = (
-        pq_encode_qerr(_residuals(new_emb, cents), books_q, emb_col="residual")
-        .select(F.col("vec_id").alias("cand_id"), "cid", "codes", "qerr")
-        .withColumn("bid", F.lit(int(batch_id)).cast("bigint"))
+
+    def encode(df: DataFrame) -> DataFrame:
+        nonlocal cents, books_q
+        if cents is None:
+            cents = _frozen_cents(spark, index_dir)
+        if books_q is None:
+            books_q = _load_books_q(spark, index_dir)
+        return pq_encode_qerr(
+            _residuals(df, cents), books_q, emb_col="residual"
+        ).select(F.col("vec_id").alias("cand_id"), "cid", "codes", "qerr")
+
+    return _append(
+        spark, IVFPQ, index_dir, new_emb, batch_id, encode, _qerr_stats,
+        expect_epoch,
     )
-    out = os.path.join(index_dir, "code_appends")
-    (
-        coded.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bid", "cid")
-        .parquet(out)
-    )
-    _post_write_fence(index_dir, expect_epoch, os.path.join(out, f"bid={int(batch_id)}"))
-    landed = spark.read.parquet(os.path.join(out, f"bid={int(batch_id)}")).select(
-        "cand_id", F.col("cid").cast("bigint").alias("cid"), "codes", "qerr"
-    )
-    rep = _drift_report(base_stats, _qerr_stats(landed), val="qerr_sum_mu")
-    # first post-build append: persist the report as the index-owned
-    # cadence baseline (one eager K-row job, once per index lifetime)
-    _maybe_record_cadence_baseline(index_dir, rep, batch_id)
-    return rep
 
 
 def ivfpq_codes_with_appends(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -4832,16 +4875,7 @@ def ivfpq_codes_with_appends(spark: SparkSession, index_dir: str) -> DataFrame:
     still prunes to nprobe/K of the files. Feed the result straight
     into _ivfpq_serve (qerr is projected away — serving needs only the
     4-byte codes)."""
-    codes = spark.read.parquet(os.path.join(index_dir, "codes")).select(
-        "cand_id", F.col("cid").cast("bigint").alias("cid"), "codes"
-    )
-    ap = os.path.join(index_dir, "code_appends")
-    if not os.path.isdir(ap):
-        return codes
-    appends = spark.read.parquet(ap).select(
-        "cand_id", F.col("cid").cast("bigint").alias("cid"), "codes"
-    )
-    return codes.unionByName(appends)
+    return _with_appends(spark, IVFPQ, index_dir)
 
 
 def ivfpq_compact(spark: SparkSession, index_dir: str) -> bool:
@@ -4853,16 +4887,7 @@ def ivfpq_compact(spark: SparkSession, index_dir: str) -> bool:
     ``codebooks`` are untouched: they are the frozen drift yardstick
     and the frozen quantizer. Returns False when nothing to fold.
     Operations runbook: MAINTENANCE.md."""
-    return _compact_index(
-        spark,
-        index_dir,
-        data="codes",
-        appends="code_appends",
-        key="cand_id",
-        project=lambda df: df.select(
-            "cand_id", F.col("cid").cast("bigint").alias("cid"), "codes", "qerr"
-        ),
-    )
+    return _compact_index(spark, IVFPQ, index_dir)
 
 
 def ivfpq_retrain(
@@ -4931,18 +4956,9 @@ def ivfpq_retrain(
     runbook: MAINTENANCE.md."""
 
     def write_snapshot(tmp: str, fold_bids: list[int], epoch: int) -> None:
-        base_ids = spark.read.parquet(
-            os.path.join(index_dir, "codes")
-        ).select(F.col("cand_id").alias("vec_id"))
-        if fold_bids:
-            ap_ids = (
-                spark.read.parquet(os.path.join(index_dir, "code_appends"))
-                .filter(F.col("bid").isin([int(b) for b in fold_bids]))
-                .select(F.col("cand_id").alias("vec_id"))
-            )
-            served_ids = base_ids.unionByName(ap_ids)
-        else:
-            served_ids = base_ids
+        served_ids = _pinned_served(
+            spark, IVFPQ, index_dir, fold_bids, [F.col("cand_id").alias("vec_id")]
+        )
         _retrain_corpus_check(
             corpus.select("vec_id", "embedding"),
             served_ids,
@@ -4954,16 +4970,7 @@ def ivfpq_retrain(
         )
         _ivfpq_write_artifacts(spark, tmp, cents2, coded2, books_q2)
 
-    return _retrain_swap(
-        spark,
-        index_dir,
-        appends_name="code_appends",
-        kind="ivfpq",
-        write_snapshot=write_snapshot,
-        force=force,
-        op_name="ivfpq_retrain",
-        compact_name="ivfpq_compact",
-    )
+    return _retrain_swap(spark, IVFPQ, index_dir, write_snapshot, force)
 
 
 def _ivfpq_retrain_oracle() -> str:
@@ -5165,21 +5172,16 @@ def run_incremental_ivfpq_stream(
     is snapshotted at open and a compact racing the stream fails the
     next append loudly (CompactionFenceError) instead of silently
     double-serving replayed rows."""
-    ckpt = checkpoint_dir or os.path.join(index_dir, "_code_append_ckpt")
-    _refuse_fresh_checkpoint(index_dir, "code_appends", ckpt)
-    cents = spark.read.parquet(
-        os.path.join(index_dir, "centroids")
-    ).transform(local_checkpoint)
-    books_q = _load_books_q(spark, index_dir)
-    epoch0 = compaction_epoch(index_dir)
+    def frozen() -> dict:
+        return {
+            "cents": _frozen_cents(spark, index_dir),
+            "books_q": _load_books_q(spark, index_dir),
+        }
 
-    def append(batch_df: DataFrame, batch_id: int) -> None:
-        ivfpq_append(
-            spark, index_dir, batch_df, batch_id,
-            cents=cents, books_q=books_q, expect_epoch=epoch0,
-        )
-
-    return _run_append_stream(source, append, ckpt, timeout_s)
+    return _open_append_stream(
+        spark, IVFPQ, index_dir, source, timeout_s, checkpoint_dir, ivfpq_append,
+        frozen,
+    )
 
 
 @query(

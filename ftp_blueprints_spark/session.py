@@ -33,52 +33,46 @@ def get_spark(
       directory, joined with any ``PYTHONPATH`` already set. Executor
       env is fixed when the SparkContext starts, so a pre-existing
       active session keeps its own worker ``PYTHONPATH``.
+    - Reliable checkpoint files are cleaned when their RDD is garbage
+      collected (``spark.cleaner.referenceTracking.cleanCheckpoints``):
+      under ``SPARK_GRAFT_RELIABLE_CHECKPOINT=1`` the per-micro-batch
+      sites would otherwise grow the checkpoint dir without bound.
     """
     pythonpath = os.pathsep.join(
         filter(None, [_PACKAGE_PARENT, os.environ.get("PYTHONPATH")])
     )
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions) if shuffle_partitions else "32",
-        )
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.executorEnv.PYTHONPATH", pythonpath)
-    )
+    sql_confs = {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+    }
+    if shuffle_partitions:
+        sql_confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     active = SparkSession.getActiveSession()
     if active is not None:
         # master/memory are fixed at JVM start, but SQL confs are
         # runtime-settable: apply them so the engine defaults hold even
         # under a pre-existing session (e.g. the driver's plain one).
-        confs = [
-            ("spark.sql.adaptive.enabled", "true"),
-            ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-            ("spark.sql.adaptive.skewJoin.enabled", "true"),
-            ("spark.sql.session.timeZone", "UTC"),
-            ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-            ("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)),
-        ]
-        if shuffle_partitions:
-            # honor an EXPLICIT caller request on the active session too
-            # (the fresh-session default of 32 is not forced here — the
-            # pre-existing session's own default stands unless asked)
-            confs.append(
-                ("spark.sql.shuffle.partitions", str(shuffle_partitions))
-            )
-        for k, v in confs:
+        # An explicit shuffle_partitions is honored too; the
+        # fresh-session default of 32 is not forced on it.
+        for k, v in sql_confs.items():
             active.conf.set(k, v)
         return active
-    builder = builder.master(master or f"local[{cpus}]")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
+    builder = SparkSession.builder.appName(app_name).master(master or f"local[{cpus}]")
+    for k, v in {
+        "spark.sql.shuffle.partitions": "32",
+        **sql_confs,
+        "spark.sql.parquet.filterPushdown": "true",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
+        "spark.ui.enabled": "false",
+        "spark.executorEnv.PYTHONPATH": pythonpath,
+        "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
+    }.items():
+        builder = builder.config(k, v)
     return builder.getOrCreate()
 
 
@@ -107,18 +101,40 @@ def local_checkpoint(df, eager: bool = True):
     constants) — never a corpus×n-gram or pair-expanded stream — so
     either backend holds it comfortably; the r15-added sites were each
     A/B measured cheaper than recomputing their subtree
-    (OPTIMIZATION_r15 items 3, 6-10)."""
-    if os.environ.get("SPARK_GRAFT_RELIABLE_CHECKPOINT") == "1":
-        sc = df.sparkSession.sparkContext
-        if sc.getCheckpointDir() is None:
-            ckdir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-            if not ckdir:
-                import tempfile
+    (OPTIMIZATION_r15 items 3, 6-10).
 
-                ckdir = tempfile.mkdtemp(prefix="spark_reliable_ck_")
-            sc.setCheckpointDir(ckdir)
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
+    In reliable mode ``SPARK_GRAFT_CHECKPOINT_DIR`` wins over a dir the
+    context already has (left by an earlier caller or set by the host
+    app): a mismatch re-points the context, so checkpoints never land
+    silently in an unintended place. Unset, an existing dir is kept and
+    a ``local`` master gets a fresh temp dir. Any other master REQUIRES
+    the variable: a driver-local temp dir is not shared with the
+    executors, so the durability the flag promises would not exist."""
+    if os.environ.get("SPARK_GRAFT_RELIABLE_CHECKPOINT") != "1":
+        return df.localCheckpoint(eager=eager)
+    sc = df.sparkSession.sparkContext
+    want = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
+    have = sc.getCheckpointDir()
+    if want:
+        # Spark checkpoints into a fresh, qualified <dir>/<uuid>: know
+        # the ones set here by that unique name, not by path parsing
+        if have is None or _POINTED.get(have) != want:
+            sc.setCheckpointDir(want)
+            _POINTED[sc.getCheckpointDir()] = want
+    elif have is None:
+        if not sc.master.startswith("local"):
+            raise RuntimeError(
+                f"SPARK_GRAFT_RELIABLE_CHECKPOINT=1 on master {sc.master} "
+                "needs SPARK_GRAFT_CHECKPOINT_DIR set to storage every "
+                "executor shares (e.g. an hdfs:// or s3a:// path)"
+            )
+        import tempfile
+
+        sc.setCheckpointDir(tempfile.mkdtemp(prefix="spark_reliable_ck_"))
+    return df.checkpoint(eager=eager)
+
+
+_POINTED: dict[str, str] = {}  # checkpoint dir set here -> its env value
 
 
 def normalize_timestamps(df):

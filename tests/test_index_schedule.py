@@ -58,6 +58,22 @@ FAMILIES = {
 }
 
 
+def _crafted_vectors(dim):
+    """The 24-vector schedule fixture: IVF_K near-axis vectors (two
+    active coordinates each) plus 8 all-ones variants, unit-normed."""
+    vecs = []
+    for k in range(S.IVF_K):
+        e = np.zeros(dim)
+        e[k % dim] = 1.0
+        e[(k + 3) % dim] = 0.25 + 0.05 * (k // dim)
+        vecs.append(e / np.linalg.norm(e))
+    for j in range(8):
+        v = np.ones(dim)
+        v[j % dim] += 0.5 + 0.1 * j
+        vecs.append(v / np.linalg.norm(v))
+    return vecs
+
+
 def _served_pairs(spark, idx, family):
     """(dedup-key tuple, payload) pairs of the servable rows."""
     if family == "ivf":
@@ -101,16 +117,7 @@ def test_maintained_index_random_schedule_property(
     # would dominate the property's runtime)
     base_dir = tmp_path_factory.mktemp(f"sched_base_{family}")
     dim = fam["dim"]
-    vecs = []
-    for k in range(S.IVF_K):
-        e = np.zeros(dim)
-        e[k % dim] = 1.0
-        e[(k + 3) % dim] = 0.25 + 0.05 * (k // dim)
-        vecs.append(e / np.linalg.norm(e))
-    for j in range(8):
-        v = np.ones(dim)
-        v[j % dim] += 0.5 + 0.1 * j
-        vecs.append(v / np.linalg.norm(v))
+    vecs = _crafted_vectors(dim)
     _write_crafted_embeddings(base_dir / "embeddings.parquet", vecs)
     template = str(base_dir / "idx")
     fam["build"](spark, str(base_dir), index_dir=template)
@@ -342,16 +349,7 @@ def test_stale_serve_frame_fails_loudly_after_compact(
     base_dir = tmp_path / "corpus"
     base_dir.mkdir()
     dim = fam["dim"]
-    vecs = []
-    for k in range(S.IVF_K):
-        e = np.zeros(dim)
-        e[k % dim] = 1.0
-        e[(k + 3) % dim] = 0.25 + 0.05 * (k // dim)
-        vecs.append(e / np.linalg.norm(e))
-    for j in range(8):
-        v = np.ones(dim)
-        v[j % dim] += 0.5 + 0.1 * j
-        vecs.append(v / np.linalg.norm(v))
+    vecs = _crafted_vectors(dim)
     _write_crafted_embeddings(base_dir / "embeddings.parquet", vecs)
     idx = str(tmp_path / "idx")
     fam["build"](spark, str(base_dir), index_dir=idx)
@@ -619,16 +617,7 @@ def test_fresh_checkpoint_refused_on_live_appends(spark, tmp_path, family):
     base_dir = tmp_path / "corpus"
     base_dir.mkdir()
     dim = fam["dim"]
-    vecs = []
-    for k in range(S.IVF_K):
-        e = np.zeros(dim)
-        e[k % dim] = 1.0
-        e[(k + 3) % dim] = 0.25 + 0.05 * (k // dim)
-        vecs.append(e / np.linalg.norm(e))
-    for j in range(8):
-        v = np.ones(dim)
-        v[j % dim] += 0.5 + 0.1 * j
-        vecs.append(v / np.linalg.norm(v))
+    vecs = _crafted_vectors(dim)
     _write_crafted_embeddings(base_dir / "embeddings.parquet", vecs)
     idx = str(tmp_path / "idx")
     fam["build"](spark, str(base_dir), index_dir=idx)
@@ -727,16 +716,7 @@ def test_ivf_retrain_random_schedule_property(spark, tmp_path_factory):
     fold's highest bid."""
     base_dir = tmp_path_factory.mktemp("resched_base")
     dim = FAMILIES["ivf"]["dim"]
-    vecs = []
-    for k in range(S.IVF_K):
-        e = np.zeros(dim)
-        e[k % dim] = 1.0
-        e[(k + 3) % dim] = 0.25 + 0.05 * (k // dim)
-        vecs.append(e / np.linalg.norm(e))
-    for j in range(8):
-        v = np.ones(dim)
-        v[j % dim] += 0.5 + 0.1 * j
-        vecs.append(v / np.linalg.norm(v))
+    vecs = _crafted_vectors(dim)
     _write_crafted_embeddings(base_dir / "embeddings.parquet", vecs)
     template = str(base_dir / "idx")
     S.ivf_build(spark, str(base_dir), index_dir=template)
@@ -1016,16 +996,7 @@ def test_lsh_retrain_random_schedule_property(spark, tmp_path_factory):
     (the hash width) actually changes shape across retrains."""
     base_dir = tmp_path_factory.mktemp("lshsched_base")
     dim = S.DIM
-    rng_vecs = []
-    for k in range(S.IVF_K):
-        e = np.zeros(dim)
-        e[k % dim] = 1.0
-        e[(k + 3) % dim] = 0.25 + 0.05 * (k // dim)
-        rng_vecs.append(e / np.linalg.norm(e))
-    for j in range(8):
-        v = np.ones(dim)
-        v[j % dim] += 0.5 + 0.1 * j
-        rng_vecs.append(v / np.linalg.norm(v))
+    rng_vecs = _crafted_vectors(dim)
     _write_crafted_embeddings(base_dir / "embeddings.parquet", rng_vecs)
     template = str(base_dir / "idx")
     S.ann_lsh_build(spark, str(base_dir), index_dir=template)
@@ -1258,16 +1229,7 @@ def test_ivfpq_retrain_random_schedule_property(spark, tmp_path_factory):
     was pointed at."""
     base_dir = tmp_path_factory.mktemp("pqsched_base")
     dim = S.DIM
-    vecs = []
-    for k in range(S.IVF_K):
-        e = np.zeros(dim)
-        e[k % dim] = 1.0
-        e[(k + 3) % dim] = 0.25 + 0.05 * (k // dim)
-        vecs.append(e / np.linalg.norm(e))
-    for j in range(8):
-        v = np.ones(dim)
-        v[j % dim] += 0.5 + 0.1 * j
-        vecs.append(v / np.linalg.norm(v))
+    vecs = _crafted_vectors(dim)
     _write_crafted_embeddings(base_dir / "embeddings.parquet", vecs)
     template = str(base_dir / "idx")
     S.ivfpq_build(spark, str(base_dir), index_dir=template)
@@ -1479,3 +1441,75 @@ def test_ivfpq_retrain_random_schedule_property(spark, tmp_path_factory):
         assert sorted(final) == sorted(expected(cur_cents()))
 
     run()
+
+
+APPENDS = {
+    "ivf": S.ivf_append,
+    "ivfpq": S.ivfpq_append,
+    "annlsh": S.ann_lsh_append,
+}
+
+
+@pytest.mark.parametrize("family", sorted(FAMILIES))
+def test_maintained_index_lifecycle(spark, tmp_path, family):
+    """The shared core walked once per family in the default tier:
+    build, append, an at-least-once replay of the same bid, serving
+    base ∪ appends (the new rows exactly once), compact, and serving
+    again (unchanged, appends folded, a second compact a no-op)."""
+    fam = FAMILIES[family]
+    vecs = _crafted_vectors(fam["dim"])
+    _write_crafted_embeddings(tmp_path / "embeddings.parquet", vecs)
+    idx = str(tmp_path / "idx")
+    fam["build"](spark, str(tmp_path), index_dir=idx)
+    base = _served_pairs(spark, idx, family)
+    new = spark.createDataFrame(
+        [(1000 + i, [float(x) for x in np.roll(vecs[i], 1)]) for i in range(4)],
+        "vec_id bigint, embedding array<float>",
+    )
+    rows_per_vec = S.ANN_BANDS if family == "annlsh" else 1
+
+    for _ in range(2):  # the second call replays bid 0
+        rep = APPENDS[family](spark, idx, new, 0)
+        assert sum(r["n_new"] for r in rep.collect()) == 4 * rows_per_vec
+    served = _served_pairs(spark, idx, family)
+    added = sorted(set(served) - set(base))
+    assert len(served) == len(base) + 4 * rows_per_vec  # new rows once
+    assert sorted({k[0] for k, _ in added}) == [1000, 1001, 1002, 1003]
+    assert len({k for k, _ in added}) == len(added) == 4 * rows_per_vec
+
+    assert fam["compact"](spark, idx) is True
+    assert not os.path.isdir(os.path.join(idx, fam["appends"]))
+    assert S.compaction_epoch(idx) == 1
+    assert sorted(_served_pairs(spark, idx, family)) == sorted(served)
+    assert fam["compact"](spark, idx) is False
+
+
+def test_layout_names_spelled_once():
+    """Each appends dir and default stream checkpoint name is one
+    string constant in similarity.py (docstrings aside): the family
+    specs own the layout, and every lifecycle step reads it there."""
+    import ast
+
+    tree = ast.parse(open(S.__file__).read())
+    docstrings = {
+        id(node.body[0].value)
+        for node in ast.walk(tree)
+        if isinstance(
+            node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+        )
+        and node.body
+        and isinstance(node.body[0], ast.Expr)
+        and isinstance(node.body[0].value, ast.Constant)
+    }
+    consts = [
+        n.value
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Constant)
+        and isinstance(n.value, str)
+        and id(n) not in docstrings
+    ]
+    names = ["appends", "code_appends", "_append_ckpt", "_code_append_ckpt",
+             "_sig_append_ckpt"]
+    assert {consts.count(n) for n in names} == {1}, {
+        n: consts.count(n) for n in names
+    }
