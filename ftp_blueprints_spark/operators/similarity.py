@@ -6,7 +6,7 @@
   through banded hyperplane LSH buckets — candidate pairs only form
   inside equal (band, signature) buckets, never an all-pairs join,
   and each bucket scores its members with ONE exact integer gram
-  matmul (r6; see the function docstring for why the earlier
+  matmul (see the function docstring for why the earlier
   self-join + HOF cosine shape was slower).
   16 bands x 8 planes -> P(miss a true pair at cos 0.9) = (1-0.857^8)^16
   ~ 0.4%, while a random pair collides in a band with prob 2^-8, so
@@ -101,8 +101,8 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "cand_id",
-            # cosine_arrow: bit-identical doubles to the HOF fold (r15,
-            # guide §4.2); ROUND + the top-k tie surface stay JVM-side
+            # cosine_arrow: bit-identical doubles to the HOF fold (guide
+            # §4.2); ROUND + the top-k tie surface stay JVM-side
             F.round(cosine_arrow(F.col("q_emb"), F.col("c_emb")), 6).alias("cos_sim"),
         )
     )
@@ -332,12 +332,12 @@ def sim_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     at all driver/bench sizes); ``n`` comes from parquet footer
     metadata (session.table_rows), NOT a count() scan job per call.
 
-    Round 6 rewrite (was: band self-join + zip_with cosine): the round-5
-    shape evaluated the cosine as a Catalyst higher-order function in
+    Why not a band self-join + zip_with cosine: that shape evaluated
+    the cosine as a Catalyst higher-order function in
     BOTH the join condition and the projection — HOFs are interpreted
     per element, and the double evaluation of 3 dot products per
     candidate pair dominated the query (~4.5 s of a 2000-vector sf0.1
-    run). Round 8 rewrite (was: groupBy(band, sig).applyInPandas):
+    run). Why not groupBy(band, sig).applyInPandas:
     random LSH buckets hold ~TARGET_BUCKET rows, so the grouped-map
     paid one pandas round trip per BUCKET — 310k buckets at the 100x
     probe, ~40 s of pure per-group overhead. The scorer is now a
@@ -582,7 +582,7 @@ def _ivf_assign_pandas(
 def _cos_matrix_arrow(emb_col: str, cents_rows: list) -> F.Column:
     """array<double> of a row vector's cosines against every centroid,
     cid-ASCENDING — the Arrow-vectorized EXACT twin of the literal
-    path's per-centroid HOF cosine (r15, guide §4.2).  Arithmetic is
+    path's per-centroid HOF cosine (guide §4.2).  Arithmetic is
     bit-identical by construction: the same float->double widening, the
     same elementwise products, the same left-fold-from-0.0 summation
     (_fold_sum — cumsum cannot reassociate), the same
@@ -658,7 +658,7 @@ def ivf_assign(
     # ONE bounded collect decides the route (a separate probe per tier
     # would run a second TakeOrdered job over the centroid source —
     # for dd_semantic's adaptive K that source is a corpus TakeOrdered,
-    # so the double probe cost a full extra corpus pass; an r9
+    # so the double probe cost a full extra corpus pass; a
     # checkpoint-the-prefix variant that avoided the double pass
     # measured +1.2 s on sim_ivf_topk because k-means calls this per
     # round and paid 3 jobs per assign instead of 1).  The bound is
@@ -681,7 +681,7 @@ def ivf_assign(
     ):
         return _ivf_assign_pandas(emb, cents, round_digits)
     if literal_max_k > 0 and len(cents) <= literal_max_k:
-        # r15 (guide §4.2): the K cosines come from the Arrow kernel
+        # guide §4.2: the K cosines come from the Arrow kernel
         # (_cos_matrix_arrow — bit-identical left-fold doubles, ~5x the
         # interpreted per-element HOF fold that used to run here over a
         # K x dim centroid literal), while ROUND and the argmax fold
@@ -724,7 +724,7 @@ def ivf_assign(
             "embedding",
             F.coalesce(best["cid"], F.lit(-1).cast("bigint")).alias("cid"),
         )
-    # r15: the join path scores corpus x K rows (kmeans_centroids'
+    # The join path scores corpus x K rows (kmeans_centroids'
     # lazy-chain rounds) — the highest-volume cosine site left after the
     # literal path moved to the Arrow kernel; same bit-identical swap
     # (guide §4.2), argmax stays JVM-side (max_by below).
@@ -798,9 +798,9 @@ def portable_centroids(emb: DataFrame, k: int = IVF_K) -> DataFrame:
     Scale: zero-shuffle literal-argmax assignment + a (cid, pos)-keyed
     partial-combinable BIGINT sum of K x dim cells.  ONE corpus pass:
     the per-cell count doubles as the cluster size (with_count=True in
-    _km_cells), so the r5-r7 shape — cells1 JOIN n1, each branch
+    _km_cells), so the cells1 JOIN n1 shape — each branch
     re-running the argmax projection over the corpus — collapses to a
-    single aggregation (r8: that double pass + join was ~40% of the
+    single aggregation (that double pass + join was ~40% of the
     1.7 s train phase at sf0.1, where n=2000 makes per-job overhead the
     entire cost)."""
     seeds = emb.orderBy("vec_id").limit(k).select(
@@ -867,7 +867,7 @@ def _km_cells(assigned: DataFrame, with_count: bool = False) -> DataFrame:
     sums, K x dim result cells — tiny at any corpus size.
 
     Quantizes ``assigned.embedding`` inline (the _micro_vecs expression)
-    instead of joining a separate xq table on vec_id: the r7 profile
+    instead of joining a separate xq table on vec_id: a profile
     showed that join re-scanned the corpus through the argmax projection
     a second time — at n=2000/sf0.1 the whole operator is per-job
     overhead, and the join + extra pass was ~40% of the train phase.
@@ -928,8 +928,7 @@ FROM stats JOIN sums2 USING (cid)
 @query("sim_kmeans", _km_oracle())
 def sim_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic, ENGINE-PORTABLE k-means (2 Lloyd rounds, seeded by
-    the IVF_K lowest vec_ids) — upgraded round 5 from a rows-only float
-    check to an exact DuckDB oracle.
+    the IVF_K lowest vec_ids), checked against an exact DuckDB oracle.
 
     Portability discipline (the MinHash md5-permutation playbook applied
     to Lloyd): assignments argmax the ROUND(cos, 6) tie surface (the
@@ -956,7 +955,7 @@ def sim_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # DAG executes twice per call (the sibling IVF sites' discipline)
     cents1 = portable_centroids(emb, IVF_K).transform(local_checkpoint, eager=False)
     a2 = ivf_assign(emb, cents1, round_digits=6)
-    # r15 A/B: cosine_arrow here measured WORSE (1.93/2.00 vs 1.80/1.86 s
+    # A/B: cosine_arrow here measured WORSE (1.93/2.00 vs 1.80/1.86 s
     # warm, both interleaved rounds) — the n x 1 rescore after the
     # broadcast join is below the Arrow hop's break-even at this volume
     # (~5k rows; the winning swaps all score >=50k pairs). HOF kept.
@@ -1028,10 +1027,9 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN top-k: assign vectors to IVF_K centroid lists, probe the
     IVF_NPROBE nearest lists per query, exact-score only those lists.
 
-    Round 5: upgraded from rows-only to an exact DuckDB oracle by
-    switching the coarse quantizer to portable_centroids (integer-sum
-    Lloyd on the ROUND(cos, 6) tie surface — the sim_kmeans playbook)
-    and ranking probes on the same rounded surface, so list membership,
+    Exact DuckDB oracle: the coarse quantizer is portable_centroids
+    (integer-sum Lloyd on the ROUND(cos, 6) tie surface — the sim_kmeans
+    playbook) and probes rank on the same rounded surface, so list membership,
     the probed lists, and the final ranking are all engine-exact.
     Recall@10 vs sim_topk_bruteforce asserted >= 0.9 in
     tests/test_similarity.py. At scale the probed lists hold
@@ -1077,7 +1075,7 @@ def _ivf_serve(emb: DataFrame, cents: DataFrame, lists: DataFrame) -> DataFrame:
     scored = cand.select(
         "query_id",
         "cand_id",
-        # r15 A/B: cosine_arrow here measured WORSE on the pure-serve
+        # A/B: cosine_arrow here measured WORSE on the pure-serve
         # caller (sim_ivf_query 1.20/1.38 vs 0.98/0.90 s warm, both
         # interleaved rounds) — the nprobe-pruned stream is ~12k rows at
         # sf0.1, under the Arrow hop's break-even. HOF kept; the >=50k
@@ -1125,7 +1123,7 @@ def _publish_index(out: str, kind: str, write_fn) -> str:
     rebuilding would silently destroy every appended row — the
     'default-path build rebuilt a base-only index' hazard the retrain
     preamble refuses in the crash case, refused here in the idempotent
-    build-call case (r13 review)."""
+    build-call case."""
     if index_ready(out, kind):
         return out
     out_abs = os.path.abspath(out)
@@ -1134,8 +1132,8 @@ def _publish_index(out: str, kind: str, write_fn) -> str:
         # Maintenance state = the compaction epoch, LIVE appended bids,
         # OR committed bids a crashed compact renamed aside
         # (appends.folding.* — present even before the epoch bump when
-        # the crash hit between rename-aside and _bump_epoch; second
-        # r13 review pass). Any of these means appended rows exist
+        # the crash hit between rename-aside and _bump_epoch). Any of
+        # these means appended rows exist
         # that a rebuild would silently destroy.
         has_bids = any(
             _bids(os.path.join(out, d))
@@ -1165,19 +1163,19 @@ def _publish_index(out: str, kind: str, write_fn) -> str:
         # The dir is now missing either way (absent at entry, or an
         # invalid maintenance-free dir was just removed above — an
         # `elif` here let that second path rebuild without this scan
-        # and re-manufacture the impostor state, r13 advice): a READY
+        # and re-manufacture the impostor state): a READY
         # snapshot and/or backup beside the missing index means a
         # retrain crashed mid-swap — states the family's retrain
         # preamble can actually heal (roll forward / roll back).
         # Building fresh here would manufacture the impostor state the
         # preamble can only refuse for manual resolution — refuse at
-        # the source instead (second r13 review pass). A NON-ready
+        # the source instead. A NON-ready
         # .retraining.* orphan with no backup deliberately does NOT
         # refuse: it is the preamble's own sweepable-garbage class (a
         # retrain that died mid-write holds no committed rows), the
         # retrain remedy could not heal it (no index, no backup ->
         # FileNotFoundError), and refusing would dead-end an operator
-        # who disposed of the index explicitly (third r13 review pass).
+        # who disposed of the index explicitly.
         raise CompactionFenceError(
             f"refusing to build at {out}: the index dir is missing but "
             "healable maintenance siblings (a ready .retraining. "
@@ -1258,9 +1256,8 @@ def sim_ivf_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """QUERY phase of the IVF serving split: answer top-k from the
     PREBUILT index (ivf_build persists centroids + cid-partitioned
     inverted lists; builds on first call, reuses thereafter) — no
-    retraining. This recovers the round-5 sim_ivf_topk regression the
-    exact-oracle upgrade introduced (~2/3 of its cost was Lloyd
-    training re-run per call) and mirrors production ANN serving,
+    retraining. Training is ~2/3 of sim_ivf_topk's cost, and it re-runs
+    per call there; this mirrors production ANN serving,
     where an index is built per ingest batch and amortized over every
     query."""
     idx = ivf_build(spark, sf_dir)
@@ -1278,7 +1275,7 @@ def _assign_cos_stats(assigned: DataFrame, cents: DataFrame) -> DataFrame:
     integer micro-unit sum of member-to-centroid cosines on the
     ROUND(cos, 6) surface — sim_kmeans' exact cross-engine stats shape,
     reused as the drift yardstick of the incremental index."""
-    # r15 A/B: cosine_arrow measured +0.12 s on sim_ivf_incremental
+    # A/B: cosine_arrow measured +0.12 s on sim_ivf_incremental
     # (corpus-sized n x 1 rescore, under the Arrow break-even) — HOF kept
     cos_c = F.round(cosine(F.col("embedding"), F.col("c_emb")), 6)
     return (
@@ -1300,8 +1297,8 @@ def _drift_report(
     the exact-integer drift numerator: mean_new - mean_base has the
     sign of new_<val> * n_base - base_<val> * n_new (cross-multiplied
     to stay in BIGINT — no integer division of possibly-negative sums:
-    Spark's div and DuckDB's // both truncate toward zero, measured
-    r14, but Python's // floors, and sidestepping division keeps every
+    Spark's div and DuckDB's // both truncate toward zero (measured),
+    but Python's // floors, and sidestepping division keeps every
     replay surface exact regardless of convention). Sign
     reading depends on the metric: for the IVF cos stats
     (val="cos_sum_mu", higher = closer) a NEGATIVE drift numerator
@@ -1317,7 +1314,7 @@ def _drift_report(
     populations but a real ceiling for billion-row cells; metrics whose
     sums grow superlinearly must NOT reuse this (the LSH pair counts
     are quadratic per band and use _lsh_drift_report's overflow-free
-    split-division density surface instead; r11 review)."""
+    split-division density surface instead)."""
     b = base_stats.select(
         "cid",
         F.col("n").alias("n_base"),
@@ -1404,7 +1401,7 @@ def sim_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries K-cardinality rows.  The snapshot never touches the
     standing lists — at 100 TB yesterday's corpus is not rescanned,
     exactly like the maintained dedup index.  Measured exponents
-    (SCALEPROBE.json, r10): 0.034 at 10x, 0.243 at 100x — the corpus
+    (SCALEPROBE.json): 0.034 at 10x, 0.243 at 100x — the corpus
     passes are embarrassingly parallel and the sf0.1 base (n=2000) is
     per-job-overhead-dominated, the known ANN-operator shape."""
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1437,8 +1434,6 @@ FROM rep
 """
 
 
-# Registered r15 (built + locally oracle-proven in r14 under the
-# build-now-register-next-round discipline).
 @query("sim_ivf_cadence", _ivf_cadence_oracle())
 def sim_ivf_cadence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The retrain-cadence arithmetic as a driver-checkable surface —
@@ -1453,7 +1448,7 @@ def sim_ivf_cadence(spark: SparkSession, sf_dir: str) -> DataFrame:
     empirically — DuckDB does NOT floor: (-7)//2 = -3 in both), and a
     cell's cos sum CAN be negative, so the truncate-vs-floor
     distinction is live here and the two engines happen to share the
-    convention (r14 second review pass; Python's flooring // is the
+    convention (Python's flooring // is the
     odd one out — replay helpers must use int() division or the
     emitted columns). Sum the gaps over the n_base > 0 cids and the
     sign IS the mix-adjusted drift the trigger alarms on — cells the
@@ -1554,10 +1549,7 @@ FROM stats JOIN sums2 USING (cid)
 """
 
 
-# Registered in round 13 per the build-now-register-next-round pattern
-# (built + locally oracle-proven + scale-probed in r12; the r12 window
-# math capped new registrations at sim_lsh_incremental +
-# sk_cms_incremental).  The oracle replays the monolithic train, so the
+# The oracle replays the monolithic train, so the
 # driver check proves retrain-from-served-state == train-from-scratch.
 @query("sim_ivf_retrain", _ivf_retrain_oracle())
 def sim_ivf_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1611,7 +1603,7 @@ def sim_ivf_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     a2 = ivf_assign(vecs, c2, round_digits=6).join(
         served.select("vec_id", "old_cid"), "vec_id"
     )
-    # r15 A/B (in-JVM interleaved): cosine_arrow here measured 0.758 vs
+    # A/B (in-JVM interleaved): cosine_arrow here measured 0.758 vs
     # 0.581 s min — the n x 1 rescore is under the Arrow break-even
     # (~50k pairs at sf0.1); HOF kept
     cos_c = F.round(cosine(F.col("embedding"), F.col("c_emb")), 6)
@@ -1743,7 +1735,7 @@ def _folded_hwm(index_dir: str) -> int:
     re-reading old files) produces an IN-TRAINING drift report — no
     train-vs-holdout optimism gap — and recording that as the cadence
     baseline would make every later genuine holdout look ~gap worse
-    than baseline and fire spurious retrains (r15 review). Relies on
+    than baseline and fire spurious retrains. Relies on
     the bid-monotonicity contract the CMS registry documents: fresh
     data never reuses a bid at or below a fold's high-water mark.
     Compact does NOT advance it — compact folds rows without refitting
@@ -1767,8 +1759,8 @@ def _maybe_record_cadence_baseline(
     qerr IVFPQ on the sf0.1 fixtures, _centroid_retrain_due). Without
     a durable copy the gap cancellation died with the process that
     observed the first append, and every restarted monitor silently
-    degraded to the conservative over-firing mode (r14 verdict task
-    5); the index dir owns the baseline the way it owns ``stats``.
+    degraded to the conservative over-firing mode; the index dir owns
+    the baseline the way it owns ``stats``.
 
     Write-once, exactly-once-by-construction under the append
     lifecycle: written only when absent, atomically (unique tmp dir +
@@ -1800,7 +1792,7 @@ def _maybe_record_cadence_baseline(
         # vectors are TRAINING MEMBERS of the current yardstick, so
         # its report carries no optimism gap — recording it would bias
         # the baseline and fire spurious retrains on every genuine
-        # holdout after it (r15 review; see _folded_hwm)
+        # holdout after it (see _folded_hwm)
         return False
     tmp = f"{dest}.tmp.{os.getpid()}.{uuid.uuid4().hex[:8]}"
     try:
@@ -1849,7 +1841,7 @@ def compaction_epoch(index_dir: str) -> int:
     # any OTHER failure (EACCES/EIO, corrupt/empty contents) propagates:
     # a safety fence must fail CLOSED — mapping an unreadable marker to
     # epoch 0 would disarm it exactly when a half-written file after a
-    # crash means a compact may have run (r11 review)
+    # crash means a compact may have run
 
 
 def _bump_epoch(index_dir: str) -> int:
@@ -2005,43 +1997,17 @@ def ivf_append(
 ) -> DataFrame:
     """Append a NEW embedding snapshot to a persisted IVF index WITHOUT
     retraining: assign against the frozen centroids (zero-shuffle
-    literal argmax), land the assignments under ``<index>/appends``
-    partitioned by (bid, cid), and return the per-cid drift report vs
-    the training-time stats the build persisted.
-
-    Durability follows run_incremental_exact_stream's playbook
-    (dedup.py): the write is a batch_id-keyed DYNAMIC partition
-    overwrite, so an at-least-once replay of the same batch rewrites
-    exactly its own bid=batch_id partitions instead of duplicating
-    rows — append-only progress with idempotent recovery.  That
-    guarantee assumes ivf_compact does not run BETWEEN a batch's
-    append and its checkpoint commit (quiesce contract, see
-    ivf_compact): a replay of an already-folded bid re-creates its
-    appends rows next to the folded copies, double-serving them until
-    the next compaction's vec_id dedup heals it.  The drift stats are
-    computed from the READ-BACK bid partition (the durable truth a
-    replay would serve), not the in-flight frame.
+    literal argmax) and land the assignments under ``<index>/appends``
+    partitioned by (bid, cid). Returns the per-cid drift report vs the
+    training-time stats the build persisted (drift_num_mu going
+    NEGATIVE is the quantitative retrain trigger). Durability, fencing
+    (``expect_epoch``), the empty-batch guard and serving
+    (ivf_lists_with_appends) are _append's contract.
 
     ``cents`` accepts the already-loaded centroid table so a streaming
     caller pays the parquet read + eager localCheckpoint ONCE per
-    stream instead of once per micro-batch (run_incremental_ivf_stream
-    does this); when omitted they are read from the index.
-
-    Serving reads lists ∪ appends (ivf_lists_with_appends); cid stays
-    a partition column in both, so nprobe/K file-level pruning holds
-    for appended data too.  At scale this is the ANN analogue of the
-    maintained dedup index: new data costs assign + append, the
-    standing corpus is never rescanned, and drift_num_mu going
-    negative is the quantitative retrain trigger.
-
-    ``expect_epoch`` (streams pass the compaction_epoch snapshotted at
-    open) makes the quiesce contract machine-enforced: if a compact
-    started folding since, the append raises CompactionFenceError
-    instead of landing rows that may double-serve on replay. An EMPTY
-    batch short-circuits to a lazy n_new=0 drift report — a dynamic
-    overwrite of an empty frame creates no bid partition, so the
-    read-back below would raise PATH_NOT_FOUND (file sources never
-    deliver empty batches, but kafka/rate/no-data triggers can)."""
+    stream instead of once per micro-batch; when omitted they are read
+    from the index."""
     def encode(df: DataFrame) -> DataFrame:
         nonlocal cents
         if cents is None:
@@ -2111,7 +2077,7 @@ def _next_tag(index_dir: str) -> str:
     numeric tag already under the index dir), zero-padded so
     lexicographic order == numeric order. Wall-clock alone could rank
     a stale backup newest after a backwards clock step between crashed
-    compactions (r10 advice)."""
+    compactions."""
     import time
 
     floor = time.time_ns()
@@ -2167,9 +2133,9 @@ def _compact_index(spark: SparkSession, fam: _IndexFamily, index_dir: str) -> bo
     # serving double-serve conflicting rows). Raising here leaves the
     # index fully served (appends still in place) — checking after the
     # rename-aside would strand every appended row unserved with no
-    # automated recovery (r11 review). One extra pass over
+    # automated recovery. One extra pass over
     # base ∪ appends at maintenance time — the price of a loud
-    # contract (r10 advice).
+    # contract.
     pre = _merged(fold_srcs)
     chk = pre.agg(
         F.countDistinct(*keys).alias("ids"),
@@ -2241,32 +2207,10 @@ def run_incremental_ivf_stream(
     checkpoint_dir: str | None = None,
     auto_retrain: bool = False,
 ):
-    """Streaming twin of the incremental IVF maintenance — the
-    run_incremental_exact_stream shape applied to vectors: arriving
-    embedding snapshots stream through a foreachBatch ivf_append, so
-    each micro-batch assigns against the FROZEN persisted centroids
-    (zero shuffle) and lands its inverted-list rows under
-    (bid=batch_id, cid) dynamic partition overwrites. At-least-once
-    redelivery rewrites exactly its own bid partitions (idempotent),
-    and a checkpoint restart resumes from the committed batch — both
-    proven in tests/test_streaming.py. Serving reads
-    ivf_lists_with_appends at any point and sees every vector appended
-    so far; the standing lists are never rescanned or rewritten.
-
-    The per-batch drift report ivf_append builds is lazy and unused
-    here — no extra job runs beyond the one-time cadence-baseline
-    recording on the FIRST append per index lifetime (ivf_append /
-    _maybe_record_cadence_baseline); callers wanting per-batch drift
-    telemetry call ivf_append directly from their own foreachBatch.
-    The frozen centroids are loaded and localCheckpointed ONCE here
-    and shared by every micro-batch (per-batch reloading was a
-    redundant read + an eager checkpoint job on the hot path).
-    Quiesce contract: stop this stream (availableNow drains terminate)
-    before running ivf_compact — MACHINE-ENFORCED since r11: the
-    stream snapshots the compaction epoch at open and every
-    micro-batch passes it to ivf_append, which raises
-    CompactionFenceError (failing the stream loudly) if a compact
-    started folding meanwhile.
+    """Streaming twin of ivf_append (_open_append_stream's contract),
+    with the frozen centroids loaded once per stream. Callers wanting
+    per-batch drift telemetry call ivf_append from their own
+    foreachBatch.
 
     ``auto_retrain=True`` closes the maintenance loop in-stream: after
     each batch's append lands, the calibrated trigger runs on its
@@ -2396,7 +2340,7 @@ def _open_append_stream(
 def _checkpoint_resumed(checkpoint: str) -> bool:
     """True iff the checkpoint carries real streaming progress — at
     least one batch entry in its offsets/ log. Bare directory
-    existence is NOT the test (r12 review): deploy tooling routinely
+    existence is NOT the test: deploy tooling routinely
     pre-creates empty checkpoint dirs with mkdir -p, and Structured
     Streaming assigns batch ids from 0 whenever the offsets log is
     empty, so an existing-but-empty dir is exactly as dangerous as a
@@ -2418,7 +2362,7 @@ def _checkpoint_resumed(checkpoint: str) -> bool:
 
 def _refuse_fresh_checkpoint(index_dir: str, appends: str, checkpoint: str) -> None:
     """Refuse to OPEN an append stream with a fresh checkpoint while
-    live append bids exist (r12 — the CMS registry's fresh-checkpoint
+    live append bids exist (the CMS registry's fresh-checkpoint
     hazard generalized to the index families): batch ids are monotonic
     only per checkpoint, so a stream restarted with a new checkpoint
     dir reassigns ids from 0 and its (bid=0, part)-keyed dynamic
@@ -2557,7 +2501,7 @@ def _retrain_swap(
         # crash: e.g. a default-path build saw the missing dir and
         # silently rebuilt a base-only index there. Sweeping now would
         # permanently discard the appended rows the snapshot folded —
-        # preserve both and make the operator choose (r12 review).
+        # preserve both and make the operator choose.
         for d in ready:
             tag = d.rsplit(".", 1)[-1]
             if os.path.isdir(os.path.join(parent, f"{name}.old.{tag}")):
@@ -2578,7 +2522,7 @@ def _retrain_swap(
     # renamed aside; the served union reads only base ∪ appends, so
     # retraining over them would fold a snapshot that silently omits
     # those rows and then sweep them with the old dir. Refuse: the
-    # compact owns that recovery (r12 review).
+    # compact owns that recovery.
     folding = _entries(index_dir, f"{fam.appends}.folding.")
     if folding:
         raise CompactionFenceError(
@@ -2622,8 +2566,8 @@ def _retrain_swap(
     # since (a fenced append's _post_write_fence withdrawing its own
     # landed bid when it observes the bumped epoch) is worse: the
     # engine's two lazy jobs may have straddled the removal — centroids
-    # trained on rows the published lists no longer contain (r13
-    # review). Either way: refuse loudly, and only ready-stamp a
+    # trained on rows the published lists no longer contain. Either
+    # way: refuse loudly, and only ready-stamp a
     # snapshot whose fold set still equals the live set, so no
     # roll-forward candidate ever embeds a stale fold. Residual
     # check-then-act window: a change landing between this re-list and
@@ -2692,8 +2636,7 @@ def _retrain_corpus_check(
 ) -> int:
     """One-job corpus integrity check for the corpus-taking retrains
     (ivfpq_retrain, ann_lsh_retrain), in two layers sharing a single
-    aggregate (r13 review collapsed the id layer to one pass; the r13
-    advice added the multiplicity layer, mirroring ivf_retrain's fold
+    aggregate (the multiplicity layer mirrors ivf_retrain's fold
     guard at the one place a caller-supplied multiset can slip past an
     id-set comparison):
 
@@ -2709,7 +2652,7 @@ def _retrain_corpus_check(
       band_signatures' collision-pair stats; a vec_id carrying TWO
       different embeddings is an outright contradiction no retrain
       can arbitrate; a NULL embedding is reported as its own refusal
-      (not mislabeled a duplicate — r14 review). ivf_retrain dedups
+      (not mislabeled a duplicate). ivf_retrain dedups
       its own served union because replay residue is a DOCUMENTED
       lifecycle state there; a caller-supplied corpus has no replay
       mechanism, so any multiplicity is caller error and refuses
@@ -2717,7 +2660,7 @@ def _retrain_corpus_check(
 
     Scale shape: the multiplicity side distincts xxhash64(embedding),
     NOT the raw 64-float array — ~8 bytes/row through the exchange
-    instead of the full vector (r14 review). The hash is
+    instead of the full vector. The hash is
     engine-internal guard state, never an oracle surface; a 64-bit
     collision can only MISS a conflict (never invent one), at ~n^2/2^64
     odds a deliberately-poisoned corpus needs before it matters.
@@ -2969,7 +2912,7 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     query. Measured recall@10 vs sim_topk_bruteforce at sf0.01 is 1.0
     (tests/test_similarity.py asserts >= 0.9).
 
-    Round 5: upgraded from rows-only to an exact DuckDB oracle. The
+    Exact DuckDB oracle: the
     sign projections run in integer micro-units (band_signatures
     quantize=True) so bucket membership is engine-exact — the oracle
     inlines the quantized plane matrix as literals and replays the
@@ -3000,7 +2943,7 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = cand.select(
         "query_id",
         "cand_id",
-        # r15 A/B: the banded candidate volume (~20k pairs at sf0.1) is
+        # A/B: the banded candidate volume (~20k pairs at sf0.1) is
         # under the Arrow kernel's break-even (in-JVM interleaved mins on
         # the serve twin: 1.139 vs 0.998 s) — HOF kept
         F.round(cosine(F.col("q_emb"), F.col("c_emb")), 6).alias("cos_sim"),
@@ -3022,7 +2965,7 @@ def _band_pair_stats(sigs: DataFrame) -> DataFrame:
     )
     # integer `div`, never `/`: Spark's `/` on bigints returns DOUBLE,
     # whose sum silently loses low-order integer bits past 2^53 while
-    # the DuckDB oracle's `// 2` stays exact (r11 review); the halving
+    # the DuckDB oracle's `// 2` stays exact; the halving
     # itself is exact because cnt*(cnt-1) is even
     return per_bucket.groupBy("band").agg(
         F.sum("cnt").cast("bigint").alias("n"),
@@ -3127,7 +3070,7 @@ def _ann_lsh_serve(emb: DataFrame, sigs: DataFrame) -> DataFrame:
         .select(
             "query_id",
             "cand_id",
-            # r15 A/B (in-JVM interleaved): cosine_arrow 1.139 vs 0.998 s
+            # A/B (in-JVM interleaved): cosine_arrow 1.139 vs 0.998 s
             # min — candidate volume under the Arrow break-even; HOF kept
             F.round(cosine(F.col("q_emb"), F.col("c_emb")), 6).alias("cos_sim"),
         )
@@ -3179,7 +3122,7 @@ joined AS (
   FROM base FULL JOIN newb ON base.band = newb.band)
 -- split-division density in exact integer micro-units (overflow-free:
 -- every intermediate < 2^63; DuckDB's // truncates toward zero just
--- like Spark's div — measured r14, DuckDB does NOT floor — and the
+-- like Spark's div — measured: DuckDB does NOT floor — and the
 -- operands here are non-negative anyway), 0 when either side empty
 SELECT band, n_base, n_new, base_pair_sum, new_pair_sum,
        CAST(CASE WHEN n_base = 0 OR n_new = 0 THEN 0
@@ -3196,7 +3139,7 @@ def _density_mu(pair_sum: str, n: str):
     derives (quotient term bounds the mean bucket load, remainder term
     bounds n; every intermediate < 2^63 across the documented
     envelope). ONE definition shared by the drift report and the
-    cadence trigger that consumes it (r14 review: a second inline copy
+    cadence trigger that consumes it (a second inline copy
     could silently diverge on a future envelope/rounding fix)."""
     return F.when(F.col(n) == 0, F.lit(0)).otherwise(
         F.expr(f"({pair_sum} div {n}) * 1000000"
@@ -3209,7 +3152,7 @@ def _dens_sql(pair_sum: str, n: str) -> str:
     fragment (no zero-guard — callers wrap their own CASE, whose empty-
     side convention differs between the drift and cadence oracles).
     ONE definition for both oracles, exactly as _density_mu is the one
-    definition for both Spark consumers (r14 second review pass)."""
+    definition for both Spark consumers."""
     return (
         f"(({pair_sum} // {n}) * 1000000"
         f" + (({pair_sum} % {n}) * 1000000) // {n})"
@@ -3221,7 +3164,7 @@ def _lsh_drift_report(base_stats: DataFrame, new_stats: DataFrame) -> DataFrame:
     frames. Unlike _drift_report's cross-multiplied numerator — exact
     only while |new_sum * n_base| < 2^63, fine for the linear IVF/IVFPQ
     sums but CUBIC here because pair_sum grows ~quadratically in the
-    per-band row count (r11 review: overflow at ~7e6 standing vectors)
+    per-band row count (overflow at ~7e6 standing vectors)
     — the LSH drift compares collision DENSITIES in exact integer
     micro-units computed by SPLIT DIVISION:
 
@@ -3238,7 +3181,7 @@ def _lsh_drift_report(base_stats: DataFrame, new_stats: DataFrame) -> DataFrame:
     not a silently-wrapped sign — pinned by the overflow-magnitudes
     property test.  All operands are non-negative — where truncation
     and flooring coincide; both engines in fact truncate toward zero
-    (measured r14: DuckDB's // does NOT floor), so the negative-sum
+    (measured: DuckDB's // does NOT floor), so the negative-sum
     hazard _drift_report sidesteps by cross-multiplying would not
     diverge the ENGINES even if it arose, only the flooring Python
     replay helpers.  drift_num =
@@ -3277,7 +3220,7 @@ def _lsh_drift_report(base_stats: DataFrame, new_stats: DataFrame) -> DataFrame:
     return j.withColumn("drift_num", drift.cast("bigint"))
 
 
-# --- retrain cadence: calibrated drift thresholds (r13 VERDICT task 6) ------
+# --- retrain cadence: calibrated drift thresholds ----------------------------
 #
 # The drift reports emit exact micro-unit numbers; these helpers turn
 # them into the calibrated yes/no the on-call runbook needs
@@ -3310,7 +3253,7 @@ def _centroid_retrain_due(
     training data; one that drifts past it looks more foreign than the
     training corpus looks to itself — retrain.
 
-    Two corrections make the comparison honest (r14 review + the sf0.1
+    Two corrections make the comparison honest (from the sf0.1
     calibration measurements):
 
     * MIX adjustment — the batch mean is compared against the
@@ -3324,7 +3267,7 @@ def _centroid_retrain_due(
       Lloyd cell can end up with zero training members and still
       attract batch vectors) are excluded from the comparison, because
       they have NO training yardstick to compare against; their batch
-      mass is NOT dropped silently (r14 second review pass): it is
+      mass is NOT dropped silently: it is
       returned as ``unseen_frac``, and a batch whose MAJORITY lands in
       unseen cells fires the alarm outright — the frozen space
       demonstrably does not cover it, which is drift by definition, no
@@ -3355,8 +3298,8 @@ def _centroid_retrain_due(
     qerr yardstick (higher = quantizes worse)."""
     # baseline_rel: the baseline report's rel_drift, precomputed — the
     # caching hook for hot paths (a per-batch monitor would otherwise
-    # re-aggregate the write-once persisted baseline on every batch;
-    # r15 review). Takes precedence over re-deriving from ``baseline``.
+    # re-aggregate the write-once persisted baseline on every batch).
+    # Takes precedence over re-deriving from ``baseline``.
     base_rel = 0.0
     if baseline_rel is not None:
         base_rel = float(baseline_rel)
@@ -3401,7 +3344,7 @@ def _centroid_retrain_due(
     # data, and rel = sn/exp_sum - 1 with a negative denominator
     # silently flips the alarm direction. The relative comparison is
     # only well-defined against a positive mix expectation; anything
-    # else falls through to the unseen-mass-only verdict (r14 advice).
+    # else falls through to the unseen-mass-only verdict.
     if nb == 0 or nn == 0 or sb == 0.0 or exp_sum <= 0.0:
         return {
             # no comparable mass at all: due only when the batch is
@@ -3511,12 +3454,12 @@ def lsh_retrain_due(report: DataFrame, ratio: float = 2.0) -> dict:
     # default 2x matches sim_lsh_cadence.due_ratio2 term for term):
     # densities are BIGINT micro-units inside the documented < 2^63
     # envelope, and a double-cast dn/db >= ratio could round-diverge
-    # from the oracle-checked column above 2^53 (r14 advice). The
+    # from the oracle-checked column above 2^53. The
     # integer form is (dn div db) >= r, NOT dn >= r*db: for db > 0 and
     # non-negative BIGINTs the two are equivalent (floor monotonicity),
     # but the product can overflow 2^63 for db >= 2^63/r — INSIDE the
-    # density envelope — where the division form never leaves it (r15
-    # review; the DuckDB oracle keeps the product spelling because its
+    # density envelope — where the division form never leaves it (the
+    # DuckDB oracle keeps the product spelling because its
     # BIGINT arithmetic widens to HUGEINT). The when() guard is what
     # keeps ANSI mode from evaluating the div on a db = 0 row. Floats
     # are only used for the REPORTED max_ratio, and for the verdict
@@ -3541,11 +3484,8 @@ def lsh_retrain_due(report: DataFrame, ratio: float = 2.0) -> dict:
     return {"due": due, "max_ratio": max_ratio, "threshold_ratio": ratio}
 
 
-# Registered in round 12 (it was built + locally oracle-proven in r11;
-# the decorator was deferred only for the r11 window cap — see
-# __spark_entry__.py). The oracle above was proven equal to the Spark
-# plan by tests/test_similarity.py's local compare_query run before the
-# first driver check, so registration is evidence-only.
+# The oracle above is proven equal to the Spark plan by
+# tests/test_similarity.py's local compare_query run.
 @query("sim_lsh_incremental", _lsh_incremental_oracle())
 def sim_lsh_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental LSH index maintenance — the sim_ivf_incremental
@@ -3612,9 +3552,6 @@ FROM rep
 """
 
 
-# Registered r15 (built + locally oracle-proven in r14 under the
-# build-now-register-next-round discipline, second entry beside
-# sim_ivf_cadence).
 @query("sim_lsh_cadence", _lsh_cadence_oracle())
 def sim_lsh_cadence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The re-hash cadence arithmetic as a driver-checkable surface —
@@ -3653,7 +3590,7 @@ def sim_lsh_cadence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (floor monotonicity over non-negative BIGINTs), but the product
     # can overflow 2^63 for db >= 2^62 — inside the density envelope —
     # where the division never leaves it; the when() guard keeps ANSI
-    # mode off the db = 0 rows (r15 review). The DuckDB oracle keeps
+    # mode off the db = 0 rows. The DuckDB oracle keeps
     # the product spelling (its BIGINT widens to HUGEINT).
     return proj.withColumn(
         "due_ratio2",
@@ -3703,26 +3640,16 @@ def ann_lsh_append(
 ) -> DataFrame:
     """Append a NEW embedding snapshot to a persisted LSH-ANN index
     WITHOUT rehashing the standing corpus: band-hash the batch against
-    the FROZEN deterministic hyperplanes (a narrow Arrow projection —
-    no join, no shuffle), land the (vec_id, band, sig) rows under
-    ``<index>/appends`` partitioned by (bid, band), and return the
-    per-band bucket-collision drift report vs the training-time stats
-    the build persisted (POSITIVE drift_num = the batch collides denser
-    than the training corpus = the re-hash trigger; see
-    sim_lsh_incremental).
-
-    Durability, fencing, and the empty-batch guard follow ivf_append
-    exactly: batch_id-keyed DYNAMIC partition overwrite (per-writer
-    option — an at-least-once replay rewrites exactly its own bid
-    partitions), expect_epoch raises CompactionFenceError when
-    ann_lsh_compact folded meanwhile, empty batches short-circuit to a
-    lazy n_new=0 report, and drift stats come from the READ-BACK bid
-    partition (the durable truth a replay would serve). Serving reads
-    sigs ∪ appends (ann_lsh_sigs_with_appends). Unlike IVF, the index
-    rows carry no embeddings — the vector store is the caller's
-    (serve-time exact scoring joins the base table), so an append
-    moves ~10 bytes per (vector, band). At 100 TB: new data costs one
-    projection + append; yesterday's hashes are never recomputed."""
+    the FROZEN deterministic hyperplanes at the index's published
+    width (a narrow Arrow projection — no join, no shuffle) and land
+    the (vec_id, band, sig) rows under ``<index>/appends`` partitioned
+    by (bid, band). Returns the per-band bucket-collision drift report
+    vs the training-time stats (POSITIVE drift_num = the batch collides
+    denser than the training corpus = the re-hash trigger; see
+    sim_lsh_incremental). The append contract is _append's. Unlike
+    IVF, the index rows carry no embeddings — the vector store is the
+    caller's (serve-time exact scoring joins the base table) — so an
+    append moves ~10 bytes per (vector, band)."""
 
     def encode(df: DataFrame) -> DataFrame:
         # hash at the INDEX's published width, not the build constants —
@@ -3831,7 +3758,7 @@ def ann_lsh_retrain(
             index_dir,
         )
         # n comes from the integrity check's single aggregate — no
-        # separate corpus.count() job (r13 review). The check reads the
+        # separate corpus.count() job. The check reads the
         # corpus once but shuffles only (vec_id, 8-byte embedding
         # hash); band_signatures below is the one pass that moves full
         # vectors
@@ -3848,7 +3775,7 @@ def ann_lsh_retrain(
         force,
         # derive from the single shape source, overriding only the
         # rows slot — a hand-copied tuple would silently diverge when
-        # _index_shape's annlsh entry changes (r13 review)
+        # _index_shape's annlsh entry changes
         shape_fn=lambda: tuple(
             chosen["rows"] if i == 1 else v
             for i, v in enumerate(_index_shape("annlsh"))
@@ -3903,9 +3830,6 @@ FROM old JOIN neww USING (band)
 """
 
 
-# Registered round 14 (built + locally oracle-proven + scale-probed in
-# r13 under the build-now-register-next-round pattern, second entry
-# beside sim_ivfpq_retrain).
 @query("sim_lsh_retrain", _lsh_retrain_oracle())
 def sim_lsh_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The RE-HASH arithmetic closing the maintained-LSH loop — the
@@ -3935,7 +3859,7 @@ def sim_lsh_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     planes are flat rows [w*b, w*(b+1)), which sit inside new band
     b//2 at char offset (w*b mod 2w) — the same derivation the
     oracle's one `bits` table uses), so both widths cost one
-    projection (the r13 review halved the original two-pass plan).
+    projection, half the cost of a two-pass plan.
     Then one aggregation chain: explode each new-band
     row into its (width, band, sig) pieces, bucket-count, and fold
     both widths' per-band stats in a single conditional aggregate —
@@ -4009,18 +3933,9 @@ def run_incremental_lsh_stream(
     timeout_s: int = 300,
     checkpoint_dir: str | None = None,
 ):
-    """Streaming twin of the incremental LSH maintenance — the
-    run_incremental_ivf_stream shape for the third index family:
-    arriving embedding snapshots stream through a foreachBatch
-    ann_lsh_append, so each micro-batch hashes against the FROZEN
-    deterministic hyperplanes (nothing to load — the planes are a
-    fixed-seed function, the cheapest frozen state of the three
-    families) and lands its sig rows under (bid=batch_id, band)
-    dynamic partition overwrites — replay-idempotent, restart-safe,
-    and FENCED: the compaction epoch is snapshotted at open and a
-    compact racing the stream fails the next append loudly
-    (CompactionFenceError) instead of silently double-serving replayed
-    rows."""
+    """Streaming twin of ann_lsh_append (_open_append_stream's
+    contract). The frozen state is the fixed-seed hyperplanes, so the
+    stream loads nothing at open."""
     return _open_append_stream(
         spark, ANNLSH, index_dir, source, timeout_s, checkpoint_dir, ann_lsh_append
     )
@@ -4054,16 +3969,16 @@ def pq_encode(emb: DataFrame, books: np.ndarray, emb_col: str = "embedding") -> 
     code over INTEGER micro-unit distances — both the vector and the
     codebook entries are quantized to FLOOR(x*1e6) int64 before the
     distance compare, and ties break to the lowest code, so the argmin
-    is bit-reproducible across engines (round 5: this is what upgraded
-    the PQ/IVFPQ shortlists from rows-only to exact DuckDB oracles; the
-    old float-BLAS d2 could flip a near-tie code between engines).
+    is bit-reproducible across engines (this is what makes the PQ/IVFPQ
+    shortlists checkable by exact DuckDB oracles; a float-BLAS d2
+    could flip a near-tie code between engines).
     One Arrow-batched numpy pass (int64 broadcast-subtract per batch) —
     a narrow projection, no shuffle; at 100 TB this is the compression
     pass that shrinks every vector 64x (256 B float32 -> 4 B codes).
 
     Delegates to pq_encode_qerr (one argmin kernel in the repo — the
     hand-copied twin had already diverged: only the qerr copy carried
-    the empty-Arrow-batch guard; r11 review) and drops the error
+    the empty-Arrow-batch guard) and drops the error
     column; codes are the identical argmin either way."""
     return pq_encode_qerr(emb, quantize_books(books), emb_col).drop("qerr")
 
@@ -4233,7 +4148,7 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries against the DECODED approximation JVM-side, keep the top
     PQ_RERANK per query, then re-rank exactly against the true vectors.
 
-    Round 5: fully oracle-checked. The encode argmin runs in integer
+    Fully oracle-checked: the encode argmin runs in integer
     micro-units (pq_encode), the decoded approximation is the exact
     double books_q/1e6, the shortlist ranks ROUND(approx_cos, 6) with
     cand_id tiebreak, and the re-rank is the proven brute-force surface
@@ -4262,7 +4177,7 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_emb",
             "cand_id",
             # cosine_arrow: bit-identical to the HOF fold; the decode
-            # stays JVM-side, only (q_emb, dec) cross into Arrow (r15)
+            # stays JVM-side, only (q_emb, dec) cross into Arrow
             F.round(cosine_arrow(F.col("q_emb"), F.col("dec")), 6).alias("approx_cos"),
         )
     )
@@ -4373,7 +4288,7 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoded c+r per row and scored with interpreted HOF cosine: 6.4s
     at sf0.1; the LUT pandas_udf runs the same shortlist in ~1s.
 
-    Round 5: end-to-end oracle-checked. The coarse quantizer is
+    End-to-end oracle-checked: the coarse quantizer is
     portable_centroids (integer-sum Lloyd on the round-6 tie surface),
     residuals quantize to micro-unit ints, codes argmin integer
     distances, and the WHOLE ADC runs in exact int64 — lut entries and
@@ -4405,7 +4320,7 @@ def ivfpq_fit(emb: DataFrame) -> tuple[DataFrame, DataFrame, np.ndarray]:
 
     # Codebooks need only the PQ_KS lowest vec_ids' residuals, so the
     # assignment/residual expressions run over a 16-row TakeOrdered
-    # slice instead of the whole corpus (r8 profile: the corpus-wide
+    # slice instead of the whole corpus (profiled: the corpus-wide
     # formulation cost 1.3 s at sf0.1 to keep 16 rows).  Same Catalyst
     # expressions on the same rows — values bit-identical.
     books = pq_codebooks(
@@ -4776,9 +4691,7 @@ FROM rep
 """
 
 
-# ROUND-16 REGISTRATION QUEUE (build-now-register-next-round): built +
-# locally oracle-proven in r15; the decorator goes on in round 16
-# under that round's window math.
+# Built and locally oracle-proven; not yet registered with the driver.
 def sim_ivfpq_cadence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """sim_ivf_cadence's qerr twin for the compressed family — the
     third and last retrain trigger's arithmetic as a driver-checkable
@@ -4792,7 +4705,7 @@ def sim_ivfpq_cadence(spark: SparkSession, sf_dir: str) -> DataFrame:
     NON-NEGATIVE by construction (each summand is a winning squared
     distance), so the truncate-vs-floor division question is moot here
     and the degenerate negative-expectation branch the cos trigger
-    guards (exp_sum <= 0, r14 advice) is unreachable; the engines
+    guards (exp_sum <= 0) is unreachable; the engines
     still share div/truncate semantics if an envelope ever changes.
     Sum the gaps over the n_base > 0 cids and the POSITIVE sign is the
     mix-adjusted degradation ivfpq_retrain_due alarms on (higher qerr
@@ -4833,24 +4746,14 @@ def ivfpq_append(
 ) -> DataFrame:
     """Append a NEW embedding snapshot to a persisted IVFPQ index
     WITHOUT retraining — ivf_append one level down: assign against the
-    frozen centroids (zero-shuffle literal argmax), encode residual PQ
-    codes against the FROZEN persisted codebooks (integer argmin,
-    pq_encode_qerr), land the 4-byte codes under
-    ``<index>/code_appends`` partitioned by (bid, cid), and return the
-    per-cid code-space drift report vs the training-time
-    quantization-error stats the build persisted (POSITIVE drift_num_mu
-    = new vectors quantize worse = the PQ retrain trigger).
-
-    Durability, fencing, and the empty-batch guard follow ivf_append
-    exactly: batch_id-keyed DYNAMIC partition overwrite (per-writer
-    option — replay rewrites its own bid partitions), expect_epoch
-    raises CompactionFenceError when ivfpq_compact folded meanwhile,
-    empty batches short-circuit to a lazy n_new=0 report, and drift
-    stats come from the READ-BACK bid partition. Serving reads
-    codes ∪ code_appends (ivfpq_codes_with_appends); cid stays a
-    partition column in both, so probe-side file pruning holds for
-    appended codes too. At 100 TB: yesterday's 4-byte codes are never
-    re-encoded — new data costs assign + encode + append only."""
+    frozen centroids, encode residual PQ codes against the FROZEN
+    persisted codebooks (integer argmin, pq_encode_qerr) and land the
+    4-byte codes under ``<index>/code_appends`` partitioned by
+    (bid, cid). Returns the per-cid code-space drift report vs the
+    training-time quantization-error stats (POSITIVE drift_num_mu = new
+    vectors quantize worse = the PQ retrain trigger). The append
+    contract is _append's; ``cents`` and ``books_q`` take the frozen
+    state a stream loaded once."""
 
     def encode(df: DataFrame) -> DataFrame:
         nonlocal cents, books_q
@@ -5050,9 +4953,8 @@ GROUP BY qv.cid
 """
 
 
-# Registered round 14 (built + locally oracle-proven + scale-probed in
-# r13 under the build-now-register-next-round pattern).  The oracle
-# replays the monolithic IVFPQ train on the union, so the driver check
+# The oracle replays the monolithic IVFPQ train on the union, so the
+# driver check
 # proves retrain-with-the-exact-corpus equals train-from-scratch — the
 # compressed-family analog of sim_ivf_retrain's retrain-exactness.
 @query("sim_ivfpq_retrain", _ivfpq_retrain_oracle())
@@ -5084,7 +4986,7 @@ def sim_ivfpq_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignments + two narrow Arrow encode passes; every exchange
     carries K-cardinality rows except the (cid, pos) cell sums.
 
-    r15 restructure (guide §2.4, remove a pass outright): the served
+    Restructured (guide §2.4, remove a pass outright): the served
     union's ROW SET is the whole base table (vec_id % 2 = 0 ∪ % 2 = 1
     partitions it exactly), so the refit trains on the raw
     (vec_id, embedding) projection directly — bit-identical input rows,
@@ -5097,7 +4999,7 @@ def sim_ivfpq_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     gone.  The maintained ivfpq_retrain keeps serving from real
     codes ∪ code_appends state — this query-surface restructure proves
     the same arithmetic against the same oracle with one fewer corpus
-    materialization (A/B + oracle parity at sf0.1/0.01/0.001, r15).
+    materialization (A/B + oracle parity at sf0.1/0.01/0.001).
 
     The two chains that remain — c1's standing-half Lloyd train (the
     old-label yardstick) and ivfpq_fit's union train — share no state
@@ -5126,7 +5028,7 @@ def sim_ivfpq_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _union_fit():
         # ivfpq_fit IS the union train — the same function ivfpq_build
         # and ivfpq_retrain persist through, so this oracle surface can
-        # never drift from the maintained path by copy (r13 review; the
+        # never drift from the maintained path by copy (the
         # _ivfpq_write_artifacts lesson applied to the query side too)
         return ivfpq_fit(emb.select("vec_id", "embedding"))
 
@@ -5162,16 +5064,8 @@ def run_incremental_ivfpq_stream(
     timeout_s: int = 300,
     checkpoint_dir: str | None = None,
 ):
-    """Streaming twin of the incremental IVFPQ maintenance —
-    run_incremental_ivf_stream one level down: arriving embedding
-    snapshots stream through a foreachBatch ivfpq_append, so each
-    micro-batch encodes against the FROZEN centroids + codebooks
-    (loaded once per stream, shared by every batch) and lands its
-    code rows under (bid=batch_id, cid) dynamic partition overwrites —
-    replay-idempotent, restart-safe, and FENCED: the compaction epoch
-    is snapshotted at open and a compact racing the stream fails the
-    next append loudly (CompactionFenceError) instead of silently
-    double-serving replayed rows."""
+    """Streaming twin of ivfpq_append (_open_append_stream's contract),
+    with the frozen centroids and codebooks loaded once per stream."""
     def frozen() -> dict:
         return {
             "cents": _frozen_cents(spark, index_dir),
@@ -5224,8 +5118,8 @@ def sim_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "cand_id",
-            # cosine_arrow: bit-identical doubles to the HOF fold (r15,
-            # guide §4.2); ROUND + the top-k tie surface stay JVM-side
+            # cosine_arrow: bit-identical doubles to the HOF fold (guide
+            # §4.2); ROUND + the top-k tie surface stay JVM-side
             F.round(cosine_arrow(F.col("q_emb"), F.col("c_emb")), 6).alias("cos_sim"),
         )
     )
@@ -5341,7 +5235,7 @@ def sim_knn_label(spark: SparkSession, sf_dir: str) -> DataFrame:
         "true_label",
         "cand_id",
         "cand_label",
-        # r15 A/B: cosine_arrow measured +0.13 s (25k pairs — under the
+        # A/B: cosine_arrow measured +0.13 s (25k pairs — under the
         # Arrow break-even; the codegen'd cross join wins). HOF kept.
         F.round(cosine(F.col("q_emb"), F.col("c_emb")), 6).alias("cos_sim"),
     )
@@ -5549,7 +5443,7 @@ def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "doc_id",
-            # r15 A/B: cosine_arrow measured +0.25 s min-of-two (25k
+            # A/B: cosine_arrow measured +0.25 s min-of-two (25k
             # pairs, same break-even physics as sim_knn_label). HOF kept.
             F.round(cosine(F.col("q_emb"), F.col("c_emb")), 6).alias("cos_sim"),
         )
@@ -5655,7 +5549,7 @@ def sim_cluster_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = assigned.join(F.broadcast(seeds), "cid").select(
         "vec_id",
         "cid",
-        # r15 A/B (in-JVM interleaved): cosine_arrow tied exactly here
+        # A/B (in-JVM interleaved): cosine_arrow tied exactly here
         # (0.520 vs 0.518 s min — n x 1 rescore, break-even volume);
         # HOF kept to spare the plan a Python boundary it doesn't repay
         F.round(cosine(F.col("embedding"), F.col("c_emb")), 6).alias("c"),
@@ -5766,7 +5660,7 @@ def sim_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
     c = emb.select(F.col("vec_id").alias("cand_id"), F.col("embedding").alias("c_emb"))
-    # cosine_arrow: bit-identical doubles (r15); ROUND stays JVM-side
+    # cosine_arrow: bit-identical doubles; ROUND stays JVM-side
     rel_mu = F.round(F.round(cosine_arrow(F.col("q_emb"), F.col("c_emb")), 6) * 1_000_000)
     scored = (
         F.broadcast(q)
@@ -5901,7 +5795,7 @@ def sim_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     for r in range(2, KCENTER_K + 1):
         # ONE parsed SQL literal, not 64 F.lit() py4j round trips per
         # iteration (the ivf_assign literal discipline); repr() round-
-        # trips doubles exactly, D marks a DOUBLE literal (r15)
+        # trips doubles exactly, D marks a DOUBLE literal
         c_lit = F.expr(
             "array({})".format(", ".join(f"{float(v)!r}D" for v in center))
         )
