@@ -322,8 +322,7 @@ _ORDERS_CSV_SCHEMA = (
 
 def _setup_pipelines(spark, sf_dir: str, work: str) -> None:
     """Untimed setup: materialize a CSV tree (orders, derived from the
-    driver testdata) for the ingest bench, and warm the Python
-    DataSource session."""
+    driver testdata) for the ingest bench."""
     import pyspark.sql.functions as F
 
     csv_dir = os.path.join(work, "csv_tree")
@@ -341,20 +340,6 @@ def _setup_pipelines(spark, sf_dir: str, work: str) -> None:
         .option("header", "true")
         .csv(csv_dir)
     )
-    # Pay the one-time Python-DataSource session init here, untimed:
-    # the first ftp_manifest load() in a session costs ~2.8 s of
-    # plan-only worker startup (adjudicated r10), which otherwise lands
-    # inside pipe_ingest_csv's first timed run — in a contended
-    # full-suite JVM that pushed even the min-of-two over the warm
-    # budget's grace (4.571 s vs 4.5, the r14 judge re-run). The budget
-    # models the recurring plan cost; the init is a session constant.
-    from ftp_blueprints_spark.sources.connector import ClientSpec
-    from ftp_blueprints_spark.sources.datasource import read_manifest
-
-    warm_spec = ClientSpec(kind="local", root=csv_dir)
-    read_manifest(spark, warm_spec, "", with_content=True).select("path").limit(
-        1
-    ).collect()
 
 
 def _pipe_download(spark, sf_dir: str, work: str, run_id: int) -> None:
@@ -377,8 +362,9 @@ def _pipe_download(spark, sf_dir: str, work: str, run_id: int) -> None:
 
 
 def _pipe_ingest_csv(spark, sf_dir: str, work: str, run_id: int) -> None:
-    """Columnar ingest: CSV tree -> ftp_manifest DataSource (bytes
-    fetched executor-side) -> decode/split/posexplode/from_csv -> parquet."""
+    """Columnar ingest: CSV tree -> list_tree + rlike match -> fetch of
+    the matched files' bytes (executor-side) ->
+    decode/split/posexplode/from_csv -> parquet."""
     from ftp_blueprints_spark.sources.connector import ClientSpec
     from ftp_blueprints_spark.sources.ingest import ingest_csv
 

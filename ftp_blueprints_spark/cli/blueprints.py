@@ -130,9 +130,9 @@ def _run(fn) -> int:
         return e.exit_code
     except Exception as e:
         # errors raised inside executor tasks (e.g. a failed FTP login in
-        # a sink partition's spec.connect(), or in the ingest DataSource)
-        # cross Py4J as untyped strings; map them back so bad
-        # credentials still exit 3, not 1
+        # the spec.connect() of a sink or ingest fetch partition) cross
+        # Py4J as untyped strings; map them back so bad credentials
+        # still exit 3, not 1
         from ..errors import typed_from_message
 
         typed = typed_from_message(e)

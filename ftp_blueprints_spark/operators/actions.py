@@ -1,6 +1,7 @@
 """Action sinks — the reference's act phase (SURVEY.md §2A S6-S11,
 D1-D3) as ``foreachPartition`` sinks over a destination-projected
-manifest (columns ``path`` and, where applicable, ``dest_path``).
+manifest (columns ``path`` and, where applicable, ``dest_path``), and
+:func:`fetch`, the ingest's read of matched files' bytes.
 
 Execution model: each call acts over at most ``spec.max_connections``
 partitions (FTP servers throttle sessions). A driver-held manifest
@@ -8,7 +9,9 @@ partitions (FTP servers throttle sessions). A driver-held manifest
 sliced with ``sc.parallelize``, so the call runs one Spark job; a
 DataSource manifest is repartitioned instead. Each non-empty partition
 opens ONE client (connector.ClientSpec.connect) and streams its rows;
-bytes flow executor<->server and never touch the driver.
+bytes flow executor<->server and never touch the driver. The sinks and
+the fetch share that placement (``_placed``) and that per-partition
+client (``_per_client``).
 
 Reference error-semantic asymmetries preserved (behavioral parity):
 - download skips failed rows and keeps going, removing the partial
@@ -30,10 +33,12 @@ Reference error-semantic asymmetries preserved (behavioral parity):
 
 from __future__ import annotations
 
+import io
 import itertools
 import os
 import sys
 
+from pyspark import RDD
 from pyspark.sql import DataFrame
 
 from ..errors import InvalidFilePath, MoveError, UploadError, typed_from_message
@@ -49,11 +54,10 @@ def _progress(action: str, n_ok: int, n_other: int = 0, other: str = "") -> None
     print(f"[{action}] partition done: {n_ok} ok{extra}", file=sys.stderr)
 
 
-def _run_sink(df: DataFrame, spec: ClientSpec, body) -> None:
-    """Run ``body(client, rows)`` once per partition of ``df``, with at
-    most ``spec.max_connections`` partitions: more would exceed the
-    server's session budget, fewer would leave allowed sessions idle.
-    Two regimes (``manifest.driver_rows`` decides):
+def _placed(df: DataFrame, spec: ClientSpec) -> RDD:
+    """The rows of ``df`` in at most ``spec.max_connections`` partitions:
+    more would exceed the server's session budget, fewer would leave
+    allowed sessions idle. Two regimes (``manifest.driver_rows`` decides):
 
     - driver-held rows (the optimized plan is a ``LocalRelation``) are
       collected with no job and shipped with ``sc.parallelize`` into
@@ -63,43 +67,69 @@ def _run_sink(df: DataFrame, spec: ClientSpec, body) -> None:
       manifest to one partition). Asking for the current partition
       count first would run the upstream plan's AQE stages once for the
       count and again for the sink; the unconditional round-robin costs
-      one shuffle of the (path, dest) rows instead.
-
-    Either way the bytes flow executor<->server, never through the
-    driver. Each partition opens its client on its first row, so an
-    empty partition opens no session.
-
-    Executor exceptions surface as Py4J strings; they are mapped back
-    to the typed error (and its exit code) at this driver boundary.
-    That covers IncorrectCredentials too: spec.connect() runs INSIDE
-    partitions, so a bad login fails executor-side and must still
-    exit 3."""
+      one shuffle of the (path, dest) rows instead."""
     conns = max(1, spec.max_connections)
     held = driver_rows(df)
     if held is None:
-        target = df.repartition(conns)
-    else:
-        sc = df.sparkSession.sparkContext
-        target = sc.parallelize(held, max(1, min(len(held), conns)))
+        return df.repartition(conns).rdd
+    sc = df.sparkSession.sparkContext
+    return sc.parallelize(held, max(1, min(len(held), conns)))
 
-    def sink(rows) -> None:
+
+def _per_client(spec: ClientSpec, body):
+    """``body(client, rows)`` as a partition function that opens its
+    client on the partition's first row, so an empty partition opens no
+    session, and yields whatever ``body`` yields (a sink's returns None)."""
+
+    def run(rows):
         rows = iter(rows)
         first = next(rows, None)
         if first is None:
             return
         client = spec.connect()
         try:
-            body(client, itertools.chain([first], rows))
+            yield from body(client, itertools.chain([first], rows)) or ()
         finally:
             client.close()
 
+    return run
+
+
+def _run_sink(df: DataFrame, spec: ClientSpec, body) -> None:
+    """Run ``body(client, rows)`` once per non-empty partition of
+    :func:`_placed` ``df``; bytes flow executor<->server, never through
+    the driver.
+
+    Executor exceptions surface as Py4J strings; they are mapped back
+    to the typed error (and its exit code) at this driver boundary.
+    That covers IncorrectCredentials too: spec.connect() runs INSIDE
+    partitions, so a bad login fails executor-side and must still
+    exit 3."""
     try:
-        target.foreachPartition(sink)
+        _placed(df, spec).foreachPartition(_per_client(spec, body))
     except Exception as err:
         typed = typed_from_message(err)
         if typed is not None:
             raise typed from err
         raise
+
+
+def fetch(files: DataFrame, spec: ClientSpec) -> DataFrame:
+    """``(path STRING, content BINARY)`` for each row of ``files``: the
+    ingest's one route for file bytes into Spark. Only the given paths
+    are RETRed, placed exactly as the sinks place their rows
+    (:func:`_placed`, one session per non-empty partition); the bytes
+    stay executor-side. Lazy: the RETRs run with the job that reads the
+    frame."""
+
+    def body(client, rows):
+        for row in rows:
+            buf = io.BytesIO()
+            client.retrieve(row["path"], buf)
+            yield row["path"], buf.getvalue()
+
+    fetched = _placed(files.select("path"), spec).mapPartitions(_per_client(spec, body))
+    return files.sparkSession.createDataFrame(fetched, "path string, content binary")
 
 
 def download(manifest: DataFrame, spec: ClientSpec, dest_root: str) -> dict:

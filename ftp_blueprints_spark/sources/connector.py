@@ -32,11 +32,14 @@ an empty tree), :func:`check_depth` bounds both walks at
 splits a walk's work over ``max_connections`` clients. They live here,
 not in ``listing.py``, so DataSource workers never import pyarrow.
 
-Scale design: sinks call ``spec.connect()`` once per non-empty
-PARTITION (not per row), and action DataFrames are repartitioned to
-exactly ``max_connections`` before ``foreachPartition``: a 1000-executor
-job cannot open more sessions than the server allows, and a manifest
-AQE coalesced to one partition still uses every allowed session.
+Scale design: sinks and the ingest fetch call ``spec.connect()`` once
+per non-empty PARTITION (not per row), over at most ``max_connections``
+partitions (``operators.actions._placed``): driver-held rows are sliced
+with ``sc.parallelize`` into ``min(rows, max_connections)`` partitions,
+and a DataSource manifest is repartitioned to exactly
+``max_connections``. A 1000-executor job cannot open more sessions than
+the server allows, and a manifest AQE coalesced to one partition still
+uses every allowed session.
 ``list_tree`` (clients on driver threads) and the ``ftp_manifest``
 reader (one client per input partition) cut their work into at most
 ``max_connections`` contiguous :func:`chunks`, so every walk is under
@@ -50,6 +53,9 @@ import shutil
 from dataclasses import dataclass, field
 
 from ..errors import BlueprintError, IncorrectCredentials
+
+# The manifest row every walk emits (:func:`child_rows`), as Spark DDL.
+MANIFEST_SCHEMA = "path string, folder string, name string, is_dir boolean, size bigint"
 
 # Folder levels either tree walk may list (its seed is level 0); a tree
 # deeper than this fails the walk instead of returning a truncated manifest.

@@ -2,30 +2,28 @@
 remote trees as DataFrames: the engine's answer to "Spark has no
 native FTP source" (SURVEY.md §1.3).
 
-    df = read_manifest(spark, ClientSpec(kind="local", root="/data"),
-                       "", with_content=True)
+    df = read_manifest(spark, ClientSpec(kind="local", root="/data"), "")
 
 :func:`read_manifest` is the program's only route into the
 ``ftp_manifest`` format (it registers :class:`ManifestDataSource` and
 forwards every ClientSpec field as an option); ``list_tree``'s
-large-tree hand-off, ingest and the registered queries all go through
-it.
+large-tree hand-off and the registered queries go through it.
 
-Schema: the manifest columns (path/folder/name/is_dir/size), plus a
-``content`` BINARY column when ``with_content`` is set.
+Schema: the five manifest columns (path/folder/name/is_dir/size). The
+reader is a plain walk of ``folder``: pruning lives in ``list_tree``,
+whose hand-off passes its pruned seed as ``folder``, and file bytes
+reach Spark through ``operators.actions.fetch`` only.
 
-Partitioning: the driver lists ONLY the seed level with one connection
-(``connector.seed_rows``: the root, or a ``path_pattern``'s static
-prefix folder) and cuts its entries into at most ``max_connections``
-contiguous chunks (``connector.chunks``). Each chunk is one
-InputPartition, read by an executor with ONE client that walks the
-chunk's subtrees depth-first in entry order, one
+Partitioning: the driver lists ONLY ``folder`` with one connection
+(``connector.seed_rows``) and cuts its entries into at most
+``max_connections`` contiguous chunks (``connector.chunks``). Each
+chunk is one InputPartition, read by an executor with ONE client that
+walks the chunk's subtrees depth-first in entry order, one
 ``connector.child_rows`` call per folder, bounded by
 ``connector.MAX_DEPTH``. A read therefore opens at most 1 +
 ``max_connections`` sessions, the same bound as the sinks and
-``list_tree``; rows come out in seed-entry order whatever the chunking,
-and file bytes stream executor-side — they never pass through the
-driver. A seed with no entries is one empty partition.
+``list_tree``; rows come out in seed-entry order whatever the
+chunking. A folder with no entries is one empty partition.
 
 The shared walk steps live in ``connector.py`` rather than
 ``listing.py`` because Python workers unpickle this module: importing
@@ -47,24 +45,11 @@ from pyspark.sql.datasource import (
     InputPartition,
     WriterCommitMessage,
 )
-from pyspark.sql.types import (
-    BinaryType,
-    BooleanType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
+from pyspark.sql.types import StructType
+
+from .connector import (
+    MANIFEST_SCHEMA, ClientSpec, check_depth, child_rows, chunks, parent, seed_rows,
 )
-
-from .connector import ClientSpec, check_depth, child_rows, chunks, parent, seed_rows
-
-_BASE_FIELDS = [
-    StructField("path", StringType()),
-    StructField("folder", StringType()),
-    StructField("name", StringType()),
-    StructField("is_dir", BooleanType()),
-    StructField("size", LongType()),
-]
 
 
 def _spec_from_options(options) -> ClientSpec:
@@ -97,29 +82,15 @@ class _TreePartition(InputPartition):
 class ManifestReader(DataSourceReader):
     def __init__(self, schema: StructType, options):
         self.spec = _spec_from_options(options)
-        self.root = options.get("folder", "")
+        self.folder = options.get("folder", "")
         self.skip_dot_dirs = options.get("skip_dot_dirs", "true") == "true"
-        self.with_content = options.get("with_content", "false") == "true"
-        # regex-prefix traversal pruning (SURVEY §4.2): a FULLPATH-scoped
-        # ^-anchored pattern seeds the partition listing at its static
-        # folder prefix, so the executor walk covers one subtree instead
-        # of the whole server (None: divergent literals, nothing can
-        # match). Never pass a basename-scoped pattern.
-        self.seed = self.root
-        pat = options.get("path_pattern", "") or ""
-        if pat:
-            from .listing import pattern_prefix, seed_for
-
-            self.seed = seed_for(self.root, pattern_prefix(pat))
 
     def partitions(self):
-        """One cheap seed listing on the driver; its entries, cut into at
-        most ``max_connections`` contiguous chunks, become the
-        executor-side partitions. No rows (a missing pruned seed, an
-        empty tree) yields one empty partition."""
-        rows = []
-        if self.seed is not None:
-            rows = seed_rows(self.spec, self.root, self.seed, self.skip_dot_dirs)
+        """One cheap listing of ``folder`` on the driver; its entries,
+        cut into at most ``max_connections`` contiguous chunks, become
+        the executor-side partitions. No entries yields one empty
+        partition."""
+        rows = seed_rows(self.spec, self.folder, self.folder, self.skip_dot_dirs)
         chunked = chunks(rows, self.spec.max_connections)
         return [_TreePartition(c) for c in chunked] or [_TreePartition([])]
 
@@ -133,33 +104,24 @@ class ManifestReader(DataSourceReader):
             while stack:
                 row, depth = stack.pop()
                 path, _, _, is_dir, _ = row
-                content = None
                 if is_dir:
                     check_depth(depth, path)
                     children = child_rows(client, path, self.skip_dot_dirs)
                     stack.extend((child, depth + 1) for child in children)
-                elif self.with_content:
-                    buf = io.BytesIO()
-                    client.retrieve(path, buf)
-                    content = buf.getvalue()
-                yield (*row, content) if self.with_content else row
+                yield row
         finally:
             client.close()
 
 
 class ManifestDataSource(DataSource):
-    """``ftp_manifest`` format: remote-tree manifest (optionally with
-    file bytes) as a DataFrame."""
+    """``ftp_manifest`` format: remote-tree manifest as a DataFrame."""
 
     @classmethod
     def name(cls) -> str:
         return "ftp_manifest"
 
-    def schema(self) -> StructType:
-        fields = list(_BASE_FIELDS)
-        if self.options.get("with_content", "false") == "true":
-            fields.append(StructField("content", BinaryType()))
-        return StructType(fields)
+    def schema(self) -> str:
+        return MANIFEST_SCHEMA
 
     def reader(self, schema: StructType) -> ManifestReader:
         return ManifestReader(schema, self.options)
@@ -173,12 +135,10 @@ def read_manifest(
     spec: ClientSpec,
     folder: str,
     skip_dot_dirs: bool = True,
-    with_content: bool = False,
 ) -> DataFrame:
     """The program's one route into the ``ftp_manifest`` format: the
-    manifest of the tree under ``folder`` (plus ``content`` when
-    ``with_content``), its top-level entries walked executor-side in at
-    most ``spec.max_connections`` partitions.
+    manifest of the tree under ``folder``, its top-level entries walked
+    executor-side in at most ``spec.max_connections`` partitions.
     Registering the format again in the same session is a no-op."""
     spark.dataSource.register(ManifestDataSource)
     return (
@@ -186,7 +146,6 @@ def read_manifest(
         .options(**_spec_options(spec))
         .option("folder", folder)
         .option("skip_dot_dirs", "true" if skip_dot_dirs else "false")
-        .option("with_content", "true" if with_content else "false")
         .load()
     )
 

@@ -5,26 +5,29 @@ The reference's blueprints move files byte-for-byte; the natural next
 step for an ETL engine is to land them as COLUMNS. Every ``ingest_*``
 function is the same landing step (:func:`_land`) with its own parser:
 
-    read_manifest(with_content) -> filter(~is_dir & rlike) -> parse
+    list_tree -> filter(~is_dir & rlike) -> fetch -> parse
         -> parquet (optionally partitionBy) -> count
 
-File bytes are fetched executor-side by the ``ftp_manifest`` DataSource
-(``datasource.read_manifest``: at most ``max_connections`` partitions,
-one FTP session each). CSV and JSONL share one line step
-(:func:`_nonempty_lines`: decode -> split lines -> posexplode -> drop
-blank lines) and then parse with ``from_csv``/``from_json`` — Catalyst
-expressions, so no Python touches row data and a 1000-executor ingest
-is bounded by FTP bandwidth, not the driver. Parquet and ORC share one
-Arrow container parser (:func:`_parse_container`), each passing in its
-own pyarrow reader. Every output row keeps its provenance (source path
-+ 1-based line or row number) — the lineage columns a training-data
-pipeline audits by.
+Like the reference, ingest filters first and acts on matches only: the
+manifest comes from ``listing.list_tree`` (the CLI's listing, with its
+DataSource hand-off for large trees), Spark's ``rlike`` alone decides
+what matches, and ``actions.fetch`` RETRs the matched files only, in at
+most ``max_connections`` partitions with one FTP session each.
+
+CSV and JSONL share one line step (:func:`_nonempty_lines`: decode ->
+split lines -> posexplode -> drop blank lines) and then parse with
+``from_csv``/``from_json`` — Catalyst expressions, so no Python touches
+row data and a 1000-executor ingest is bounded by FTP bandwidth, not
+the driver. Parquet and ORC share one Arrow container parser
+(:func:`_parse_container`), each passing in its own pyarrow reader.
+Every output row keeps its provenance (source path + 1-based line or
+row number) — the lineage columns a training-data pipeline audits by.
 
 Header handling is per-file: with ``header=True`` the first non-empty
 line of each CSV is dropped. Its index is computed once per file from
 the file's leading blank lines, BEFORE the explode, so no per-line
 window (and no shuffle) is needed: read -> gunzip -> parse -> parquet
-is one shuffle-free stage per manifest partition.
+is one shuffle-free stage per fetch partition.
 """
 
 from __future__ import annotations
@@ -36,8 +39,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from ..operators.actions import fetch
 from .connector import ClientSpec
-from .datasource import read_manifest
+from .listing import list_tree
 
 
 def _land(
@@ -53,9 +57,9 @@ def _land(
     matches ``pattern`` -> ``parse`` -> a parquet dataset at ``dest``
     (optionally partitioned, directory-pruned on read-back); returns the
     row count written."""
-    mf = read_manifest(spark, spec, folder, with_content=True)
-    files = mf.filter((~F.col("is_dir")) & F.col("path").rlike(pattern))
-    writer = parse(files).write.mode("overwrite")
+    mf = list_tree(spark, spec, folder)
+    matched = mf.filter((~F.col("is_dir")) & F.col("path").rlike(pattern))
+    writer = parse(fetch(matched, spec)).write.mode("overwrite")
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     writer.parquet(dest)

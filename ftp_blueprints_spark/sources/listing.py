@@ -47,10 +47,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions import paths as P
-from .connector import ClientSpec, check_depth, child_rows, chunks, seed_rows
+from .connector import MANIFEST_SCHEMA, ClientSpec, check_depth, child_rows, chunks, seed_rows
 from .datasource import read_manifest
 
-MANIFEST_SCHEMA = "path string, folder string, name string, is_dir boolean, size bigint"
 _ARROW_SCHEMA = pa.schema(
     [("path", pa.string()), ("folder", pa.string()), ("name", pa.string()),
      ("is_dir", pa.bool_()), ("size", pa.int64())]

@@ -172,6 +172,7 @@ class _Session(threading.Thread):
             self.send(550, "not a plain file")
 
     def do_retr(self, arg: str) -> None:
+        self.server.retrieved.append(self.virtual(arg).lstrip("/"))
         real = self.resolve(arg)
         if not os.path.isfile(real):
             self.send(550, "no such file")
@@ -278,6 +279,9 @@ class FtpStubServer:
         self.nlst_count = 0
         # control connections accepted (one per client session)
         self.sessions = 0
+        # root-relative paths RETRed, in arrival order (list.append is
+        # GIL-atomic too)
+        self.retrieved: list[str] = []
         self._listener: socket.socket | None = None
         self._accept_thread: threading.Thread | None = None
 

@@ -1,7 +1,10 @@
 """Tests for the ftp_manifest Python DataSource (Spark 4 API): listing
-parity with the connector BFS, content reads, dot-dir semantics."""
+parity with the connector BFS, dot-dir semantics, the write path; and
+content reads through the ingest's fetch step."""
 
 from __future__ import annotations
+
+import os
 
 import pytest
 
@@ -66,14 +69,14 @@ def test_datasource_keeps_dot_dirs_when_asked(registered, tree):
     assert "..." in names and "hidden.csv" in names
 
 
-def test_datasource_with_content(registered, tree):
-    df = (
-        registered.read.format("ftp_manifest")
-        .option("kind", "local")
-        .option("root", str(tree))
-        .option("with_content", "true")
-        .load()
-    )
+def test_fetch_returns_file_content(spark, tree):
+    """actions.fetch returns each given file's bytes; joined back onto
+    the manifest, files carry their bytes and folders none."""
+    from ftp_blueprints_spark.operators.actions import fetch
+
+    spec = ClientSpec(kind="local", root=str(tree))
+    mf = list_tree(spark, spec, "")
+    df = mf.join(fetch(mf.filter("not is_dir"), spec), "path", "left")
     rows = {r["path"]: r for r in df.collect()}
     assert bytes(rows["a/x.csv"]["content"]) == b"x-data"
     assert bytes(rows["a/deep/y.csv"]["content"]) == b"y-data"
@@ -136,9 +139,10 @@ def test_datasource_write_uploads_local(registered, tmp_path):
 
 
 def test_datasource_write_roundtrip_over_ftp(registered, tmp_path):
-    """Read a tree through the DataSource (with content), re-upload it
+    """Read a tree's bytes through the fetch step, re-upload them
     through the DataSource WRITER over a real FTP socket, and get the
-    identical bytes back — the full read+write DataSource loop."""
+    identical bytes back — the full read+write loop."""
+    from ftp_blueprints_spark.operators.actions import fetch
     from tests.ftp_stub_server import FtpStubServer
 
     spark = registered
@@ -150,14 +154,10 @@ def test_datasource_write_roundtrip_over_ftp(registered, tmp_path):
     dst.mkdir()
     users = {"alice": "secret"}
     with FtpStubServer(str(dst), users) as (host, port):
-        files = (
-            spark.read.format("ftp_manifest")
-            .option("kind", "local")
-            .option("root", str(src))
-            .option("with_content", "true")
-            .load()
-            .filter("not is_dir")
-            .selectExpr("concat('mirror/', name) AS dest_path", "content")
+        src_spec = ClientSpec(kind="local", root=str(src))
+        mf = list_tree(spark, src_spec, "").filter("not is_dir")
+        files = mf.join(fetch(mf, src_spec), "path").selectExpr(
+            "concat('mirror/', name) AS dest_path", "content"
         )
         (
             files.write.format("ftp_manifest")
@@ -290,10 +290,36 @@ def test_ftp_manifest_has_one_entry_point():
     assert offenders == []
 
 
+def test_datasource_module_imports_neither_listing_nor_pyarrow():
+    """Python workers unpickle datasource.py: it imports nothing from
+    ``listing`` (not even lazily), and importing it on its own loads
+    neither ``listing`` nor pyarrow."""
+    import pathlib
+    import re
+    import subprocess
+    import sys
+
+    import ftp_blueprints_spark.sources.datasource as ds
+
+    assert not re.search(r"\blisting\b import|import\b.*\blisting\b",
+                         pathlib.Path(ds.__file__).read_text())
+    script = (
+        "import sys\n"
+        "import ftp_blueprints_spark.sources.datasource\n"
+        "print(sorted(m for m in ('pyarrow', 'ftp_blueprints_spark.sources.listing')"
+        " if m in sys.modules))\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=repo, capture_output=True, text=True, timeout=120,
+    )
+    assert out.stdout.strip() == "[]", out.stderr[-2000:]
+
+
 def test_workers_import_package_from_any_cwd(tmp_path):
     """get_spark ships the package's location to Python workers: an
     ingest run from another cwd, with PYTHONPATH unset, still reaches
-    the ftp_manifest DataSource worker and lands every row."""
+    its Python workers and lands every row."""
     import os
     import subprocess
     import sys

@@ -1,9 +1,9 @@
 """End-to-end tests of the ``kind='ftp'`` path against a real (local,
 in-process) FTP server speaking RFC 959 over sockets: S1 session open
 (incl. bad-credential exit-3 semantics), S2 listing + cwd-probe
-classification, S3 parallel BFS, S6-S10 action sinks, and the
-ftp_manifest DataSource — the same code paths a production FTP server
-would exercise, minus the network.
+classification, S3 parallel BFS, S6-S10 action sinks, the ingest
+fetch, and the ftp_manifest DataSource — the same code paths a
+production FTP server would exercise, minus the network.
 """
 
 from __future__ import annotations
@@ -115,25 +115,15 @@ def test_list_tree_over_ftp_runs_no_spark_job(spark, spark_jobs, ftp_root):
     assert mf.collect() == want.collect()
 
 
-# --- DataSource over FTP ----------------------------------------------------
+# --- ingest fetch over FTP --------------------------------------------------
 
-def test_datasource_reads_content_over_ftp(spark, ftp_root):
-    from ftp_blueprints_spark.sources.datasource import ManifestDataSource
-
-    try:
-        spark.dataSource.register(ManifestDataSource)
-    except Exception:
-        pass  # already registered in this session
+def test_fetch_reads_content_over_ftp(spark, ftp_root):
+    """actions.fetch RETRs each given file over FTP; joined back onto
+    the manifest, files carry their bytes and folders none."""
     with FtpStubServer(ftp_root, USERS) as (host, port):
-        df = (
-            spark.read.format("ftp_manifest")
-            .option("kind", "ftp").option("host", host).option("port", str(port))
-            .option("username", "alice").option("password", "secret")
-            .option("timeout", "10")
-            .option("folder", "data")
-            .option("with_content", "true")
-            .load()
-        )
+        spec = spec_for(host, port)
+        mf = list_tree(spark, spec, "data")
+        df = mf.join(actions.fetch(mf.filter("not is_dir"), spec), "path", "left")
         rows = {r["path"]: r for r in df.collect()}
     assert bytes(rows["data/a.csv"]["content"]) == TREE["data/a.csv"]
     assert bytes(rows["data/sub/c.txt"]["content"]) == TREE["data/sub/c.txt"]
@@ -476,6 +466,69 @@ def test_cli_ingest_local(spark, tmp_path):
     ])
     assert rc == 0
     assert spark.read.parquet(dest).count() == 2
+
+
+def test_ingest_fetches_only_matched_files(spark, tmp_path):
+    """Ingest filters, then fetches: of a folder holding one CSV and
+    three large non-CSV files, only the CSV is RETRed, and its rows
+    land."""
+    from ftp_blueprints_spark.sources.ingest import ingest_csv
+
+    root = tmp_path / "srv"
+    (root / "in").mkdir(parents=True)
+    (root / "in" / "one.csv").write_text("id,name\n1,ant\n2,bee\n")
+    for name in ("big.bin", "big.csv.gz.part", "big.parquet"):
+        (root / "in" / name).write_bytes(b"\0" * (4 << 20))
+    dest = str(tmp_path / "only.parquet")
+    srv = FtpStubServer(str(root), USERS)
+    with srv as (host, port):
+        n = ingest_csv(
+            spark, spec_for(host, port), "in", schema="id int, name string", dest=dest,
+        )
+    assert srv.retrieved == ["in/one.csv"]
+    assert n == 2
+    got = {(r["src_path"], r["line_no"], r["id"], r["name"])
+           for r in spark.read.parquet(dest).collect()}
+    assert got == {("in/one.csv", 1, 1, "ant"), ("in/one.csv", 2, 2, "bee")}
+
+
+def test_ingest_csv_datasource_regime(spark, tmp_path, monkeypatch):
+    """Past DRIVER_ROWS_THRESHOLD the listing is a DataSource read and
+    the fetch repartitions it: the ingest lands the driver regime's rows
+    and RETRs the matched paths only."""
+    from ftp_blueprints_spark.operators.manifest import driver_rows
+    from ftp_blueprints_spark.sources import listing
+    from ftp_blueprints_spark.sources.ingest import ingest_csv
+
+    root = tmp_path / "srv"
+    (root / "in" / "sub").mkdir(parents=True)
+    (root / "in" / "one.csv").write_text("id,name,qty\n1,ant,10\n2,bee,20\n")
+    (root / "in" / "sub" / "two.csv").write_text("id,name,qty\n3,cat,30\n")
+    (root / "in" / "notes.txt").write_text("not a csv")
+    (root / "in" / "sub" / "big.bin").write_bytes(b"\0" * (1 << 20))
+
+    def ingest(dest: str) -> tuple:
+        srv = FtpStubServer(str(root), USERS)
+        with srv as (host, port):
+            spec = spec_for(host, port)
+            regime = driver_rows(list_tree(spark, spec, "in")) is None
+            n = ingest_csv(spark, spec, "in", schema="id int, name string, qty int", dest=dest)
+        rows = sorted(
+            tuple(r) for r in
+            spark.read.parquet(dest).select("src_path", "line_no", "id", "name", "qty").collect()
+        )
+        return regime, n, rows, sorted(srv.retrieved)
+
+    driver = ingest(str(tmp_path / "driver.parquet"))
+    monkeypatch.setattr(listing, "DRIVER_ROWS_THRESHOLD", 0)
+    distributed = ingest(str(tmp_path / "ds.parquet"))
+    assert (driver[0], distributed[0]) == (False, True)
+    assert distributed[1:] == driver[1:] == (
+        3,
+        [("in/one.csv", 1, 1, "ant", 10), ("in/one.csv", 2, 2, "bee", 20),
+         ("in/sub/two.csv", 1, 3, "cat", 30)],
+        ["in/one.csv", "in/sub/two.csv"],
+    )
 
 
 def test_ingest_no_matching_files_writes_empty(spark, tmp_path):
@@ -965,45 +1018,38 @@ def test_pruned_listing_permission_denied_raises(spark, ftp_root):
             ).count()
 
 
-def test_datasource_prunes_partitions_by_pattern(spark, ftp_root):
-    """The executor-partitioned DataSource honors the same option: with
-    path_pattern, partitions() lists the seed folder instead of the
-    root, so the walk covers one subtree; rows equal the pruned
-    list_tree manifest."""
-    from ftp_blueprints_spark.sources.datasource import ManifestDataSource
+def test_datasource_prunes_partitions_by_pattern(spark, ftp_root, monkeypatch):
+    """Pruning lives in list_tree alone: past the hand-off its pruned
+    seed reaches the DataSource as ``folder``, so the executor walk
+    covers one subtree; rows equal the driver-regime pruned manifest."""
+    from ftp_blueprints_spark.operators.manifest import driver_rows
+    from ftp_blueprints_spark.sources import listing
 
-    try:
-        spark.dataSource.register(ManifestDataSource)
-    except Exception:
-        pass
+    pattern = r"^data/sub/.*[.]txt$"
+    # a folder below the seed, so the pruned walk has a level to hand off
+    os.makedirs(os.path.join(ftp_root, "data", "sub", "inner"))
+    with open(os.path.join(ftp_root, "data", "sub", "inner", "d.txt"), "wb") as f:
+        f.write(b"delta")
     srv = FtpStubServer(ftp_root, USERS)
     with srv as (host, port):
-        df = (
-            spark.read.format("ftp_manifest")
-            .option("kind", "ftp").option("host", host)
-            .option("port", str(port))
-            .option("username", "alice").option("password", "secret")
-            .option("timeout", "10")
-            .option("folder", "")
-            .option("path_pattern", r"^data/sub/.*[.]txt$")
-            .load()
-        )
-        rows = {r["path"] for r in df.collect()}
-        assert rows == {"data/sub/c.txt"}
-        # driver partitions() listing + the (empty) subtree walk of the
-        # seed's one file partition; never the root or data/ levels
+        spec = spec_for(host, port)
+        want = {tuple(r) for r in list_tree(spark, spec, "", path_pattern=pattern).collect()}
+        monkeypatch.setattr(listing, "DRIVER_ROWS_THRESHOLD", 0)
+        srv.nlst_count = 0
+        df = list_tree(spark, spec, "", path_pattern=pattern)
+        assert driver_rows(df) is None
+        assert srv.nlst_count == 1  # list_tree's seed listing, then the hand-off
+        srv.nlst_count = 0
+        rows = {tuple(r) for r in df.collect()}
+        assert rows == want
+        assert {r[0] for r in rows} == {
+            "data/sub/c.txt", "data/sub/inner", "data/sub/inner/d.txt",
+        }
+        # driver partitions() listing + the subtree walk of the seed's
+        # one folder partition; never the root or data/ levels
         assert srv.nlst_count <= 2
 
-        missing = (
-            spark.read.format("ftp_manifest")
-            .option("kind", "ftp").option("host", host)
-            .option("port", str(port))
-            .option("username", "alice").option("password", "secret")
-            .option("timeout", "10")
-            .option("folder", "")
-            .option("path_pattern", r"^no/such/prefix/.*")
-            .load()
-        )
+        missing = list_tree(spark, spec, "", path_pattern=r"^no/such/prefix/.*")
         assert missing.count() == 0
 
 
