@@ -1,17 +1,26 @@
 """Action sinks — the reference's act phase (SURVEY.md §2A S6-S11,
-D1-D3) as ``foreachPartition`` sinks over a destination-projected
-manifest (columns ``path`` and, where applicable, ``dest_path``), and
-:func:`fetch`, the ingest's read of matched files' bytes.
+D1-D3) over a destination-projected manifest (columns ``path`` and,
+where applicable, ``dest_path``), and :func:`fetch`, the ingest's read
+of matched files' bytes.
 
 Execution model: each call acts over at most ``spec.max_connections``
-partitions (FTP servers throttle sessions). A driver-held manifest
-(``list_tree``'s ``LocalRelation``) is collected without a job and
-sliced with ``sc.parallelize``, so the call runs one Spark job; a
-DataSource manifest is repartitioned instead. Each non-empty partition
-opens ONE client (connector.ClientSpec.connect) and streams its rows;
-bytes flow executor<->server and never touch the driver. The sinks and
-the fetch share that placement (``_placed``) and that per-partition
-client (``_per_client``).
+parts (FTP servers throttle sessions), and each part opens ONE client
+(connector.ClientSpec.connect) and streams its rows. Two regimes, decided
+by ``manifest.driver_rows`` (whether the optimized plan is a
+``LocalRelation``), with no option:
+
+- a driver-held manifest (``list_tree`` below ``DRIVER_ROWS_THRESHOLD``)
+  is collected without a job, cut into ``connector.chunks`` and acted on
+  by driver threads (``connector.on_driver_threads``, the helper
+  ``list_tree`` expands its levels with): the call runs no Spark job,
+  and bytes flow between the server and the CLI's host;
+- a DataSource manifest is repartitioned and acted on by executors, one
+  client per non-empty partition (``_per_client``); the call runs one
+  job, no shuffle, and bytes flow executor<->server.
+
+Every sink body yields one status per row (``ok``, ``failed`` or
+``skipped``); :func:`_run_sink` counts them in both regimes. ``fetch``
+always runs on executors, so file bytes never pass through the driver.
 
 Reference error-semantic asymmetries preserved (behavioral parity):
 - download skips failed rows and keeps going, removing the partial
@@ -28,40 +37,51 @@ Reference error-semantic asymmetries preserved (behavioral parity):
   (S8 upload_file.py:159-171 remote, S11 download_file.py:242-245
   local true mkdir -p); the remote sinks call ``client.makedirs`` for
   every row, and the client's per-session memo keeps that to one
-  mkdir -p per folder per partition.
+  mkdir -p per folder per part.
 """
 
 from __future__ import annotations
 
+import gzip
 import io
 import itertools
 import os
 import sys
+import uuid
+from collections import Counter
 
 from pyspark import RDD
 from pyspark.sql import DataFrame
 
 from ..errors import InvalidFilePath, MoveError, UploadError, typed_from_message
-from ..sources.connector import ClientSpec, parent
+from ..sources.connector import ClientSpec, chunks, on_driver_threads, parent
 from .manifest import driver_rows
 
 
-def _progress(action: str, n_ok: int, n_other: int = 0, other: str = "") -> None:
-    """D4 progress logging (the reference prints per-file lines,
-    download_file.py:197,268,276; here one line per partition so logs
-    stay bounded at scale)."""
-    extra = f", {n_other} {other}" if other else ""
-    print(f"[{action}] partition done: {n_ok} ok{extra}", file=sys.stderr)
+def _reported(action: str, body):
+    """``body`` that also writes one progress line per part when its rows
+    are done (D4: the reference prints per-file lines,
+    download_file.py:197,268,276; one line per part keeps logs bounded).
+    Parts run concurrently, so the line is written in one call."""
+
+    def run(client, rows):
+        n = Counter(ok=0)
+        for status in body(client, rows):
+            n[status] += 1
+            yield status
+        done = ", ".join(f"{count} {status}" for status, count in n.items())
+        sys.stderr.write(f"[{action}] partition done: {done}\n")
+
+    return run
 
 
-def _placed(df: DataFrame, spec: ClientSpec) -> RDD:
+def _placed(df: DataFrame, spec: ClientSpec, held: list | None) -> RDD:
     """The rows of ``df`` in at most ``spec.max_connections`` partitions:
     more would exceed the server's session budget, fewer would leave
-    allowed sessions idle. Two regimes (``manifest.driver_rows`` decides):
+    allowed sessions idle. ``held`` is ``manifest.driver_rows(df)``:
 
-    - driver-held rows (the optimized plan is a ``LocalRelation``) are
-      collected with no job and shipped with ``sc.parallelize`` into
-      ``min(rows, max_connections)`` slices: one job, no shuffle;
+    - driver-held rows are shipped with ``sc.parallelize`` into
+      ``min(rows, max_connections)`` slices: no shuffle;
     - otherwise (a DataSource manifest) the frame is repartitioned to
       exactly ``max_connections`` (AQE would coalesce a small numbered
       manifest to one partition). Asking for the current partition
@@ -69,7 +89,6 @@ def _placed(df: DataFrame, spec: ClientSpec) -> RDD:
       count and again for the sink; the unconditional round-robin costs
       one shuffle of the (path, dest) rows instead."""
     conns = max(1, spec.max_connections)
-    held = driver_rows(df)
     if held is None:
         return df.repartition(conns).rdd
     sc = df.sparkSession.sparkContext
@@ -79,7 +98,7 @@ def _placed(df: DataFrame, spec: ClientSpec) -> RDD:
 def _per_client(spec: ClientSpec, body):
     """``body(client, rows)`` as a partition function that opens its
     client on the partition's first row, so an empty partition opens no
-    session, and yields whatever ``body`` yields (a sink's returns None)."""
+    session, and yields whatever ``body`` yields."""
 
     def run(rows):
         rows = iter(rows)
@@ -88,25 +107,33 @@ def _per_client(spec: ClientSpec, body):
             return
         client = spec.connect()
         try:
-            yield from body(client, itertools.chain([first], rows)) or ()
+            yield from body(client, itertools.chain([first], rows))
         finally:
             client.close()
 
     return run
 
 
-def _run_sink(df: DataFrame, spec: ClientSpec, body) -> None:
-    """Run ``body(client, rows)`` once per non-empty partition of
-    :func:`_placed` ``df``; bytes flow executor<->server, never through
-    the driver.
+def _run_sink(df: DataFrame, spec: ClientSpec, action: str, body) -> Counter:
+    """Run ``body(client, rows)`` over the rows of ``df``, one client per
+    part, and count the statuses it yields.
 
-    Executor exceptions surface as Py4J strings; they are mapped back
-    to the typed error (and its exit code) at this driver boundary.
-    That covers IncorrectCredentials too: spec.connect() runs INSIDE
+    Driver-held rows run on driver threads (no Spark job); the first
+    error in any chunk stops the others before their next row and is
+    raised as it was raised. Otherwise the rows run on executors in one
+    ``countByValue`` job; executor exceptions surface as Py4J strings
+    and are mapped back to the typed error (and its exit code) here.
+    That covers IncorrectCredentials too: spec.connect() runs inside
     partitions, so a bad login fails executor-side and must still
     exit 3."""
+    body = _reported(action, body)
+    held = driver_rows(df)
+    if held is not None:
+        parts = on_driver_threads(spec, chunks(held, spec.max_connections), body)
+        return Counter(itertools.chain.from_iterable(parts))
     try:
-        _placed(df, spec).foreachPartition(_per_client(spec, body))
+        placed = _placed(df, spec, None)
+        return Counter(placed.mapPartitions(_per_client(spec, body)).countByValue())
     except Exception as err:
         typed = typed_from_message(err)
         if typed is not None:
@@ -119,121 +146,106 @@ def fetch(files: DataFrame, spec: ClientSpec) -> DataFrame:
     ingest's one route for file bytes into Spark. Only the given paths
     are RETRed, placed exactly as the sinks place their rows
     (:func:`_placed`, one session per non-empty partition); the bytes
-    stay executor-side. Lazy: the RETRs run with the job that reads the
-    frame."""
+    stay executor-side. A payload that starts with the gzip magic bytes
+    1f 8b is gunzipped right after its RETR — magic bytes, not the
+    extension, so a server-side rename cannot hide it, and plain and .gz
+    files mix in one call. Lazy: the RETRs run with the job that reads
+    the frame."""
 
     def body(client, rows):
         for row in rows:
             buf = io.BytesIO()
             client.retrieve(row["path"], buf)
-            yield row["path"], buf.getvalue()
+            data = buf.getvalue()
+            yield row["path"], gzip.decompress(data) if data[:2] == b"\x1f\x8b" else data
 
-    fetched = _placed(files.select("path"), spec).mapPartitions(_per_client(spec, body))
+    paths = files.select("path")
+    fetched = _placed(paths, spec, driver_rows(paths)).mapPartitions(_per_client(spec, body))
     return files.sparkSession.createDataFrame(fetched, "path string, content binary")
 
 
 def download(manifest: DataFrame, spec: ClientSpec, dest_root: str) -> dict:
     """S6+S11+D1: stream each matched remote file to ``dest_root``.
 
-    Per-row skip on failure; partial output is impossible (temp file +
-    atomic rename replaces the reference's delete-on-error). Returns
-    {'ok': n, 'failed': n} from accumulators. Per-ROW failures are
-    skipped inside the sink (D1), but a connect()/login failure aborts
-    the partition and maps back to exit 3."""
-    sc = manifest.sparkSession.sparkContext
-    ok, failed = sc.accumulator(0), sc.accumulator(0)
+    Per-row skip on failure; partial output is impossible: each writer
+    streams into its own temp file beside the destination and renames it
+    into place atomically (replacing the reference's delete-on-error), so
+    rows sharing a destination cannot corrupt one another. Which of them
+    wins is unspecified. Returns {'ok': n, 'failed': n}. Per-ROW failures
+    are skipped inside the sink (D1), but a connect()/login failure
+    aborts the call and maps back to exit 3."""
 
-    def body(client, rows) -> None:
-        n_ok = n_failed = 0
+    def body(client, rows):
         for row in rows:
             dest = os.path.join(dest_root, row["dest_path"])
             os.makedirs(os.path.dirname(dest) or ".", exist_ok=True)
-            tmp = f"{dest}.inprogress"
+            tmp = f"{dest}.{uuid.uuid4().hex}.inprogress"
             try:
-                with open(tmp, "wb") as f:
+                with open(tmp, "xb") as f:
                     client.retrieve(row["path"], f)
                 os.replace(tmp, dest)
-                n_ok += 1
-                ok.add(1)
+                yield "ok"
             except Exception:
                 if os.path.exists(tmp):
                     os.remove(tmp)
-                n_failed += 1
-                failed.add(1)  # D1: skip and continue
-        _progress("download", n_ok, n_failed, "failed")
+                yield "failed"  # D1: skip and continue
 
-    _run_sink(manifest.select("path", "dest_path"), spec, body)
-    return {"ok": ok.value, "failed": failed.value}
+    n = _run_sink(manifest.select("path", "dest_path"), spec, "download", body)
+    return {"ok": n["ok"], "failed": n["failed"]}
 
 
 def upload(manifest: DataFrame, spec: ClientSpec, source_root: str = "") -> dict:
     """S7+S8+D2: stream each local file to its remote dest_path.
 
     Non-file sources are skipped without error; any transfer failure
-    aborts the job (UploadError)."""
-    sc = manifest.sparkSession.sparkContext
-    ok, skipped = sc.accumulator(0), sc.accumulator(0)
+    aborts the call (UploadError)."""
 
-    def body(client, rows) -> None:
-        n_ok = n_skip = 0
+    def body(client, rows):
         for row in rows:
             src = os.path.join(source_root, row["path"]) if source_root else row["path"]
             if not os.path.isfile(src):
-                n_skip += 1
-                skipped.add(1)
+                yield "skipped"
                 continue
             try:
                 client.makedirs(parent(row["dest_path"]))
                 with open(src, "rb") as f:
                     client.store(f, row["dest_path"])
-                n_ok += 1
-                ok.add(1)
             except Exception as e:
                 raise UploadError(f"failed to upload {src}: {e}") from e
-        _progress("upload", n_ok, n_skip, "skipped")
+            yield "ok"
 
-    _run_sink(manifest.select("path", "dest_path"), spec, body)
-    return {"ok": ok.value, "skipped": skipped.value}
+    n = _run_sink(manifest.select("path", "dest_path"), spec, "upload", body)
+    return {"ok": n["ok"], "skipped": n["skipped"]}
 
 
 def move(manifest: DataFrame, spec: ClientSpec) -> dict:
     """S9+S8+D2: server-side rename per row — metadata-only, no data
     plane. First failure aborts with exit-202 semantics (MoveError)."""
-    sc = manifest.sparkSession.sparkContext
-    ok = sc.accumulator(0)
 
-    def body(client, rows) -> None:
-        n_ok = 0
+    def body(client, rows):
         for row in rows:
             try:
                 client.makedirs(parent(row["dest_path"]))
                 client.rename(row["path"], row["dest_path"])
-                n_ok += 1
-                ok.add(1)
             except Exception as e:
                 raise MoveError(f"failed to move {row['path']}: {e}") from e
-        _progress("move", n_ok)
+            yield "ok"
 
-    _run_sink(manifest.select("path", "dest_path"), spec, body)
-    return {"ok": ok.value}
+    n = _run_sink(manifest.select("path", "dest_path"), spec, "move", body)
+    return {"ok": n["ok"]}
 
 
 def delete(manifest: DataFrame, spec: ClientSpec) -> dict:
     """S10: delete each matched remote file; first failure aborts with
     exit-201 semantics (InvalidFilePath)."""
-    sc = manifest.sparkSession.sparkContext
-    ok = sc.accumulator(0)
 
-    def body(client, rows) -> None:
-        n_ok = 0
+    def body(client, rows):
         for row in rows:
             try:
                 client.delete(row["path"])
-                n_ok += 1
-                ok.add(1)
             except Exception as e:
                 raise InvalidFilePath(f"failed to delete {row['path']}: {e}") from e
-        _progress("delete", n_ok)
+            yield "ok"
 
-    _run_sink(manifest.select("path"), spec, body)
-    return {"ok": ok.value}
+    n = _run_sink(manifest.select("path"), spec, "delete", body)
+    return {"ok": n["ok"]}

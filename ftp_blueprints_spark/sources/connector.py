@@ -32,24 +32,28 @@ an empty tree), :func:`check_depth` bounds both walks at
 splits a walk's work over ``max_connections`` clients. They live here,
 not in ``listing.py``, so DataSource workers never import pyarrow.
 
-Scale design: sinks and the ingest fetch call ``spec.connect()`` once
-per non-empty PARTITION (not per row), over at most ``max_connections``
-partitions (``operators.actions._placed``): driver-held rows are sliced
-with ``sc.parallelize`` into ``min(rows, max_connections)`` partitions,
-and a DataSource manifest is repartitioned to exactly
-``max_connections``. A 1000-executor job cannot open more sessions than
-the server allows, and a manifest AQE coalesced to one partition still
-uses every allowed session.
-``list_tree`` (clients on driver threads) and the ``ftp_manifest``
-reader (one client per input partition) cut their work into at most
-``max_connections`` contiguous :func:`chunks`, so every walk is under
-the same bound as the sinks.
+Scale design: every walk, sink and fetch opens one client per PART
+(not per row), over at most ``max_connections`` parts, so a
+1000-executor job cannot open more sessions than the server allows.
+Driver-held work (``list_tree``'s levels, and the sinks over a
+driver-held manifest) is cut into :func:`chunks` and run by
+:func:`on_driver_threads`, one thread and client per chunk, with no
+Spark job. The ``ftp_manifest`` reader (one client per input partition)
+and the executor sinks and fetch (``operators.actions._placed``:
+driver-held rows sliced with ``sc.parallelize``, a DataSource manifest
+repartitioned to exactly ``max_connections``, so a manifest AQE
+coalesced to one partition still uses every allowed session) open
+theirs inside partitions, on the first row, so an empty partition opens
+none.
 """
 
 from __future__ import annotations
 
+import itertools
 import os
 import shutil
+import threading
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from ..errors import BlueprintError, IncorrectCredentials
@@ -316,6 +320,31 @@ def chunks(items: list, k: int) -> list[list]:
     n = len(items)
     k = min(n, max(1, k))
     return [items[i * n // k : (i + 1) * n // k] for i in range(k)]
+
+
+def on_driver_threads(spec: ClientSpec, parts: list[list], body) -> list[list]:
+    """``list(body(client, part))`` for each of ``parts``, each on its own
+    driver thread with its own client (``spec.connect()``), in part order.
+
+    A part that raises stops the other parts before their next item, and
+    the first failed part's error (in part order) is raised: one bad row
+    or login ends the whole run, as a failed Spark job would."""
+    stop = threading.Event()
+
+    def run(part: list) -> list:
+        try:
+            client = spec.connect()
+            try:
+                return list(body(client, itertools.takewhile(lambda _: not stop.is_set(), part)))
+            finally:
+                client.close()
+        except BaseException:
+            stop.set()
+            raise
+
+    with ThreadPoolExecutor(max_workers=max(1, len(parts))) as pool:
+        futures = [pool.submit(run, part) for part in parts]
+        return [f.result() for f in futures]
 
 
 def check_depth(depth: int, folder: str) -> None:

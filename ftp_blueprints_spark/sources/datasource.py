@@ -159,7 +159,7 @@ class ManifestWriter(DataSourceWriter):
     """Write side of ``ftp_manifest``: each task uploads its partition's
     rows (``dest_path`` STRING + ``content`` BINARY) through its own
     connection — the DataFrame-native statement of the upload sink
-    (operators/actions.upload is the imperative foreachPartition twin).
+    (operators/actions.upload is the imperative twin).
 
     Same durability discipline as the download sink: bytes land under a
     temp name and are renamed into place, so a killed task never leaves

@@ -5,14 +5,18 @@ The reference's blueprints move files byte-for-byte; the natural next
 step for an ETL engine is to land them as COLUMNS. Every ``ingest_*``
 function is the same landing step (:func:`_land`) with its own parser:
 
-    list_tree -> filter(~is_dir & rlike) -> fetch -> parse
-        -> parquet (optionally partitionBy) -> count
+    list_tree -> filter(~is_dir & rlike) -> fetch (+ gunzip) -> parse
+        -> parquet (optionally partitionBy), counted by an Observation
 
 Like the reference, ingest filters first and acts on matches only: the
 manifest comes from ``listing.list_tree`` (the CLI's listing, with its
 DataSource hand-off for large trees), Spark's ``rlike`` alone decides
 what matches, and ``actions.fetch`` RETRs the matched files only, in at
-most ``max_connections`` partitions with one FTP session each.
+most ``max_connections`` partitions with one FTP session each,
+gunzipping any payload that starts with the gzip magic bytes. The row
+count is observed on the written frame, so over a driver-held tree a
+call runs one Spark job, the write, and each file's bytes cross from
+Python into the JVM once.
 
 CSV and JSONL share one line step (:func:`_nonempty_lines`: decode ->
 split lines -> posexplode -> drop blank lines) and then parse with
@@ -26,8 +30,8 @@ row number) — the lineage columns a training-data pipeline audits by.
 Header handling is per-file: with ``header=True`` the first non-empty
 line of each CSV is dropped. Its index is computed once per file from
 the file's leading blank lines, BEFORE the explode, so no per-line
-window (and no shuffle) is needed: read -> gunzip -> parse -> parquet
-is one shuffle-free stage per fetch partition.
+window (and no shuffle) is needed: fetch -> parse -> parquet is one
+shuffle-free stage per fetch partition.
 """
 
 from __future__ import annotations
@@ -36,7 +40,7 @@ from collections.abc import Callable
 from functools import partial
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql.types import StructType
 
 from ..operators.actions import fetch
@@ -55,15 +59,18 @@ def _land(
 ) -> int:
     """The one ingest body: every file under ``folder`` whose path
     matches ``pattern`` -> ``parse`` -> a parquet dataset at ``dest``
-    (optionally partitioned, directory-pruned on read-back); returns the
-    row count written."""
+    (optionally partitioned); returns the row count written. The count
+    is an ``Observation`` on the written frame, so the write is the
+    call's only Spark job: nothing is read back."""
     mf = list_tree(spark, spec, folder)
     matched = mf.filter((~F.col("is_dir")) & F.col("path").rlike(pattern))
-    writer = parse(fetch(matched, spec)).write.mode("overwrite")
+    written = Observation()
+    out = parse(fetch(matched, spec)).observe(written, F.count(F.lit(1)).alias("rows"))
+    writer = out.write.mode("overwrite")
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)
     writer.parquet(dest)
-    return spark.read.parquet(dest).count()
+    return written.get["rows"]
 
 
 def _nonempty_lines(files: DataFrame, *carry: str) -> DataFrame:
@@ -133,9 +140,7 @@ def ingest_csv(
 ) -> int:
     """Ingest every CSV under ``folder`` on the remote into a parquet
     dataset at ``dest``; returns the row count written."""
-    def parse(files):
-        return parse_csv_files(with_decompressed(files), schema, header=header, sep=sep)
-
+    parse = partial(parse_csv_files, schema=schema, header=header, sep=sep)
     return _land(spark, spec, folder, pattern, parse, dest, partition_cols)
 
 
@@ -163,9 +168,7 @@ def ingest_jsonl(
 ) -> int:
     """Ingest every JSONL file under ``folder`` into parquet at
     ``dest``; returns the row count written."""
-    def parse(files):
-        return parse_jsonl_files(with_decompressed(files), schema)
-
+    parse = partial(parse_jsonl_files, schema=schema)
     return _land(spark, spec, folder, pattern, parse, dest, partition_cols)
 
 
@@ -250,27 +253,3 @@ def ingest_orc(
     parse = partial(parse_orc_files, schema=schema)
     return _land(spark, spec, folder, pattern, parse, dest, partition_cols)
 
-
-def with_decompressed(files: DataFrame) -> DataFrame:
-    """Transparently gunzip compressed payloads: any ``content`` whose
-    magic bytes are 1f 8b is decompressed executor-side in one
-    Arrow-batched mapInPandas pass (no Catalyst gunzip expression
-    exists); other payloads pass through untouched, so mixed trees of
-    plain and .gz files ingest in one job. Magic-byte detection, not
-    extension matching — server-side renames can't break it."""
-
-    def gen(batches):
-        import gzip
-
-        for pdf in batches:
-            out = pdf.copy()
-            out["content"] = [
-                gzip.decompress(bytes(c))
-                if c is not None and bytes(c[:2]) == b"\x1f\x8b"
-                else c
-                for c in out["content"]
-            ]
-            yield out
-
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in files.schema)
-    return files.mapInPandas(gen, schema)

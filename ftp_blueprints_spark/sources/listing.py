@@ -17,7 +17,9 @@ Spark job runs — listing is pure FTP round trips.
 The per-folder step (one ``listdir`` -> manifest rows, the F4 all-dots
 rule), the seed probe and the depth bound are shared with the
 ``ftp_manifest`` DataSource and live in ``connector.py``
-(``child_rows``, ``seed_rows``, ``check_depth``/``MAX_DEPTH``); this
+(``child_rows``, ``seed_rows``, ``check_depth``/``MAX_DEPTH``), as does
+the chunk runner the levels share with the driver-held sinks
+(``on_driver_threads``); this
 module owns the BFS, the regex-prefix pruning (:func:`pattern_prefix`,
 :func:`seed_for`) and the manifest's Spark form.
 
@@ -40,14 +42,13 @@ column when only metadata is selected.
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
-
 import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions import paths as P
-from .connector import MANIFEST_SCHEMA, ClientSpec, check_depth, child_rows, chunks, seed_rows
+from .connector import (MANIFEST_SCHEMA, ClientSpec, check_depth, child_rows, chunks,
+                        on_driver_threads, seed_rows)
 from .datasource import read_manifest
 
 _ARROW_SCHEMA = pa.schema(
@@ -222,26 +223,20 @@ def list_tree(
         return _manifest(spark, [])
     all_rows = seed_rows(spec, root, seed, skip_dot_dirs)
     frontier = [path for path, _, _, is_dir, _ in all_rows if is_dir]
-    max_conns = max(1, spec.max_connections)
 
-    def list_chunk(folders: list[str]) -> list[tuple]:
-        client = spec.connect()
-        try:
-            return [r for f in folders for r in child_rows(client, f, skip_dot_dirs)]
-        finally:
-            client.close()
+    def list_chunk(client, folders):
+        return (r for f in folders for r in child_rows(client, f, skip_dot_dirs))
 
-    with ThreadPoolExecutor(max_workers=max_conns) as pool:
-        depth = 1
-        while frontier:
-            if len(all_rows) > DRIVER_ROWS_THRESHOLD:
-                return read_manifest(spark, spec, seed, skip_dot_dirs)
-            check_depth(depth, frontier[0])
-            parts = chunks(frontier, max_conns)
-            level = [r for rows in pool.map(list_chunk, parts) for r in rows]
-            all_rows += level
-            frontier = [path for path, _, _, is_dir, _ in level if is_dir]
-            depth += 1
+    depth = 1
+    while frontier:
+        if len(all_rows) > DRIVER_ROWS_THRESHOLD:
+            return read_manifest(spark, spec, seed, skip_dot_dirs)
+        check_depth(depth, frontier[0])
+        parts = chunks(frontier, spec.max_connections)
+        level = [r for rows in on_driver_threads(spec, parts, list_chunk) for r in rows]
+        all_rows += level
+        frontier = [path for path, _, _, is_dir, _ in level if is_dir]
+        depth += 1
     return _manifest(spark, all_rows)
 
 

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 import pytest
 
 from ftp_blueprints_spark.errors import (
@@ -374,10 +375,10 @@ def _cli(name: str, root, *argv: str) -> int:
                  "--source-file-name-match-type", "regex_match", *argv])
 
 
-def test_blueprint_call_runs_one_spark_job(spark, spark_jobs, tree, tmp_path):
+def test_blueprint_call_runs_no_spark_job(spark, spark_jobs, tree, tmp_path):
     """A driver-held manifest is guarded, numbered and projected with no
-    Spark job; the sink is the call's only job (sc.parallelize, no
-    shuffle)."""
+    Spark job, and the sink acts on it from driver threads: the whole
+    call runs no job."""
     calls = [
         ("download", "--source-folder-name", "reports", "--source-file-name", "[.]csv$",
          "--destination-file-name", "all.csv", "--destination-root", str(tmp_path / "out")),
@@ -388,9 +389,96 @@ def test_blueprint_call_runs_one_spark_job(spark, spark_jobs, tree, tmp_path):
     for name, *argv in calls:
         with spark_jobs() as ids:
             assert _cli(name, tree, *argv) == 0
-        assert len(ids) == 1, (name, ids)
+        assert ids == [], (name, ids)
     assert sorted(os.listdir(tmp_path / "out")) == ["all_1.csv", "all_2.csv", "all_3.csv"]
     assert os.listdir(tree / "archive") == []
+
+
+def test_sink_progress_lines_are_whole(spark, tmp_path, monkeypatch):
+    """Eight driver threads (more than the host's cores) finish their
+    last row together (a barrier in the transfer) and report at once to
+    a stream that blocks in every write, as a slow terminal or pipe
+    does, under a short switch interval: every stderr line is one whole
+    progress line, one per part, and the parts' counts add up."""
+    import io
+    import re
+    import sys
+    import threading
+    import time
+
+    class SlowStream(io.StringIO):
+        def write(self, s):
+            time.sleep(0.001)  # other threads run while a write blocks
+            return super().write(s)
+
+    (tmp_path / "srv").mkdir()
+    for i in range(16):
+        (tmp_path / "srv" / f"f{i:02}.csv").write_bytes(b"x")
+    spec = ClientSpec(kind="local", root=str(tmp_path / "srv"), max_connections=8)
+    matched = with_destination(match_files(list_tree(spark, spec, ""), pattern="[.]csv$"), "")
+    together = threading.Barrier(8, timeout=10)
+    real = LocalFSClient.retrieve
+
+    def retrieve(self, path, fileobj):
+        real(self, path, fileobj)
+        together.wait()
+
+    monkeypatch.setattr(LocalFSClient, "retrieve", retrieve)
+    monkeypatch.setattr(sys, "stderr", SlowStream())
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        stats = actions.download(matched, spec, str(tmp_path / "out"))
+    finally:
+        sys.setswitchinterval(interval)
+    assert stats == {"ok": 16, "failed": 0}
+    lines = sys.stderr.getvalue().splitlines()
+    assert len(lines) == 8, lines
+    done = [re.fullmatch(r"\[download\] partition done: (\d+) ok", line) for line in lines]
+    assert all(done), lines
+    assert sum(int(m.group(1)) for m in done) == 16
+
+
+def test_driver_sink_error_stops_other_chunks(spark, tree, monkeypatch):
+    """Driver-thread sink: the first typed error in one chunk stops the
+    other chunk before its next row, and is raised with its exit code.
+    Chunk 1 is [jan, feb]; chunk 2 is [summary, top]. Jan is gone, and
+    its delete fails once chunk 2 is inside its first delete, which
+    finishes after the stop flag is set; chunk 2 must not go on to
+    top.csv."""
+    import threading
+    import types
+
+    from ftp_blueprints_spark.sources import connector
+
+    started, stops = threading.Event(), []
+
+    def event():
+        stops.append(threading.Event())
+        return stops[-1]
+
+    monkeypatch.setattr(connector, "threading", types.SimpleNamespace(Event=event))
+    real = LocalFSClient.delete
+
+    def delete(self, path):
+        if path == "reports/2024/jan.csv":
+            assert started.wait(10)
+        if path == "reports/summary.csv":
+            started.set()
+            assert stops[0].wait(10)  # chunk 1's error has stopped the run
+        real(self, path)
+
+    monkeypatch.setattr(LocalFSClient, "delete", delete)
+    spec = ClientSpec(kind="local", root=str(tree), max_connections=2)
+    paths = ["reports/2024/jan.csv", "reports/2024/feb.csv", "reports/summary.csv", "top.csv"]
+    manifest = spark.createDataFrame(pa.table({"path": paths}))  # a LocalRelation
+    os.remove(tree / "reports/2024/jan.csv")
+    with pytest.raises(InvalidFilePath) as ei:
+        actions.delete(manifest, spec)
+    assert ei.value.exit_code == 201
+    assert (tree / "reports/2024/feb.csv").exists()
+    assert not (tree / "reports/summary.csv").exists()
+    assert (tree / "top.csv").exists()
 
 
 def _destinations(spark, root) -> list[tuple]:

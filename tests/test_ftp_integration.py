@@ -8,6 +8,7 @@ production FTP server would exercise, minus the network.
 
 from __future__ import annotations
 
+import dataclasses
 import io
 import os
 
@@ -322,28 +323,35 @@ def test_cli_upload_into_new_folder_one_session(spark, tmp_path):
 
 def test_sink_uses_every_allowed_session(spark, ftp_root, tmp_path):
     """A 1-partition manifest (what AQE leaves of a small numbered one)
-    is spread over max_connections sessions; an empty partition opens
-    no session, so a 1-row manifest still opens exactly one."""
-    import dataclasses
+    is spread over max_connections sessions; an empty part opens no
+    session, so a 1-row manifest still opens exactly one. The same
+    counts hold on executors and, for a driver-held manifest, on driver
+    threads."""
+    import pyarrow as pa
+
+    from ftp_blueprints_spark.operators.manifest import driver_rows
+
+    def manifest(rows, held):
+        if held:  # an Arrow table plans a LocalRelation
+            return spark.createDataFrame(pa.table(dict(zip(["path", "dest_path"], zip(*rows)))))
+        return spark.createDataFrame(rows, "path string, dest_path string").coalesce(1)
 
     rows = [("data/a.csv", "a.csv"), ("data/b.csv", "b.csv"),
             ("data/sub/c.txt", "c.txt")]
-    srv = FtpStubServer(ftp_root, USERS)
-    with srv as (host, port):
-        spec = dataclasses.replace(spec_for(host, port), max_connections=2)
-        three = spark.createDataFrame(rows, "path string, dest_path string")
-        assert actions.download(three.coalesce(1), spec, str(tmp_path / "n3")) == {
-            "ok": 3, "failed": 0,
-        }
-        assert srv.sessions == 2
-        one = spark.createDataFrame(rows[:1], "path string, dest_path string")
-        assert actions.download(one.coalesce(1), spec, str(tmp_path / "n1")) == {
-            "ok": 1, "failed": 0,
-        }
-        assert srv.sessions == 3
-    assert sorted(p.name for p in (tmp_path / "n3").iterdir()) == [
-        "a.csv", "b.csv", "c.txt",
-    ]
+    for held in (False, True):
+        out = tmp_path / str(held)
+        srv = FtpStubServer(ftp_root, USERS)
+        with srv as (host, port):
+            spec = dataclasses.replace(spec_for(host, port), max_connections=2)
+            three = manifest(rows, held)
+            assert (driver_rows(three) is not None) == held
+            assert actions.download(three, spec, str(out / "n3")) == {"ok": 3, "failed": 0}
+            assert srv.sessions == 2, held
+            assert actions.download(manifest(rows[:1], held), spec, str(out / "n1")) == {
+                "ok": 1, "failed": 0,
+            }
+            assert srv.sessions == 3, held
+        assert sorted(p.name for p in (out / "n3").iterdir()) == ["a.csv", "b.csv", "c.txt"]
 
 
 def test_manifest_read_uses_at_most_max_connections_sessions(spark, tmp_path):
@@ -581,6 +589,33 @@ def test_cli_download_over_ftp(spark, ftp_root, tmp_path):
         ) == 200
 
 
+def test_cli_colliding_keep_name_downloads_all_succeed(spark, tmp_path, capsys):
+    """Matches sharing one basename, downloaded keeping names over two
+    concurrent sessions, all write the same destination: each writer has
+    its own temp file, so none fails, no temp file is left and the
+    destination is one whole source (which one is unspecified)."""
+    from ftp_blueprints_spark.cli.blueprints import download_main
+
+    sources = set()
+    for i in range(8):
+        (tmp_path / "srv" / f"d{i}").mkdir(parents=True)
+        data = bytes([i]) * (64 << 10)
+        (tmp_path / "srv" / f"d{i}" / "same.csv").write_bytes(data)
+        sources.add(data)
+    dest = tmp_path / "out"
+    with FtpStubServer(str(tmp_path / "srv"), USERS) as (host, port):
+        rc = download_main([
+            "--kind", "ftp", "--host", host, "--port", str(port),
+            "--username", "alice", "--password", "secret", "--timeout", "10",
+            "--max-connections", "2", "--source-file-name", r"^same\.csv$",
+            "--source-file-name-match-type", "regex_match", "--destination-root", str(dest),
+        ])
+    assert rc == 0
+    assert "downloaded 8 file(s), 0 failed" in capsys.readouterr().out
+    assert os.listdir(dest) == ["same.csv"]
+    assert (dest / "same.csv").read_bytes() in sources
+
+
 def test_cli_upload_over_ftp_lists_local_tree(spark, tmp_path):
     """Regression: upload must ENUMERATE the local source tree and act
     against the remote server (the reference globs the local
@@ -610,9 +645,10 @@ def test_cli_upload_over_ftp_lists_local_tree(spark, tmp_path):
 
 def test_cli_bad_credentials_exit3_from_executor(spark, ftp_root):
     """Regression: a bad login must map to the reference's exit code 3
-    — not an unhandled traceback / exit 1. The listing logs in on a
-    driver thread, so IncorrectCredentials surfaces directly; sink
-    logins fail inside executor tasks and are mapped back from Py4J."""
+    — not an unhandled traceback / exit 1. A download lists the remote
+    tree first, on driver threads, so the login fails there and
+    IncorrectCredentials surfaces directly; sink logins are covered by
+    ``test_sink_bad_credentials_exit3_in_both_regimes``."""
     from ftp_blueprints_spark.cli.blueprints import download_main
 
     with FtpStubServer(ftp_root, USERS) as (host, port):
@@ -624,6 +660,42 @@ def test_cli_bad_credentials_exit3_from_executor(spark, ftp_root):
             "--source-file-name-match-type", "regex_match",
         ])
     assert rc == 3
+
+
+@pytest.mark.parametrize("threshold", [None, 0], ids=["driver", "executors"])
+def test_sink_bad_credentials_exit3_in_both_regimes(spark, tmp_path, monkeypatch, threshold):
+    """An upload lists the local tree and logs in to the server only in
+    its sink. On driver threads the login raises IncorrectCredentials
+    directly; on executors (``DRIVER_ROWS_THRESHOLD`` 0 makes the local
+    listing a DataSource read) it crosses Py4J as a string, and
+    ``_run_sink`` must map it back. Both exit 3."""
+    from ftp_blueprints_spark.cli.blueprints import upload_main
+    from ftp_blueprints_spark.operators.manifest import driver_rows, match_files, with_destination
+    from ftp_blueprints_spark.sources import listing
+
+    if threshold is not None:
+        monkeypatch.setattr(listing, "DRIVER_ROWS_THRESHOLD", threshold)
+    local = tmp_path / "local"
+    (local / "out" / "sub").mkdir(parents=True)  # a subfolder: the walk checks the threshold
+    (local / "out" / "sub" / "a.csv").write_text("a")
+    srv = tmp_path / "srv"
+    srv.mkdir()
+    mf = list_tree(spark, ClientSpec(kind="local", root=str(local)), "out")
+    manifest = with_destination(match_files(mf, pattern=r"\.csv$"), "in")
+    assert (driver_rows(manifest) is None) == (threshold == 0)
+    with FtpStubServer(str(srv), USERS) as (host, port):
+        bad = dataclasses.replace(spec_for(host, port), password="WRONG")
+        with pytest.raises(IncorrectCredentials) as ei:
+            actions.upload(manifest, bad, source_root=str(local))
+        assert ei.value.exit_code == 3
+        rc = upload_main([
+            "--kind", "ftp", "--host", host, "--port", str(port),
+            "--username", "alice", "--password", "WRONG", "--timeout", "10",
+            "--root", str(local), "--source-folder-name", "out",
+            "--source-file-name", r"\.csv$", "--source-file-name-match-type", "regex_match",
+        ])
+    assert rc == 3
+    assert list(srv.iterdir()) == []
 
 
 def test_csv_header_drop_survives_leading_blank_line(spark):
@@ -761,6 +833,56 @@ def test_ingest_gzipped_csv_over_ftp(spark, tmp_path):
     assert n == 3
     names = {r["name"] for r in spark.read.parquet(dest).collect()}
     assert names == {"ant", "bee", "cat"}
+
+
+def test_ingest_gzipped_jsonl_over_ftp(spark, tmp_path):
+    """The fetch gunzips by magic bytes for every text format: a gzipped
+    and a plain JSONL file ingest together, with their lineage."""
+    import gzip
+
+    from ftp_blueprints_spark.sources.ingest import ingest_jsonl
+
+    root = tmp_path / "srv"
+    (root / "in").mkdir(parents=True)
+    (root / "in" / "plain.jsonl").write_text('{"id": 1, "text": "ant"}\n')
+    (root / "in" / "zipped.jsonl.gz").write_bytes(
+        gzip.compress(b'{"id": 2, "text": "bee"}\n\n{"id": 3, "text": "cat"}\n')
+    )
+    dest = str(tmp_path / "gz_jl.parquet")
+    with FtpStubServer(str(root), USERS) as (host, port):
+        n = ingest_jsonl(
+            spark, spec_for(host, port), "in",
+            schema="id int, text string", dest=dest, pattern=r".*\.jsonl(\.gz)?$",
+        )
+    assert n == 3
+    got = {(r["src_path"], r["line_no"], r["id"], r["text"])
+           for r in spark.read.parquet(dest).collect()}
+    assert got == {
+        ("in/plain.jsonl", 1, 1, "ant"),
+        ("in/zipped.jsonl.gz", 1, 2, "bee"),
+        ("in/zipped.jsonl.gz", 3, 3, "cat"),
+    }
+
+
+@pytest.mark.parametrize("partition_cols", [None, ["grp"]], ids=["flat", "partitioned"])
+def test_ingest_csv_runs_one_spark_job(spark, spark_jobs, tmp_path, partition_cols):
+    """Over a driver-held tree, an ingest call is its parquet write and
+    nothing else: the row count comes from an observation on the written
+    frame, not from reading the output back."""
+    from ftp_blueprints_spark.sources.ingest import ingest_csv
+
+    root = tmp_path / "srv"
+    (root / "in").mkdir(parents=True)
+    (root / "in" / "a.csv").write_text("id,grp\n1,x\n2,y\n")
+    (root / "in" / "b.csv").write_text("id,grp\n3,x\n")
+    dest = str(tmp_path / "one_job.parquet")
+    with FtpStubServer(str(root), USERS) as (host, port):
+        with spark_jobs() as ids:
+            n = ingest_csv(spark, spec_for(host, port), "in", schema="id int, grp string",
+                           dest=dest, partition_cols=partition_cols)
+    assert n == 3
+    assert len(ids) == 1, ids
+    assert sorted(r["id"] for r in spark.read.parquet(dest).collect()) == [1, 2, 3]
 
 
 def test_ingest_orc_over_ftp(spark, tmp_path):
