@@ -16,6 +16,8 @@ identical contract.
 
 from __future__ import annotations
 
+import contextlib
+
 EXIT_CODE_INCORRECT_CREDENTIALS = 3
 EXIT_CODE_NO_MATCHES_FOUND = 200
 EXIT_CODE_INVALID_FILE_PATH = 201
@@ -91,6 +93,7 @@ def typed_from_message(err: Exception) -> BlueprintError | None:
         InvalidFilePath,
         MoveError,
         UploadError,
+        BlueprintError,  # last: a subclass's name wins
     )
     msg = str(err)
     for cls in classes:
@@ -108,3 +111,17 @@ def typed_from_message(err: Exception) -> BlueprintError | None:
         ):
             return cls("")  # colon-less rendering: no message to recover
     return None
+
+
+@contextlib.contextmanager
+def typed_errors():
+    """Raise an error of the enclosed block as its typed error when it is
+    an executor-surfaced one (:func:`typed_from_message`); any other
+    error propagates as raised."""
+    try:
+        yield
+    except Exception as err:
+        typed = typed_from_message(err)
+        if typed is None:
+            raise
+        raise typed from err

@@ -14,9 +14,10 @@ by ``manifest.driver_rows`` (whether the optimized plan is a
   by driver threads (``connector.on_driver_threads``, the helper
   ``list_tree`` expands its levels with): the call runs no Spark job,
   and bytes flow between the server and the CLI's host;
-- a DataSource manifest is repartitioned and acted on by executors, one
-  client per non-empty partition (``_per_client``); the call runs one
-  job, no shuffle, and bytes flow executor<->server.
+- an executor-walked manifest (``list_tree`` past the threshold) is
+  repartitioned and acted on by executors, one client per non-empty
+  partition (``connector.per_client``); the call runs one job, and
+  bytes flow executor<->server.
 
 Every sink body yields one status per row (``ok``, ``failed`` or
 ``skipped``); :func:`_run_sink` counts them in both regimes. ``fetch``
@@ -53,8 +54,8 @@ from collections import Counter
 from pyspark import RDD
 from pyspark.sql import DataFrame
 
-from ..errors import InvalidFilePath, MoveError, UploadError, typed_from_message
-from ..sources.connector import ClientSpec, chunks, on_driver_threads, parent
+from ..errors import InvalidFilePath, MoveError, UploadError, typed_errors
+from ..sources.connector import ClientSpec, chunks, on_driver_threads, parent, per_client
 from .manifest import driver_rows
 
 
@@ -82,7 +83,7 @@ def _placed(df: DataFrame, spec: ClientSpec, held: list | None) -> RDD:
 
     - driver-held rows are shipped with ``sc.parallelize`` into
       ``min(rows, max_connections)`` slices: no shuffle;
-    - otherwise (a DataSource manifest) the frame is repartitioned to
+    - otherwise (an executor-walked manifest) the frame is repartitioned to
       exactly ``max_connections`` (AQE would coalesce a small numbered
       manifest to one partition). Asking for the current partition
       count first would run the upstream plan's AQE stages once for the
@@ -93,25 +94,6 @@ def _placed(df: DataFrame, spec: ClientSpec, held: list | None) -> RDD:
         return df.repartition(conns).rdd
     sc = df.sparkSession.sparkContext
     return sc.parallelize(held, max(1, min(len(held), conns)))
-
-
-def _per_client(spec: ClientSpec, body):
-    """``body(client, rows)`` as a partition function that opens its
-    client on the partition's first row, so an empty partition opens no
-    session, and yields whatever ``body`` yields."""
-
-    def run(rows):
-        rows = iter(rows)
-        first = next(rows, None)
-        if first is None:
-            return
-        client = spec.connect()
-        try:
-            yield from body(client, itertools.chain([first], rows))
-        finally:
-            client.close()
-
-    return run
 
 
 def _run_sink(df: DataFrame, spec: ClientSpec, action: str, body) -> Counter:
@@ -131,26 +113,21 @@ def _run_sink(df: DataFrame, spec: ClientSpec, action: str, body) -> Counter:
     if held is not None:
         parts = on_driver_threads(spec, chunks(held, spec.max_connections), body)
         return Counter(itertools.chain.from_iterable(parts))
-    try:
+    with typed_errors():
         placed = _placed(df, spec, None)
-        return Counter(placed.mapPartitions(_per_client(spec, body)).countByValue())
-    except Exception as err:
-        typed = typed_from_message(err)
-        if typed is not None:
-            raise typed from err
-        raise
+        return Counter(placed.mapPartitions(per_client(spec, body)).countByValue())
 
 
 def fetch(files: DataFrame, spec: ClientSpec) -> DataFrame:
     """``(path STRING, content BINARY)`` for each row of ``files``: the
     ingest's one route for file bytes into Spark. Only the given paths
     are RETRed, placed exactly as the sinks place their rows
-    (:func:`_placed`, one session per non-empty partition); the bytes
-    stay executor-side. A payload that starts with the gzip magic bytes
-    1f 8b is gunzipped right after its RETR — magic bytes, not the
-    extension, so a server-side rename cannot hide it, and plain and .gz
-    files mix in one call. Lazy: the RETRs run with the job that reads
-    the frame."""
+    (:func:`_placed`, one session per non-empty partition through
+    ``connector.per_client``); the bytes stay executor-side. A payload
+    that starts with the gzip magic bytes 1f 8b is gunzipped right after
+    its RETR — magic bytes, not the extension, so a server-side rename
+    cannot hide it, and plain and .gz files mix in one call. Lazy: the
+    RETRs run with the job that reads the frame."""
 
     def body(client, rows):
         for row in rows:
@@ -160,7 +137,7 @@ def fetch(files: DataFrame, spec: ClientSpec) -> DataFrame:
             yield row["path"], gzip.decompress(data) if data[:2] == b"\x1f\x8b" else data
 
     paths = files.select("path")
-    fetched = _placed(paths, spec, driver_rows(paths)).mapPartitions(_per_client(spec, body))
+    fetched = _placed(paths, spec, driver_rows(paths)).mapPartitions(per_client(spec, body))
     return files.sparkSession.createDataFrame(fetched, "path string, content binary")
 
 

@@ -115,9 +115,10 @@ def driver_rows(df: DataFrame) -> list | None:
     over it folded in by the optimizer. ``collect`` then runs no Spark
     job. ``DataFrame.isLocal()`` is not the test: it reads the analyzed
     plan, so it turns False as soon as ``match_files`` filters the
-    manifest. A DataSource manifest (past ``DRIVER_ROWS_THRESHOLD``)
-    returns None and keeps the distributed path, so the regime follows
-    the plan, not a row count."""
+    manifest. An executor-walked manifest (past
+    ``DRIVER_ROWS_THRESHOLD``, a checkpointed snapshot) returns None and
+    keeps the distributed path, so the regime follows the plan, not a
+    row count."""
     plan = df._jdf.queryExecution().optimizedPlan()
     if plan.getClass().getSimpleName() != "LocalRelation":
         return None
@@ -242,8 +243,8 @@ def with_destination(
 
 def require_matches(matches: DataFrame) -> DataFrame:
     """F7 guard: raise NoMatchesFound (exit 200) when nothing matched.
-    ``isEmpty`` runs no job on driver-held matches and one on a
-    DataSource manifest."""
+    ``isEmpty`` runs no job on driver-held matches and one on an
+    executor-walked manifest."""
     if matches.isEmpty():
         raise NoMatchesFound("no files matched the provided pattern")
     return matches

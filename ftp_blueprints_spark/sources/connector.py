@@ -22,15 +22,17 @@ therefore talks to remote trees through a small picklable interface:
   passive; delete_file.py:89-104 sets timeout=3600 + passive;
   upload/move set neither).
 
-Shared tree-walk steps (used by ``listing.list_tree``'s driver BFS and
-by the ``ftp_manifest`` DataSource's executor DFS alike):
+Shared tree-walk steps (used by ``listing.list_tree``'s driver BFS, by
+the executor walk it hands its unlisted frontier to past
+``listing.DRIVER_ROWS_THRESHOLD``, and by the ``ftp_manifest`` reader):
 :func:`parent` is the one folder-of-path rule, :func:`child_rows` turns
 one ``listdir`` into manifest rows (name split + the all-dots F4 rule),
 :func:`seed_rows` lists a walk's seed folder (a missing *pruned* seed is
-an empty tree), :func:`check_depth` bounds both walks at
+an empty tree), :func:`walk` is the one depth-first walk of the trees
+under a list of folders, :func:`check_depth` bounds every walk at
 ``MAX_DEPTH`` folder levels, and :func:`chunks` is the one rule that
 splits a walk's work over ``max_connections`` clients. They live here,
-not in ``listing.py``, so DataSource workers never import pyarrow.
+not in ``listing.py``, so Python workers never import pyarrow.
 
 Scale design: every walk, sink and fetch opens one client per PART
 (not per row), over at most ``max_connections`` parts, so a
@@ -38,13 +40,14 @@ Scale design: every walk, sink and fetch opens one client per PART
 Driver-held work (``list_tree``'s levels, and the sinks over a
 driver-held manifest) is cut into :func:`chunks` and run by
 :func:`on_driver_threads`, one thread and client per chunk, with no
-Spark job. The ``ftp_manifest`` reader (one client per input partition)
-and the executor sinks and fetch (``operators.actions._placed``:
-driver-held rows sliced with ``sc.parallelize``, a DataSource manifest
-repartitioned to exactly ``max_connections``, so a manifest AQE
-coalesced to one partition still uses every allowed session) open
-theirs inside partitions, on the first row, so an empty partition opens
-none.
+Spark job. Executor-side work opens its client through
+:func:`per_client`, on a partition's first row, so an empty partition
+opens none: the executor walk (:func:`walker`, over at most
+``max_connections`` slices of the frontier), the ``ftp_manifest``
+reader, and the executor sinks and fetch (``operators.actions._placed``:
+driver-held rows sliced with ``sc.parallelize``, an executor-walked
+manifest repartitioned to exactly ``max_connections``, so a manifest AQE
+coalesced to one partition still uses every allowed session).
 """
 
 from __future__ import annotations
@@ -160,12 +163,13 @@ class FTPClient(RemoteClient):
         import ftplib
 
         self._made: set[str] = set()  # folders made or entered this session
+        self._ftp = ftplib.FTP(timeout=timeout)
         try:
-            self._ftp = ftplib.FTP(timeout=timeout)
             self._ftp.connect(host, int(port))
             self._ftp.login(username, password)
             self._ftp.set_pasv(passive)
         except Exception as e:  # reference exits 3 here (download_file.py:227)
+            self._ftp.close()
             raise IncorrectCredentials(str(e)) from e
 
     def listdir(self, folder: str):
@@ -181,10 +185,12 @@ class FTPClient(RemoteClient):
             try:
                 self._ftp.cwd(name)
             except ftplib.error_perm:
+                # a server without SIZE still lists; a dropped connection
+                # (OSError) fails the listing
                 size = None
                 try:
                     size = self._ftp.size(name)
-                except Exception:
+                except ftplib.Error:
                     pass
                 out.append((name, False, size))
                 continue
@@ -229,10 +235,15 @@ class FTPClient(RemoteClient):
         self._made.add(folder)
 
     def close(self) -> None:
+        """QUIT, or close the socket when the QUIT fails: the session's
+        work is over, so a lost goodbye is no error, but the socket must
+        not outlive it."""
+        import ftplib
+
         try:
             self._ftp.quit()
-        except Exception:
-            pass
+        except ftplib.all_errors:
+            self._ftp.close()
 
 
 _PERM_MARKERS = (
@@ -347,16 +358,67 @@ def on_driver_threads(spec: ClientSpec, parts: list[list], body) -> list[list]:
         return [f.result() for f in futures]
 
 
-def check_depth(depth: int, folder: str) -> None:
+def per_client(spec: ClientSpec, body):
+    """``body(client, rows)`` as a partition function that opens its
+    client on the partition's first row, so an empty partition opens no
+    session, and yields whatever ``body`` yields: the one client rule of
+    every executor-side step (the walk, the sinks, ``fetch``)."""
+
+    def run(rows):
+        rows = iter(rows)
+        first = next(rows, None)
+        if first is None:
+            return
+        client = spec.connect()
+        try:
+            yield from body(client, itertools.chain([first], rows))
+        finally:
+            client.close()
+
+    return run
+
+
+def check_depth(depth: int, folder: str, max_depth: int | None = None) -> None:
     """Fail a walk that must list ``folder``, ``depth`` levels below its
-    seed, when levels 0..MAX_DEPTH-1 are all it may list: a silently
-    truncated manifest would let a delete or move exit 0 having skipped
-    files."""
-    if depth >= MAX_DEPTH:
+    seed, when levels 0..max_depth-1 are all it may list (``MAX_DEPTH``
+    unless given): a silently truncated manifest would let a delete or
+    move exit 0 having skipped files."""
+    limit = MAX_DEPTH if max_depth is None else max_depth
+    if depth >= limit:
         raise BlueprintError(
             f"tree walk reached folder {folder!r} at depth {depth}: deeper "
-            f"than MAX_DEPTH={MAX_DEPTH}"
+            f"than MAX_DEPTH={limit}"
         )
+
+
+def walk(client: RemoteClient, folders, depth: int, skip_dot_dirs: bool,
+         max_depth: int | None = None):
+    """The manifest rows of the trees under ``folders``, each folder
+    ``depth`` levels below its walk's seed, listed with one client,
+    depth-first: a folder's children come out before the trees under
+    them, and each of ``folders`` is walked in turn. Bounded by
+    :func:`check_depth`."""
+    for top in folders:
+        stack = [(top, depth)]
+        while stack:
+            folder, level = stack.pop()
+            check_depth(level, folder, max_depth)
+            children = child_rows(client, folder, skip_dot_dirs)
+            yield from children
+            stack.extend((row[0], level + 1) for row in reversed(children) if row[3])
+
+
+def walker(spec: ClientSpec, depth: int, skip_dot_dirs: bool):
+    """Partition function of the executor walk: the :func:`walk` of a
+    partition's folders (``depth`` levels below the seed) with one client.
+    ``MAX_DEPTH`` is read here, on the driver, so the executors enforce
+    the bound of the walk that handed them its frontier."""
+    max_depth = MAX_DEPTH
+
+    def body(client, folders):
+        return walk(client, folders, depth, skip_dot_dirs, max_depth)
+
+    return per_client(spec, body)
 
 
 @dataclass

@@ -1,55 +1,44 @@
 """Python DataSource (Spark 4 ``pyspark.sql.datasource`` API) exposing
-remote trees as DataFrames: the engine's answer to "Spark has no
-native FTP source" (SURVEY.md §1.3).
+remote trees as DataFrames, read side only: the ``ftp_manifest`` format.
 
     df = read_manifest(spark, ClientSpec(kind="local", root="/data"), "")
 
-:func:`read_manifest` is the program's only route into the
-``ftp_manifest`` format (it registers :class:`ManifestDataSource` and
-forwards every ClientSpec field as an option); ``list_tree``'s
-large-tree hand-off and the registered queries go through it.
+:func:`read_manifest` is the program's only route into the format (it
+registers :class:`ManifestDataSource` and forwards every ClientSpec
+field as an option); the registered query ``mf_real_listing_datasource``
+goes through it. ``list_tree`` does not: past its threshold it hands its
+unlisted frontier to its own executor walk (``connector.walker``).
 
 Schema: the five manifest columns (path/folder/name/is_dir/size). The
-reader is a plain walk of ``folder``: pruning lives in ``list_tree``,
-whose hand-off passes its pruned seed as ``folder``, and file bytes
-reach Spark through ``operators.actions.fetch`` only.
+reader is a plain walk of ``folder``; pruning lives in ``list_tree``,
+and file bytes reach Spark through ``operators.actions.fetch`` only.
 
 Partitioning: the driver lists ONLY ``folder`` with one connection
 (``connector.seed_rows``) and cuts its entries into at most
 ``max_connections`` contiguous chunks (``connector.chunks``). Each
-chunk is one InputPartition, read by an executor with ONE client that
-walks the chunk's subtrees depth-first in entry order, one
-``connector.child_rows`` call per folder, bounded by
+chunk is one InputPartition, read by an executor with ONE client
+(``connector.per_client``) that yields each entry and then, for a
+folder, the ``connector.walk`` of its tree, bounded by
 ``connector.MAX_DEPTH``. A read therefore opens at most 1 +
 ``max_connections`` sessions, the same bound as the sinks and
 ``list_tree``; rows come out in seed-entry order whatever the
 chunking. A folder with no entries is one empty partition.
 
-The shared walk steps live in ``connector.py`` rather than
-``listing.py`` because Python workers unpickle this module: importing
-``listing`` here would pull pyarrow into every DataSource worker.
+The walk steps live in ``connector.py`` rather than ``listing.py``
+because Python workers unpickle this module: importing ``listing`` here
+would pull pyarrow into every DataSource worker.
 """
 
 from __future__ import annotations
 
 import dataclasses
-import io
-import logging
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceWriter,
-    InputPartition,
-    WriterCommitMessage,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StructType
 
-from .connector import (
-    MANIFEST_SCHEMA, ClientSpec, check_depth, child_rows, chunks, parent, seed_rows,
-)
+from .connector import MANIFEST_SCHEMA, ClientSpec, chunks, per_client, seed_rows, walk
 
 
 def _spec_from_options(options) -> ClientSpec:
@@ -95,22 +84,13 @@ class ManifestReader(DataSourceReader):
         return [_TreePartition(c) for c in chunked] or [_TreePartition([])]
 
     def read(self, partition: _TreePartition) -> Iterator[tuple]:
-        if not partition.entries:
-            return
-        client = self.spec.connect()
-        try:
-            # reversed onto the DFS stack: entry 0's subtree comes out first
-            stack = [(row, 1) for row in reversed(partition.entries)]
-            while stack:
-                row, depth = stack.pop()
-                path, _, _, is_dir, _ = row
-                if is_dir:
-                    check_depth(depth, path)
-                    children = child_rows(client, path, self.skip_dot_dirs)
-                    stack.extend((child, depth + 1) for child in children)
+        def entry_trees(client, entries):
+            for row in entries:
                 yield row
-        finally:
-            client.close()
+                if row[3]:  # is_dir
+                    yield from walk(client, [row[0]], 1, self.skip_dot_dirs)
+
+        return per_client(self.spec, entry_trees)(partition.entries)
 
 
 class ManifestDataSource(DataSource):
@@ -125,9 +105,6 @@ class ManifestDataSource(DataSource):
 
     def reader(self, schema: StructType) -> ManifestReader:
         return ManifestReader(schema, self.options)
-
-    def writer(self, schema: StructType, overwrite: bool) -> "ManifestWriter":
-        return ManifestWriter(self.options)
 
 
 def read_manifest(
@@ -149,69 +126,3 @@ def read_manifest(
         .load()
     )
 
-
-class _UploadCommit(WriterCommitMessage):
-    def __init__(self, n_files: int):
-        self.n_files = n_files
-
-
-class ManifestWriter(DataSourceWriter):
-    """Write side of ``ftp_manifest``: each task uploads its partition's
-    rows (``dest_path`` STRING + ``content`` BINARY) through its own
-    connection — the DataFrame-native statement of the upload sink
-    (operators/actions.upload is the imperative twin).
-
-    Same durability discipline as the download sink: bytes land under a
-    temp name and are renamed into place, so a killed task never leaves
-    a half-written remote file; each row's parent folder goes through
-    ``client.makedirs``, which memoizes per session, so a folder costs
-    round trips once per task. Commit messages carry per-task upload
-    counts; a failed task raises and Spark retries it wholesale. Retries are
-    made genuinely idempotent by a best-effort delete of the
-    destination before the rename — RFC 959 RNTO replies 550 on many
-    servers when the target exists (only local os.rename is guaranteed
-    to overwrite), so a retry after a partially-committed task would
-    otherwise fail permanently. A failed store/rename likewise
-    best-effort deletes its temp name so ``*.__uploading__`` litter is
-    not left on the remote (task-side cleanup: DataSourceWriter.abort
-    only receives commit messages from SUCCESSFUL tasks, so the failing
-    task itself is the only place that knows the temp name)."""
-
-    def __init__(self, options):
-        self.spec = _spec_from_options(options)
-
-    def write(self, iterator) -> "_UploadCommit":
-        client = self.spec.connect()
-        n = 0
-        try:
-            for row in iterator:
-                dest = row["dest_path"]
-                payload = bytes(row["content"])
-                client.makedirs(parent(dest))
-                tmp = f"{dest}.__uploading__"
-                try:
-                    client.store(io.BytesIO(payload), tmp)
-                    try:  # RNTO fails on existing dest on many servers
-                        client.delete(dest)
-                    except Exception:
-                        pass
-                    client.rename(tmp, dest)
-                except Exception:
-                    try:  # don't leave temp litter behind a failed task
-                        client.delete(tmp)
-                    except Exception:
-                        pass
-                    raise
-                n += 1
-        finally:
-            client.close()
-        return _UploadCommit(n)
-
-    def commit(self, messages) -> None:
-        total = sum(m.n_files for m in messages if m is not None)
-        logging.getLogger(__name__).info(
-            "ftp_manifest write committed: %d file(s)", total
-        )
-
-    def abort(self, messages) -> None:  # best-effort: temp names never
-        pass  # became visible, so there is nothing durable to undo

@@ -10,7 +10,7 @@ function is the same landing step (:func:`_land`) with its own parser:
 
 Like the reference, ingest filters first and acts on matches only: the
 manifest comes from ``listing.list_tree`` (the CLI's listing, with its
-DataSource hand-off for large trees), Spark's ``rlike`` alone decides
+executor walk for large trees), Spark's ``rlike`` alone decides
 what matches, and ``actions.fetch`` RETRs the matched files only, in at
 most ``max_connections`` partitions with one FTP session each,
 gunzipping any payload that starts with the gzip magic bytes. The row

@@ -15,23 +15,25 @@ sum, the session count stays bounded by the server's limit, and no
 Spark job runs — listing is pure FTP round trips.
 
 The per-folder step (one ``listdir`` -> manifest rows, the F4 all-dots
-rule), the seed probe and the depth bound are shared with the
-``ftp_manifest`` DataSource and live in ``connector.py``
-(``child_rows``, ``seed_rows``, ``check_depth``/``MAX_DEPTH``), as does
-the chunk runner the levels share with the driver-held sinks
-(``on_driver_threads``); this
-module owns the BFS, the regex-prefix pruning (:func:`pattern_prefix`,
-:func:`seed_for`) and the manifest's Spark form.
+rule), the seed probe, the depth bound and the depth-first walk are
+shared with the ``ftp_manifest`` reader and live in ``connector.py``
+(``child_rows``, ``seed_rows``, ``check_depth``/``MAX_DEPTH``,
+``walk``/``walker``), as does the chunk runner the levels share with the
+driver-held sinks (``on_driver_threads``); this module owns the BFS, the
+regex-prefix pruning (:func:`pattern_prefix`, :func:`seed_for`) and the
+manifest's Spark form.
 
 While the tree is small the rows accumulate on the driver and the
 manifest is handed to Spark as one Arrow table, which plans as a JVM
 ``LocalRelation``: later jobs (match guards, numbering, sinks) read it
 without a Python worker re-serializing the rows. Past
-``DRIVER_ROWS_THRESHOLD`` entries the walk abandons driver
-accumulation and returns ``datasource.read_manifest`` instead, whose
-partitions (at most ``max_connections`` contiguous chunks of the
-top-level entries) are walked executor-side — driver memory stays
-O(threshold) no matter how many files the tree holds.
+``DRIVER_ROWS_THRESHOLD`` entries the walk goes on from where it is
+instead: the rows already listed stay as they are, and only the unlisted
+frontier is walked, depth-first on executors, in at most
+``max_connections`` slices, so driver memory stays O(threshold) no
+matter how many files the tree holds. The result, an executor-walked
+manifest, is materialized once (``session.local_checkpoint``): the
+guard, the numbering and the sink all read that one listing of the tree.
 
 S5 (local recursive listing, upload_file.py:136-144) additionally maps
 onto Spark's native file source: ``binary_manifest`` uses
@@ -46,10 +48,11 @@ import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..errors import typed_errors
 from ..functions import paths as P
+from ..session import local_checkpoint
 from .connector import (MANIFEST_SCHEMA, ClientSpec, check_depth, child_rows, chunks,
-                        on_driver_threads, seed_rows)
-from .datasource import read_manifest
+                        on_driver_threads, seed_rows, walker)
 
 _ARROW_SCHEMA = pa.schema(
     [("path", pa.string()), ("folder", pa.string()), ("name", pa.string()),
@@ -57,7 +60,7 @@ _ARROW_SCHEMA = pa.schema(
 )
 
 # Above this many manifest entries, list_tree stops accumulating rows on
-# the driver and delegates to the executor-partitioned DataSource walk.
+# the driver and walks the rest of the tree on executors.
 DRIVER_ROWS_THRESHOLD = 100_000
 
 _REGEX_META = set(".^$*+?{}[]|()")
@@ -214,10 +217,11 @@ def list_tree(
     F7 exit-200).  Never pass a basename-scoped (F1) pattern.
 
     Driver memory is bounded: once the accumulated manifest crosses
-    ``DRIVER_ROWS_THRESHOLD`` rows the walk hands off to the
-    executor-partitioned DataSource (the partial BFS work is discarded —
-    crossing the threshold means the tree is big enough that a clean
-    distributed walk beats finishing a driver-side one)."""
+    ``DRIVER_ROWS_THRESHOLD`` rows, the folders not yet listed are
+    walked on executors, depth-first from the frontier's depth so the
+    depth bound still counts from the seed, and the manifest is the
+    executor-walked one: the rows listed so far plus the walked rows,
+    materialized once."""
     seed = seed_for(root, pattern_prefix(path_pattern)) if path_pattern else root
     if seed is None:  # literals diverge: nothing under root matches
         return _manifest(spark, [])
@@ -230,7 +234,16 @@ def list_tree(
     depth = 1
     while frontier:
         if len(all_rows) > DRIVER_ROWS_THRESHOLD:
-            return read_manifest(spark, spec, seed, skip_dot_dirs)
+            # go on from here: one Spark job walks the unlisted frontier,
+            # one client per contiguous slice, and checkpoints it with the
+            # rows held, so every later reader sees this one listing
+            slices = min(len(frontier), max(1, spec.max_connections))
+            rdd = spark.sparkContext.parallelize(frontier, slices)
+            walked = rdd.mapPartitions(walker(spec, depth, skip_dot_dirs))
+            manifest = _manifest(spark, all_rows).union(
+                spark.createDataFrame(walked, MANIFEST_SCHEMA))
+            with typed_errors():  # a depth bound or bad login raised on executors
+                return local_checkpoint(manifest)
         check_depth(depth, frontier[0])
         parts = chunks(frontier, spec.max_connections)
         level = [r for rows in on_driver_threads(spec, parts, list_chunk) for r in rows]

@@ -233,9 +233,6 @@ class _Session(threading.Thread):
         if not os.path.isdir(os.path.dirname(dst)):
             self.send(550, "no such directory")
             return
-        if getattr(self.server, "strict_rnto", False) and os.path.exists(dst):
-            self.send(550, "destination exists")
-            return
         os.rename(self.rnfr, dst)
         self.rnfr = None
         self.send(250, "renamed")
@@ -264,16 +261,10 @@ class FtpStubServer:
         root: str,
         users: dict[str, str],
         readonly: bool = False,
-        strict_rnto: bool = False,
     ):
         self.root = os.path.abspath(root)
         self.users = users
         self.readonly = readonly
-        # RFC 959-strict RNTO: many real servers answer 550 when the
-        # rename destination already exists (os.rename's silent POSIX
-        # overwrite is the permissive minority behavior) — the upload
-        # writer's retry idempotency depends on handling this
-        self.strict_rnto = strict_rnto
         # NLST calls served across all sessions (GIL-atomic increments
         # are plenty for test accounting)
         self.nlst_count = 0

@@ -84,20 +84,18 @@ def test_list_tree_subfolder_root(spark, tree):
 
 
 def test_list_tree_delegates_past_threshold(spark, tree, monkeypatch):
-    """Scale guard: past DRIVER_ROWS_THRESHOLD the walk must hand off
-    to the executor-partitioned DataSource and produce the identical
-    manifest (driver memory stays O(threshold) for any tree size)."""
+    """Scale guard: past DRIVER_ROWS_THRESHOLD the rest of the walk runs
+    on executors (driver memory stays O(threshold) for any tree size),
+    the manifest is no longer driver-held, and its rows are identical."""
+    from ftp_blueprints_spark.operators.manifest import driver_rows
     from ftp_blueprints_spark.sources import listing
 
     full = list_tree(spark, _spec(tree), "")
     monkeypatch.setattr(listing, "DRIVER_ROWS_THRESHOLD", 2)
     small = list_tree(spark, _spec(tree), "")
+    assert driver_rows(small) is None
     as_set = lambda df: {tuple(r) for r in df.collect()}  # noqa: E731
     assert as_set(small) == as_set(full)
-    # the delegated plan reads through the Python DataSource, not a
-    # LocalTableScan of driver-collected rows
-    assert "ftp_manifest" in small._jdf.queryExecution().toString() or \
-        "PythonDataSource" in small._jdf.queryExecution().executedPlan().toString()
 
 
 def test_list_tree_deeper_than_max_depth_raises(spark, tmp_path, monkeypatch):
@@ -134,6 +132,47 @@ def _bfs_reference(spec: ClientSpec, root: str) -> list[tuple]:
         frontier = nxt
     client.close()
     return rows
+
+
+def test_list_tree_depth_bound_holds_across_the_hand_off(spark, tmp_path, monkeypatch):
+    """Past the threshold the executors go on with the walk at the
+    frontier's depth: the bound still counts from the seed and names the
+    same folder as the driver walk does."""
+    from ftp_blueprints_spark.errors import BlueprintError
+    from ftp_blueprints_spark.sources import connector, listing
+
+    (tmp_path / "a/b/c").mkdir(parents=True)
+    (tmp_path / "a/b/c/f.txt").write_bytes(b"f")
+    monkeypatch.setattr(listing, "DRIVER_ROWS_THRESHOLD", 0)
+    assert list_tree(spark, _spec(tmp_path), "").count() == 4
+    monkeypatch.setattr(connector, "MAX_DEPTH", 2)
+    with pytest.raises(BlueprintError, match=r"'a/b'.*MAX_DEPTH=2"):
+        list_tree(spark, _spec(tmp_path), "")
+    monkeypatch.setattr(connector, "MAX_DEPTH", 4)
+    assert list_tree(spark, _spec(tmp_path), "").count() == 4
+
+
+def test_executor_walked_manifest_is_one_snapshot(spark, tree, tmp_path, monkeypatch):
+    """An executor-walked manifest is the tree as list_tree saw it: a
+    file added afterwards is neither numbered nor downloaded, because
+    the guard, the numbering and the sink read one materialized listing
+    instead of walking the tree again."""
+    from ftp_blueprints_spark.operators.manifest import driver_rows
+    from ftp_blueprints_spark.sources import listing
+
+    monkeypatch.setattr(listing, "DRIVER_ROWS_THRESHOLD", 0)
+    mf = list_tree(spark, _spec(tree), "reports")
+    assert driver_rows(mf) is None
+    (tree / "reports" / "2024" / "late.csv").write_bytes(b"late")
+    matched = require_matches(match_files(mf, pattern=r"\.csv$"))
+    numbered = with_destination(matched, "dl", "all.csv")
+    assert sorted((r["path"], r["file_number"]) for r in numbered.collect()) == [
+        ("reports/2024/feb.csv", 1), ("reports/2024/jan.csv", 2), ("reports/summary.csv", 3),
+    ]
+    dest = tmp_path / "out"
+    assert actions.download(numbered, _spec(tree), str(dest)) == {"ok": 3, "failed": 0}
+    assert sorted(os.listdir(dest / "dl")) == ["all_1.csv", "all_2.csv", "all_3.csv"]
+    assert (dest / "dl" / "all_2.csv").read_bytes() == b"jan-data"
 
 
 def test_list_tree_runs_no_spark_job(spark, spark_jobs, tree):

@@ -1,6 +1,7 @@
 """Tests for the ftp_manifest Python DataSource (Spark 4 API): listing
-parity with the connector BFS, dot-dir semantics, the write path; and
-content reads through the ingest's fetch step."""
+parity with the connector BFS, dot-dir semantics, the depth bound and
+the module's worker imports; and content reads through the ingest's
+fetch step."""
 
 from __future__ import annotations
 
@@ -110,151 +111,6 @@ def test_datasource_empty_tree(registered, tmp_path):
     assert df.count() == 0
 
 
-def test_datasource_write_uploads_local(registered, tmp_path):
-    """df.write.format('ftp_manifest'): rows (dest_path, content) land
-    as real files via temp-name + rename, with parent dirs created."""
-    spark = registered
-    dest_root = tmp_path / "up_srv"
-    dest_root.mkdir()
-    rows = [
-        ("out/a.txt", bytearray(b"alpha")),
-        ("out/nested/b.bin", bytearray(b"\x00\x01\x02")),
-        ("c.txt", bytearray(b"top")),
-    ]
-    df = spark.createDataFrame(rows, "dest_path string, content binary")
-    (
-        df.write.format("ftp_manifest")
-        .option("kind", "local")
-        .option("root", str(dest_root))
-        .mode("append")
-        .save()
-    )
-    assert (dest_root / "out" / "a.txt").read_bytes() == b"alpha"
-    assert (dest_root / "out" / "nested" / "b.bin").read_bytes() == b"\x00\x01\x02"
-    assert (dest_root / "c.txt").read_bytes() == b"top"
-    leftovers = [
-        p for p in dest_root.rglob("*") if p.name.endswith(".__uploading__")
-    ]
-    assert leftovers == []
-
-
-def test_datasource_write_roundtrip_over_ftp(registered, tmp_path):
-    """Read a tree's bytes through the fetch step, re-upload them
-    through the DataSource WRITER over a real FTP socket, and get the
-    identical bytes back — the full read+write loop."""
-    from ftp_blueprints_spark.operators.actions import fetch
-    from tests.ftp_stub_server import FtpStubServer
-
-    spark = registered
-    src = tmp_path / "src_srv"
-    (src / "in").mkdir(parents=True)
-    (src / "in" / "x.txt").write_bytes(b"xx")
-    (src / "in" / "y.txt").write_bytes(b"yyy")
-    dst = tmp_path / "dst_srv"
-    dst.mkdir()
-    users = {"alice": "secret"}
-    with FtpStubServer(str(dst), users) as (host, port):
-        src_spec = ClientSpec(kind="local", root=str(src))
-        mf = list_tree(spark, src_spec, "").filter("not is_dir")
-        files = mf.join(fetch(mf, src_spec), "path").selectExpr(
-            "concat('mirror/', name) AS dest_path", "content"
-        )
-        (
-            files.write.format("ftp_manifest")
-            .option("kind", "ftp")
-            .option("host", host)
-            .option("port", str(port))
-            .option("username", "alice")
-            .option("password", "secret")
-            .mode("append")
-            .save()
-        )
-    assert (dst / "mirror" / "x.txt").read_bytes() == b"xx"
-    assert (dst / "mirror" / "y.txt").read_bytes() == b"yyy"
-
-
-def test_datasource_write_retry_over_strict_rnto_ftp(registered, tmp_path):
-    """Task-retry idempotency on RFC-strict servers: many FTP servers
-    answer 550 to RNTO when the destination exists, so re-uploading
-    over files a partially-committed attempt already landed must still
-    succeed (best-effort DELE before the rename) and must replace the
-    bytes — and a drained run leaves no '*.__uploading__' litter."""
-    from tests.ftp_stub_server import FtpStubServer
-
-    spark = registered
-    dst = tmp_path / "dst_srv"
-    (dst / "mirror").mkdir(parents=True)
-    # the "first attempt" already committed these, with stale content
-    (dst / "mirror" / "x.txt").write_bytes(b"stale")
-    (dst / "mirror" / "y.txt").write_bytes(b"stale")
-    rows = [("mirror/x.txt", bytearray(b"xx")), ("mirror/y.txt", bytearray(b"yyy"))]
-    df = spark.createDataFrame(rows, "dest_path string, content binary")
-    with FtpStubServer(str(dst), {"alice": "secret"}, strict_rnto=True) as (
-        host,
-        port,
-    ):
-        (
-            df.write.format("ftp_manifest")
-            .option("kind", "ftp")
-            .option("host", host)
-            .option("port", str(port))
-            .option("username", "alice")
-            .option("password", "secret")
-            .mode("append")
-            .save()
-        )
-    assert (dst / "mirror" / "x.txt").read_bytes() == b"xx"
-    assert (dst / "mirror" / "y.txt").read_bytes() == b"yyy"
-    assert [p for p in dst.rglob("*") if p.name.endswith(".__uploading__")] == []
-
-
-def test_manifest_writer_cleans_temp_on_failure():
-    """A failed store/rename must best-effort DELE its temp name so a
-    dying task leaves nothing durable behind (DataSourceWriter.abort
-    only hears from successful tasks — the failing task itself is the
-    only place that knows the temp name)."""
-    from ftp_blueprints_spark.sources.datasource import ManifestWriter
-
-    class FakeClient:
-        def __init__(self):
-            self.stored: list[str] = []
-            self.deleted: list[str] = []
-
-        def makedirs(self, folder):
-            pass
-
-        def store(self, fileobj, path):
-            self.stored.append(path)
-
-        def delete(self, path):
-            self.deleted.append(path)
-
-        def rename(self, src, dst):
-            raise OSError("550 destination exists")
-
-        def close(self):
-            pass
-
-    class FakeSpec:
-        def __init__(self, client):
-            self._c = client
-
-        def connect(self):
-            return self._c
-
-    w = ManifestWriter.__new__(ManifestWriter)
-    client = FakeClient()
-    w.spec = FakeSpec(client)
-    import pytest as _pytest
-
-    with _pytest.raises(OSError):
-        w.write(iter([{"dest_path": "out/a.txt", "content": b"aa"}]))
-    assert client.stored == ["out/a.txt.__uploading__"]
-    # the failed task deleted its own temp (the dest delete attempt
-    # before rename is also visible, but the temp MUST be last)
-    assert client.deleted[-1] == "out/a.txt.__uploading__"
-
-
 def test_reader_walk_deeper_than_max_depth_raises(tmp_path, monkeypatch):
     """The executor-side DFS has the same bound as list_tree: driven
     in-process, a tree deeper than MAX_DEPTH raises naming the folder."""
@@ -314,6 +170,35 @@ def test_datasource_module_imports_neither_listing_nor_pyarrow():
         [sys.executable, "-c", script], cwd=repo, capture_output=True, text=True, timeout=120,
     )
     assert out.stdout.strip() == "[]", out.stderr[-2000:]
+
+
+def test_walk_partition_function_imports_neither_listing_nor_pyarrow(tmp_path):
+    """list_tree's executor walk ships a partition function built from
+    ``connector`` alone: unpickled in a fresh interpreter it walks, and
+    it loads neither ``listing`` nor pyarrow."""
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from ftp_blueprints_spark.sources.connector import walker
+
+    (tmp_path / "a" / "b").mkdir(parents=True)
+    (tmp_path / "a" / "b" / "f.txt").write_bytes(b"f")
+    blob = tmp_path / "walker.pkl"
+    blob.write_bytes(cloudpickle.dumps(walker(ClientSpec(kind="local", root=str(tmp_path)), 1, True)))
+    script = (
+        "import pickle, sys\n"
+        f"fn = pickle.loads(open({str(blob)!r}, 'rb').read())\n"
+        "print([r[0] for r in fn(['a'])])\n"
+        "print(sorted(m for m in ('pyarrow', 'ftp_blueprints_spark.sources.listing')"
+        " if m in sys.modules))\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=repo, capture_output=True, text=True, timeout=120,
+    )
+    assert out.stdout.splitlines() == ["['a/b', 'a/b/f.txt']", "[]"], out.stderr[-2000:]
 
 
 def test_workers_import_package_from_any_cwd(tmp_path):

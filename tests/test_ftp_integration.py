@@ -64,6 +64,41 @@ def test_bad_credentials_raise_exit3_error(ftp_root):
         assert ei.value.exit_code == 3
 
 
+def test_failed_login_closes_the_control_socket(ftp_root, monkeypatch):
+    """A rejected login raises IncorrectCredentials with its control
+    socket closed, not left for the garbage collector."""
+    import ftplib
+
+    closed = []
+    real_close = ftplib.FTP.close
+
+    def spy(self):
+        real_close(self)
+        closed.append(self.sock is None)
+
+    monkeypatch.setattr(ftplib.FTP, "close", spy)
+    with FtpStubServer(ftp_root, USERS) as (host, port):
+        bad = ClientSpec(kind="ftp", host=host, port=port,
+                         username="alice", password="wrong", timeout=10)
+        with pytest.raises(IncorrectCredentials):
+            bad.connect()
+    assert closed == [True]
+
+
+def test_close_closes_the_socket_when_quit_fails(ftp_root):
+    """A QUIT that gets no reply (the connection is gone) still closes
+    the socket, and close() does not raise: the session's work is over."""
+    with FtpStubServer(ftp_root, USERS) as (host, port):
+        client = spec_for(host, port).connect()
+
+        def lost():
+            raise ConnectionResetError("connection reset by peer")
+
+        client._ftp.quit = lost
+        client.close()
+        assert client._ftp.sock is None
+
+
 # --- S2: listing + classification ------------------------------------------
 
 def test_listdir_classifies_and_prefixes_bare_names(ftp_root):
@@ -389,6 +424,31 @@ def test_manifest_read_uses_at_most_max_connections_sessions(spark, tmp_path):
         empty = read_manifest(spark, spec_for(host, port), "")
         assert empty.rdd.getNumPartitions() == 1
         assert empty.count() == 0
+
+
+def test_listdir_raises_when_size_loses_the_connection(ftp_root):
+    """SIZE is optional: a refusal (an FTP error reply) leaves the size
+    unknown, but a dropped connection fails the listing instead of
+    passing as a file without a size."""
+    import ftplib
+
+    with FtpStubServer(ftp_root, USERS) as (host, port):
+        client = spec_for(host, port).connect()
+        try:
+            def refused(name):
+                raise ftplib.error_perm("502 SIZE not implemented")
+
+            client._ftp.size = refused
+            assert dict((p, s) for p, _, s in client.listdir("data"))["data/a.csv"] is None
+
+            def dropped(name):
+                raise ConnectionResetError("connection reset by peer")
+
+            client._ftp.size = dropped
+            with pytest.raises(ConnectionResetError):
+                client.listdir("data")
+        finally:
+            client.close()
 
 
 # --- raw client round-trip --------------------------------------------------
@@ -1141,9 +1201,10 @@ def test_pruned_listing_permission_denied_raises(spark, ftp_root):
 
 
 def test_datasource_prunes_partitions_by_pattern(spark, ftp_root, monkeypatch):
-    """Pruning lives in list_tree alone: past the hand-off its pruned
-    seed reaches the DataSource as ``folder``, so the executor walk
-    covers one subtree; rows equal the driver-regime pruned manifest."""
+    """Pruning lives in list_tree alone: past the hand-off the executor
+    walk goes on below the pruned seed, so the pruned seed is listed
+    once in total, the walk covers one subtree, and reading the manifest
+    lists nothing again; rows equal the driver-regime pruned manifest."""
     from ftp_blueprints_spark.operators.manifest import driver_rows
     from ftp_blueprints_spark.sources import listing
 
@@ -1160,19 +1221,68 @@ def test_datasource_prunes_partitions_by_pattern(spark, ftp_root, monkeypatch):
         srv.nlst_count = 0
         df = list_tree(spark, spec, "", path_pattern=pattern)
         assert driver_rows(df) is None
-        assert srv.nlst_count == 1  # list_tree's seed listing, then the hand-off
-        srv.nlst_count = 0
+        # data/sub by list_tree's seed listing, data/sub/inner by the
+        # executor walk; never the root or data/ levels
+        assert srv.nlst_count == 2
         rows = {tuple(r) for r in df.collect()}
         assert rows == want
         assert {r[0] for r in rows} == {
             "data/sub/c.txt", "data/sub/inner", "data/sub/inner/d.txt",
         }
-        # driver partitions() listing + the subtree walk of the seed's
-        # one folder partition; never the root or data/ levels
-        assert srv.nlst_count <= 2
+        assert srv.nlst_count == 2
 
         missing = list_tree(spark, spec, "", path_pattern=r"^no/such/prefix/.*")
         assert missing.count() == 0
+
+
+def test_cli_download_lists_the_tree_once_in_both_regimes(spark, tmp_path, monkeypatch, capsys):
+    """A numbered and a keep-name CLI download over a 16-folder tree
+    (``--max-connections 2``) send the same NLSTs (one per folder) and
+    end the same way whether the manifest is driver-held or, with
+    ``DRIVER_ROWS_THRESHOLD`` 0, executor-walked: same exit code, counts,
+    downloaded names and server tree."""
+    from ftp_blueprints_spark.cli.blueprints import download_main
+    from ftp_blueprints_spark.sources import listing
+
+    root = tmp_path / "srv"
+    for t in range(3):
+        for s in range(4):
+            leaf = root / "data" / f"t{t}" / f"s{s}"
+            leaf.mkdir(parents=True)
+            for i in range(5):
+                (leaf / f"f{i}.{'csv' if i == 0 else 'txt'}").write_text(f"{t}{s}{i}")
+
+    def server_tree() -> list[str]:
+        return sorted(str(p.relative_to(root)) for p in root.rglob("*"))
+
+    before = server_tree()
+
+    def download(dest, numbered: bool) -> tuple:
+        srv = FtpStubServer(str(root), USERS)
+        with srv as (host, port):
+            rc = download_main([
+                "--kind", "ftp", "--host", host, "--port", str(port),
+                "--username", "alice", "--password", "secret", "--timeout", "10",
+                "--max-connections", "2", "--source-folder-name", "data",
+                "--source-file-name", r".*\.csv", "--source-file-name-match-type", "regex_match",
+                "--destination-folder-name", "dl", "--destination-root", str(dest),
+                *(["--destination-file-name", "all.csv"] if numbered else []),
+            ])
+        said = capsys.readouterr().out.strip().splitlines()[-1]
+        return rc, said, srv.nlst_count, sorted(os.listdir(dest / "dl")), server_tree()
+
+    regimes = []
+    for threshold in (listing.DRIVER_ROWS_THRESHOLD, 0):
+        monkeypatch.setattr(listing, "DRIVER_ROWS_THRESHOLD", threshold)
+        regimes.append([download(tmp_path / f"{kind}{threshold}", kind == "numbered")
+                        for kind in ("numbered", "keep")])
+    driver, executors = regimes
+    assert executors == driver
+    said = "downloaded 12 file(s), 0 failed (skipped)"
+    assert driver == [
+        (0, said, 16, sorted(f"all_{i}.csv" for i in range(1, 13)), before),
+        (0, said, 16, ["f0.csv"], before),
+    ]
 
 
 def test_pattern_prefix_soundness_property():
