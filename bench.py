@@ -524,6 +524,10 @@ def main() -> None:
         "first_run_total": round(sum(first.values()), 3),
         "r2_subset_total": r2_subset_total,
         "sf": sf,
+        # the host the numbers come from: the local[N] master and the
+        # parallelism Spark derived from it
+        "cpus": int(cpus),
+        "default_parallelism": spark.sparkContext.defaultParallelism,
         # Contention marker (r7 VERDICT task 7): the driver benches
         # right after its 13-min correctness sweep in the same sandbox,
         # which inflated the recorded r2 subset 12.95->14.16 s across

@@ -37,6 +37,11 @@ def get_spark(
       collected (``spark.cleaner.referenceTracking.cleanCheckpoints``):
       under ``SPARK_GRAFT_RELIABLE_CHECKPOINT=1`` the per-micro-batch
       sites would otherwise grow the checkpoint dir without bound.
+    - No per-call DataFrame call-site capture
+      (``spark.python.sql.dataFrameDebugging.enabled``): with it, every
+      ``Column``/``DataFrame`` call makes extra py4j round trips to
+      record where it was made. It is a static conf, so only a fresh
+      session gets it.
     """
     pythonpath = os.pathsep.join(
         filter(None, [_PACKAGE_PARENT, os.environ.get("PYTHONPATH")])
@@ -71,6 +76,7 @@ def get_spark(
         "spark.ui.enabled": "false",
         "spark.executorEnv.PYTHONPATH": pythonpath,
         "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
     }.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -527,9 +527,9 @@ def _destinations(spark, root) -> list[tuple]:
 
 
 def test_numbering_agrees_in_datasource_regime(spark, tree, monkeypatch):
-    """Past DRIVER_ROWS_THRESHOLD the manifest is a DataSource read:
-    numbering takes the distributed range/offset path and must yield
-    the driver regime's rows."""
+    """Past DRIVER_ROWS_THRESHOLD list_tree returns an executor-walked
+    manifest: numbering takes the distributed range/offset path and must
+    yield the driver regime's rows."""
     from ftp_blueprints_spark.operators.manifest import driver_rows
     from ftp_blueprints_spark.sources import listing
 

@@ -11,6 +11,8 @@ from __future__ import annotations
 import dataclasses
 import io
 import os
+import socket
+import time
 
 import pytest
 
@@ -113,6 +115,60 @@ def test_listdir_classifies_and_prefixes_bare_names(ftp_root):
     assert by_path["data/a.csv"] == (False, len(TREE["data/a.csv"]))
     assert by_path["data/sub"] == (True, None)  # cwd-probe says directory
     assert by_path["data/..."][0] is True
+
+
+# --- data-channel commands: the 150 reply is ACKed at once -----------------
+
+def _transfers(client) -> tuple[list[bytes], list[list]]:
+    """10 RETRs, 10 STORs and 10 listdirs through one client: the bytes
+    each RETR read and the rows each listdir returned."""
+    read, listed = [], []
+    for i in range(10):
+        buf = io.BytesIO()
+        client.retrieve("data/a.csv", buf)
+        read.append(buf.getvalue())
+        client.store(io.BytesIO(b"row %d\n" % i), f"data/up{i}.csv")
+        listed.append(client.listdir("data/sub"))
+    return read, listed
+
+
+@pytest.mark.skipif(not hasattr(socket, "TCP_QUICKACK"), reason="no TCP_QUICKACK on this platform")
+def test_data_channel_commands_do_not_wait_out_the_delayed_ack(ftp_root):
+    """The stub writes a transfer's 150 and 226 as two small writes with
+    Nagle on, as most servers do, so the 226 waits until the client ACKs
+    the 150. FTPClient ACKs it at once: 30 data-channel commands take far
+    less than the ~1.3 s of 30 delayed-ACK intervals (~40 ms each)."""
+    with FtpStubServer(ftp_root, USERS) as (host, port):
+        client = spec_for(host, port).connect()
+        try:
+            t0 = time.perf_counter()
+            _transfers(client)
+            elapsed = time.perf_counter() - t0
+        finally:
+            client.close()
+    assert elapsed < 0.4
+
+
+def test_transfers_without_tcp_quickack(ftp_root, monkeypatch):
+    """Where the platform has no TCP_QUICKACK the client is plain ftplib:
+    RETR, STOR and listdir return the same bytes and rows."""
+    with FtpStubServer(ftp_root, USERS) as (host, port):
+        client = spec_for(host, port).connect()
+        try:
+            quick = _transfers(client)
+        finally:
+            client.close()
+        monkeypatch.delattr(socket, "TCP_QUICKACK", raising=False)
+        client = spec_for(host, port).connect()
+        try:
+            plain = _transfers(client)
+        finally:
+            client.close()
+    sub = [("data/sub/c.txt", False, len(TREE["data/sub/c.txt"]))]
+    assert plain == quick == ([TREE["data/a.csv"]] * 10, [sub] * 10)
+    for i in range(10):
+        with open(os.path.join(ftp_root, f"data/up{i}.csv"), "rb") as f:
+            assert f.read() == b"row %d\n" % i
 
 
 # --- S2+S3: parallel BFS into the manifest ---------------------------------
@@ -561,9 +617,9 @@ def test_ingest_fetches_only_matched_files(spark, tmp_path):
 
 
 def test_ingest_csv_datasource_regime(spark, tmp_path, monkeypatch):
-    """Past DRIVER_ROWS_THRESHOLD the listing is a DataSource read and
-    the fetch repartitions it: the ingest lands the driver regime's rows
-    and RETRs the matched paths only."""
+    """Past DRIVER_ROWS_THRESHOLD the listing is an executor-walked
+    manifest and the fetch repartitions it: the ingest lands the driver
+    regime's rows and RETRs the matched paths only."""
     from ftp_blueprints_spark.operators.manifest import driver_rows
     from ftp_blueprints_spark.sources import listing
     from ftp_blueprints_spark.sources.ingest import ingest_csv
@@ -727,7 +783,7 @@ def test_sink_bad_credentials_exit3_in_both_regimes(spark, tmp_path, monkeypatch
     """An upload lists the local tree and logs in to the server only in
     its sink. On driver threads the login raises IncorrectCredentials
     directly; on executors (``DRIVER_ROWS_THRESHOLD`` 0 makes the local
-    listing a DataSource read) it crosses Py4J as a string, and
+    listing an executor-walked manifest) it crosses Py4J as a string, and
     ``_run_sink`` must map it back. Both exit 3."""
     from ftp_blueprints_spark.cli.blueprints import upload_main
     from ftp_blueprints_spark.operators.manifest import driver_rows, match_files, with_destination

@@ -85,3 +85,12 @@ def test_get_spark_cleans_reliable_checkpoints(spark):
     the per-micro-batch sites grow the checkpoint dir without bound."""
     conf = spark.sparkContext.getConf()
     assert conf.get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true"
+
+
+def test_get_spark_turns_off_call_site_capture(spark):
+    """A fresh session records no per-call DataFrame call site. The conf
+    is static, so get_spark must not set it on an active session: that
+    call still returns the session, conf unchanged."""
+    key = "spark.python.sql.dataFrameDebugging.enabled"
+    assert spark.conf.get(key) == "false"
+    assert session.get_spark().conf.get(key) == "false"
