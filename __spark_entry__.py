@@ -77,12 +77,6 @@ def entry(spark: SparkSession) -> DataFrame:
 # registrations capped at those 2, so the 50-slot window takes the two
 # rank -1 rows plus all ~22 r11-stale rows plus ~26 of the r12-stale
 # rows.
-# Round 16 registration queue (built + locally oracle-proven in r15,
-# decorator deferred for that round's window math):
-#   - sim_ivfpq_cadence (operators/similarity.py,
-#     _ivfpq_cadence_oracle — the qerr mix-expectation twin of
-#     sim_ivf_cadence over sim_ivfpq_incremental's report; tie test
-#     pins ivfpq_retrain_due's rel_drift to its columns).
 _FIRST_HASH_CHECK_THIS_ROUND: set[str] = set()
 # Pre-r4 evidence ranks: treat "checked in r3" as MORE urgent than r2 —
 # the r3 window was checked under the broken NTZ session.  (The r6-era

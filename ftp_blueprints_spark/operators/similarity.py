@@ -45,7 +45,6 @@ import json
 import os
 import shutil
 import uuid
-from collections.abc import Callable
 from dataclasses import dataclass
 
 import numpy as np
@@ -827,38 +826,69 @@ def portable_centroids(emb: DataFrame, k: int = IVF_K) -> DataFrame:
     )
 
 
-_ORACLE_COS = (
-    "list_dot_product(x.v, {c}) / "
-    "(sqrt(list_dot_product(x.v, x.v)) * sqrt(list_dot_product({c}, {c})))"
-)
-
-
-def _portable_c1_cte(k: int = IVF_K, where: str = "") -> str:
-    """Shared DuckDB CTE chain mirroring portable_centroids: x (double
-    vectors), xq (micro-unit ints), kseeds, a1 (round-6 argmax), cells1
-    / n1 (integer sums), c1 (refined double centroids).  ``where``
-    restricts the TRAINING source (e.g. the standing-corpus half of the
-    incremental split); the default empty string keeps every existing
-    oracle byte-identical."""
-    return f"""x AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings {where}),
-xq AS (SELECT vec_id,
+def _vectors_sql(x: str, xq: str, where: str = "") -> str:
+    """CTEs ``x`` (vec_id, v: double vectors) and ``xq`` (vec_id, vq:
+    FLOOR(v * 1e6) micro-unit ints) over ``embeddings {where}``."""
+    return f"""{x} AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings {where}),
+{xq} AS (SELECT vec_id,
               list_transform(v, e -> CAST(FLOOR(e * 1000000) AS BIGINT)) AS vq
-       FROM x),
-kseeds AS (SELECT vec_id AS cid, v AS c FROM x ORDER BY vec_id LIMIT {k}),
-a1 AS (SELECT vec_id, cid FROM (
-    SELECT x.vec_id, s.cid,
-           ROW_NUMBER() OVER (PARTITION BY x.vec_id
-             ORDER BY ROUND({_ORACLE_COS.format(c='s.c')}, 6) DESC, s.cid) AS rn
-    FROM x CROSS JOIN kseeds s) WHERE rn = 1),
-cells1 AS (SELECT a1.cid, t.i AS pos, SUM(xq.vq[t.i + 1]) AS s
-           FROM a1 JOIN xq USING (vec_id)
+       FROM {x})"""
+
+
+def _nearest_sql(
+    src: str, cents: str, n: int = 1, vid: str = "vec_id", v: str = "v"
+) -> str:
+    """(vid, cid, cos6): each ``src`` row's ``n`` nearest ``cents``
+    (cid, c) rows on the ROUND(cos, 6) surface, ties to the lowest cid
+    — ivf_assign's argmax (n = 1) and probe_centroids' ranking."""
+    cos = (
+        f"ROUND(list_dot_product(x.{v}, c.c) / (sqrt(list_dot_product(x.{v}, x.{v}))"
+        " * sqrt(list_dot_product(c.c, c.c))), 6)"
+    )
+    return f"""SELECT {vid}, cid, cos6 FROM (
+    SELECT x.{vid}, c.cid, {cos} AS cos6,
+           ROW_NUMBER() OVER (PARTITION BY x.{vid} ORDER BY {cos} DESC, c.cid) AS rn
+    FROM {src} x CROSS JOIN {cents} c) WHERE rn <= {n}"""
+
+
+def _cells_sql(name: str, assign: str, xq: str) -> str:
+    """CTE ``name`` (cid, pos, s): per cell of the assignment ``assign``,
+    the integer sum of its members' micro-unit components (_km_cells)."""
+    return f"""{name} AS (SELECT a.cid, t.i AS pos, SUM(q.vq[t.i + 1]) AS s
+           FROM {assign} a JOIN {xq} q USING (vec_id)
            CROSS JOIN (SELECT UNNEST(range(0, {DIM})) AS i) t
-           GROUP BY a1.cid, t.i),
-n1 AS (SELECT cid, COUNT(*) AS n FROM a1 GROUP BY cid),
-c1 AS (SELECT c.cid,
+           GROUP BY a.cid, t.i)"""
+
+
+def _lloyd_sql(x: str, xq: str, out: str) -> str:
+    """CTEs ending in ``out`` (cid, c) mirroring portable_centroids over
+    the vectors ``x`` / ``xq`` (_vectors_sql): the IVF_K lowest vec_ids
+    seed, one round-6 argmax, and the refined double centroids
+    CAST(integer sum) / CAST(n * 1e6)."""
+    return f"""{out}_seeds AS (SELECT vec_id AS cid, v AS c FROM {x} ORDER BY vec_id LIMIT {IVF_K}),
+{out}_a AS ({_nearest_sql(x, f"{out}_seeds")}),
+{_cells_sql(f"{out}_cells", f"{out}_a", xq)},
+{out}_n AS (SELECT cid, COUNT(*) AS n FROM {out}_a GROUP BY cid),
+{out} AS (SELECT c.cid,
               list(CAST(c.s AS DOUBLE) / CAST(n.n * 1000000 AS DOUBLE)
                    ORDER BY c.pos) AS c
-       FROM cells1 c JOIN n1 n USING (cid) GROUP BY c.cid)"""
+       FROM {out}_cells c JOIN {out}_n n USING (cid) GROUP BY c.cid)"""
+
+
+def _portable_c1_cte(where: str = "") -> str:
+    """Shared DuckDB CTE chain mirroring portable_centroids: x / xq
+    (_vectors_sql) and c1, the refined double centroids. ``where``
+    restricts the TRAINING source (the standing-corpus half of the
+    incremental split)."""
+    return f"{_vectors_sql('x', 'xq', where)},\n{_lloyd_sql('x', 'xq', 'c1')}"
+
+
+def _sums_sql(assign: str, xq: str) -> str:
+    """CTEs cells2 and sums2 (cid, centroid_sums): the comma-joined
+    integer component sums of each cell of ``assign``."""
+    return f"""{_cells_sql("cells2", assign, xq)},
+sums2 AS (SELECT cid, array_to_string(list(s ORDER BY pos), ',') AS centroid_sums
+          FROM cells2 GROUP BY cid)"""
 
 
 def _km_cells(assigned: DataFrame, with_count: bool = False) -> DataFrame:
@@ -900,26 +930,14 @@ def _km_cells(assigned: DataFrame, with_count: bool = False) -> DataFrame:
 
 
 def _km_oracle() -> str:
-    cos = _ORACLE_COS
     return f"""
 WITH {_portable_c1_cte()},
-a2 AS (SELECT vec_id, cid FROM (
-    SELECT x.vec_id, c1.cid,
-           ROW_NUMBER() OVER (PARTITION BY x.vec_id
-             ORDER BY ROUND({cos.format(c='c1.c')}, 6) DESC, c1.cid) AS rn
-    FROM x CROSS JOIN c1) WHERE rn = 1),
-stats AS (SELECT a2.cid, COUNT(*) AS n_members,
-                 CAST(SUM(CAST(FLOOR(ROUND({cos.format(c='c1.c')}, 6)
-                                     * 1000000) AS BIGINT)) AS BIGINT)
+a2 AS ({_nearest_sql("x", "c1")}),
+stats AS (SELECT cid, COUNT(*) AS n_members,
+                 CAST(SUM(CAST(FLOOR(cos6 * 1000000) AS BIGINT)) AS BIGINT)
                    AS cos_sum_micros
-          FROM a2 JOIN x USING (vec_id) JOIN c1 USING (cid)
-          GROUP BY a2.cid),
-cells2 AS (SELECT a2.cid, t.i AS pos, SUM(xq.vq[t.i + 1]) AS s
-           FROM a2 JOIN xq USING (vec_id)
-           CROSS JOIN (SELECT UNNEST(range(0, {DIM})) AS i) t
-           GROUP BY a2.cid, t.i),
-sums2 AS (SELECT cid, array_to_string(list(s ORDER BY pos), ',') AS centroid_sums
-          FROM cells2 GROUP BY cid)
+          FROM a2 GROUP BY cid),
+{_sums_sql("a2", "xq")}
 SELECT stats.cid, stats.n_members, stats.cos_sum_micros, sums2.centroid_sums
 FROM stats JOIN sums2 USING (cid)
 """
@@ -989,23 +1007,11 @@ def sim_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_oracle() -> str:
-    cos = _ORACLE_COS
     return f"""
 WITH {_portable_c1_cte()},
-al AS (SELECT vec_id, cid FROM (
-    SELECT x.vec_id, c1.cid,
-           ROW_NUMBER() OVER (PARTITION BY x.vec_id
-             ORDER BY ROUND({cos.format(c='c1.c')}, 6) DESC, c1.cid) AS rn
-    FROM x CROSS JOIN c1) WHERE rn = 1),
+al AS ({_nearest_sql("x", "c1")}),
 q AS (SELECT vec_id AS query_id, v AS qv FROM x WHERE vec_id < {N_QUERIES}),
-probes AS (SELECT query_id, cid FROM (
-    SELECT q.query_id, c1.cid,
-           ROW_NUMBER() OVER (PARTITION BY q.query_id
-             ORDER BY ROUND(list_dot_product(q.qv, c1.c) /
-                            (sqrt(list_dot_product(q.qv, q.qv))
-                             * sqrt(list_dot_product(c1.c, c1.c))), 6)
-               DESC, c1.cid) AS rn
-    FROM q CROSS JOIN c1) WHERE rn <= {IVF_NPROBE}),
+probes AS ({_nearest_sql("q", "c1", IVF_NPROBE, "query_id", "qv")}),
 exact AS (SELECT q.query_id, al.vec_id AS cand_id,
                  ROUND(list_dot_product(q.qv, c.v) /
                        (sqrt(list_dot_product(q.qv, q.qv))
@@ -1093,15 +1099,16 @@ def index_ready(out: str, kind: str) -> bool:
     the completion marker with the CURRENT shape constants. A bare
     isdir() check would trust any pre-existing directory at the
     predictable temp path (foreign content, or a stale layout from an
-    older code version) wholesale."""
+    older code version) wholesale. A damaged marker (not JSON, or JSON
+    that is not an object) is not ready; an unreadable one raises."""
     marker = os.path.join(out, _INDEX_MARKER)
     if not os.path.isfile(marker):
         return False
-    try:
-        with open(marker) as fh:
+    with open(marker) as fh:
+        try:
             return json.load(fh).get("shape") == list(_index_shape(kind))
-    except Exception:
-        return False
+        except (ValueError, AttributeError):
+            return False
 
 
 def _publish_index(out: str, kind: str, write_fn) -> str:
@@ -1342,39 +1349,182 @@ def _drift_report(
     )
 
 
-def _ivf_incremental_oracle() -> str:
-    cos = _ORACLE_COS
-    cosm = f"CAST(FLOOR(ROUND({cos.format(c='c1.c')}, 6) * 1000000) AS BIGINT)"
+@dataclass(frozen=True)
+class _IndexFamily:
+    """One maintained ANN index family: its on-disk layout — every fact
+    the shared lifecycle (_append, _with_appends, _compact_index,
+    _retrain_swap, _open_append_stream) needs — and its drift
+    yardstick, from which the drift report, the cadence baseline, the
+    sim_*_cadence surface and the retrain trigger follow. The family's
+    math (encode, stats, artifact writer) stays in its own entry points
+    and is passed in as functions."""
+
+    kind: str  # _index_shape / marker key
+    ops: str  # public name prefix, for the heal-with messages
+    data: str  # base table dir
+    appends: str  # appended-bids dir
+    key: tuple  # dedup identity in compact
+    part: str  # partition column (both dirs), and its read-back type
+    part_type: str
+    stored: tuple  # columns compact keeps and _append reads back
+    served: tuple  # columns *_with_appends serves
+    checkpoint: str  # default stream checkpoint, inside the index dir
+    empty_stats: str  # DDL of an empty stats frame (empty-batch report)
+    # (stats column, sign of the bad direction) of a centroid family.
+    # None for LSH: its planes are data-independent, so its collision
+    # density drift has no train-vs-holdout gap to baseline.
+    yardstick: tuple[str, int] | None = None
+
+    def drift(self, base_stats: DataFrame, new_stats: DataFrame) -> DataFrame:
+        """The per-partition drift report of ``new_stats`` against the
+        build-time ``base_stats``."""
+        if self.yardstick is None:
+            return _lsh_drift_report(base_stats, new_stats)
+        return _drift_report(base_stats, new_stats, val=self.yardstick[0])
+
+
+_APPENDS = "appends"
+
+IVF = _IndexFamily(
+    kind="ivf",
+    ops="ivf",
+    data="lists",
+    appends=_APPENDS,
+    key=("vec_id",),
+    part="cid",
+    part_type="bigint",
+    stored=("vec_id", "embedding", "cid"),
+    served=("vec_id", "embedding", "cid"),
+    checkpoint="_append_ckpt",
+    empty_stats="cid bigint, n bigint, cos_sum_mu bigint",
+    yardstick=("cos_sum_mu", -1),  # lower mean cos = farther from the centroids
+)
+IVFPQ = _IndexFamily(
+    kind="ivfpq",
+    ops="ivfpq",
+    data="codes",
+    appends="code_appends",
+    key=("cand_id",),
+    part="cid",
+    part_type="bigint",
+    stored=("cand_id", "cid", "codes", "qerr"),
+    served=("cand_id", "cid", "codes"),  # serving needs only the codes
+    checkpoint="_code_append_ckpt",
+    empty_stats="cid bigint, n bigint, qerr_sum_mu bigint",
+    yardstick=("qerr_sum_mu", +1),  # higher qerr = the codebooks fit worse
+)
+# (vec_id, band): a vector owns one row per band.
+ANNLSH = _IndexFamily(
+    kind="annlsh",
+    ops="ann_lsh",
+    data="sigs",
+    appends=_APPENDS,
+    key=("vec_id", "band"),
+    part="band",
+    part_type="int",
+    stored=("vec_id", "band", "sig"),
+    served=("vec_id", "band", "sig"),
+    checkpoint="_sig_append_ckpt",
+    empty_stats="band bigint, n bigint, pair_sum bigint",
+)
+_FAMILIES = (IVF, IVFPQ, ANNLSH)
+
+
+def _diff_sql(key: str, val: str) -> str:
+    """The drift oracles' full-outer per-``key`` diff of the CTEs base
+    (key, n_base, base_<val>) and newb (key, n_new, new_<val>), an
+    empty side counting 0 — the join of _drift_report and
+    _lsh_drift_report."""
+    cols = ",\n       ".join(
+        f"CAST(COALESCE({c}, 0) AS BIGINT) AS {c}"
+        for c in ("n_base", "n_new", f"base_{val}", f"new_{val}")
+    )
+    return f"""SELECT CAST(COALESCE(base.{key}, newb.{key}) AS BIGINT) AS {key},
+       {cols}
+FROM base FULL JOIN newb ON base.{key} = newb.{key}"""
+
+
+def _split_sql() -> str:
+    """The incremental split in DuckDB: c1 trained on the standing half
+    (even vec_ids, _portable_c1_cte) and ax / axq over every vector."""
+    return f"""{_portable_c1_cte(where="WHERE vec_id % 2 = 0")},
+{_vectors_sql("ax", "axq")}"""
+
+
+def _incremental_oracle(fam: _IndexFamily, yv: str) -> str:
+    """A centroid family's drift-report oracle. ``yv`` is the CTE chain
+    after _split_sql that ends in yv (vec_id, cid, y): each vector's c1
+    cell and its yardstick summand. Even vec_ids are the training side,
+    odd ones the snapshot; drift_num_mu is _drift_report's
+    cross-multiply."""
+    val = fam.yardstick[0]
     return f"""
-WITH {_portable_c1_cte(where='WHERE vec_id % 2 = 0')},
-snap AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-         FROM embeddings WHERE vec_id % 2 = 1),
-ab AS (SELECT cid, cosm FROM (
-    SELECT x.vec_id, c1.cid, {cosm} AS cosm,
-           ROW_NUMBER() OVER (PARTITION BY x.vec_id
-             ORDER BY ROUND({cos.format(c='c1.c')}, 6) DESC, c1.cid) AS rn
-    FROM x CROSS JOIN c1) WHERE rn = 1),
-an AS (SELECT cid, cosm FROM (
-    SELECT x.vec_id, c1.cid, {cosm} AS cosm,
-           ROW_NUMBER() OVER (PARTITION BY x.vec_id
-             ORDER BY ROUND({cos.format(c='c1.c')}, 6) DESC, c1.cid) AS rn
-    FROM snap x CROSS JOIN c1) WHERE rn = 1),
-base AS (SELECT cid, COUNT(*) AS n_base,
-                CAST(SUM(cosm) AS BIGINT) AS base_cos_sum_mu
-         FROM ab GROUP BY cid),
-newb AS (SELECT cid, COUNT(*) AS n_new,
-                CAST(SUM(cosm) AS BIGINT) AS new_cos_sum_mu
-         FROM an GROUP BY cid)
-SELECT CAST(COALESCE(base.cid, newb.cid) AS BIGINT) AS cid,
-       CAST(COALESCE(n_base, 0) AS BIGINT) AS n_base,
-       CAST(COALESCE(n_new, 0) AS BIGINT) AS n_new,
-       CAST(COALESCE(base_cos_sum_mu, 0) AS BIGINT) AS base_cos_sum_mu,
-       CAST(COALESCE(new_cos_sum_mu, 0) AS BIGINT) AS new_cos_sum_mu,
-       CAST(COALESCE(new_cos_sum_mu, 0) * COALESCE(n_base, 0)
-            - COALESCE(base_cos_sum_mu, 0) * COALESCE(n_new, 0) AS BIGINT)
-         AS drift_num_mu
-FROM base FULL JOIN newb ON base.cid = newb.cid
+WITH {_split_sql()},
+{yv},
+base AS (SELECT cid, COUNT(*) AS n_base, CAST(SUM(y) AS BIGINT) AS base_{val}
+         FROM yv WHERE vec_id % 2 = 0 GROUP BY cid),
+newb AS (SELECT cid, COUNT(*) AS n_new, CAST(SUM(y) AS BIGINT) AS new_{val}
+         FROM yv WHERE vec_id % 2 = 1 GROUP BY cid),
+rep AS ({_diff_sql("cid", val)})
+SELECT *, CAST(new_{val} * n_base - base_{val} * n_new AS BIGINT) AS drift_num_mu
+FROM rep
 """
+
+
+def _centroid_incremental(
+    spark: SparkSession, sf_dir: str, fam: _IndexFamily, stats_for
+) -> DataFrame:
+    """sim_{ivf,ivfpq}_incremental: centroids trained on the STANDING
+    corpus (vec_id % 2 = 0); ``stats_for(corpus, cents)`` returns the
+    family's frame -> per-cid stats function, and the family's drift
+    report compares its stats of the snapshot (vec_id % 2 = 1) with
+    those of the corpus."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    corpus = emb.filter(F.col("vec_id") % 2 == 0)
+    snap = emb.filter(F.col("vec_id") % 2 == 1)
+    # localCheckpoint: consumed by both assignments' literal collects
+    # and broadcast joins (and IVFPQ's codebook seed slice) — without
+    # it the Lloyd training DAG would execute once per consumer
+    cents = portable_centroids(corpus).transform(local_checkpoint, eager=False)
+    stats = stats_for(corpus, cents)
+    return fam.drift(stats(corpus), stats(snap))
+
+
+def _mix_cadence(rep: DataFrame, fam: _IndexFamily) -> DataFrame:
+    """sim_{ivf,ivfpq}_cadence: a centroid family's drift report plus,
+    per cid, the exact-integer mix expectation mix_exp_mu = (n_new *
+    base_<y>) div n_base (0 for n_base = 0) and mix_gap_mu = new_<y> -
+    mix_exp_mu (see sim_ivf_cadence)."""
+    val = fam.yardstick[0]
+    exp_mu = F.when(F.col("n_base") == 0, F.lit(0)).otherwise(
+        F.expr(f"(n_new * base_{val}) div n_base")
+    )
+    return rep.select(
+        "*",
+        exp_mu.cast("bigint").alias("mix_exp_mu"),
+        (F.col(f"new_{val}") - exp_mu).cast("bigint").alias("mix_gap_mu"),
+    )
+
+
+def _cadence_oracle(fam: _IndexFamily, incremental: str) -> str:
+    """_mix_cadence's DuckDB twin over the family's incremental oracle
+    (DuckDB's // truncates toward zero like Spark's div)."""
+    val = fam.yardstick[0]
+    exp = f"CASE WHEN n_base = 0 THEN 0 ELSE (n_new * base_{val}) // n_base END"
+    return f"""
+WITH rep AS ({incremental})
+SELECT *, CAST({exp} AS BIGINT) AS mix_exp_mu,
+       CAST(new_{val} - ({exp}) AS BIGINT) AS mix_gap_mu
+FROM rep
+"""
+
+
+def _ivf_incremental_oracle() -> str:
+    return _incremental_oracle(
+        IVF,
+        f"""yv AS (SELECT vec_id, cid, CAST(FLOOR(cos6 * 1000000) AS BIGINT) AS y
+       FROM ({_nearest_sql("ax", "c1")}))""",
+    )
 
 
 @query("sim_ivf_incremental", _ivf_incremental_oracle())
@@ -1404,37 +1554,15 @@ def sim_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SCALEPROBE.json): 0.034 at 10x, 0.243 at 100x — the corpus
     passes are embarrassingly parallel and the sf0.1 base (n=2000) is
     per-job-overhead-dominated, the known ANN-operator shape."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    corpus = emb.filter(F.col("vec_id") % 2 == 0)
-    snap = emb.filter(F.col("vec_id") % 2 == 1)
-    # localCheckpoint: consumed by two assignments' literal collects
-    # and two broadcast joins — without it the Lloyd training DAG
-    # would execute four times (the sibling IVF sites' discipline)
-    cents = portable_centroids(corpus).transform(local_checkpoint, eager=False)
-    base_stats = _assign_cos_stats(
-        ivf_assign(corpus, cents, round_digits=6), cents
+    return _centroid_incremental(
+        spark, sf_dir, IVF,
+        lambda corpus, cents: lambda df: _assign_cos_stats(
+            ivf_assign(df, cents, round_digits=6), cents
+        ),
     )
-    new_stats = _assign_cos_stats(
-        ivf_assign(snap, cents, round_digits=6), cents
-    )
-    return _drift_report(base_stats, new_stats)
 
 
-def _ivf_cadence_oracle() -> str:
-    exp = (
-        "CASE WHEN n_base = 0 THEN 0"
-        " ELSE (n_new * base_cos_sum_mu) // n_base END"
-    )
-    return f"""
-WITH rep AS ({_ivf_incremental_oracle()})
-SELECT cid, n_base, n_new, base_cos_sum_mu, new_cos_sum_mu, drift_num_mu,
-       CAST({exp} AS BIGINT) AS mix_exp_mu,
-       CAST(new_cos_sum_mu - ({exp}) AS BIGINT) AS mix_gap_mu
-FROM rep
-"""
-
-
-@query("sim_ivf_cadence", _ivf_cadence_oracle())
+@query("sim_ivf_cadence", _cadence_oracle(IVF, _ivf_incremental_oracle()))
 def sim_ivf_cadence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The retrain-cadence arithmetic as a driver-checkable surface —
     sim_ivf_incremental's drift report extended with the EXACT-integer
@@ -1466,83 +1594,30 @@ def sim_ivf_cadence(spark: SparkSession, sf_dir: str) -> DataFrame:
     literal-argmax assignments + map-side-combined per-cid sums; the
     only exchange carries K-cardinality rows) plus a K-row
     projection."""
-    rep = sim_ivf_incremental(spark, sf_dir)
-    exp_mu = F.when(F.col("n_base") == 0, F.lit(0)).otherwise(
-        F.expr("(n_new * base_cos_sum_mu) div n_base")
-    )
-    return rep.select(
-        "cid",
-        "n_base",
-        "n_new",
-        "base_cos_sum_mu",
-        "new_cos_sum_mu",
-        "drift_num_mu",
-        exp_mu.cast("bigint").alias("mix_exp_mu"),
-        (F.col("new_cos_sum_mu") - exp_mu).cast("bigint").alias("mix_gap_mu"),
-    )
+    return _mix_cadence(sim_ivf_incremental(spark, sf_dir), IVF)
+
+
+def _refit_sql() -> str:
+    """The retrain oracles' union refit after _split_sql: old (vec_id,
+    old_cid), each vector's label in the standing c1 space; c2,
+    portable_centroids re-run on every vector; and a2 (vec_id, cid,
+    cos6), the re-assignment into c2 — the train-from-scratch replay a
+    retrain must equal."""
+    return f"""{_split_sql()},
+old AS (SELECT vec_id, cid AS old_cid FROM ({_nearest_sql("ax", "c1")})),
+{_lloyd_sql("ax", "axq", "c2")},
+a2 AS ({_nearest_sql("ax", "c2")})"""
 
 
 def _ivf_retrain_oracle() -> str:
-    cos_c1 = (
-        "list_dot_product(ax.v, c1.c) / "
-        "(sqrt(list_dot_product(ax.v, ax.v)) * "
-        "sqrt(list_dot_product(c1.c, c1.c)))"
-    )
-    cos_ks2 = (
-        "list_dot_product(ax.v, s.c) / "
-        "(sqrt(list_dot_product(ax.v, ax.v)) * "
-        "sqrt(list_dot_product(s.c, s.c)))"
-    )
-    cos_c2 = (
-        "list_dot_product(ax.v, c2.c) / "
-        "(sqrt(list_dot_product(ax.v, ax.v)) * "
-        "sqrt(list_dot_product(c2.c, c2.c)))"
-    )
     return f"""
-WITH {_portable_c1_cte(where="WHERE vec_id % 2 = 0")},
-ax AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-axq AS (SELECT vec_id,
-               list_transform(v, e -> CAST(FLOOR(e * 1000000) AS BIGINT)) AS vq
-        FROM ax),
-old AS (SELECT vec_id, cid AS old_cid FROM (
-    SELECT ax.vec_id, c1.cid,
-           ROW_NUMBER() OVER (PARTITION BY ax.vec_id
-             ORDER BY ROUND({cos_c1}, 6) DESC, c1.cid) AS rn
-    FROM ax CROSS JOIN c1) WHERE rn = 1),
-ks2 AS (SELECT vec_id AS cid, v AS c FROM ax ORDER BY vec_id LIMIT {IVF_K}),
-b1 AS (SELECT vec_id, cid FROM (
-    SELECT ax.vec_id, s.cid,
-           ROW_NUMBER() OVER (PARTITION BY ax.vec_id
-             ORDER BY ROUND({cos_ks2}, 6) DESC, s.cid) AS rn
-    FROM ax CROSS JOIN ks2 s) WHERE rn = 1),
-cellsb AS (SELECT b1.cid, t.i AS pos, SUM(axq.vq[t.i + 1]) AS s
-           FROM b1 JOIN axq USING (vec_id)
-           CROSS JOIN (SELECT UNNEST(range(0, {DIM})) AS i) t
-           GROUP BY b1.cid, t.i),
-nb AS (SELECT cid, COUNT(*) AS n FROM b1 GROUP BY cid),
-c2 AS (SELECT c.cid,
-              list(CAST(c.s AS DOUBLE) / CAST(n.n * 1000000 AS DOUBLE)
-                   ORDER BY c.pos) AS c
-       FROM cellsb c JOIN nb n USING (cid) GROUP BY c.cid),
-a2 AS (SELECT vec_id, cid FROM (
-    SELECT ax.vec_id, c2.cid,
-           ROW_NUMBER() OVER (PARTITION BY ax.vec_id
-             ORDER BY ROUND({cos_c2}, 6) DESC, c2.cid) AS rn
-    FROM ax CROSS JOIN c2) WHERE rn = 1),
-stats AS (SELECT a2.cid, COUNT(*) AS n_members,
-                 CAST(SUM(CAST(FLOOR(ROUND({cos_c2}, 6) * 1000000) AS BIGINT))
-                      AS BIGINT) AS cos_sum_micros,
-                 CAST(SUM(CAST(a2.cid <> old.old_cid AS INTEGER)) AS BIGINT)
-                   AS n_moved
-          FROM a2 JOIN ax USING (vec_id) JOIN c2 USING (cid)
-               JOIN old USING (vec_id)
-          GROUP BY a2.cid),
-cells2 AS (SELECT a2.cid, t.i AS pos, SUM(axq.vq[t.i + 1]) AS s
-           FROM a2 JOIN axq USING (vec_id)
-           CROSS JOIN (SELECT UNNEST(range(0, {DIM})) AS i) t
-           GROUP BY a2.cid, t.i),
-sums2 AS (SELECT cid, array_to_string(list(s ORDER BY pos), ',') AS centroid_sums
-          FROM cells2 GROUP BY cid)
+WITH {_refit_sql()},
+stats AS (SELECT cid, COUNT(*) AS n_members,
+                 CAST(SUM(CAST(FLOOR(cos6 * 1000000) AS BIGINT)) AS BIGINT)
+                   AS cos_sum_micros,
+                 CAST(SUM(CAST(cid <> old_cid AS INTEGER)) AS BIGINT) AS n_moved
+          FROM a2 JOIN old USING (vec_id) GROUP BY cid),
+{_sums_sql("a2", "axq")}
 SELECT stats.cid, stats.n_members, stats.cos_sum_micros, stats.n_moved,
        sums2.centroid_sums
 FROM stats JOIN sums2 USING (cid)
@@ -1641,81 +1716,6 @@ def sim_ivf_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EPOCH_FILE = "compact.epoch"
 _CADENCE_BASELINE = "cadence_baseline"
 _FOLDED_HWM = "folded.hwm"
-
-
-@dataclass(frozen=True)
-class _IndexFamily:
-    """The on-disk layout of one maintained ANN index family — every
-    fact the shared lifecycle (_append, _with_appends, _compact_index,
-    _retrain_swap, _open_append_stream) needs, and nothing else. The
-    family's math (encode, stats, artifact writer) stays in its own
-    entry points and is passed in as functions."""
-
-    kind: str  # _index_shape / marker key
-    ops: str  # public name prefix, for the heal-with messages
-    data: str  # base table dir
-    appends: str  # appended-bids dir
-    key: tuple  # dedup identity in compact
-    part: str  # partition column (both dirs), and its read-back type
-    part_type: str
-    stored: tuple  # columns compact keeps and _append reads back
-    served: tuple  # columns *_with_appends serves
-    checkpoint: str  # default stream checkpoint, inside the index dir
-    empty_stats: str  # DDL of an empty stats frame (empty-batch report)
-    drift: Callable  # (base_stats, new_stats) -> drift report
-    records_baseline: bool  # appends record the cadence baseline
-
-
-_APPENDS = "appends"
-
-IVF = _IndexFamily(
-    kind="ivf",
-    ops="ivf",
-    data="lists",
-    appends=_APPENDS,
-    key=("vec_id",),
-    part="cid",
-    part_type="bigint",
-    stored=("vec_id", "embedding", "cid"),
-    served=("vec_id", "embedding", "cid"),
-    checkpoint="_append_ckpt",
-    empty_stats="cid bigint, n bigint, cos_sum_mu bigint",
-    drift=_drift_report,
-    records_baseline=True,
-)
-IVFPQ = _IndexFamily(
-    kind="ivfpq",
-    ops="ivfpq",
-    data="codes",
-    appends="code_appends",
-    key=("cand_id",),
-    part="cid",
-    part_type="bigint",
-    stored=("cand_id", "cid", "codes", "qerr"),
-    served=("cand_id", "cid", "codes"),  # serving needs only the codes
-    checkpoint="_code_append_ckpt",
-    empty_stats="cid bigint, n bigint, qerr_sum_mu bigint",
-    drift=lambda base, new: _drift_report(base, new, val="qerr_sum_mu"),
-    records_baseline=True,
-)
-# (vec_id, band): a vector owns one row per band. No cadence baseline:
-# the planes are data-independent, so there is no train-vs-holdout gap.
-ANNLSH = _IndexFamily(
-    kind="annlsh",
-    ops="ann_lsh",
-    data="sigs",
-    appends=_APPENDS,
-    key=("vec_id", "band"),
-    part="band",
-    part_type="int",
-    stored=("vec_id", "band", "sig"),
-    served=("vec_id", "band", "sig"),
-    checkpoint="_sig_append_ckpt",
-    empty_stats="band bigint, n bigint, pair_sum bigint",
-    drift=lambda base, new: _lsh_drift_report(base, new),
-    records_baseline=False,
-)
-_FAMILIES = (IVF, IVFPQ, ANNLSH)
 
 
 def _project(df: DataFrame, fam: _IndexFamily, cols: tuple) -> DataFrame:
@@ -1981,7 +1981,7 @@ def _append(
     # under the bid directory)
     landed = _project(spark.read.parquet(bid_dir), fam, fam.stored)
     rep = fam.drift(base_stats, stats(landed))
-    if fam.records_baseline:
+    if fam.yardstick is not None:
         # one eager K-row job, once per index lifetime
         _maybe_record_cadence_baseline(index_dir, rep, batch_id)
     return rep
@@ -2261,9 +2261,7 @@ def run_incremental_ivf_stream(
             if base_rel is None:
                 bl = load_cadence_baseline(spark, index_dir)
                 if bl is not None:
-                    base_rel = _centroid_retrain_due(bl, "cos_sum_mu", -1)[
-                        "rel_drift"
-                    ]
+                    base_rel = ivf_retrain_due(bl)["rel_drift"]
             if ivf_retrain_due(rep, baseline_rel=base_rel)["due"]:
                 ivf_retrain(spark, index_dir)
                 reopen()  # append against the refreshed centroids + epoch
@@ -3113,13 +3111,7 @@ base AS (SELECT band, n AS n_base, pair_sum AS base_pair_sum
          FROM stats WHERE half = 0),
 newb AS (SELECT band, n AS n_new, pair_sum AS new_pair_sum
          FROM stats WHERE half = 1),
-joined AS (
-  SELECT CAST(COALESCE(base.band, newb.band) AS BIGINT) AS band,
-         CAST(COALESCE(n_base, 0) AS BIGINT) AS n_base,
-         CAST(COALESCE(n_new, 0) AS BIGINT) AS n_new,
-         CAST(COALESCE(base_pair_sum, 0) AS BIGINT) AS base_pair_sum,
-         CAST(COALESCE(new_pair_sum, 0) AS BIGINT) AS new_pair_sum
-  FROM base FULL JOIN newb ON base.band = newb.band)
+joined AS ({_diff_sql("band", "pair_sum")})
 -- split-division density in exact integer micro-units (overflow-free:
 -- every intermediate < 2^63; DuckDB's // truncates toward zero just
 -- like Spark's div — measured: DuckDB does NOT floor — and the
@@ -3238,12 +3230,13 @@ DRIFT_REL_FLOOR = 0.01
 
 def _centroid_retrain_due(
     report: DataFrame,
-    val: str,
-    sign: int,
+    fam: _IndexFamily,
     baseline: DataFrame | None = None,
+    index_dir: str | None = None,
     baseline_rel: float | None = None,
 ) -> dict:
-    """Shared cadence aggregate for the two centroid families. The
+    """Shared cadence aggregate for the two centroid families, read from
+    the report's base_<y> / new_<y> columns of ``fam.yardstick``. The
     calibration question is "how much relative drift is DIFFERENT, not
     noise?", and the build-time yardstick answers it about itself: the
     n-weighted cross-cid spread (coefficient of variation) of the
@@ -3281,11 +3274,16 @@ def _centroid_retrain_due(
       both). Passing the FIRST post-build append's report as
       ``baseline`` cancels the gap exactly (both holdout batches
       carry it): the alarm then fires on rel_drift(report) -
-      rel_drift(baseline). Without a baseline the raw comparison is
-      conservative — it over-fires by the optimism gap — which the
-      runbook documents as the single-report fallback. (LSH needs no
-      analog: its planes are data-independent, so its drift report
-      has no train-vs-holdout bias.)
+      rel_drift(baseline). For a maintained index pass ``index_dir``
+      instead: with ``baseline=None`` the index-owned persisted copy
+      (<index>/cadence_baseline, recorded by the first post-build
+      append) is read, so a restarted monitor reaches the same verdict
+      as the process that observed the first append. Without a
+      baseline the raw comparison is conservative — it over-fires by
+      the optimism gap — which the runbook documents as the
+      single-report fallback. (LSH needs no analog: its planes are
+      data-independent, so its drift report has no train-vs-holdout
+      bias.)
 
     rel_drift = sum_c(new_sum_c) / sum_c(n_new_c * base_sum_c/n_base_c) - 1
     over the n_base > 0 cells; threshold = max(cv_base,
@@ -3293,18 +3291,21 @@ def _centroid_retrain_due(
     cv_base^2 = sum_c n_c (m_c - M)^2 / (N M^2)
               = (sum_c S_c^2/n_c - S^2/N) * N / S^2
     from the per-cid sums S_c the report already carries — no second
-    pass over the stats. ``sign`` orients the alarm: -1 for the IVF cos
-    yardstick (lower = farther from the centroids), +1 for the IVFPQ
-    qerr yardstick (higher = quantizes worse)."""
+    pass over the stats. The yardstick's sign orients the alarm: -1 for
+    the IVF cos yardstick (lower = farther from the centroids), +1 for
+    the IVFPQ qerr yardstick (higher = quantizes worse)."""
     # baseline_rel: the baseline report's rel_drift, precomputed — the
     # caching hook for hot paths (a per-batch monitor would otherwise
     # re-aggregate the write-once persisted baseline on every batch).
     # Takes precedence over re-deriving from ``baseline``.
+    val, sign = fam.yardstick
+    if baseline is None and baseline_rel is None and index_dir is not None:
+        baseline = load_cadence_baseline(report.sparkSession, index_dir)
     base_rel = 0.0
     if baseline_rel is not None:
         base_rel = float(baseline_rel)
     elif baseline is not None:
-        base_rel = _centroid_retrain_due(baseline, val, sign)["rel_drift"]
+        base_rel = _centroid_retrain_due(baseline, fam)["rel_drift"]
     in_base = F.col("n_base") > 0
     m = (
         report.agg(
@@ -3382,22 +3383,14 @@ def ivf_retrain_due(
     post-build append's report as ``baseline`` (cancels the
     train-vs-holdout optimism gap — see _centroid_retrain_due; without
     it the trigger is conservative by that gap, ~16% mean cos on the
-    sf0.1 fixtures). For a maintained index pass ``index_dir``
-    instead: with ``baseline=None`` the trigger reads the index-owned
-    persisted copy (ivf_append records the first post-build append's
-    report under <index>/cadence_baseline), so a restarted monitor
-    process reaches the same verdict as the one that observed the
-    first append. Fires when the batch's mix-adjusted mean
-    cosine-to-assigned-centroid falls below the baseline's by more
+    sf0.1 fixtures), or the maintained ``index_dir`` whose persisted
+    baseline ivf_append recorded. Fires when the batch's mix-adjusted
+    mean cosine-to-assigned-centroid falls below the baseline's by more
     than the training space's own cross-cid spread (NEGATIVE drift =
     farther from the frozen centroids). Returns {due, rel_drift,
     baseline_rel_drift, rel_vs_baseline, threshold}; runbook:
     MAINTENANCE.md."""
-    if baseline is None and baseline_rel is None and index_dir is not None:
-        baseline = load_cadence_baseline(report.sparkSession, index_dir)
-    return _centroid_retrain_due(
-        report, "cos_sum_mu", -1, baseline, baseline_rel
-    )
+    return _centroid_retrain_due(report, IVF, baseline, index_dir, baseline_rel)
 
 
 def ivfpq_retrain_due(
@@ -3410,22 +3403,14 @@ def ivfpq_retrain_due(
     ivfpq_append / sim_ivfpq_incremental drift report, plus the FIRST
     post-build append's report as ``baseline`` (cancels the
     train-vs-holdout optimism gap, ~4% mean qerr on the sf0.1
-    fixtures; see _centroid_retrain_due). For a maintained index pass
-    ``index_dir`` instead: with ``baseline=None`` the trigger reads
-    the index-owned persisted copy (ivfpq_append records the first
-    post-build append's report under <index>/cadence_baseline), so a
-    restarted monitor process reaches the same verdict as the one
-    that observed the first append. Fires when the batch's
-    mix-adjusted mean quantization error exceeds the baseline's by
-    more than the training space's own cross-cid spread (POSITIVE
-    drift = the frozen codebooks fit the new vectors worse). Returns
-    {due, rel_drift, baseline_rel_drift, rel_vs_baseline, threshold};
-    runbook: MAINTENANCE.md."""
-    if baseline is None and baseline_rel is None and index_dir is not None:
-        baseline = load_cadence_baseline(report.sparkSession, index_dir)
-    return _centroid_retrain_due(
-        report, "qerr_sum_mu", +1, baseline, baseline_rel
-    )
+    fixtures; see _centroid_retrain_due), or the maintained
+    ``index_dir`` whose persisted baseline ivfpq_append recorded.
+    Fires when the batch's mix-adjusted mean quantization error
+    exceeds the baseline's by more than the training space's own
+    cross-cid spread (POSITIVE drift = the frozen codebooks fit the new
+    vectors worse). Returns {due, rel_drift, baseline_rel_drift,
+    rel_vs_baseline, threshold}; runbook: MAINTENANCE.md."""
+    return _centroid_retrain_due(report, IVFPQ, baseline, index_dir, baseline_rel)
 
 
 def lsh_retrain_due(report: DataFrame, ratio: float = 2.0) -> dict:
@@ -4091,24 +4076,49 @@ def pq_decode_expr(books: np.ndarray) -> F.Column:
     )
 
 
+def _pq_argmin_sql(src: str, col: str) -> str:
+    """(vec_id, m, k, d2): per vector of ``src`` and subspace m, the
+    winning code k among the bseeds (k, <col>) codebook rows and its
+    integer L2² d2, ties to the lowest code — pq_encode_qerr's argmin."""
+    d_sub = DIM // PQ_M
+    diff = f"(r.{col}[t.m * {d_sub} + j] - s.{col}[t.m * {d_sub} + j])"
+    d2 = f"list_sum(list_transform(range(1, {d_sub + 1}), j -> {diff} * {diff}))"
+    return f"""SELECT vec_id, m, k, d2 FROM (
+    SELECT r.vec_id, t.m, s.k, {d2} AS d2,
+           ROW_NUMBER() OVER (PARTITION BY r.vec_id, t.m ORDER BY {d2} ASC, s.k ASC) AS rn
+    FROM {src} r CROSS JOIN (SELECT UNNEST(range(0, {PQ_M})) AS m) t
+    CROSS JOIN bseeds s) WHERE rn = 1"""
+
+
+def _residual_sql(assign: str, x: str, cents: str, seeds_where: str = "") -> str:
+    """CTEs res (vec_id, cid, rq): each vector of the assignment
+    ``assign`` minus its ``cents`` centroid as micro-unit ints
+    (_residuals), and bseeds (k, rq): the PQ_KS lowest vec_ids'
+    residuals, the codebook pq_codebooks seeds."""
+    return f"""res AS (SELECT a.vec_id, a.cid,
+               list_transform(range(1, {DIM + 1}),
+                 j -> CAST(FLOOR((x.v[j] - c.c[j]) * 1000000) AS BIGINT)) AS rq
+        FROM {assign} a JOIN {x} x USING (vec_id) JOIN {cents} c USING (cid)),
+bseeds AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS k, rq
+           FROM res {seeds_where} ORDER BY vec_id LIMIT {PQ_KS})"""
+
+
+def _pq_qerr_sql() -> str:
+    """CTE yv (vec_id, cid, y): each res row's quantization error
+    against the bseeds codebook in micro-units of squared L2 — the
+    qerr DIV 1e6 summand of _qerr_stats."""
+    return f"""yv AS (SELECT vec_id, cid, CAST(SUM(d2) AS BIGINT) // 1000000 AS y
+       FROM ({_pq_argmin_sql("res", "rq")}) JOIN res USING (vec_id)
+       GROUP BY vec_id, cid)"""
+
+
 def _pq_oracle() -> str:
     d_sub = DIM // PQ_M
     return f"""
-WITH x AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-xq AS (SELECT vec_id,
-              list_transform(v, e -> CAST(FLOOR(e * 1000000) AS BIGINT)) AS vq
-       FROM x),
+WITH {_vectors_sql("x", "xq")},
 bseeds AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS k, vq
            FROM xq ORDER BY vec_id LIMIT {PQ_KS}),
-enc AS (SELECT vec_id, m, k FROM (
-    SELECT xq.vec_id, t.m, s.k,
-           ROW_NUMBER() OVER (PARTITION BY xq.vec_id, t.m
-             ORDER BY list_sum(list_transform(range(1, {d_sub + 1}),
-               j -> (xq.vq[t.m * {d_sub} + j] - s.vq[t.m * {d_sub} + j])
-                  * (xq.vq[t.m * {d_sub} + j] - s.vq[t.m * {d_sub} + j])))
-               ASC, s.k ASC) AS rn
-    FROM xq CROSS JOIN (SELECT UNNEST(range(0, {PQ_M})) AS m) t
-    CROSS JOIN bseeds s) WHERE rn = 1),
+enc AS ({_pq_argmin_sql("xq", "vq")}),
 dec AS (SELECT e.vec_id,
                list(CAST(s.vq[e.m * {d_sub} + t.j] AS DOUBLE) / 1000000.0
                     ORDER BY e.m * {d_sub} + t.j) AS d
@@ -4204,26 +4214,9 @@ def _ivfpq_oracle() -> str:
     d_sub = DIM // PQ_M
     return f"""
 WITH {_portable_c1_cte()},
-al AS (SELECT vec_id, cid FROM (
-    SELECT x.vec_id, c1.cid,
-           ROW_NUMBER() OVER (PARTITION BY x.vec_id
-             ORDER BY ROUND({_ORACLE_COS.format(c='c1.c')}, 6) DESC, c1.cid) AS rn
-    FROM x CROSS JOIN c1) WHERE rn = 1),
-res AS (SELECT al.vec_id, al.cid,
-               list_transform(range(1, {DIM + 1}),
-                 j -> CAST(FLOOR((x.v[j] - c1.c[j]) * 1000000) AS BIGINT)) AS rq
-        FROM al JOIN x USING (vec_id) JOIN c1 USING (cid)),
-bseeds AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS k, rq
-           FROM res ORDER BY vec_id LIMIT {PQ_KS}),
-enc AS (SELECT vec_id, m, k FROM (
-    SELECT r.vec_id, t.m, s.k,
-           ROW_NUMBER() OVER (PARTITION BY r.vec_id, t.m
-             ORDER BY list_sum(list_transform(range(1, {d_sub + 1}),
-               j -> (r.rq[t.m * {d_sub} + j] - s.rq[t.m * {d_sub} + j])
-                  * (r.rq[t.m * {d_sub} + j] - s.rq[t.m * {d_sub} + j])))
-               ASC, s.k ASC) AS rn
-    FROM res r CROSS JOIN (SELECT UNNEST(range(0, {PQ_M})) AS m) t
-    CROSS JOIN bseeds s) WHERE rn = 1),
+al AS ({_nearest_sql("x", "c1")}),
+{_residual_sql("al", "x", "c1")},
+enc AS ({_pq_argmin_sql("res", "rq")}),
 decq AS (SELECT e.vec_id,
                 list(s.rq[e.m * {d_sub} + t.j] ORDER BY e.m * {d_sub} + t.j) AS dq
          FROM enc e JOIN bseeds s USING (k)
@@ -4234,14 +4227,7 @@ cq AS (SELECT cid,
        FROM c1),
 q AS (SELECT x.vec_id AS query_id, x.v AS qv, xq.vq AS qq
       FROM x JOIN xq USING (vec_id) WHERE x.vec_id < {N_QUERIES}),
-probes AS (SELECT query_id, cid FROM (
-    SELECT q.query_id, c1.cid,
-           ROW_NUMBER() OVER (PARTITION BY q.query_id
-             ORDER BY ROUND(list_dot_product(q.qv, c1.c) /
-                            (sqrt(list_dot_product(q.qv, q.qv))
-                             * sqrt(list_dot_product(c1.c, c1.c))), 6)
-               DESC, c1.cid) AS rn
-    FROM q CROSS JOIN c1) WHERE rn <= {IVF_NPROBE}),
+probes AS ({_nearest_sql("q", "c1", IVF_NPROBE, "query_id", "qv")}),
 approx AS (SELECT q.query_id, r.vec_id AS cand_id,
                   CAST(list_sum(list_transform(range(1, {DIM + 1}),
                     j -> q.qq[j] * (cq.cq[j] + d.dq[j]))) AS BIGINT) AS ip
@@ -4577,55 +4563,12 @@ def _load_books_q(spark: SparkSession, index_dir: str) -> np.ndarray:
 
 
 def _ivfpq_incremental_oracle() -> str:
-    d_sub = DIM // PQ_M
-    d2 = (
-        f"list_sum(list_transform(range(1, {d_sub + 1}), "
-        f"j -> (r.rq[t.m * {d_sub} + j] - s.rq[t.m * {d_sub} + j])"
-        f" * (r.rq[t.m * {d_sub} + j] - s.rq[t.m * {d_sub} + j])))"
+    return _incremental_oracle(
+        IVFPQ,
+        f"""al AS ({_nearest_sql("ax", "c1")}),
+{_residual_sql("al", "ax", "c1", "WHERE vec_id % 2 = 0")},
+{_pq_qerr_sql()}""",
     )
-    return f"""
-WITH {_portable_c1_cte(where='WHERE vec_id % 2 = 0')},
-snap AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-         FROM embeddings WHERE vec_id % 2 = 1),
-allv AS (SELECT vec_id, v FROM x UNION ALL SELECT vec_id, v FROM snap),
-al AS (SELECT vec_id, cid FROM (
-    SELECT x.vec_id, c1.cid,
-           ROW_NUMBER() OVER (PARTITION BY x.vec_id
-             ORDER BY ROUND({_ORACLE_COS.format(c='c1.c')}, 6) DESC, c1.cid)
-             AS rn
-    FROM allv x CROSS JOIN c1) WHERE rn = 1),
-res AS (SELECT al.vec_id, al.cid,
-               list_transform(range(1, {DIM + 1}),
-                 j -> CAST(FLOOR((x.v[j] - c1.c[j]) * 1000000) AS BIGINT))
-                 AS rq
-        FROM al JOIN allv x USING (vec_id) JOIN c1 USING (cid)),
-bseeds AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS k, rq
-           FROM res WHERE vec_id % 2 = 0 ORDER BY vec_id LIMIT {PQ_KS}),
-mind AS (SELECT vec_id, cid, d2 FROM (
-    SELECT r.vec_id, r.cid, t.m, {d2} AS d2,
-           ROW_NUMBER() OVER (PARTITION BY r.vec_id, t.m
-             ORDER BY {d2} ASC, s.k ASC) AS rn
-    FROM res r CROSS JOIN (SELECT UNNEST(range(0, {PQ_M})) AS m) t
-    CROSS JOIN bseeds s) WHERE rn = 1),
-qerr AS (SELECT vec_id, cid,
-                CAST(SUM(d2) AS BIGINT) // 1000000 AS qmu
-         FROM mind GROUP BY vec_id, cid),
-base AS (SELECT cid, COUNT(*) AS n_base,
-                CAST(SUM(qmu) AS BIGINT) AS base_qerr_sum_mu
-         FROM qerr WHERE vec_id % 2 = 0 GROUP BY cid),
-newb AS (SELECT cid, COUNT(*) AS n_new,
-                CAST(SUM(qmu) AS BIGINT) AS new_qerr_sum_mu
-         FROM qerr WHERE vec_id % 2 = 1 GROUP BY cid)
-SELECT CAST(COALESCE(base.cid, newb.cid) AS BIGINT) AS cid,
-       CAST(COALESCE(n_base, 0) AS BIGINT) AS n_base,
-       CAST(COALESCE(n_new, 0) AS BIGINT) AS n_new,
-       CAST(COALESCE(base_qerr_sum_mu, 0) AS BIGINT) AS base_qerr_sum_mu,
-       CAST(COALESCE(new_qerr_sum_mu, 0) AS BIGINT) AS new_qerr_sum_mu,
-       CAST(COALESCE(new_qerr_sum_mu, 0) * COALESCE(n_base, 0)
-            - COALESCE(base_qerr_sum_mu, 0) * COALESCE(n_new, 0) AS BIGINT)
-         AS drift_num_mu
-FROM base FULL JOIN newb ON base.cid = newb.cid
-"""
 
 
 @query("sim_ivfpq_incremental", _ivfpq_incremental_oracle())
@@ -4654,44 +4597,22 @@ def sim_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot never touches the standing codes — yesterday's 4-byte
     codes are never re-encoded, the dd_incremental story for the
     compressed index."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    corpus = emb.filter(F.col("vec_id") % 2 == 0)
-    snap = emb.filter(F.col("vec_id") % 2 == 1)
-    # localCheckpoint: consumed by two assignments' literal collects,
-    # two broadcast joins, and the codebook seed slice (the
-    # sim_ivf_incremental discipline — without it the Lloyd DAG
-    # re-executes per consumer)
-    cents = portable_centroids(corpus).transform(local_checkpoint, eager=False)
-    books_q = quantize_books(
-        pq_codebooks(
-            _residuals(corpus.orderBy("vec_id").limit(PQ_KS), cents),
-            emb_col="residual",
+
+    def stats_for(corpus: DataFrame, cents: DataFrame):
+        books_q = quantize_books(
+            pq_codebooks(
+                _residuals(corpus.orderBy("vec_id").limit(PQ_KS), cents),
+                emb_col="residual",
+            )
         )
-    )
-    base_stats = _qerr_stats(
-        pq_encode_qerr(_residuals(corpus, cents), books_q, emb_col="residual")
-    )
-    new_stats = _qerr_stats(
-        pq_encode_qerr(_residuals(snap, cents), books_q, emb_col="residual")
-    )
-    return _drift_report(base_stats, new_stats, val="qerr_sum_mu")
+        return lambda df: _qerr_stats(
+            pq_encode_qerr(_residuals(df, cents), books_q, emb_col="residual")
+        )
+
+    return _centroid_incremental(spark, sf_dir, IVFPQ, stats_for)
 
 
-def _ivfpq_cadence_oracle() -> str:
-    exp = (
-        "CASE WHEN n_base = 0 THEN 0"
-        " ELSE (n_new * base_qerr_sum_mu) // n_base END"
-    )
-    return f"""
-WITH rep AS ({_ivfpq_incremental_oracle()})
-SELECT cid, n_base, n_new, base_qerr_sum_mu, new_qerr_sum_mu, drift_num_mu,
-       CAST({exp} AS BIGINT) AS mix_exp_mu,
-       CAST(new_qerr_sum_mu - ({exp}) AS BIGINT) AS mix_gap_mu
-FROM rep
-"""
-
-
-# Built and locally oracle-proven; not yet registered with the driver.
+@query("sim_ivfpq_cadence", _cadence_oracle(IVFPQ, _ivfpq_incremental_oracle()))
 def sim_ivfpq_cadence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """sim_ivf_cadence's qerr twin for the compressed family — the
     third and last retrain trigger's arithmetic as a driver-checkable
@@ -4719,20 +4640,7 @@ def sim_ivfpq_cadence(spark: SparkSession, sf_dir: str) -> DataFrame:
     literal-argmax assignments + two narrow Arrow encode passes +
     map-side-combined per-cid sums; the only exchange carries
     K-cardinality rows) plus a K-row integer projection."""
-    rep = sim_ivfpq_incremental(spark, sf_dir)
-    exp_mu = F.when(F.col("n_base") == 0, F.lit(0)).otherwise(
-        F.expr("(n_new * base_qerr_sum_mu) div n_base")
-    )
-    return rep.select(
-        "cid",
-        "n_base",
-        "n_new",
-        "base_qerr_sum_mu",
-        "new_qerr_sum_mu",
-        "drift_num_mu",
-        exp_mu.cast("bigint").alias("mix_exp_mu"),
-        (F.col("new_qerr_sum_mu") - exp_mu).cast("bigint").alias("mix_gap_mu"),
-    )
+    return _mix_cadence(sim_ivfpq_incremental(spark, sf_dir), IVFPQ)
 
 
 def ivfpq_append(
@@ -4877,79 +4785,16 @@ def ivfpq_retrain(
 
 
 def _ivfpq_retrain_oracle() -> str:
-    d_sub = DIM // PQ_M
-    cos_c1 = (
-        "list_dot_product(ax.v, c1.c) / "
-        "(sqrt(list_dot_product(ax.v, ax.v)) * "
-        "sqrt(list_dot_product(c1.c, c1.c)))"
-    )
-    cos_ks2 = (
-        "list_dot_product(ax.v, s.c) / "
-        "(sqrt(list_dot_product(ax.v, ax.v)) * "
-        "sqrt(list_dot_product(s.c, s.c)))"
-    )
-    cos_c2 = (
-        "list_dot_product(ax.v, c2.c) / "
-        "(sqrt(list_dot_product(ax.v, ax.v)) * "
-        "sqrt(list_dot_product(c2.c, c2.c)))"
-    )
-    d2 = (
-        f"list_sum(list_transform(range(1, {d_sub + 1}), "
-        f"j -> (r.rq[t.m * {d_sub} + j] - s.rq[t.m * {d_sub} + j])"
-        f" * (r.rq[t.m * {d_sub} + j] - s.rq[t.m * {d_sub} + j])))"
-    )
     return f"""
-WITH {_portable_c1_cte(where="WHERE vec_id % 2 = 0")},
-ax AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-old AS (SELECT vec_id, cid AS old_cid FROM (
-    SELECT ax.vec_id, c1.cid,
-           ROW_NUMBER() OVER (PARTITION BY ax.vec_id
-             ORDER BY ROUND({cos_c1}, 6) DESC, c1.cid) AS rn
-    FROM ax CROSS JOIN c1) WHERE rn = 1),
-ks2 AS (SELECT vec_id AS cid, v AS c FROM ax ORDER BY vec_id LIMIT {IVF_K}),
-b1 AS (SELECT vec_id, cid FROM (
-    SELECT ax.vec_id, s.cid,
-           ROW_NUMBER() OVER (PARTITION BY ax.vec_id
-             ORDER BY ROUND({cos_ks2}, 6) DESC, s.cid) AS rn
-    FROM ax CROSS JOIN ks2 s) WHERE rn = 1),
-axq2 AS (SELECT vec_id,
-                list_transform(v, e -> CAST(FLOOR(e * 1000000) AS BIGINT)) AS vq
-         FROM ax),
-cellsb AS (SELECT b1.cid, t.i AS pos, SUM(axq2.vq[t.i + 1]) AS s
-           FROM b1 JOIN axq2 USING (vec_id)
-           CROSS JOIN (SELECT UNNEST(range(0, {DIM})) AS i) t
-           GROUP BY b1.cid, t.i),
-nb AS (SELECT cid, COUNT(*) AS n FROM b1 GROUP BY cid),
-c2 AS (SELECT c.cid,
-              list(CAST(c.s AS DOUBLE) / CAST(n.n * 1000000 AS DOUBLE)
-                   ORDER BY c.pos) AS c
-       FROM cellsb c JOIN nb n USING (cid) GROUP BY c.cid),
-a2 AS (SELECT vec_id, cid FROM (
-    SELECT ax.vec_id, c2.cid,
-           ROW_NUMBER() OVER (PARTITION BY ax.vec_id
-             ORDER BY ROUND({cos_c2}, 6) DESC, c2.cid) AS rn
-    FROM ax CROSS JOIN c2) WHERE rn = 1),
-res AS (SELECT a2.vec_id, a2.cid,
-               list_transform(range(1, {DIM + 1}),
-                 j -> CAST(FLOOR((ax.v[j] - c2.c[j]) * 1000000) AS BIGINT))
-                 AS rq
-        FROM a2 JOIN ax USING (vec_id) JOIN c2 USING (cid)),
-bseeds AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS k, rq
-           FROM res ORDER BY vec_id LIMIT {PQ_KS}),
-mind AS (SELECT vec_id, cid, d2 FROM (
-    SELECT r.vec_id, r.cid, t.m, {d2} AS d2,
-           ROW_NUMBER() OVER (PARTITION BY r.vec_id, t.m
-             ORDER BY {d2} ASC, s.k ASC) AS rn
-    FROM res r CROSS JOIN (SELECT UNNEST(range(0, {PQ_M})) AS m) t
-    CROSS JOIN bseeds s) WHERE rn = 1),
-qv AS (SELECT vec_id, cid, CAST(SUM(d2) AS BIGINT) // 1000000 AS qmu
-       FROM mind GROUP BY vec_id, cid)
-SELECT CAST(qv.cid AS BIGINT) AS cid,
+WITH {_refit_sql()},
+{_residual_sql("a2", "ax", "c2")},
+{_pq_qerr_sql()}
+SELECT CAST(yv.cid AS BIGINT) AS cid,
        CAST(COUNT(*) AS BIGINT) AS n_members,
-       CAST(SUM(qv.qmu) AS BIGINT) AS qerr_sum_mu,
-       CAST(SUM(CAST(qv.cid <> old.old_cid AS INTEGER)) AS BIGINT) AS n_moved
-FROM qv JOIN old USING (vec_id)
-GROUP BY qv.cid
+       CAST(SUM(yv.y) AS BIGINT) AS qerr_sum_mu,
+       CAST(SUM(CAST(yv.cid <> old.old_cid AS INTEGER)) AS BIGINT) AS n_moved
+FROM yv JOIN old USING (vec_id)
+GROUP BY yv.cid
 """
 
 

@@ -37,6 +37,8 @@ def get_spark(
       collected (``spark.cleaner.referenceTracking.cleanCheckpoints``):
       under ``SPARK_GRAFT_RELIABLE_CHECKPOINT=1`` the per-micro-batch
       sites would otherwise grow the checkpoint dir without bound.
+    - No console progress bar: its stderr fragments would interleave
+      with the output of the tools that share this session.
     - No per-call DataFrame call-site capture
       (``spark.python.sql.dataFrameDebugging.enabled``): with it, every
       ``Column``/``DataFrame`` call makes extra py4j round trips to
@@ -74,6 +76,7 @@ def get_spark(
         "spark.sql.parquet.filterPushdown": "true",
         "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY", "8g"),
         "spark.ui.enabled": "false",
+        "spark.ui.showConsoleProgress": "false",
         "spark.executorEnv.PYTHONPATH": pythonpath,
         "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
         "spark.python.sql.dataFrameDebugging.enabled": "false",

@@ -75,6 +75,23 @@ def test_centroid_trigger_is_mix_adjusted(spark):
     assert loud["due"] is True
 
 
+@pytest.mark.parametrize(
+    "fam", [f for f in S._FAMILIES if f.yardstick], ids=lambda f: f.kind
+)
+def test_yardstick_columns_in_empty_report(spark, fam):
+    """The family spec's yardstick names columns its drift report
+    carries: the empty-batch report (built from ``empty_stats``) has
+    the base_/new_ columns that _mix_cadence and the retrain
+    trigger read, and both run on it."""
+    val, sign = fam.yardstick
+    assert sign in (-1, +1)
+    empty = spark.createDataFrame([], fam.empty_stats)
+    rep = fam.drift(empty, empty)
+    assert {f"base_{val}", f"new_{val}", "n_base", "n_new"} <= set(rep.columns)
+    assert S._mix_cadence(rep, fam).columns[-2:] == ["mix_exp_mu", "mix_gap_mu"]
+    assert S._centroid_retrain_due(rep, fam)["due"] is False
+
+
 def test_centroid_trigger_reports_unseen_cell_mass(spark):
     """The r14 second review pass: batch mass landing in cells the
     training stats never saw (n_base = 0 — a Lloyd cell can be empty

@@ -306,8 +306,9 @@ def test_pq_recall_and_reconstruction(spark, sf_oracle):
 def test_index_marker_guards_reuse(tmp_path):
     """A pre-existing directory at the index path is only served if it
     carries the completion marker with the CURRENT shape constants —
-    foreign/stale/partial directories are rejected (and _publish_index
-    rebuilds over them) instead of being trusted via bare isdir()."""
+    foreign/stale/partial/damaged directories are rejected (and
+    _publish_index rebuilds over them) instead of being trusted via
+    bare isdir()."""
     import json
 
     foreign = tmp_path / "foreign"
@@ -319,6 +320,9 @@ def test_index_marker_guards_reuse(tmp_path):
         json.dumps({"shape": list(S._index_shape("ivf"))})
     )
     assert S.index_ready(str(foreign), "ivf")  # current shape
+    for damaged in ("not json", "[]"):  # not JSON; JSON but not an object
+        (foreign / S._INDEX_MARKER).write_text(damaged)
+        assert not S.index_ready(str(foreign), "ivf")
 
 
 def test_ivfpq_build_query_parity(spark, sf_oracle, tmp_path):
@@ -2433,7 +2437,10 @@ def test_ivf_cadence_matches_oracle_locally(spark, sf_oracle):
     from tests.oracle_util import compare_query
 
     compare_query(
-        spark, S.sim_ivf_cadence, S._ivf_cadence_oracle(), sf_oracle
+        spark,
+        S.sim_ivf_cadence,
+        S._cadence_oracle(S.IVF, S._ivf_incremental_oracle()),
+        sf_oracle,
     )
 
 
@@ -2447,20 +2454,6 @@ def test_lsh_cadence_matches_oracle_locally(spark, sf_oracle):
 
     compare_query(
         spark, S.sim_lsh_cadence, S._lsh_cadence_oracle(), sf_oracle
-    )
-
-
-def test_ivfpq_cadence_matches_oracle_locally(spark, sf_oracle):
-    """Pre-proof of the round-16 registration (the
-    build-now-register-later pattern): sim_ivfpq_cadence's
-    exact-integer qerr mix-expectation columns vs the DuckDB replay
-    under the driver's own comparison — the last family's trigger
-    arithmetic as an oracle surface."""
-    pytest.importorskip("duckdb")
-    from tests.oracle_util import compare_query
-
-    compare_query(
-        spark, S.sim_ivfpq_cadence, S._ivfpq_cadence_oracle(), sf_oracle
     )
 
 

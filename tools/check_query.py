@@ -25,15 +25,12 @@ def main() -> None:
     if not names:
         raise SystemExit("usage: check_query.py <query> [...]")
     import duckdb
-    from pyspark.sql import SparkSession
 
-    spark = (
-        SparkSession.builder.appName("check-query")
-        .master("local[8]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
+    from ftp_blueprints_spark.session import get_spark
+
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    spark = get_spark(
+        "check-query", master=f"local[{cpus}]", shuffle_partitions=int(cpus)
     )
     spark.sparkContext.setLogLevel("ERROR")
     import __spark_entry__ as m

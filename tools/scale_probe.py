@@ -270,22 +270,11 @@ def main() -> None:
     ap.add_argument("--probes", nargs="*", default=PROBES)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from ftp_blueprints_spark.session import get_spark
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.appName("scale-probe")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = get_spark(
+        "scale-probe", master=f"local[{cpus}]", shuffle_partitions=int(cpus)
     )
     spark.sparkContext.setLogLevel("ERROR")
 
