@@ -344,9 +344,10 @@ def _setup_pipelines(spark, sf_dir: str, work: str) -> None:
 
 def _pipe_download(spark, sf_dir: str, work: str, run_id: int) -> None:
     """S2-S11 end-to-end over the local-FS connector: list the sf_dir
-    tree, regex-match the parquet files, project destination paths with
-    file numbering, fan the byte transfer out over max_connections
-    clients (driver threads: the listing is driver-held)."""
+    tree, regex-match the parquet files, project destination paths
+    keeping each source's basename (no file numbering), fan the byte
+    transfer out over max_connections clients (driver threads: the
+    listing is driver-held)."""
     from ftp_blueprints_spark.operators.actions import download
     from ftp_blueprints_spark.operators.manifest import match_files, with_destination
     from ftp_blueprints_spark.sources.connector import ClientSpec

@@ -31,7 +31,7 @@ from pyspark.sql import SparkSession
 
 from ..errors import BlueprintError, NoMatchesFound
 from ..operators import actions
-from ..operators.manifest import match_files, require_matches, with_destination
+from ..operators.manifest import driver_rows, match_files, require_matches, with_destination
 from ..sources.connector import ClientSpec
 from ..sources.listing import list_tree
 
@@ -85,7 +85,13 @@ def _pipeline(
     suppress_single: bool,
     listing_spec: ClientSpec | None = None,
 ):
-    """Shared scan->filter->project phase; returns (spec, matched df).
+    """Shared scan->filter->project phase; returns (spec, matched),
+    ``matched`` being rows or a frame (see below).
+
+    The match runs in Spark (``rlike``, the regex dialect of both
+    regimes). Driver-held matches are then collected once, and the
+    guard, the naming and the sink act on those rows in Python; an
+    executor-walked match stays a frame throughout.
 
     ``listing_spec`` overrides which tree is ENUMERATED (upload lists
     the local source tree while acting against the remote spec)."""
@@ -108,7 +114,8 @@ def _pipeline(
         matched = match_files(
             manifest, pattern=args.source_file_name, scope=scope, skip_dot_dirs=skip_dot_dirs
         )
-    matched = require_matches(matched)
+    held = driver_rows(matched)
+    matched = require_matches(matched if held is None else held)
     matched = with_destination(
         matched,
         destination_folder_name=args.destination_folder_name,

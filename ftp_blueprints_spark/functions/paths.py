@@ -1,7 +1,10 @@
 """Path/name expression library — the reference's entire scalar-function
 surface (SURVEY.md §2A.3, P1–P6 + F4) re-expressed as Catalyst column
 expressions. Pure JVM-side built-ins: no Python UDFs anywhere, so these
-run inside whole-stage codegen at any scale.
+run inside whole-stage codegen at any scale. The same P2–P6 rule over
+one row's plain strings is :func:`destination_path`, for manifests held
+on the driver, where planning an expression costs more than evaluating
+it row by row in Python.
 
 Semantics parity targets (reference file:line, behavior only):
 - P1 basename                ftp_blueprints/download_file.py:50-55
@@ -29,6 +32,8 @@ oracles) with no string-escaping divergence.
 """
 
 from __future__ import annotations
+
+import posixpath
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column
@@ -161,3 +166,35 @@ def is_dot_directory(name: Column | str) -> Column:
     """F4: true iff every character is '.' ('' vacuously true, matching
     Python's all() over an empty string)."""
     return _c(name).rlike("^[.]*$")
+
+
+def _normpath(path: str) -> str:
+    """:func:`normalize_path` on a str: ``posixpath.normpath`` with
+    normalize_path's conventions: a fully-resolved path is '' (not '.'),
+    and a rooted path keeps one leading '/' and every '..' that would
+    climb past it ('//a' -> '/a', '/a/../..' -> '/..')."""
+    rest = posixpath.normpath(path.lstrip("/"))
+    rest = "" if rest == "." else rest
+    return "/" + rest if path.startswith("/") and rest else rest
+
+
+def destination_path(
+    destination_folder_name: str,
+    destination_file_name: str | None,
+    source_full_path: str,
+    file_number: int | None = None,
+) -> str:
+    """P2–P6 on one row: the str that ``determine_destination_name(
+    clean_folder_name(folder), file_name, source_full_path, file_number)``
+    yields for these values."""
+    folder = destination_folder_name.strip("/")
+    if folder:
+        folder = posixpath.normpath(folder)  # P2: a fully-resolved folder is '.'
+    if not destination_file_name:  # P5: None and '' both mean 'not provided'
+        name = posixpath.basename(source_full_path)
+    elif file_number is None:
+        name = destination_file_name
+    else:  # P4: '_{n}' before the first dot, or appended
+        head, dot, tail = destination_file_name.partition(".")
+        name = f"{head}_{file_number}{dot}{tail}"
+    return _normpath(f"{folder}/{name}" if folder else name)  # P3

@@ -5,15 +5,16 @@ of matched files' bytes.
 
 Execution model: each call acts over at most ``spec.max_connections``
 parts (FTP servers throttle sessions), and each part opens ONE client
-(connector.ClientSpec.connect) and streams its rows. Two regimes, decided
-by ``manifest.driver_rows`` (whether the optimized plan is a
-``LocalRelation``), with no option:
+(connector.ClientSpec.connect) and streams its rows. Two regimes, with
+no option:
 
-- a driver-held manifest (``list_tree`` below ``DRIVER_ROWS_THRESHOLD``)
-  is collected without a job, cut into ``connector.chunks`` and acted on
-  by driver threads (``connector.on_driver_threads``, the helper
-  ``list_tree`` expands its levels with): the call runs no Spark job,
-  and bytes flow between the server and the CLI's host;
+- held rows (the ``list`` the CLI got from ``manifest.driver_rows`` and
+  passed through the guard and the naming), or a driver-held frame
+  (its optimized plan is a ``LocalRelation``, so ``driver_rows``
+  collects it without a job), are cut into ``connector.chunks`` and
+  acted on by driver threads (``connector.on_driver_threads``, the
+  helper ``list_tree`` expands its levels with): the call runs no Spark
+  job, and bytes flow between the server and the CLI's host;
 - an executor-walked manifest (``list_tree`` past the threshold) is
   repartitioned and acted on by executors, one client per non-empty
   partition (``connector.per_client``); the call runs one job, and
@@ -26,7 +27,8 @@ always runs on executors, so file bytes never pass through the driver.
 Reference error-semantic asymmetries preserved (behavioral parity):
 - download skips failed rows and keeps going, removing the partial
   file (D1, download_file.py:280-281; cleanup :202) — here hardened to
-  write-to-temp + atomic rename;
+  write-to-temp + atomic rename — and writes one stderr line per
+  skipped row naming its source path and the exception class;
 - upload raises on first failure (D2, upload_file.py:190) but silently
   skips non-file sources (upload_file.py:181-183);
 - move fails the job with exit code 202 on first failure
@@ -96,20 +98,27 @@ def _placed(df: DataFrame, spec: ClientSpec, held: list | None) -> RDD:
     return sc.parallelize(held, max(1, min(len(held), conns)))
 
 
-def _run_sink(df: DataFrame, spec: ClientSpec, action: str, body) -> Counter:
-    """Run ``body(client, rows)`` over the rows of ``df``, one client per
-    part, and count the statuses it yields.
+def _run_sink(
+    manifest: DataFrame | list, spec: ClientSpec, action: str, body, *columns: str
+) -> Counter:
+    """Run ``body(client, rows)`` over the rows of ``manifest``, one
+    client per part, and count the statuses it yields. A frame is cut to
+    ``columns`` first.
 
-    Driver-held rows run on driver threads (no Spark job); the first
-    error in any chunk stops the others before their next row and is
-    raised as it was raised. Otherwise the rows run on executors in one
-    ``countByValue`` job; executor exceptions surface as Py4J strings
-    and are mapped back to the typed error (and its exit code) here.
-    That covers IncorrectCredentials too: spec.connect() runs inside
-    partitions, so a bad login fails executor-side and must still
-    exit 3."""
+    Held rows, as given or collected from a driver-held frame, run on
+    driver threads (no Spark job); the first error in any chunk stops
+    the others before their next row and is raised as it was raised.
+    Otherwise the rows run on executors in one ``countByValue`` job;
+    executor exceptions surface as Py4J strings and are mapped back to
+    the typed error (and its exit code) here. That covers
+    IncorrectCredentials too: spec.connect() runs inside partitions, so
+    a bad login fails executor-side and must still exit 3."""
     body = _reported(action, body)
-    held = driver_rows(df)
+    if isinstance(manifest, list):
+        held = manifest
+    else:
+        df = manifest.select(*columns)
+        held = driver_rows(df)
     if held is not None:
         parts = on_driver_threads(spec, chunks(held, spec.max_connections), body)
         return Counter(itertools.chain.from_iterable(parts))
@@ -141,7 +150,7 @@ def fetch(files: DataFrame, spec: ClientSpec) -> DataFrame:
     return files.sparkSession.createDataFrame(fetched, "path string, content binary")
 
 
-def download(manifest: DataFrame, spec: ClientSpec, dest_root: str) -> dict:
+def download(manifest: DataFrame | list, spec: ClientSpec, dest_root: str) -> dict:
     """S6+S11+D1: stream each matched remote file to ``dest_root``.
 
     Per-row skip on failure; partial output is impossible: each writer
@@ -149,8 +158,9 @@ def download(manifest: DataFrame, spec: ClientSpec, dest_root: str) -> dict:
     into place atomically (replacing the reference's delete-on-error), so
     rows sharing a destination cannot corrupt one another. Which of them
     wins is unspecified. Returns {'ok': n, 'failed': n}. Per-ROW failures
-    are skipped inside the sink (D1), but a connect()/login failure
-    aborts the call and maps back to exit 3."""
+    are skipped inside the sink (D1), each with one whole stderr line
+    naming the source path and the exception class, but a
+    connect()/login failure aborts the call and maps back to exit 3."""
 
     def body(client, rows):
         for row in rows:
@@ -162,16 +172,17 @@ def download(manifest: DataFrame, spec: ClientSpec, dest_root: str) -> dict:
                     client.retrieve(row["path"], f)
                 os.replace(tmp, dest)
                 yield "ok"
-            except Exception:
+            except Exception as e:
                 if os.path.exists(tmp):
                     os.remove(tmp)
+                sys.stderr.write(f"[download] failed {row['path']}: {type(e).__name__}\n")
                 yield "failed"  # D1: skip and continue
 
-    n = _run_sink(manifest.select("path", "dest_path"), spec, "download", body)
+    n = _run_sink(manifest, spec, "download", body, "path", "dest_path")
     return {"ok": n["ok"], "failed": n["failed"]}
 
 
-def upload(manifest: DataFrame, spec: ClientSpec, source_root: str = "") -> dict:
+def upload(manifest: DataFrame | list, spec: ClientSpec, source_root: str = "") -> dict:
     """S7+S8+D2: stream each local file to its remote dest_path.
 
     Non-file sources are skipped without error; any transfer failure
@@ -191,11 +202,11 @@ def upload(manifest: DataFrame, spec: ClientSpec, source_root: str = "") -> dict
                 raise UploadError(f"failed to upload {src}: {e}") from e
             yield "ok"
 
-    n = _run_sink(manifest.select("path", "dest_path"), spec, "upload", body)
+    n = _run_sink(manifest, spec, "upload", body, "path", "dest_path")
     return {"ok": n["ok"], "skipped": n["skipped"]}
 
 
-def move(manifest: DataFrame, spec: ClientSpec) -> dict:
+def move(manifest: DataFrame | list, spec: ClientSpec) -> dict:
     """S9+S8+D2: server-side rename per row — metadata-only, no data
     plane. First failure aborts with exit-202 semantics (MoveError)."""
 
@@ -208,11 +219,11 @@ def move(manifest: DataFrame, spec: ClientSpec) -> dict:
                 raise MoveError(f"failed to move {row['path']}: {e}") from e
             yield "ok"
 
-    n = _run_sink(manifest.select("path", "dest_path"), spec, "move", body)
+    n = _run_sink(manifest, spec, "move", body, "path", "dest_path")
     return {"ok": n["ok"]}
 
 
-def delete(manifest: DataFrame, spec: ClientSpec) -> dict:
+def delete(manifest: DataFrame | list, spec: ClientSpec) -> dict:
     """S10: delete each matched remote file; first failure aborts with
     exit-201 semantics (InvalidFilePath)."""
 
@@ -224,5 +235,5 @@ def delete(manifest: DataFrame, spec: ClientSpec) -> dict:
                 raise InvalidFilePath(f"failed to delete {row['path']}: {e}") from e
             yield "ok"
 
-    n = _run_sink(manifest.select("path"), spec, "delete", body)
+    n = _run_sink(manifest, spec, "delete", body, "path")
     return {"ok": n["ok"]}

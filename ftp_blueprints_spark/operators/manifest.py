@@ -20,15 +20,29 @@ Match semantics preserved from the reference (behavioral parity only):
   deterministic (SURVEY.md §2A.4)
 - move_file.py:171 suppresses numbering when exactly one file matches;
   download/upload always number (suppress_single flag)
+
+Two regimes, decided by :func:`driver_rows` (whether the optimized plan
+is a ``LocalRelation``), with no option. The F1/F2 match is ``rlike``
+in both, so one regex dialect (Java's) serves every caller:
+
+- driver-held matches (``list_tree`` below ``DRIVER_ROWS_THRESHOLD``)
+  are collected once, without a job; the guard, the numbering and the
+  P2–P6 naming then act on those rows in Python
+  (``paths.destination_path``). A caller that holds the rows (the CLI)
+  passes the ``list`` on and gets rows back; a driver-held frame comes
+  back as one Arrow-built ``LocalRelation``;
+- an executor-walked manifest keeps the distributed numbering and the
+  Catalyst P2–P6 expression (``paths.determine_destination_name``), as
+  do the ``mf_*`` queries over :func:`build_manifest`.
 """
 
 from __future__ import annotations
 
 import pyarrow as pa
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import IntegerType, StructField, StructType
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from ..errors import NoMatchesFound  # noqa: F401  (re-export: F7 guard, exit 200)
 from ..functions import paths as P
@@ -125,24 +139,28 @@ def driver_rows(df: DataFrame) -> list | None:
     return df.collect()
 
 
-def _numbered(matches: DataFrame) -> tuple[DataFrame, int]:
-    """``matches`` plus ``file_number`` (1-indexed, ORDER BY path), and
-    the number of matches; see :func:`with_file_numbers`."""
-    rows = driver_rows(matches)
-    if rows is not None:
-        # Python orders str by code point, which equals UTF-8 byte
-        # order, Spark's binary string order
-        rows.sort(key=lambda r: r["path"])
-        schema = StructType(
-            [*matches.schema.fields, StructField("file_number", IntegerType())]
-        )
-        columns = [*zip(*rows)] or [()] * len(matches.columns)
-        table = pa.Table.from_pydict(
-            dict(zip(schema.names, [*columns, range(1, len(rows) + 1)])),
-            schema=to_arrow_schema(schema),
-        )
-        return matches.sparkSession.createDataFrame(table, schema), len(rows)
+def _numbered_rows(rows: list):
+    """``(file_number, row)`` for held ``rows``: 1-indexed in path order.
+    Python orders str by code point, which equals UTF-8 byte order,
+    Spark's binary string order, so both regimes number alike."""
+    return enumerate(sorted(rows, key=lambda r: r["path"]), start=1)
 
+
+def _held_frame(matches: DataFrame, rows: list, *fields: StructField) -> DataFrame:
+    """``rows`` (the columns of ``matches``, then ``fields``) as one
+    Arrow-built ``LocalRelation``."""
+    schema = StructType([*matches.schema.fields, *fields])
+    columns = [*zip(*rows)] or [()] * len(schema)
+    table = pa.Table.from_pydict(
+        dict(zip(schema.names, columns)), schema=to_arrow_schema(schema)
+    )
+    return matches.sparkSession.createDataFrame(table, schema)
+
+
+def _numbered(matches: DataFrame) -> tuple[DataFrame, int]:
+    """An executor-walked ``matches`` plus ``file_number`` (1-indexed,
+    ORDER BY path), and the number of matches; see
+    :func:`with_file_numbers`."""
     ranged = (
         matches.repartitionByRange("path")
         .withColumn("_pid", F.spark_partition_id())
@@ -181,7 +199,7 @@ def with_file_numbers(matches: DataFrame) -> DataFrame:
     semantics, in one of two regimes (:func:`driver_rows` decides):
 
     - driver-held matches are collected (no job), sorted by path and
-      numbered on the driver, and come back as one Arrow-built
+      numbered in Python, and come back as one Arrow-built
       ``LocalRelation``;
     - otherwise numbering is computed scale-safely in two passes:
 
@@ -203,28 +221,67 @@ def with_file_numbers(matches: DataFrame) -> DataFrame:
       numbering job could place boundary rows in different partitions
       than the counts saw — duplicate and skipped file_numbers, i.e.
       silently colliding destination paths."""
-    return _numbered(matches)[0]
+    rows = driver_rows(matches)
+    if rows is None:
+        return _numbered(matches)[0]
+    numbered = [(*r, n) for n, r in _numbered_rows(rows)]
+    return _held_frame(matches, numbered, StructField("file_number", IntegerType()))
+
+
+def _destination_rows(
+    rows: list,
+    destination_folder_name: str,
+    destination_file_name: str | None,
+    suppress_single: bool,
+) -> list[Row]:
+    """:func:`with_destination` over held rows, in Python: each row plus
+    ``file_number`` and ``dest_path`` (``paths.destination_path``)."""
+    if not rows:
+        return []
+    row = Row(*rows[0].__fields__, "file_number", "dest_path")
+    if destination_file_name is None:  # names are kept: no numbering
+        numbered = [(None, r) for r in rows]
+    else:
+        numbered = _numbered_rows(rows)
+    single = suppress_single and len(rows) == 1
+    return [
+        row(*r, n, P.destination_path(
+            destination_folder_name, destination_file_name, r["path"], None if single else n))
+        for n, r in numbered
+    ]
 
 
 def with_destination(
-    matches: DataFrame,
+    matches: DataFrame | list[Row],
     destination_folder_name: str = "",
     destination_file_name: str | None = None,
     suppress_single: bool = False,
-) -> DataFrame:
-    """P5/P6 destination projection with collision-avoiding enumeration.
+) -> DataFrame | list[Row]:
+    """P5/P6 destination projection with collision-avoiding enumeration:
+    ``matches`` plus ``file_number`` and ``dest_path``.
 
     When a destination_file_name fans out over several matches each row
-    gets '_{n}' inserted before its first dot (P4). ``suppress_single``
-    gives move_file's behavior (no numbering when exactly one match);
-    the match count comes from the numbering step, so it costs no job.
+    gets '_{n}' inserted before its first dot (P4), n numbering the
+    matches in path order. ``suppress_single`` gives move_file's
+    behavior (no numbering when exactly one match). Without a
+    destination_file_name every row keeps its source basename, the
+    numbering step is skipped and file_number is NULL, so the output
+    schema does not depend on the parameter.
 
-    Without a destination_file_name every row keeps its source basename
-    and the enumeration is provably unused, so the numbering step is
-    skipped entirely. file_number is still emitted (as NULL) so the
-    output schema does not depend on the parameter. Over driver-held
-    matches the result is again a ``LocalRelation``: the optimizer
-    evaluates ``dest_path`` into it."""
+    Held rows (the ``list`` that :func:`driver_rows` returns) come back
+    as rows, and a driver-held frame as one Arrow-built
+    ``LocalRelation``: both are numbered and named in Python by
+    ``paths.destination_path``, with no Spark planning. An
+    executor-walked frame gets the Catalyst P2–P6 expression over the
+    distributed numbering, whose match count costs no extra job."""
+    held = matches if isinstance(matches, list) else driver_rows(matches)
+    if held is not None:
+        rows = _destination_rows(
+            held, destination_folder_name, destination_file_name, suppress_single)
+        if isinstance(matches, list):
+            return rows
+        return _held_frame(matches, rows, StructField("file_number", IntegerType()),
+                           StructField("dest_path", StringType()))
     folder = P.clean_folder_name(F.lit(destination_folder_name))
     if destination_file_name is None:
         dest = P.determine_destination_name(folder, None, F.col("path"), None)
@@ -241,10 +298,11 @@ def with_destination(
     return numbered.withColumn("dest_path", dest)
 
 
-def require_matches(matches: DataFrame) -> DataFrame:
+def require_matches(matches: DataFrame | list[Row]) -> DataFrame | list[Row]:
     """F7 guard: raise NoMatchesFound (exit 200) when nothing matched.
-    ``isEmpty`` runs no job on driver-held matches and one on an
-    executor-walked manifest."""
-    if matches.isEmpty():
+    Held rows are counted with ``len``; a frame is tested with
+    ``isEmpty``, which runs one job on an executor-walked manifest."""
+    empty = not matches if isinstance(matches, list) else matches.isEmpty()
+    if empty:
         raise NoMatchesFound("no files matched the provided pattern")
     return matches

@@ -433,6 +433,67 @@ def test_blueprint_call_runs_no_spark_job(spark, spark_jobs, tree, tmp_path):
     assert os.listdir(tree / "archive") == []
 
 
+def test_held_cli_call_collects_once_and_names_in_python(spark, tree, tmp_path, monkeypatch):
+    """A driver-held CLI call collects its matches once and acts on the
+    rows from then on: a numbered download, a move and a delete each
+    call ``driver_rows`` exactly once, and none builds the Catalyst
+    P2–P6 expression (``paths.determine_destination_name``)."""
+    from collections import Counter
+
+    from ftp_blueprints_spark.cli import blueprints
+    from ftp_blueprints_spark.functions import paths
+    from ftp_blueprints_spark.operators import manifest
+
+    counts = Counter()
+
+    def counted(name, fn):
+        def call(*args, **kwargs):
+            counts[name] += 1
+            return fn(*args, **kwargs)
+
+        return call
+
+    collect = counted("driver_rows", manifest.driver_rows)
+    for module in (manifest, actions, blueprints):
+        monkeypatch.setattr(module, "driver_rows", collect, raising=False)
+    monkeypatch.setattr(paths, "determine_destination_name",
+                        counted("determine_destination_name", paths.determine_destination_name))
+    calls = [
+        ("download", "--source-folder-name", "reports", "--source-file-name", "[.]csv$",
+         "--destination-file-name", "all.csv", "--destination-root", str(tmp_path / "out")),
+        ("move", "--source-folder-name", "reports", "--source-file-name", "2024/.*[.]csv$",
+         "--destination-folder-name", "archive"),
+        ("delete", "--source-folder-name", "archive", "--source-file-name", "[.]csv$"),
+    ]
+    for name, *argv in calls:
+        counts.clear()
+        assert _cli(name, tree, *argv) == 0
+        assert counts == {"driver_rows": 1}, (name, counts)
+    assert sorted(os.listdir(tmp_path / "out")) == ["all_1.csv", "all_2.csv", "all_3.csv"]
+
+
+def test_cli_download_names_the_failed_file(spark, tree, tmp_path, monkeypatch, capsys):
+    """D1: a file that vanishes between the listing and its transfer is
+    skipped, the call exits 0 and reports it as failed, and stderr holds
+    one whole line naming its path and the exception class."""
+    from ftp_blueprints_spark.cli import blueprints
+
+    listed = blueprints.list_tree
+
+    def list_then_lose(*args, **kwargs):
+        manifest = listed(*args, **kwargs)
+        os.remove(tree / "reports/2024/jan.csv")
+        return manifest
+
+    monkeypatch.setattr(blueprints, "list_tree", list_then_lose)
+    assert _cli("download", tree, "--source-folder-name", "reports",
+                "--source-file-name", "[.]csv$", "--destination-root", str(tmp_path / "out")) == 0
+    out, err = capsys.readouterr()
+    assert "downloaded 2 file(s), 1 failed (skipped)" in out
+    assert "[download] failed reports/2024/jan.csv: FileNotFoundError" in err.splitlines()
+    assert sorted(os.listdir(tmp_path / "out")) == ["feb.csv", "summary.csv"]
+
+
 def test_sink_progress_lines_are_whole(spark, tmp_path, monkeypatch):
     """Eight driver threads (more than the host's cores) finish their
     last row together (a barrier in the transfer) and report at once to
@@ -526,16 +587,46 @@ def _destinations(spark, root) -> list[tuple]:
     return sorted(tuple(r) for r in out.collect())
 
 
-def test_numbering_agrees_in_datasource_regime(spark, tree, monkeypatch):
+def test_numbering_agrees_in_datasource_regime(spark, tree, tmp_path, monkeypatch, capsys):
     """Past DRIVER_ROWS_THRESHOLD list_tree returns an executor-walked
-    manifest: numbering takes the distributed range/offset path and must
-    yield the driver regime's rows."""
+    manifest: numbering takes the distributed range/offset path and the
+    Catalyst P2–P6 expression, and must yield what the driver regime's
+    Python numbering and naming yield, at the operators and at the CLI.
+    The CLI calls are a numbered download, a keep-name download and a
+    move of exactly one match (numbering suppressed), over multi-dot,
+    extension-less, dot-led and non-ASCII names and a messy destination
+    folder: exit codes, messages and every resulting file must agree."""
     from ftp_blueprints_spark.operators.manifest import driver_rows
     from ftp_blueprints_spark.sources import listing
 
     mf = list_tree(spark, _spec(tree), "reports")
     assert driver_rows(match_files(mf, pattern="[.]csv$")) is not None
     driver = _destinations(spark, tree)
+
+    names = ["a.b.c.csv", "noext", ".bashrc", "ünï.txt"]
+    folder = ("--destination-folder-name", "/out//x/./")
+
+    def cli_calls(root) -> tuple:
+        (root / "srv" / "in" / "sub").mkdir(parents=True)
+        for name in names:
+            (root / "srv" / "in" / "sub" / name).write_text(name)
+        held = driver_rows(list_tree(spark, _spec(root / "srv"), "in")) is not None
+        calls = [
+            ("download", "--source-folder-name", "in", "--source-file-name", ".", *folder,
+             "--destination-file-name", "a.b.c.csv", "--destination-root", str(root / "num")),
+            ("download", "--source-folder-name", "in", "--source-file-name", ".", *folder,
+             "--destination-root", str(root / "keep")),
+            ("move", "--source-folder-name", "in", "--source-file-name", "^in/sub/ünï", *folder,
+             "--destination-file-name", ".bashrc"),
+        ]
+        said = []
+        for name, *argv in calls:
+            rc = _cli(name, root / "srv", *argv)
+            said.append((rc, capsys.readouterr().out.strip().splitlines()[-1]))
+        files = {str(p.relative_to(root)): p.read_text() for p in root.rglob("*") if p.is_file()}
+        return held, said, files
+
+    at_driver = cli_calls(tmp_path / "driver")
     monkeypatch.setattr(listing, "DRIVER_ROWS_THRESHOLD", 0)
     assert driver_rows(list_tree(spark, _spec(tree), "reports")) is None
     assert _destinations(spark, tree) == driver == [
@@ -543,6 +634,18 @@ def test_numbering_agrees_in_datasource_regime(spark, tree, monkeypatch):
         ("reports/2024/jan.csv", 2, "dl/all_2.csv"),
         ("reports/summary.csv", 3, "dl/all_3.csv"),
     ]
+    at_executors = cli_calls(tmp_path / "executors")
+    assert at_driver[0] and not at_executors[0]
+    assert at_executors[1:] == at_driver[1:]
+    said, files = at_driver[1:]
+    assert said == [(0, "downloaded 4 file(s), 0 failed (skipped)")] * 2 + [(0, "moved 1 file(s)")]
+    assert files == {
+        # numbered in path (code point) order: '.' < 'a' < 'n' < 'ü'
+        **{f"num/out/x/a_{i}.b.c.csv": name for i, name in enumerate(sorted(names), start=1)},
+        **{f"keep/out/x/{name}": name for name in names},
+        **{f"srv/in/sub/{name}": name for name in names[:3]},
+        "srv/out/x/.bashrc": "ünï.txt",
+    }
 
 
 def test_file_numbering_non_ascii_agrees_across_regimes(spark, tmp_path, monkeypatch):

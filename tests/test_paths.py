@@ -1,5 +1,6 @@
 """Property-style differential tests: the column-expression path
-library vs a pure-Python model of the reference's semantics
+library, and its row form ``destination_path``, vs a pure-Python model
+of the reference's semantics
 (ftp_blueprints/download_file.py:50-135 — basename / clean_folder_name /
 combine_folder_and_file_name / enumerate_destination_file_name /
 is_dot_directory). The model re-states the documented behavior (stdlib
@@ -9,6 +10,7 @@ import os
 import random
 import re
 
+import pyarrow as pa
 import pyspark.sql.functions as F
 import pytest
 
@@ -41,6 +43,14 @@ def model_enumerate(name, n):
 
 def model_is_dot(s):
     return all(c == "." for c in s)
+
+
+def model_destination(folder, name, src, n):
+    if name:
+        name = model_enumerate(name, n) if n is not None else name
+    else:
+        name = model_basename(src)
+    return model_combine(model_clean_folder(folder), name)
 
 
 SEGMENTS = ["a", "bb", "c.d", ".", "..", "...", "data", "x_1", ".hidden", "A B"]
@@ -114,6 +124,10 @@ def test_combine_folder_and_file_name(spark):
     assert got == want, [
         (c, g, w) for c, g, w in zip(cases, got, want) if g != w
     ][:10]
+    # the row form: a cleaned folder cleans to itself, and a given,
+    # unnumbered name is P5's output as is
+    rows = [P.destination_path(f, fn, "unused/src.bin") for f, fn in cases]
+    assert rows == want
 
 
 def test_enumerate_destination_file_name(spark):
@@ -129,6 +143,9 @@ def test_enumerate_destination_file_name(spark):
     assert got == want, [
         (c, g, w) for c, g, w in zip(cases, got, want) if g != w
     ][:10]
+    # the row form ('' is no name at all there: P5 falls back to the basename)
+    rows = [P.destination_path("", fn, "unused/src.bin", n) for fn, n in cases if fn]
+    assert rows == [w for (fn, _), w in zip(cases, want) if fn]
 
 
 def test_is_dot_directory(spark):
@@ -153,12 +170,35 @@ def test_determine_destination_name(spark):
             F.lit("dl/dir"), F.col("dest"), F.col("src"), F.col("n")
         ).alias("o")
     ).collect()
-    assert [r[0] for r in out] == [
+    want = [
         "dl/dir/out_2.csv",
         "dl/dir/out.csv",
         "dl/dir/src.csv",
         "dl/dir/src.csv",
     ]
+    assert [r[0] for r in out] == want
+    assert [P.destination_path("dl/dir", dest, src, n) for src, dest, n in rows] == want
+
+    # the row form over held rows (plain Python) against the builders and
+    # the model: every corpus folder, given name, missing name ('' and
+    # NULL), source and file number
+    cases = [
+        (folder, name, src, n)
+        for folder in CORPUS
+        for name in [*FILENAMES, None]
+        for src in ("data/a/src.csv", "top.tar.gz")
+        for n in (None, 1, 17)
+    ]
+    table = pa.table(dict(zip(("folder", "name", "src", "n"), zip(*cases))))
+    df = spark.createDataFrame(table, "folder string, name string, src string, n int")
+    dest = P.determine_destination_name(
+        P.clean_folder_name(F.col("folder")), F.col("name"), F.col("src"), F.col("n")
+    )
+    got = [r[0] for r in df.select(dest).collect()]
+    rows = [P.destination_path(*c) for c in cases]
+    want = [model_destination(*c) for c in cases]
+    assert rows == got, [(c, r, g) for c, r, g in zip(cases, rows, got) if r != g][:10]
+    assert rows == want
 
 
 # (input, resolve_parent=True, resolve_parent=False): rooted inputs,
@@ -185,6 +225,12 @@ def test_normalize_path_rooted(spark):
         P.normalize_path(F.col("s")), P.normalize_path(F.col("s"), resolve_parent=False)
     ).collect()
     assert [(s, *r) for s, r in zip(rows, got)] == ROOTED
+    # a rooted destination file name under no folder reaches the row
+    # form's P3 as is, and resolves as normalize_path resolves it
+    named = [(s, want) for s, want, _ in ROOTED if s]
+    assert [P.destination_path("", s, "unused/src.bin") for s, _ in named] == [
+        want for _, want in named
+    ]
 
 
 def test_destination_expression_size(spark):
