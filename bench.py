@@ -344,18 +344,19 @@ def _setup_pipelines(spark, sf_dir: str, work: str) -> None:
 
 def _pipe_download(spark, sf_dir: str, work: str, run_id: int) -> None:
     """S2-S11 end-to-end over the local-FS connector: list the sf_dir
-    tree, regex-match the parquet files, project destination paths
-    keeping each source's basename (no file numbering), fan the byte
-    transfer out over max_connections clients (driver threads: the
-    listing is driver-held)."""
+    tree, match the parquet files with ``re.search``, project destination
+    paths keeping each source's basename (no file numbering), fan the
+    byte transfer out over max_connections clients (driver threads: the
+    listing is held rows, so the call runs no Spark job)."""
     from ftp_blueprints_spark.operators.actions import download
-    from ftp_blueprints_spark.operators.manifest import match_files, with_destination
+    from ftp_blueprints_spark.operators.manifest import (compile_pattern, search_files,
+                                                         with_destination)
     from ftp_blueprints_spark.sources.connector import ClientSpec
-    from ftp_blueprints_spark.sources.listing import list_tree
+    from ftp_blueprints_spark.sources.listing import list_manifest
 
     spec = ClientSpec(kind="local", root=sf_dir, max_connections=16)
-    mf = list_tree(spark, spec, "")
-    matched = match_files(mf, pattern=r".*[.]parquet$")
+    mf = list_manifest(lambda: spark, spec, "")
+    matched = search_files(mf, compile_pattern(r"\.parquet$"))
     manifest = with_destination(matched)  # dest_path = basename per match
     dest_root = os.path.join(work, f"dl_{run_id}")
     stats = download(manifest, spec, dest_root=dest_root)
@@ -364,8 +365,8 @@ def _pipe_download(spark, sf_dir: str, work: str, run_id: int) -> None:
 
 
 def _pipe_ingest_csv(spark, sf_dir: str, work: str, run_id: int) -> None:
-    """Columnar ingest: CSV tree -> list_tree + rlike match -> fetch of
-    the matched files' bytes (executor-side) ->
+    """Columnar ingest: CSV tree -> list_manifest + re.search match on
+    the path -> fetch of the matched files' bytes (executor-side) ->
     decode/split/posexplode/from_csv -> parquet."""
     from ftp_blueprints_spark.sources.connector import ClientSpec
     from ftp_blueprints_spark.sources.ingest import ingest_csv

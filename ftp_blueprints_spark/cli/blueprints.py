@@ -31,9 +31,14 @@ from pyspark.sql import SparkSession
 
 from ..errors import BlueprintError, NoMatchesFound
 from ..operators import actions
-from ..operators.manifest import driver_rows, match_files, require_matches, with_destination
+from ..operators.manifest import compile_pattern, require_matches, search_files, with_destination
 from ..sources.connector import ClientSpec
-from ..sources.listing import list_tree
+from ..sources.listing import list_manifest
+
+# The frame listing and the rlike match are not called here, but stay
+# attributes of this module: perfbench's --trace patches them by name.
+from ..operators.manifest import match_files  # noqa: E402,F401,I001
+from ..sources.listing import list_tree  # noqa: E402,F401
 
 
 def _parser(prog: str) -> argparse.ArgumentParser:
@@ -85,21 +90,21 @@ def _pipeline(
     suppress_single: bool,
     listing_spec: ClientSpec | None = None,
 ):
-    """Shared scan->filter->project phase; returns (spec, matched),
-    ``matched`` being rows or a frame (see below).
+    """Shared scan->filter->project phase; returns (spec, matched).
 
-    The match runs in Spark (``rlike``, the regex dialect of both
-    regimes). Driver-held matches are then collected once, and the
-    guard, the naming and the sink act on those rows in Python; an
-    executor-walked match stays a frame throughout.
+    The pattern is compiled first, so an invalid one exits 1 before any
+    listing, and matches with ``re.search``, as the reference's does.
+    Below ``DRIVER_ROWS_THRESHOLD`` ``matched`` is the held rows, guarded
+    and named in Python, and the call never obtains a SparkSession; past
+    it the listing asks :func:`_spark` for one, and ``matched`` is an
+    executor-walked frame throughout.
 
     ``listing_spec`` overrides which tree is ENUMERATED (upload lists
     the local source tree while acting against the remote spec)."""
-    spark, spec = _spark(), _spec(args)
-    manifest = list_tree(
-        spark, listing_spec or spec, args.source_folder_name, skip_dot_dirs=skip_dot_dirs
-    )
-    if args.match_type == "exact_match":
+    regex = full = None
+    if args.match_type == "regex_match":
+        regex = compile_pattern(args.source_file_name)
+    else:
         # rstrip, not strip: listdir builds child paths as
         # f"{folder.rstrip('/')}/{name}", so a leading slash in
         # --source-folder-name must survive into the comparison key or
@@ -109,13 +114,12 @@ def _pipeline(
             if args.source_folder_name.strip("/")
             else args.source_file_name
         )
-        matched = match_files(manifest, exact_path=full, skip_dot_dirs=skip_dot_dirs)
-    else:
-        matched = match_files(
-            manifest, pattern=args.source_file_name, scope=scope, skip_dot_dirs=skip_dot_dirs
-        )
-    held = driver_rows(matched)
-    matched = require_matches(matched if held is None else held)
+    spec = _spec(args)
+    manifest = list_manifest(
+        _spark, listing_spec or spec, args.source_folder_name, skip_dot_dirs=skip_dot_dirs
+    )
+    matched = require_matches(
+        search_files(manifest, regex, full, scope=scope, skip_dot_dirs=skip_dot_dirs))
     matched = with_destination(
         matched,
         destination_folder_name=args.destination_folder_name,

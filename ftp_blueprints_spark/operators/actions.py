@@ -5,20 +5,18 @@ of matched files' bytes.
 
 Execution model: each call acts over at most ``spec.max_connections``
 parts (FTP servers throttle sessions), and each part opens ONE client
-(connector.ClientSpec.connect) and streams its rows. Two regimes, with
-no option:
+(connector.ClientSpec.connect) and streams its rows. Two regimes,
+decided by the manifest's type, with no option:
 
-- held rows (the ``list`` the CLI got from ``manifest.driver_rows`` and
-  passed through the guard and the naming), or a driver-held frame
-  (its optimized plan is a ``LocalRelation``, so ``driver_rows``
-  collects it without a job), are cut into ``connector.chunks`` and
-  acted on by driver threads (``connector.on_driver_threads``, the
-  helper ``list_tree`` expands its levels with): the call runs no Spark
-  job, and bytes flow between the server and the CLI's host;
-- an executor-walked manifest (``list_tree`` past the threshold) is
-  repartitioned and acted on by executors, one client per non-empty
-  partition (``connector.per_client``); the call runs one job, and
-  bytes flow executor<->server.
+- held rows (the ``list`` the CLI matched, guarded and named in Python)
+  are cut into ``connector.chunks`` and acted on by driver threads
+  (``connector.on_driver_threads``, the helper ``list_manifest`` expands
+  its levels with): the call runs no Spark job, and bytes flow between
+  the server and the CLI's host;
+- a DataFrame (an executor-walked manifest: ``list_manifest`` past the
+  threshold) is repartitioned and acted on by executors, one client per
+  non-empty partition (``connector.per_client``); the call runs one
+  job, and bytes flow executor<->server.
 
 Every sink body yields one status per row (``ok``, ``failed`` or
 ``skipped``); :func:`_run_sink` counts them in both regimes. ``fetch``
@@ -54,11 +52,10 @@ import uuid
 from collections import Counter
 
 from pyspark import RDD
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 from ..errors import InvalidFilePath, MoveError, UploadError, typed_errors
 from ..sources.connector import ClientSpec, chunks, on_driver_threads, parent, per_client
-from .manifest import driver_rows
 
 
 def _reported(action: str, body):
@@ -78,76 +75,73 @@ def _reported(action: str, body):
     return run
 
 
-def _placed(df: DataFrame, spec: ClientSpec, held: list | None) -> RDD:
-    """The rows of ``df`` in at most ``spec.max_connections`` partitions:
-    more would exceed the server's session budget, fewer would leave
-    allowed sessions idle. ``held`` is ``manifest.driver_rows(df)``:
+def _placed(rows: DataFrame | list, spec: ClientSpec, spark: SparkSession | None = None) -> RDD:
+    """``rows`` in at most ``spec.max_connections`` partitions: more would
+    exceed the server's session budget, fewer would leave allowed
+    sessions idle.
 
-    - driver-held rows are shipped with ``sc.parallelize`` into
-      ``min(rows, max_connections)`` slices: no shuffle;
-    - otherwise (an executor-walked manifest) the frame is repartitioned to
-      exactly ``max_connections`` (AQE would coalesce a small numbered
-      manifest to one partition). Asking for the current partition
-      count first would run the upstream plan's AQE stages once for the
-      count and again for the sink; the unconditional round-robin costs
-      one shuffle of the (path, dest) rows instead."""
+    - held rows (a list) are shipped with ``spark``'s
+      ``sc.parallelize`` into ``min(rows, max_connections)`` slices: no
+      shuffle;
+    - a frame is repartitioned to exactly ``max_connections`` (AQE would
+      coalesce a small numbered manifest to one partition). Asking for
+      the current partition count first would run the upstream plan's
+      AQE stages once for the count and again for the sink; the
+      unconditional round-robin costs one shuffle of the (path, dest)
+      rows instead."""
     conns = max(1, spec.max_connections)
-    if held is None:
-        return df.repartition(conns).rdd
-    sc = df.sparkSession.sparkContext
-    return sc.parallelize(held, max(1, min(len(held), conns)))
+    if isinstance(rows, list):
+        return spark.sparkContext.parallelize(rows, max(1, min(len(rows), conns)))
+    return rows.repartition(conns).rdd
 
 
 def _run_sink(
     manifest: DataFrame | list, spec: ClientSpec, action: str, body, *columns: str
 ) -> Counter:
     """Run ``body(client, rows)`` over the rows of ``manifest``, one
-    client per part, and count the statuses it yields. A frame is cut to
-    ``columns`` first.
+    client per part, and count the statuses it yields.
 
-    Held rows, as given or collected from a driver-held frame, run on
-    driver threads (no Spark job); the first error in any chunk stops
-    the others before their next row and is raised as it was raised.
-    Otherwise the rows run on executors in one ``countByValue`` job;
-    executor exceptions surface as Py4J strings and are mapped back to
-    the typed error (and its exit code) here. That covers
-    IncorrectCredentials too: spec.connect() runs inside partitions, so
-    a bad login fails executor-side and must still exit 3."""
+    Held rows run on driver threads (no Spark job); the first error in
+    any chunk stops the others before their next row and is raised as
+    it was raised. A frame is cut to ``columns`` and its rows run on
+    executors in one ``countByValue`` job; executor exceptions surface
+    as Py4J strings and are mapped back to the typed error (and its exit
+    code) here. That covers IncorrectCredentials too: spec.connect()
+    runs inside partitions, so a bad login fails executor-side and must
+    still exit 3."""
     body = _reported(action, body)
     if isinstance(manifest, list):
-        held = manifest
-    else:
-        df = manifest.select(*columns)
-        held = driver_rows(df)
-    if held is not None:
-        parts = on_driver_threads(spec, chunks(held, spec.max_connections), body)
+        parts = on_driver_threads(spec, chunks(manifest, spec.max_connections), body)
         return Counter(itertools.chain.from_iterable(parts))
     with typed_errors():
-        placed = _placed(df, spec, None)
+        placed = _placed(manifest.select(*columns), spec)
         return Counter(placed.mapPartitions(per_client(spec, body)).countByValue())
 
 
-def fetch(files: DataFrame, spec: ClientSpec) -> DataFrame:
-    """``(path STRING, content BINARY)`` for each row of ``files``: the
-    ingest's one route for file bytes into Spark. Only the given paths
-    are RETRed, placed exactly as the sinks place their rows
-    (:func:`_placed`, one session per non-empty partition through
-    ``connector.per_client``); the bytes stay executor-side. A payload
-    that starts with the gzip magic bytes 1f 8b is gunzipped right after
-    its RETR — magic bytes, not the extension, so a server-side rename
-    cannot hide it, and plain and .gz files mix in one call. Lazy: the
-    RETRs run with the job that reads the frame."""
+def fetch(files: DataFrame | list, spec: ClientSpec, spark: SparkSession | None = None) -> DataFrame:
+    """``(path STRING, content BINARY)`` for each of ``files``: the
+    ingest's one route for file bytes into Spark. ``files`` is a frame
+    with a ``path`` column, or held manifest rows (path first), fetched
+    in the session ``spark``. Only the given paths are RETRed, placed
+    exactly as the sinks place their rows (:func:`_placed`, one session
+    per non-empty partition through ``connector.per_client``); the bytes
+    stay executor-side. A payload that starts with the gzip magic bytes
+    1f 8b is gunzipped right after its RETR — magic bytes, not the
+    extension, so a server-side rename cannot hide it, and plain and .gz
+    files mix in one call. Lazy: the RETRs run with the job that reads
+    the frame."""
 
     def body(client, rows):
         for row in rows:
             buf = io.BytesIO()
-            client.retrieve(row["path"], buf)
+            client.retrieve(row[0], buf)
             data = buf.getvalue()
-            yield row["path"], gzip.decompress(data) if data[:2] == b"\x1f\x8b" else data
+            yield row[0], gzip.decompress(data) if data[:2] == b"\x1f\x8b" else data
 
-    paths = files.select("path")
-    fetched = _placed(paths, spec, driver_rows(paths)).mapPartitions(per_client(spec, body))
-    return files.sparkSession.createDataFrame(fetched, "path string, content binary")
+    if not isinstance(files, list):
+        spark, files = files.sparkSession, files.select("path")
+    fetched = _placed(files, spec, spark).mapPartitions(per_client(spec, body))
+    return spark.createDataFrame(fetched, "path string, content binary")
 
 
 def download(manifest: DataFrame | list, spec: ClientSpec, dest_root: str) -> dict:

@@ -1,6 +1,6 @@
 """Manifest operators — the reference's file-dataflow pipeline (SURVEY.md
-§2A: list -> classify -> filter -> project destination -> act) as pure
-DataFrame operators over a manifest table:
+§2A: list -> classify -> filter -> project destination -> act) as
+operators over a manifest, held rows or a DataFrame of one schema:
 
     path STRING, folder STRING, name STRING, is_dir BOOLEAN, size LONG
 
@@ -21,30 +21,31 @@ Match semantics preserved from the reference (behavioral parity only):
 - move_file.py:171 suppresses numbering when exactly one file matches;
   download/upload always number (suppress_single flag)
 
-Two regimes, decided by :func:`driver_rows` (whether the optimized plan
-is a ``LocalRelation``), with no option. The F1/F2 match is ``rlike``
-in both, so one regex dialect (Java's) serves every caller:
+Two regimes, decided by the manifest's type, with no option:
 
-- driver-held matches (``list_tree`` below ``DRIVER_ROWS_THRESHOLD``)
-  are collected once, without a job; the guard, the numbering and the
-  P2–P6 naming then act on those rows in Python
-  (``paths.destination_path``). A caller that holds the rows (the CLI)
-  passes the ``list`` on and gets rows back; a driver-held frame comes
-  back as one Arrow-built ``LocalRelation``;
-- an executor-walked manifest keeps the distributed numbering and the
-  Catalyst P2–P6 expression (``paths.determine_destination_name``), as
-  do the ``mf_*`` queries over :func:`build_manifest`.
+- held rows (a ``list`` of manifest tuples: ``listing.list_manifest``
+  below ``DRIVER_ROWS_THRESHOLD``) are matched by :func:`search_files`
+  with Python ``re.search``, the reference's matcher, and guarded,
+  numbered and named in Python (``paths.destination_path``); no
+  SparkSession is involved;
+- an executor-walked manifest (a DataFrame) is matched by the same
+  predicate in one Python pass on executors, and keeps the distributed
+  numbering and the Catalyst P2–P6 expression
+  (``paths.determine_destination_name``), as do the ``mf_*`` queries over
+  :func:`build_manifest`. Those queries match with :func:`match_files`,
+  Java's ``rlike``: their DuckDB oracles use RE2, and their patterns are
+  written for both dialects (``[.]``, see ``functions/paths.py``).
 """
 
 from __future__ import annotations
 
+import re
+
 import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Row, SparkSession, Window
-from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
-from ..errors import NoMatchesFound  # noqa: F401  (re-export: F7 guard, exit 200)
+from ..errors import BlueprintError, NoMatchesFound
 from ..functions import paths as P
 from ..session import load_table, local_checkpoint
 
@@ -104,9 +105,12 @@ def match_files(
     scope: str = "basename",
     skip_dot_dirs: bool = True,
 ) -> DataFrame:
-    """F1/F2/F3 filter operator over a manifest.
+    """F1/F2/F3 filter operator over a manifest frame, in Java regex.
 
-    ``pattern`` is an unanchored regex (re.search semantics == rlike);
+    ``pattern`` is an unanchored ``rlike`` regex, which is not Python's
+    dialect (Java has no ``(?P<name>...)``, its ``\\w`` is ASCII and its
+    ``\\Z`` allows a final line terminator): only the ``mf_*`` queries
+    match this way, with patterns valid in Java and RE2 alike.
     ``scope`` selects the reference's F1 (basename) vs F2 (full path)
     asymmetry. ``exact_path`` short-circuits to a single-key filter (the
     reference's 'pushdown': no enumeration)."""
@@ -121,40 +125,52 @@ def match_files(
     return df.filter(target.rlike(pattern))
 
 
-def driver_rows(df: DataFrame) -> list | None:
-    """The rows of ``df`` when they are held on the driver, else None.
+def compile_pattern(pattern: str) -> re.Pattern:
+    """``pattern`` compiled for :func:`search_files`. An invalid one is a
+    ``BlueprintError`` (exit 1), so a caller that compiles before it
+    lists fails before any round trip."""
+    try:
+        return re.compile(pattern)
+    except re.error as e:
+        raise BlueprintError(f"invalid regex {pattern!r}: {e}") from None
 
-    Rows are driver-held when the OPTIMIZED plan is a ``LocalRelation``:
-    ``list_tree``'s Arrow-built manifest, with filters and projections
-    over it folded in by the optimizer. ``collect`` then runs no Spark
-    job. ``DataFrame.isLocal()`` is not the test: it reads the analyzed
-    plan, so it turns False as soon as ``match_files`` filters the
-    manifest. An executor-walked manifest (past
-    ``DRIVER_ROWS_THRESHOLD``, a checkpointed snapshot) returns None and
-    keeps the distributed path, so the regime follows the plan, not a
-    row count."""
-    plan = df._jdf.queryExecution().optimizedPlan()
-    if plan.getClass().getSimpleName() != "LocalRelation":
-        return None
-    return df.collect()
+
+def search_files(
+    manifest: list | DataFrame,
+    regex: re.Pattern | None = None,
+    exact_path: str | None = None,
+    scope: str = "basename",
+    skip_dot_dirs: bool = True,
+) -> list | DataFrame:
+    """The F1–F4 filter as the reference applies it: ``regex.search``
+    (download_file.py:174-184) on the basename (F1) or full path (F2)
+    per ``scope``, or ``path == exact_path`` (F3); directories never
+    match, nor all-dots names when ``skip_dot_dirs`` (F4).
+
+    Held rows (a list) are filtered on the driver. An executor-walked
+    frame is filtered by the same predicate in one Python pass on
+    executors and materialized once, so the guard, the numbering and
+    the sink read the matches without matching again."""
+
+    def keep(row) -> bool:
+        path, name = row[0], row[2]
+        if row[3] or (skip_dot_dirs and set(name) <= {"."}):
+            return False
+        if exact_path is not None:
+            return path == exact_path
+        return regex.search(name if scope == "basename" else path) is not None
+
+    if isinstance(manifest, list):
+        return [r for r in manifest if keep(r)]
+    matched = manifest.sparkSession.createDataFrame(manifest.rdd.filter(keep), manifest.schema)
+    return local_checkpoint(matched)
 
 
 def _numbered_rows(rows: list):
     """``(file_number, row)`` for held ``rows``: 1-indexed in path order.
     Python orders str by code point, which equals UTF-8 byte order,
     Spark's binary string order, so both regimes number alike."""
-    return enumerate(sorted(rows, key=lambda r: r["path"]), start=1)
-
-
-def _held_frame(matches: DataFrame, rows: list, *fields: StructField) -> DataFrame:
-    """``rows`` (the columns of ``matches``, then ``fields``) as one
-    Arrow-built ``LocalRelation``."""
-    schema = StructType([*matches.schema.fields, *fields])
-    columns = [*zip(*rows)] or [()] * len(schema)
-    table = pa.Table.from_pydict(
-        dict(zip(schema.names, columns)), schema=to_arrow_schema(schema)
-    )
-    return matches.sparkSession.createDataFrame(table, schema)
+    return enumerate(sorted(rows, key=lambda r: r[0]), start=1)
 
 
 def _numbered(matches: DataFrame) -> tuple[DataFrame, int]:
@@ -196,63 +212,35 @@ def _numbered(matches: DataFrame) -> tuple[DataFrame, int]:
 
 def with_file_numbers(matches: DataFrame) -> DataFrame:
     """Deterministic 1-indexed fan-out numbering with ORDER BY path
-    semantics, in one of two regimes (:func:`driver_rows` decides):
+    semantics over a frame (held rows are numbered by
+    :func:`_numbered_rows`), computed scale-safely in two passes:
 
-    - driver-held matches are collected (no job), sorted by path and
-      numbered in Python, and come back as one Arrow-built
-      ``LocalRelation``;
-    - otherwise numbering is computed scale-safely in two passes:
+    1. range-partition by path (each partition holds a contiguous path
+       range), number rows *within* each partition (partitioned window
+       — parallel);
+    2. count rows per partition (tiny: one row per partition), turn the
+       counts into cumulative offsets driver-side, and add each
+       partition's offset via a broadcast join.
 
-      1. range-partition by path (each partition holds a contiguous
-         path range), number rows *within* each partition
-         (partitioned window — parallel);
-      2. count rows per partition (tiny: one row per partition), turn
-         the counts into cumulative offsets driver-side, and add each
-         partition's offset via a broadcast join.
+    Equivalent to ``row_number() OVER (ORDER BY path)`` but no stage
+    ever funnels all matches through a single task — a pattern that
+    matches millions of files at 100x scale still numbers in parallel.
 
-      Equivalent to ``row_number() OVER (ORDER BY path)`` but no stage
-      ever funnels all matches through a single task — a pattern that
-      matches millions of files at 100x scale still numbers in
-      parallel.
-
-      The ranged partitioning MUST be materialized (localCheckpoint)
-      before the counts job: repartitionByRange samples its boundaries
-      with an RDD-id-derived seed, so re-executing the plan for the
-      numbering job could place boundary rows in different partitions
-      than the counts saw — duplicate and skipped file_numbers, i.e.
-      silently colliding destination paths."""
-    rows = driver_rows(matches)
-    if rows is None:
-        return _numbered(matches)[0]
-    numbered = [(*r, n) for n, r in _numbered_rows(rows)]
-    return _held_frame(matches, numbered, StructField("file_number", IntegerType()))
+    The ranged partitioning MUST be materialized (localCheckpoint)
+    before the counts job: repartitionByRange samples its boundaries
+    with an RDD-id-derived seed, so re-executing the plan for the
+    numbering job could place boundary rows in different partitions
+    than the counts saw — duplicate and skipped file_numbers, i.e.
+    silently colliding destination paths."""
+    return _numbered(matches)[0]
 
 
-def _destination_rows(
-    rows: list,
-    destination_folder_name: str,
-    destination_file_name: str | None,
-    suppress_single: bool,
-) -> list[Row]:
-    """:func:`with_destination` over held rows, in Python: each row plus
-    ``file_number`` and ``dest_path`` (``paths.destination_path``)."""
-    if not rows:
-        return []
-    row = Row(*rows[0].__fields__, "file_number", "dest_path")
-    if destination_file_name is None:  # names are kept: no numbering
-        numbered = [(None, r) for r in rows]
-    else:
-        numbered = _numbered_rows(rows)
-    single = suppress_single and len(rows) == 1
-    return [
-        row(*r, n, P.destination_path(
-            destination_folder_name, destination_file_name, r["path"], None if single else n))
-        for n, r in numbered
-    ]
+# A held row after with_destination: the manifest columns, then the two it adds.
+_DESTINED = Row("path", "folder", "name", "is_dir", "size", "file_number", "dest_path")
 
 
 def with_destination(
-    matches: DataFrame | list[Row],
+    matches: DataFrame | list,
     destination_folder_name: str = "",
     destination_file_name: str | None = None,
     suppress_single: bool = False,
@@ -268,20 +256,19 @@ def with_destination(
     numbering step is skipped and file_number is NULL, so the output
     schema does not depend on the parameter.
 
-    Held rows (the ``list`` that :func:`driver_rows` returns) come back
-    as rows, and a driver-held frame as one Arrow-built
-    ``LocalRelation``: both are numbered and named in Python by
-    ``paths.destination_path``, with no Spark planning. An
-    executor-walked frame gets the Catalyst P2–P6 expression over the
-    distributed numbering, whose match count costs no extra job."""
-    held = matches if isinstance(matches, list) else driver_rows(matches)
-    if held is not None:
-        rows = _destination_rows(
-            held, destination_folder_name, destination_file_name, suppress_single)
-        if isinstance(matches, list):
-            return rows
-        return _held_frame(matches, rows, StructField("file_number", IntegerType()),
-                           StructField("dest_path", StringType()))
+    Held rows (a list) come back as rows, numbered and named in Python
+    by ``paths.destination_path``. A frame gets the Catalyst P2–P6
+    expression over the distributed numbering, whose match count costs
+    no extra job."""
+    if isinstance(matches, list):
+        if destination_file_name is None:  # names are kept: no numbering
+            numbered = [(None, r) for r in matches]
+        else:
+            numbered = _numbered_rows(matches)
+        single = suppress_single and len(matches) == 1
+        return [_DESTINED(*r, n, P.destination_path(
+            destination_folder_name, destination_file_name, r[0], None if single else n))
+            for n, r in numbered]
     folder = P.clean_folder_name(F.lit(destination_folder_name))
     if destination_file_name is None:
         dest = P.determine_destination_name(folder, None, F.col("path"), None)
@@ -298,7 +285,7 @@ def with_destination(
     return numbered.withColumn("dest_path", dest)
 
 
-def require_matches(matches: DataFrame | list[Row]) -> DataFrame | list[Row]:
+def require_matches(matches: DataFrame | list) -> DataFrame | list:
     """F7 guard: raise NoMatchesFound (exit 200) when nothing matched.
     Held rows are counted with ``len``; a frame is tested with
     ``isEmpty``, which runs one job on an executor-walked manifest."""

@@ -26,7 +26,7 @@ therefore talks to remote trees through a small picklable interface:
   ACKed, so without that every RETR, STOR and NLST would wait out the
   client's delayed-ACK timer (about 40 ms on Linux).
 
-Shared tree-walk steps (used by ``listing.list_tree``'s driver BFS, by
+Shared tree-walk steps (used by ``listing.list_manifest``'s driver BFS, by
 the executor walk it hands its unlisted frontier to past
 ``listing.DRIVER_ROWS_THRESHOLD``, and by the ``ftp_manifest`` reader):
 :func:`parent` is the one folder-of-path rule, :func:`child_rows` turns
@@ -41,16 +41,15 @@ not in ``listing.py``, so Python workers never import pyarrow.
 Scale design: every walk, sink and fetch opens one client per PART
 (not per row), over at most ``max_connections`` parts, so a
 1000-executor job cannot open more sessions than the server allows.
-Driver-held work (``list_tree``'s levels, and the sinks over a
-driver-held manifest) is cut into :func:`chunks` and run by
+Driver-held work (``list_manifest``'s levels, and the sinks over held
+rows) is cut into :func:`chunks` and run by
 :func:`on_driver_threads`, one thread and client per chunk, with no
 Spark job. Executor-side work opens its client through
 :func:`per_client`, on a partition's first row, so an empty partition
 opens none: the executor walk (:func:`walker`, over at most
 ``max_connections`` slices of the frontier), the ``ftp_manifest``
 reader, and the executor sinks and fetch (``operators.actions._placed``:
-driver-held rows sliced with ``sc.parallelize``, an executor-walked
-manifest repartitioned to exactly ``max_connections``, so a manifest AQE
+held rows sliced with ``sc.parallelize``, a manifest frame repartitioned to exactly ``max_connections``, so a manifest AQE
 coalesced to one partition still uses every allowed session).
 """
 

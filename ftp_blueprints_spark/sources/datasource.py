@@ -6,11 +6,11 @@ remote trees as DataFrames, read side only: the ``ftp_manifest`` format.
 :func:`read_manifest` is the program's only route into the format (it
 registers :class:`ManifestDataSource` and forwards every ClientSpec
 field as an option); the registered query ``mf_real_listing_datasource``
-goes through it. ``list_tree`` does not: past its threshold it hands its
-unlisted frontier to its own executor walk (``connector.walker``).
+goes through it. ``list_manifest`` does not: past its threshold it hands
+its unlisted frontier to its own executor walk (``connector.walker``).
 
 Schema: the five manifest columns (path/folder/name/is_dir/size). The
-reader is a plain walk of ``folder``; pruning lives in ``list_tree``,
+reader is a plain walk of ``folder``; pruning lives in ``list_manifest``,
 and file bytes reach Spark through ``operators.actions.fetch`` only.
 
 Partitioning: the driver lists ONLY ``folder`` with one connection
@@ -21,7 +21,7 @@ chunk is one InputPartition, read by an executor with ONE client
 folder, the ``connector.walk`` of its tree, bounded by
 ``connector.MAX_DEPTH``. A read therefore opens at most 1 +
 ``max_connections`` sessions, the same bound as the sinks and
-``list_tree``; rows come out in seed-entry order whatever the
+``list_manifest``; rows come out in seed-entry order whatever the
 chunking. A folder with no entries is one empty partition.
 
 The walk steps live in ``connector.py`` rather than ``listing.py``

@@ -5,18 +5,20 @@ The reference's blueprints move files byte-for-byte; the natural next
 step for an ETL engine is to land them as COLUMNS. Every ``ingest_*``
 function is the same landing step (:func:`_land`) with its own parser:
 
-    list_tree -> filter(~is_dir & rlike) -> fetch (+ gunzip) -> parse
-        -> parquet (optionally partitionBy), counted by an Observation
+    list_manifest -> search_files (re.search on the path) -> fetch
+        (+ gunzip) -> parse -> parquet (optionally partitionBy),
+        counted by an Observation
 
 Like the reference, ingest filters first and acts on matches only: the
-manifest comes from ``listing.list_tree`` (the CLI's listing, with its
-executor walk for large trees), Spark's ``rlike`` alone decides
-what matches, and ``actions.fetch`` RETRs the matched files only, in at
-most ``max_connections`` partitions with one FTP session each,
-gunzipping any payload that starts with the gzip magic bytes. The row
-count is observed on the written frame, so over a driver-held tree a
-call runs one Spark job, the write, and each file's bytes cross from
-Python into the JVM once.
+manifest comes from ``listing.list_manifest`` (the CLI's listing, with
+its executor walk for large trees), ``manifest.search_files`` matches
+the full path with Python ``re.search`` as the CLI does, and
+``actions.fetch`` RETRs the matched files only, in at most
+``max_connections`` partitions with one FTP session each, gunzipping any
+payload that starts with the gzip magic bytes. The row count is observed
+on the written frame, so over a driver-held tree a call runs one Spark
+job, the write, and each file's bytes cross from Python into the JVM
+once.
 
 CSV and JSONL share one line step (:func:`_nonempty_lines`: decode ->
 split lines -> posexplode -> drop blank lines) and then parse with
@@ -44,8 +46,9 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql.types import StructType
 
 from ..operators.actions import fetch
+from ..operators.manifest import compile_pattern, search_files
 from .connector import ClientSpec
-from .listing import list_tree
+from .listing import list_manifest
 
 
 def _land(
@@ -58,14 +61,16 @@ def _land(
     partition_cols: list[str] | None,
 ) -> int:
     """The one ingest body: every file under ``folder`` whose path
-    matches ``pattern`` -> ``parse`` -> a parquet dataset at ``dest``
-    (optionally partitioned); returns the row count written. The count
-    is an ``Observation`` on the written frame, so the write is the
-    call's only Spark job: nothing is read back."""
-    mf = list_tree(spark, spec, folder)
-    matched = mf.filter((~F.col("is_dir")) & F.col("path").rlike(pattern))
+    ``re.search``-matches ``pattern`` -> ``parse`` -> a parquet dataset
+    at ``dest`` (optionally partitioned); returns the row count written.
+    The pattern is compiled before anything is listed, so an invalid one
+    raises a ``BlueprintError``. The count is an ``Observation`` on the
+    written frame, so over held rows the write is the call's only Spark
+    job: nothing is read back."""
+    regex = compile_pattern(pattern)
+    matched = search_files(list_manifest(lambda: spark, spec, folder), regex, scope="fullpath")
     written = Observation()
-    out = parse(fetch(matched, spec)).observe(written, F.count(F.lit(1)).alias("rows"))
+    out = parse(fetch(matched, spec, spark)).observe(written, F.count(F.lit(1)).alias("rows"))
     writer = out.write.mode("overwrite")
     if partition_cols:
         writer = writer.partitionBy(*partition_cols)

@@ -1,13 +1,13 @@
 """Listing sources: materialize a real file tree as the manifest
-DataFrame (SURVEY.md §2A S2-S5).
+(SURVEY.md §2A S2-S5).
 
     path STRING, folder STRING, name STRING, is_dir BOOLEAN, size LONG
 
 The reference walks the tree sequentially — BFS queue in
 download_file.py:252-257 / delete_file.py:121-126, recursive DFS in
 move_file.py:63-78 — paying >=1 network round-trip per directory entry
-on one connection. Here :func:`list_tree` lists the seed folder with one
-client, then expands each deeper BFS *level* in parallel on driver
+on one connection. Here :func:`list_manifest` lists the seed folder with
+one client, then expands each deeper BFS *level* in parallel on driver
 threads: the frontier of folders is cut into at most
 ``spec.max_connections`` contiguous chunks and each chunk is listed by
 its own client. Wall-clock per level is max(chunk listing) instead of
@@ -23,17 +23,19 @@ driver-held sinks (``on_driver_threads``); this module owns the BFS, the
 regex-prefix pruning (:func:`pattern_prefix`, :func:`seed_for`) and the
 manifest's Spark form.
 
-While the tree is small the rows accumulate on the driver and the
-manifest is handed to Spark as one Arrow table, which plans as a JVM
-``LocalRelation``: later jobs (match guards, numbering, sinks) read it
-without a Python worker re-serializing the rows. Past
+While the tree is small the rows accumulate on the driver, and
+:func:`list_manifest` returns them as a Python ``list``: no SparkSession
+is needed, so a call that acts on a small tree never starts a JVM. Past
 ``DRIVER_ROWS_THRESHOLD`` entries the walk goes on from where it is
-instead: the rows already listed stay as they are, and only the unlisted
-frontier is walked, depth-first on executors, in at most
-``max_connections`` slices, so driver memory stays O(threshold) no
-matter how many files the tree holds. The result, an executor-walked
-manifest, is materialized once (``session.local_checkpoint``): the
-guard, the numbering and the sink all read that one listing of the tree.
+instead, and only then obtains a session: the rows already listed stay
+as they are, and only the unlisted frontier is walked, depth-first on
+executors, in at most ``max_connections`` slices, so driver memory stays
+O(threshold) no matter how many files the tree holds. The result, an
+executor-walked manifest DataFrame, is materialized once
+(``session.local_checkpoint``): the match, the guard, the numbering and
+the sink all read that one listing of the tree. :func:`list_tree` is the
+same listing always as a DataFrame (held rows as one Arrow-built JVM
+``LocalRelation``), for the ``mf_*`` queries and other frame callers.
 
 S5 (local recursive listing, upload_file.py:136-144) additionally maps
 onto Spark's native file source: ``binary_manifest`` uses
@@ -43,6 +45,8 @@ column when only metadata is selected.
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
 
 import pyarrow as pa
 import pyspark.sql.functions as F
@@ -59,7 +63,7 @@ _ARROW_SCHEMA = pa.schema(
      ("is_dir", pa.bool_()), ("size", pa.int64())]
 )
 
-# Above this many manifest entries, list_tree stops accumulating rows on
+# Above this many manifest entries, list_manifest stops accumulating rows on
 # the driver and walks the rest of the tree on executors.
 DRIVER_ROWS_THRESHOLD = 100_000
 
@@ -72,9 +76,9 @@ def pattern_prefix(pattern: str) -> str:
     (download_file.py:251,282-296) is the fully-literal degenerate form.
 
     Returns the longest literal prefix cut at its last '/', or '' when
-    the pattern is unanchored (rlike has re.search semantics — an
-    unanchored pattern may match anywhere, so no subtree can be safely
-    excluded) or has no static folder component.  Sound to seed a
+    the pattern is unanchored (under ``re.search`` an unanchored pattern
+    may match anywhere, so no subtree can be safely excluded) or has no
+    static folder component.  Sound to seed a
     traversal at: the literal run continues past the returned prefix
     with '/' (or more characters after it), so every matching path
     starts with '<prefix>/' — entries outside that subtree, including
@@ -179,27 +183,22 @@ def _manifest(spark: SparkSession, rows: list[tuple]) -> DataFrame:
     table): unlike ``createDataFrame(list)``, which plans a Python RDD,
     no later job has to pull the rows back through a Python worker."""
     columns = list(zip(*rows)) or [()] * len(_ARROW_SCHEMA)
-    table = pa.Table.from_pydict(
-        dict(zip(_ARROW_SCHEMA.names, columns)), schema=_ARROW_SCHEMA
-    )
+    table = pa.Table.from_pydict(dict(zip(_ARROW_SCHEMA.names, columns)), schema=_ARROW_SCHEMA)
     return spark.createDataFrame(table, MANIFEST_SCHEMA)
 
 
-def list_tree(
-    spark: SparkSession,
-    spec: ClientSpec,
-    root: str = "",
-    skip_dot_dirs: bool = True,
-    path_pattern: str | None = None,
-) -> DataFrame:
-    """BFS the tree under ``root`` into a manifest DataFrame (S2+S3).
+def list_manifest(spark: Callable[[], SparkSession], spec: ClientSpec, root: str = "",
+                  skip_dot_dirs: bool = True, path_pattern: str | None = None,
+                  ) -> list[tuple] | DataFrame:
+    """BFS the tree under ``root`` into manifest rows (S2+S3): a ``list``
+    of ``(path, folder, name, is_dir, size)`` tuples, or past
+    ``DRIVER_ROWS_THRESHOLD`` an executor-walked DataFrame.
 
     The seed folder is listed with one client (``connector.seed_rows``);
     each deeper level is listed on driver threads, at most
     ``spec.max_connections`` clients at once, one per contiguous chunk
     of the frontier; chunks are joined back in frontier order, so rows
-    come out in a deterministic BFS order. No Spark job runs, and the
-    manifest is a ``LocalRelation`` with the five-column schema. A tree
+    come out in a deterministic BFS order. No Spark job runs. A tree
     deeper than ``connector.MAX_DEPTH`` levels raises.
 
     Dot-directories are skipped during traversal when requested —
@@ -216,15 +215,15 @@ def list_tree(
     manifest (the same zero-match outcome the full walk would reach,
     F7 exit-200).  Never pass a basename-scoped (F1) pattern.
 
-    Driver memory is bounded: once the accumulated manifest crosses
-    ``DRIVER_ROWS_THRESHOLD`` rows, the folders not yet listed are
-    walked on executors, depth-first from the frontier's depth so the
-    depth bound still counts from the seed, and the manifest is the
-    executor-walked one: the rows listed so far plus the walked rows,
-    materialized once."""
+    Driver memory is bounded: once the accumulated rows cross
+    ``DRIVER_ROWS_THRESHOLD``, ``spark()`` is called for a session, the
+    folders not yet listed are walked on executors, depth-first from the
+    frontier's depth so the depth bound still counts from the seed, and
+    the manifest is the executor-walked frame: the rows listed so far
+    plus the walked rows, materialized once."""
     seed = seed_for(root, pattern_prefix(path_pattern)) if path_pattern else root
     if seed is None:  # literals diverge: nothing under root matches
-        return _manifest(spark, [])
+        return []
     all_rows = seed_rows(spec, root, seed, skip_dot_dirs)
     frontier = [path for path, _, _, is_dir, _ in all_rows if is_dir]
 
@@ -237,11 +236,12 @@ def list_tree(
             # go on from here: one Spark job walks the unlisted frontier,
             # one client per contiguous slice, and checkpoints it with the
             # rows held, so every later reader sees this one listing
+            session = spark()
             slices = min(len(frontier), max(1, spec.max_connections))
-            rdd = spark.sparkContext.parallelize(frontier, slices)
+            rdd = session.sparkContext.parallelize(frontier, slices)
             walked = rdd.mapPartitions(walker(spec, depth, skip_dot_dirs))
-            manifest = _manifest(spark, all_rows).union(
-                spark.createDataFrame(walked, MANIFEST_SCHEMA))
+            manifest = _manifest(session, all_rows).union(
+                session.createDataFrame(walked, MANIFEST_SCHEMA))
             with typed_errors():  # a depth bound or bad login raised on executors
                 return local_checkpoint(manifest)
         check_depth(depth, frontier[0])
@@ -250,7 +250,15 @@ def list_tree(
         all_rows += level
         frontier = [path for path, _, _, is_dir, _ in level if is_dir]
         depth += 1
-    return _manifest(spark, all_rows)
+    return all_rows
+
+
+def list_tree(spark: SparkSession, spec: ClientSpec, root: str = "", skip_dot_dirs: bool = True,
+              path_pattern: str | None = None) -> DataFrame:
+    """:func:`list_manifest` as a DataFrame with the five-column schema:
+    held rows come back as one ``LocalRelation``, with no Spark job."""
+    rows = list_manifest(lambda: spark, spec, root, skip_dot_dirs, path_pattern)
+    return _manifest(spark, rows) if isinstance(rows, list) else rows
 
 
 def binary_manifest(

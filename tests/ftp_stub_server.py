@@ -241,11 +241,11 @@ class _Session(threading.Thread):
         if self.server.readonly:
             self.send(550, "read-only server")
             return
-        real = self.resolve(arg)
-        if os.path.exists(real):
+        try:  # one step: sessions making the same folder race on it
+            os.mkdir(self.resolve(arg))
+        except FileExistsError:
             self.send(550, "already exists")
             return
-        os.mkdir(real)
         self.send(257, f'"{self.virtual(arg)}"')
 
 

@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import os
 
-import pyarrow as pa
 import pytest
 
 from ftp_blueprints_spark.errors import (
@@ -17,12 +16,14 @@ from ftp_blueprints_spark.errors import (
 )
 from ftp_blueprints_spark.operators import actions
 from ftp_blueprints_spark.operators.manifest import (
+    compile_pattern,
     match_files,
     require_matches,
+    search_files,
     with_destination,
 )
 from ftp_blueprints_spark.sources.connector import ClientSpec, LocalFSClient
-from ftp_blueprints_spark.sources.listing import binary_manifest, list_tree
+from ftp_blueprints_spark.sources.listing import binary_manifest, list_manifest, list_tree
 
 TREE = {
     "reports/2024/jan.csv": b"jan-data",
@@ -86,16 +87,16 @@ def test_list_tree_subfolder_root(spark, tree):
 def test_list_tree_delegates_past_threshold(spark, tree, monkeypatch):
     """Scale guard: past DRIVER_ROWS_THRESHOLD the rest of the walk runs
     on executors (driver memory stays O(threshold) for any tree size),
-    the manifest is no longer driver-held, and its rows are identical."""
-    from ftp_blueprints_spark.operators.manifest import driver_rows
+    the manifest is a DataFrame instead of held rows, and its rows are
+    identical."""
     from ftp_blueprints_spark.sources import listing
 
-    full = list_tree(spark, _spec(tree), "")
+    full = list_manifest(lambda: spark, _spec(tree), "")
+    assert isinstance(full, list)
     monkeypatch.setattr(listing, "DRIVER_ROWS_THRESHOLD", 2)
-    small = list_tree(spark, _spec(tree), "")
-    assert driver_rows(small) is None
-    as_set = lambda df: {tuple(r) for r in df.collect()}  # noqa: E731
-    assert as_set(small) == as_set(full)
+    small = list_manifest(lambda: spark, _spec(tree), "")
+    assert not isinstance(small, list)
+    assert {tuple(r) for r in small.collect()} == set(full)
 
 
 def test_list_tree_deeper_than_max_depth_raises(spark, tmp_path, monkeypatch):
@@ -157,14 +158,13 @@ def test_executor_walked_manifest_is_one_snapshot(spark, tree, tmp_path, monkeyp
     file added afterwards is neither numbered nor downloaded, because
     the guard, the numbering and the sink read one materialized listing
     instead of walking the tree again."""
-    from ftp_blueprints_spark.operators.manifest import driver_rows
     from ftp_blueprints_spark.sources import listing
 
     monkeypatch.setattr(listing, "DRIVER_ROWS_THRESHOLD", 0)
-    mf = list_tree(spark, _spec(tree), "reports")
-    assert driver_rows(mf) is None
+    mf = list_manifest(lambda: spark, _spec(tree), "reports")
+    assert not isinstance(mf, list)
     (tree / "reports" / "2024" / "late.csv").write_bytes(b"late")
-    matched = require_matches(match_files(mf, pattern=r"\.csv$"))
+    matched = require_matches(search_files(mf, compile_pattern(r"\.csv$")))
     numbered = with_destination(matched, "dl", "all.csv")
     assert sorted((r["path"], r["file_number"]) for r in numbered.collect()) == [
         ("reports/2024/feb.csv", 1), ("reports/2024/jan.csv", 2), ("reports/summary.csv", 3),
@@ -414,10 +414,16 @@ def _cli(name: str, root, *argv: str) -> int:
                  "--source-file-name-match-type", "regex_match", *argv])
 
 
-def test_blueprint_call_runs_no_spark_job(spark, spark_jobs, tree, tmp_path):
+def test_blueprint_call_runs_no_spark_job(spark, spark_jobs, tree, tmp_path, monkeypatch):
     """A driver-held manifest is guarded, numbered and projected with no
     Spark job, and the sink acts on it from driver threads: the whole
-    call runs no job."""
+    call runs no job, and never asks for a SparkSession."""
+    from ftp_blueprints_spark import session
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("a held CLI call asked for a SparkSession")
+
+    monkeypatch.setattr(session, "get_spark", no_session)
     calls = [
         ("download", "--source-folder-name", "reports", "--source-file-name", "[.]csv$",
          "--destination-file-name", "all.csv", "--destination-root", str(tmp_path / "out")),
@@ -433,16 +439,18 @@ def test_blueprint_call_runs_no_spark_job(spark, spark_jobs, tree, tmp_path):
     assert os.listdir(tree / "archive") == []
 
 
-def test_held_cli_call_collects_once_and_names_in_python(spark, tree, tmp_path, monkeypatch):
-    """A driver-held CLI call collects its matches once and acts on the
-    rows from then on: a numbered download, a move and a delete each
-    call ``driver_rows`` exactly once, and none builds the Catalyst
-    P2–P6 expression (``paths.determine_destination_name``)."""
+def test_held_cli_call_creates_no_session_and_names_in_python(tree, tmp_path, monkeypatch):
+    """A driver-held CLI call acts on Python rows from listing to sink: a
+    numbered download, a move and a delete each create no SparkSession
+    (neither ``session.get_spark`` nor ``SparkSession.builder.getOrCreate``
+    is called) and none builds the Catalyst P2–P6 expression
+    (``paths.determine_destination_name``)."""
     from collections import Counter
 
-    from ftp_blueprints_spark.cli import blueprints
+    from pyspark.sql import SparkSession
+
+    from ftp_blueprints_spark import session
     from ftp_blueprints_spark.functions import paths
-    from ftp_blueprints_spark.operators import manifest
 
     counts = Counter()
 
@@ -453,9 +461,9 @@ def test_held_cli_call_collects_once_and_names_in_python(spark, tree, tmp_path, 
 
         return call
 
-    collect = counted("driver_rows", manifest.driver_rows)
-    for module in (manifest, actions, blueprints):
-        monkeypatch.setattr(module, "driver_rows", collect, raising=False)
+    monkeypatch.setattr(session, "get_spark", counted("get_spark", session.get_spark))
+    monkeypatch.setattr(SparkSession.Builder, "getOrCreate",
+                        counted("getOrCreate", SparkSession.Builder.getOrCreate))
     monkeypatch.setattr(paths, "determine_destination_name",
                         counted("determine_destination_name", paths.determine_destination_name))
     calls = [
@@ -468,7 +476,7 @@ def test_held_cli_call_collects_once_and_names_in_python(spark, tree, tmp_path, 
     for name, *argv in calls:
         counts.clear()
         assert _cli(name, tree, *argv) == 0
-        assert counts == {"driver_rows": 1}, (name, counts)
+        assert counts == {}, (name, counts)
     assert sorted(os.listdir(tmp_path / "out")) == ["all_1.csv", "all_2.csv", "all_3.csv"]
 
 
@@ -478,14 +486,14 @@ def test_cli_download_names_the_failed_file(spark, tree, tmp_path, monkeypatch, 
     one whole line naming its path and the exception class."""
     from ftp_blueprints_spark.cli import blueprints
 
-    listed = blueprints.list_tree
+    listed = blueprints.list_manifest
 
     def list_then_lose(*args, **kwargs):
         manifest = listed(*args, **kwargs)
         os.remove(tree / "reports/2024/jan.csv")
         return manifest
 
-    monkeypatch.setattr(blueprints, "list_tree", list_then_lose)
+    monkeypatch.setattr(blueprints, "list_manifest", list_then_lose)
     assert _cli("download", tree, "--source-folder-name", "reports",
                 "--source-file-name", "[.]csv$", "--destination-root", str(tmp_path / "out")) == 0
     out, err = capsys.readouterr()
@@ -515,7 +523,8 @@ def test_sink_progress_lines_are_whole(spark, tmp_path, monkeypatch):
     for i in range(16):
         (tmp_path / "srv" / f"f{i:02}.csv").write_bytes(b"x")
     spec = ClientSpec(kind="local", root=str(tmp_path / "srv"), max_connections=8)
-    matched = with_destination(match_files(list_tree(spark, spec, ""), pattern="[.]csv$"), "")
+    matched = with_destination(
+        search_files(list_manifest(lambda: spark, spec, ""), compile_pattern("[.]csv$")), "")
     together = threading.Barrier(8, timeout=10)
     real = LocalFSClient.retrieve
 
@@ -571,7 +580,7 @@ def test_driver_sink_error_stops_other_chunks(spark, tree, monkeypatch):
     monkeypatch.setattr(LocalFSClient, "delete", delete)
     spec = ClientSpec(kind="local", root=str(tree), max_connections=2)
     paths = ["reports/2024/jan.csv", "reports/2024/feb.csv", "reports/summary.csv", "top.csv"]
-    manifest = spark.createDataFrame(pa.table({"path": paths}))  # a LocalRelation
+    manifest = [{"path": path} for path in paths]  # held rows
     os.remove(tree / "reports/2024/jan.csv")
     with pytest.raises(InvalidFilePath) as ei:
         actions.delete(manifest, spec)
@@ -582,9 +591,13 @@ def test_driver_sink_error_stops_other_chunks(spark, tree, monkeypatch):
 
 
 def _destinations(spark, root) -> list[tuple]:
-    m = match_files(list_tree(spark, _spec(root), "reports"), pattern="[.]csv$")
-    out = with_destination(m, "dl", "all.csv").select("path", "file_number", "dest_path")
-    return sorted(tuple(r) for r in out.collect())
+    """(path, file_number, dest_path) of a numbered projection of the
+    ``.csv`` files under ``reports``, in whichever regime the listing is."""
+    m = search_files(list_manifest(lambda: spark, _spec(root), "reports"),
+                     compile_pattern("[.]csv$"))
+    out = with_destination(m, "dl", "all.csv")
+    rows = out if isinstance(out, list) else out.collect()
+    return sorted((r["path"], r["file_number"], r["dest_path"]) for r in rows)
 
 
 def test_numbering_agrees_in_datasource_regime(spark, tree, tmp_path, monkeypatch, capsys):
@@ -596,11 +609,9 @@ def test_numbering_agrees_in_datasource_regime(spark, tree, tmp_path, monkeypatc
     move of exactly one match (numbering suppressed), over multi-dot,
     extension-less, dot-led and non-ASCII names and a messy destination
     folder: exit codes, messages and every resulting file must agree."""
-    from ftp_blueprints_spark.operators.manifest import driver_rows
     from ftp_blueprints_spark.sources import listing
 
-    mf = list_tree(spark, _spec(tree), "reports")
-    assert driver_rows(match_files(mf, pattern="[.]csv$")) is not None
+    assert isinstance(list_manifest(lambda: spark, _spec(tree), "reports"), list)
     driver = _destinations(spark, tree)
 
     names = ["a.b.c.csv", "noext", ".bashrc", "ünï.txt"]
@@ -610,7 +621,7 @@ def test_numbering_agrees_in_datasource_regime(spark, tree, tmp_path, monkeypatc
         (root / "srv" / "in" / "sub").mkdir(parents=True)
         for name in names:
             (root / "srv" / "in" / "sub" / name).write_text(name)
-        held = driver_rows(list_tree(spark, _spec(root / "srv"), "in")) is not None
+        held = isinstance(list_manifest(lambda: spark, _spec(root / "srv"), "in"), list)
         calls = [
             ("download", "--source-folder-name", "in", "--source-file-name", ".", *folder,
              "--destination-file-name", "a.b.c.csv", "--destination-root", str(root / "num")),
@@ -628,7 +639,7 @@ def test_numbering_agrees_in_datasource_regime(spark, tree, tmp_path, monkeypatc
 
     at_driver = cli_calls(tmp_path / "driver")
     monkeypatch.setattr(listing, "DRIVER_ROWS_THRESHOLD", 0)
-    assert driver_rows(list_tree(spark, _spec(tree), "reports")) is None
+    assert not isinstance(list_manifest(lambda: spark, _spec(tree), "reports"), list)
     assert _destinations(spark, tree) == driver == [
         ("reports/2024/feb.csv", 1, "dl/all_1.csv"),
         ("reports/2024/jan.csv", 2, "dl/all_2.csv"),
@@ -652,7 +663,6 @@ def test_file_numbering_non_ascii_agrees_across_regimes(spark, tmp_path, monkeyp
     """Driver numbering sorts Python str (code-point order), the
     distributed path sorts Spark strings (UTF-8 byte order): the two
     orders, and Python's sorted, must agree on non-ASCII names."""
-    from ftp_blueprints_spark.operators.manifest import with_file_numbers
     from ftp_blueprints_spark.sources import listing
 
     names = ["Z.csv", "a.csv", "a b.csv", "ß.csv", "é.csv", "中.csv"]
@@ -661,14 +671,51 @@ def test_file_numbering_non_ascii_agrees_across_regimes(spark, tmp_path, monkeyp
         (tmp_path / "d" / name).write_bytes(b"x")
 
     def numbers() -> dict:
-        m = match_files(list_tree(spark, _spec(tmp_path), ""), pattern="[.]csv$")
-        return {r["path"]: r["file_number"] for r in with_file_numbers(m).collect()}
+        m = search_files(list_manifest(lambda: spark, _spec(tmp_path), ""),
+                         compile_pattern("[.]csv$"))
+        out = with_destination(m, "", "n.csv")  # held rows, or the distributed numbering
+        return {r["path"]: r["file_number"] for r in (out if isinstance(out, list) else out.collect())}
 
     driver = numbers()
     monkeypatch.setattr(listing, "DRIVER_ROWS_THRESHOLD", 0)
     assert numbers() == driver == {
         f"d/{name}": i for i, name in enumerate(sorted(names), start=1)
     }
+
+
+@pytest.mark.parametrize("threshold", [None, 0], ids=["driver", "executors"])
+def test_patterns_match_as_re_search(spark, tmp_path, monkeypatch, capsys, threshold):
+    """The CLI and ingest match as the reference does, with ``re.search``,
+    held or executor-walked: a named group ``(?P<stem>...)`` (Java regex
+    has none) and a Unicode ``\\w`` (Java's is ASCII) select ``ünï.csv``
+    in an ingest, a download (F1, the basename) and a move (F2, the full
+    path), and ``\\.csv\\Z`` does not select ``x.csv\\n`` (Java's ``\\Z``
+    lets a final line terminator through)."""
+    from ftp_blueprints_spark.sources import listing
+    from ftp_blueprints_spark.sources.ingest import ingest_csv
+
+    if threshold is not None:
+        monkeypatch.setattr(listing, "DRIVER_ROWS_THRESHOLD", threshold)
+    for i, pattern in enumerate([r"(?P<stem>\w+)\.csv", r"\w\.csv"]):
+        root = tmp_path / f"srv{i}"
+        (root / "in" / "sub").mkdir(parents=True)  # a subfolder: the walk checks the threshold
+        (root / "in" / "sub" / "ünï.csv").write_text("id,name\n1,ant\n")
+        (root / "in" / "sub" / "notes.txt").write_text("not a csv")
+        assert ingest_csv(spark, _spec(root), "in", schema="id int, name string",
+                          dest=str(tmp_path / f"ingested{i}"), pattern=pattern) == 1
+        assert _cli("download", root, "--source-folder-name", "in", "--source-file-name", pattern,
+                    "--destination-root", str(tmp_path / f"dl{i}")) == 0
+        assert _cli("move", root, "--source-folder-name", "in", "--source-file-name", pattern,
+                    "--destination-folder-name", "out") == 0
+        assert capsys.readouterr().out.splitlines()[-2:] == [
+            "downloaded 1 file(s), 0 failed (skipped)", "moved 1 file(s)"]
+        assert os.listdir(tmp_path / f"dl{i}") == os.listdir(root / "out") == ["ünï.csv"]
+    root = tmp_path / "newline"
+    (root / "in" / "sub").mkdir(parents=True)
+    (root / "in" / "sub" / "x.csv\n").write_text("x")
+    assert _cli("download", root, "--source-folder-name", "in", "--source-file-name", r"\.csv\Z",
+                "--destination-root", str(tmp_path / "dl_newline")) == 200
+    assert capsys.readouterr().out.splitlines()[-1].startswith("no matches: ")
 
 
 def test_local_client_roundtrip(tmp_path):

@@ -11,6 +11,7 @@ from __future__ import annotations
 import dataclasses
 import io
 import os
+import pathlib
 import socket
 import time
 
@@ -24,7 +25,7 @@ from ftp_blueprints_spark.errors import (
 )
 from ftp_blueprints_spark.operators import actions
 from ftp_blueprints_spark.sources.connector import ClientSpec
-from ftp_blueprints_spark.sources.listing import list_tree
+from ftp_blueprints_spark.sources.listing import list_manifest, list_tree
 
 from .ftp_stub_server import FtpStubServer
 
@@ -418,13 +419,9 @@ def test_sink_uses_every_allowed_session(spark, ftp_root, tmp_path):
     session, so a 1-row manifest still opens exactly one. The same
     counts hold on executors and, for a driver-held manifest, on driver
     threads."""
-    import pyarrow as pa
-
-    from ftp_blueprints_spark.operators.manifest import driver_rows
-
     def manifest(rows, held):
-        if held:  # an Arrow table plans a LocalRelation
-            return spark.createDataFrame(pa.table(dict(zip(["path", "dest_path"], zip(*rows)))))
+        if held:
+            return [{"path": path, "dest_path": dest} for path, dest in rows]
         return spark.createDataFrame(rows, "path string, dest_path string").coalesce(1)
 
     rows = [("data/a.csv", "a.csv"), ("data/b.csv", "b.csv"),
@@ -435,7 +432,6 @@ def test_sink_uses_every_allowed_session(spark, ftp_root, tmp_path):
         with srv as (host, port):
             spec = dataclasses.replace(spec_for(host, port), max_connections=2)
             three = manifest(rows, held)
-            assert (driver_rows(three) is not None) == held
             assert actions.download(three, spec, str(out / "n3")) == {"ok": 3, "failed": 0}
             assert srv.sessions == 2, held
             assert actions.download(manifest(rows[:1], held), spec, str(out / "n1")) == {
@@ -620,7 +616,6 @@ def test_ingest_csv_datasource_regime(spark, tmp_path, monkeypatch):
     """Past DRIVER_ROWS_THRESHOLD the listing is an executor-walked
     manifest and the fetch repartitions it: the ingest lands the driver
     regime's rows and RETRs the matched paths only."""
-    from ftp_blueprints_spark.operators.manifest import driver_rows
     from ftp_blueprints_spark.sources import listing
     from ftp_blueprints_spark.sources.ingest import ingest_csv
 
@@ -635,7 +630,7 @@ def test_ingest_csv_datasource_regime(spark, tmp_path, monkeypatch):
         srv = FtpStubServer(str(root), USERS)
         with srv as (host, port):
             spec = spec_for(host, port)
-            regime = driver_rows(list_tree(spark, spec, "in")) is None
+            regime = not isinstance(list_manifest(lambda: spark, spec, "in"), list)
             n = ingest_csv(spark, spec, "in", schema="id int, name string, qty int", dest=dest)
         rows = sorted(
             tuple(r) for r in
@@ -786,7 +781,8 @@ def test_sink_bad_credentials_exit3_in_both_regimes(spark, tmp_path, monkeypatch
     listing an executor-walked manifest) it crosses Py4J as a string, and
     ``_run_sink`` must map it back. Both exit 3."""
     from ftp_blueprints_spark.cli.blueprints import upload_main
-    from ftp_blueprints_spark.operators.manifest import driver_rows, match_files, with_destination
+    from ftp_blueprints_spark.operators.manifest import (compile_pattern, search_files,
+                                                         with_destination)
     from ftp_blueprints_spark.sources import listing
 
     if threshold is not None:
@@ -796,9 +792,9 @@ def test_sink_bad_credentials_exit3_in_both_regimes(spark, tmp_path, monkeypatch
     (local / "out" / "sub" / "a.csv").write_text("a")
     srv = tmp_path / "srv"
     srv.mkdir()
-    mf = list_tree(spark, ClientSpec(kind="local", root=str(local)), "out")
-    manifest = with_destination(match_files(mf, pattern=r"\.csv$"), "in")
-    assert (driver_rows(manifest) is None) == (threshold == 0)
+    mf = list_manifest(lambda: spark, ClientSpec(kind="local", root=str(local)), "out")
+    manifest = with_destination(search_files(mf, compile_pattern(r"\.csv$")), "in")
+    assert isinstance(manifest, list) == (threshold is None)
     with FtpStubServer(str(srv), USERS) as (host, port):
         bad = dataclasses.replace(spec_for(host, port), password="WRONG")
         with pytest.raises(IncorrectCredentials) as ei:
@@ -1075,6 +1071,83 @@ def test_ingest_container_type_with_commas(spark, tmp_path, fmt):
     ]
 
 
+# --- a small-tree CLI call needs no JVM -----------------------------------
+
+def test_invalid_regex_fails_before_listing(ftp_root, capsys):
+    """An invalid pattern is compiled before any listing: the CLI prints
+    one ``error: invalid regex`` line and exits 1 without opening a
+    session, and ingest raises the same BlueprintError before it needs
+    a SparkSession or the server."""
+    from ftp_blueprints_spark.cli.blueprints import download_main
+    from ftp_blueprints_spark.errors import BlueprintError
+    from ftp_blueprints_spark.sources.ingest import ingest_csv
+
+    srv = FtpStubServer(ftp_root, USERS)
+    with srv as (host, port):
+        rc = download_main([
+            "--kind", "ftp", "--host", host, "--port", str(port),
+            "--username", "alice", "--password", "secret", "--timeout", "10",
+            "--source-folder-name", "data", "--source-file-name", r"(?P<stem\w+)\.csv",
+            "--source-file-name-match-type", "regex_match",
+        ])
+        out, err = capsys.readouterr()
+        with pytest.raises(BlueprintError, match="^invalid regex "):
+            ingest_csv(None, spec_for(host, port), "data", schema="id int", dest="unused",
+                       pattern="[.csv")
+    assert rc == 1
+    assert len(out.splitlines()) == 1
+    assert out.startswith("error: invalid regex '(?P<stem\\\\w+)\\\\.csv': ")
+    assert "Traceback" not in err
+    assert srv.sessions == 0
+
+
+def test_cli_calls_run_without_a_jvm(ftp_root, tmp_path_factory):
+    """Below DRIVER_ROWS_THRESHOLD a CLI call never starts Spark: with
+    ``JAVA_HOME`` and ``SPARK_HOME`` pointing at an empty folder, a
+    download, an upload, a move and a delete, each its own
+    ``python -m ftp_blueprints_spark.cli.blueprints`` process over the
+    FTP stub, exit 0, print their usual summary and leave the usual
+    trees."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    empty = tmp_path_factory.mktemp("no_jvm")
+    local = tmp_path_factory.mktemp("client")
+    env = {**os.environ, "JAVA_HOME": str(empty), "SPARK_HOME": str(empty)}
+    with FtpStubServer(ftp_root, USERS) as (host, port):
+        conn = ["--kind", "ftp", "--host", host, "--port", str(port), "--username", "alice",
+                "--password", "secret", "--timeout", "10", "--source-file-name-match-type",
+                "regex_match"]
+        calls = [
+            ("download", "--source-folder-name", "data", "--source-file-name", r"\.csv$",
+             "--destination-root", str(local), "--destination-folder-name", "data"),
+            ("upload", "--root", str(local), "--source-folder-name", "data",
+             "--source-file-name", "^data/", "--destination-folder-name", "up"),
+            ("move", "--source-folder-name", "up", "--source-file-name", "^up/",
+             "--destination-folder-name", "moved"),
+            ("delete", "--source-folder-name", "moved", "--source-file-name", r"\.csv$"),
+        ]
+        said = []
+        for name, *argv in calls:
+            done = subprocess.run(
+                [sys.executable, "-m", "ftp_blueprints_spark.cli.blueprints", name, *conn, *argv],
+                cwd=repo, env=env, capture_output=True, text=True, timeout=120,
+            )
+            said.append((done.returncode, done.stdout.strip().splitlines()[-1:]))
+    assert said == [
+        (0, ["downloaded 2 file(s), 0 failed (skipped)"]),
+        (0, ["uploaded 2 file(s), 0 skipped"]),
+        (0, ["moved 2 file(s)"]),
+        (0, ["deleted 2 file(s)"]),
+    ]
+    assert sorted(str(p.relative_to(local)) for p in local.rglob("*")) == [
+        "data", "data/a.csv", "data/b.csv"]
+    assert (local / "data" / "a.csv").read_bytes() == TREE["data/a.csv"]
+    srv = sorted(str(p.relative_to(ftp_root)) for p in pathlib.Path(ftp_root).rglob("*"))
+    assert srv == sorted({*TREE, "data", "data/sub", "data/...", "moved", "up"})
+
+
 # --- regex-prefix traversal pruning (SURVEY §4.2) ----------------------------
 
 def test_pattern_prefix_derivation():
@@ -1261,7 +1334,6 @@ def test_datasource_prunes_partitions_by_pattern(spark, ftp_root, monkeypatch):
     walk goes on below the pruned seed, so the pruned seed is listed
     once in total, the walk covers one subtree, and reading the manifest
     lists nothing again; rows equal the driver-regime pruned manifest."""
-    from ftp_blueprints_spark.operators.manifest import driver_rows
     from ftp_blueprints_spark.sources import listing
 
     pattern = r"^data/sub/.*[.]txt$"
@@ -1275,8 +1347,8 @@ def test_datasource_prunes_partitions_by_pattern(spark, ftp_root, monkeypatch):
         want = {tuple(r) for r in list_tree(spark, spec, "", path_pattern=pattern).collect()}
         monkeypatch.setattr(listing, "DRIVER_ROWS_THRESHOLD", 0)
         srv.nlst_count = 0
-        df = list_tree(spark, spec, "", path_pattern=pattern)
-        assert driver_rows(df) is None
+        df = list_manifest(lambda: spark, spec, "", path_pattern=pattern)
+        assert not isinstance(df, list)
         # data/sub by list_tree's seed listing, data/sub/inner by the
         # executor walk; never the root or data/ levels
         assert srv.nlst_count == 2
@@ -1344,7 +1416,7 @@ def test_cli_download_lists_the_tree_once_in_both_regimes(spark, tmp_path, monke
 def test_pattern_prefix_soundness_property():
     """Property proof of the pruning contract: whenever pattern_prefix
     returns a non-empty prefix, EVERY string the pattern matches
-    (re.search — rlike semantics) lies strictly inside the prefix
+    (re.search, the CLI's matcher) lies strictly inside the prefix
     subtree (starts with '<prefix>/'). Patterns are composed from the
     fragment grammar below over a tiny alphabet so matches are common;
     the two r9 hand-found holes (top-level alternation, boundary
